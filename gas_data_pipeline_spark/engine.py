@@ -752,8 +752,12 @@ class GasDataEngine:
         method: str = "exact",
     ) -> DataFrame:
         """X2: cosine top-k neighbors. method: 'exact' (block GEMM),
-        'lsh' (multi-table hyperplane), 'ivf' (k-means inverted lists),
-        'pq' (product-quantized full scan), 'ivfpq' (composite)."""
+        'lsh' (multi-table hyperplane buckets, exact candidate
+        cosine), or one of the quantized-index pipeline's k-means
+        configurations (``similarity.ann_topk``: train, route, encode,
+        ADC score): 'ivf' (inverted lists, exact candidate cosine),
+        'pq' (product-quantized full scan), 'ivfpq' (PQ codes inside
+        the inverted lists)."""
         from gas_data_pipeline_spark.operators import similarity as S
 
         if method == "exact":

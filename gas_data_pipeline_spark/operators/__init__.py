@@ -9,7 +9,6 @@ from gas_data_pipeline_spark.operators.dedup import (  # noqa: F401
     exact_dedup_ranked,
     jaccard_pairs_inverted_index,
     minhash_near_dup_pairs,
-    minhash_signature,
     simhash64,
     word_shingles,
 )
@@ -17,7 +16,6 @@ from gas_data_pipeline_spark.operators.similarity import (  # noqa: F401
     cosine,
     cosine_near_dup_pairs,
     cosine_topk,
-    rp_lsh_bucket,
 )
 from gas_data_pipeline_spark.operators.text import (  # noqa: F401
     lang_id,

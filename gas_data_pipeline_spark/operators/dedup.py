@@ -537,9 +537,6 @@ def jaccard_pairs_prefix_filter(
     )
 
 
-_MAX_LONG = (1 << 63) - 1
-
-
 def _xor_salts(k: int, seed: int = 42) -> list[int]:
     """Fixed pseudorandom XOR salts (deterministic across runs), as
     UNSIGNED 64-bit ints. Full 64 bits matter: 63-bit salts never flip
@@ -552,46 +549,17 @@ def _xor_salts(k: int, seed: int = 42) -> list[int]:
     return [rng.getrandbits(64) for _ in range(k)]
 
 
-def _signed64(u: int) -> int:
-    """Reinterpret an unsigned 64-bit int as signed (two's complement)."""
-    return u - (1 << 64) if u >= (1 << 63) else u
-
-
-def minhash_signature(shingle_col: Column, k: int = 64) -> Column:
-    """k-permutation MinHash signature as an array<bigint>: each
-    shingle is xxhash64'd ONCE, then permutation i is XOR with a fixed
-    salt (bijective, so a valid permutation family); signature[i] = min
-    over shingles. One fold pass with a k-wide accumulator — the string
-    hash is paid once per shingle instead of k times (~10x cheaper than
-    the salted-rehash formulation), XORs are single-cycle, and nothing
-    overflows under ANSI mode. Narrow per-row computation — no shuffle.
-
-    NB: constants must be captured via closures, NOT defaulted extra
-    lambda parameters — pyspark binds every declared lambda parameter
-    to a lambda variable, silently shadowing the default."""
-    salts = _xor_salts(k)
-    hashes = F.transform(shingle_col, lambda s: F.xxhash64(s))
-
-    def perms(h: Column) -> Column:
-        # F.lit takes the signed reinterpretation; XOR is bit-level so
-        # sign never overflows under ANSI.
-        return F.array(*[h.bitwiseXOR(F.lit(_signed64(s))) for s in salts])
-
-    return F.aggregate(
-        hashes,
-        F.array_repeat(F.lit(_MAX_LONG), k),
-        lambda acc, h: F.zip_with(acc, perms(h), lambda x, y: F.least(x, y)),
-    )
-
-
 def minhash_signature_pandas(k: int = 64, seed: int = 42):
-    """Arrow-vectorized MinHash signature: array<bigint> of shingle
-    hashes in, array<bigint> signature out (min over XOR permutations).
+    """Arrow-vectorized k-permutation MinHash signature: array<bigint>
+    of shingle hashes in, array<bigint> signature out. Permutation i is
+    XOR with a fixed 64-bit salt (bijective, so a valid permutation
+    family) and signature[i] is the signed min over shingles; an empty
+    shingle set signs as all INT64_MAX.
 
     The expensive string hashing stays JVM-side (one ``xxhash64`` per
     shingle); this UDF only does int64 XOR+min — numpy runs the
-    (n_shingles × k) matrix at memory bandwidth, ~30x faster than the
-    interpreted fold of :func:`minhash_signature`. Factory-scoped so
+    (n_shingles × k) matrix at memory bandwidth, ~30x faster than an
+    interpreted Spark fold with a k-wide accumulator. Factory-scoped so
     cloudpickle ships it by value (executors don't import this
     package)."""
     from pyspark.sql.functions import pandas_udf
@@ -608,8 +576,8 @@ def minhash_signature_pandas(k: int = 64, seed: int = 42):
             h = np.asarray(hs, dtype=np.int64).view(np.uint64).reshape(-1, 1)
             if h.size == 0:
                 return [(1 << 63) - 1] * len(salts)
-            # view() reinterprets back to SIGNED for the min, matching
-            # the expression formulation's F.least on bigint exactly.
+            # view() reinterprets back to SIGNED for the min: the
+            # signature orders as Spark bigints do.
             return (h ^ salt_row).view(np.int64).min(axis=0).tolist()
 
         return hashes.map(one)

@@ -1,29 +1,61 @@
-"""Vector similarity operators (SURVEY §2.11 X2): brute-force cosine
-top-k as the exact baseline, random-hyperplane LSH bucketing as the
-scale path.
+"""Vector similarity operators (SURVEY §2.11 X2): exact cosine top-k
+and near-dup pairs, hash-bucketed approximate top-k, and one
+quantized-index pipeline for IVF, PQ and IVF-PQ.
 
-Scale design — block-partitioned GEMM, the distributed dense-similarity
-formulation:
+Exact kernels — block-partitioned GEMM, the distributed
+dense-similarity formulation:
 
 - Vectors are packed into per-block matrix rows (``applyInPandas``:
   one row per block carrying ids + a flattened float64 matrix). A
   cross join of blocks (P² rows for near-dup, P rows vs one packed
-  query block for top-k) moves each block ~2P times — versus the naive
-  pair cross join that duplicates every vector once per PAIR (~N times).
-  For 2M pairs of 64-dim vectors that's ~16 MB of Arrow traffic
-  instead of ~2 GB.
-- Each block pair scores with ONE `A @ B.T` — BLAS-rate, ~1000x the
-  interpreted per-element HOF fold.
+  query block for top-k) moves each block ~2P times, where a pair
+  cross join duplicates every vector once per PAIR (~N times).
+- Each block pair scores with ONE `A @ B.T` — BLAS-rate.
 - Top-k emits only k rows per (query, corpus-block) map-side — the
   shuffle into the final per-query window is O(P·Q·k), never O(N·Q).
-- Block count is the memory dial: pick P so a block matrix fits an
-  executor's Arrow batch comfortably. At 100 TB brute-force all-pairs
-  is not a thing regardless — LSH prunes first and these exact kernels
-  verify candidates / score within buckets.
 
-The expression-only ``dot``/``cosine`` remain for callers that need
-bit-deterministic sequential folds (values agree to ~1e-12; the
-driver compare rounds to 1e-6).
+Hash buckets: ``cosine_topk_lsh`` (seeded multi-table random
+hyperplanes, rows-only checkable) and the sign-signature twins
+``cosine_topk_signed`` / ``semantic_bucket_near_dup`` (plain SQL on the
+stored floats, so they value-oracle). Candidates score with the
+sequential-fold :func:`cosine`.
+
+Quantized index — ONE pipeline::
+
+    train -> route -> encode -> score (ADC) -> [exact rescore] -> top-k
+
+- Train: two trainers produce the same :class:`AnnModel` — coarse
+  centers and/or PQ codebooks, plus whether the centers live on raw or
+  on unit vectors. :func:`kmeans_model` is seeded spherical k-means
+  (driver numpy up to ``driver_train_bound`` training rows,
+  distributed ``pyspark.ml`` KMeans above). The k-center trainer is
+  the bounded md5 sample plus greedy selection
+  (``selection.kcenter_greedy_sampled`` for centers,
+  :func:`pq_kcenter_codebooks_sampled` for codebooks), exactly
+  replayable in SQL.
+- Route: corpus rows go to their nearest center
+  (``selection.assign_to_centers``), queries to their ``n_probe``
+  nearest (:func:`probe_cells`); fixed-point argmin, ties to the
+  smaller center id.
+- Encode: per-subspace fixed-point argmin over the codeword literals
+  (:func:`_pq_codes_sql`).
+- Score: IVF candidates take the exact :func:`cosine`; PQ candidates
+  one ADC expression — per query an (m x n_codes) table of quantized
+  subspace dot products, per candidate m integer lookups.
+- Rescore: PQ's bounded ADC pool is re-scored with the exact
+  fixed-point dot of the unit vectors and re-ranked.
+
+:func:`build_index` (route + encode: one zero-shuffle scan) is the
+build half and :func:`ann_topk` the search half. Every stage after
+training is native expressions or generated SQL — no Python worker,
+the fused-SQL scoring argued for by "ML Inference Pipeline Execution
+Using Pure SQL Based on Operator Fusion" (ICDE 2025) — so a k-center
+model's whole answer replays in DuckDB. The six
+``cosine_topk_{ivf,pq,ivfpq}[_kcenter]`` names are configurations:
+the plain ones train k-means (``GasDataEngine.search_similar``
+'ivf'/'pq'/'ivfpq', the rows-only ``ann_ivfpq``), the ``_kcenter``
+ones take k-center models (``ann_ivf``, ``ann_pq``,
+``ann_pq_rescored``, ``ann_ivfpq_kcenter``, ``ann_ivfpq_rescored``).
 
 All pandas UDF / applyInPandas closures are factory-scoped and
 self-contained so cloudpickle ships them by value — executors never
@@ -33,12 +65,28 @@ import this package.
 from __future__ import annotations
 
 import logging
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd  # module-level: pandas_udf resolves string type hints here
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from gas_data_pipeline_spark.functions.exprs import bind
+from gas_data_pipeline_spark.operators.selection import (
+    KC_SAMPLE_N,
+    KC_SAMPLE_SEED,
+    _fp_halfup,
+    assign_to_centers,
+    center_cands_sql,
+    dlit,
+    fp_round_sql,
+    json_lit,
+    kcenter_greedy_local,
+    spread_small_scan,
+    sq_dist_fp,
+)
 
 _log = logging.getLogger(__name__)
 
@@ -60,25 +108,6 @@ def norm(a: Column) -> Column:
 
 def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
-
-
-def cosine_pairs_pandas() -> "Column":
-    """Arrow-vectorized cosine over two array columns — for pair sets
-    that are ALREADY pruned (e.g. LSH candidates), where per-pair
-    vector duplication is affordable."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        import numpy as np
-
-        va = np.stack(a.to_numpy()).astype(np.float64)
-        vb = np.stack(b.to_numpy()).astype(np.float64)
-        num = np.einsum("ij,ij->i", va, vb)
-        den = np.linalg.norm(va, axis=1) * np.linalg.norm(vb, axis=1)
-        return pd.Series(num / den)
-
-    return cos
 
 
 def pack_blocks(
@@ -245,29 +274,18 @@ def cosine_near_dup_pairs(
     )
 
 
-def _projection_planes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
-    """Deterministic random hyperplanes (seeded — identical across
-    driver restarts, so bucket assignments are reproducible)."""
-    rng = np.random.default_rng(seed)
-    return rng.normal(size=(n_planes, dim)).astype(float).tolist()
-
-
-def rp_lsh_bucket(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    dim: int = 64,
-    n_planes: int = 12,
-    seed: int = 42,
-) -> DataFrame:
-    """Random-hyperplane LSH: bucket = sign-bit signature of ``n_planes``
-    projections. Cosine-similar vectors collide with probability
-    (1 - θ/π)^bits. Adds a ``bucket`` bigint column (narrow op)."""
-    planes = _projection_planes(dim, n_planes, seed)
-    sig = F.lit(0).cast("bigint")
-    for p in planes:
-        proj = dot(F.col(vec_col), F.array(*[F.lit(x) for x in p]))
-        sig = sig * 2 + F.when(proj >= 0, 1).otherwise(0)
-    return df.withColumn("bucket", sig)
+def _top_k(scored: DataFrame, score: str, k: int, *out: Column | str) -> DataFrame:
+    """Per-query top-k: rank ``score`` DESC, ties to the smaller
+    neighbor_id (the oracles' ORDER BY), keep ranks <= k, return
+    (query_id, neighbor_id, rank, *out)."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col(score).desc(), F.col("neighbor_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", *out)
+    )
 
 
 def rp_lsh_table_buckets(
@@ -332,9 +350,9 @@ def cosine_topk_lsh(
 ) -> DataFrame:
     """Approximate top-k: candidates are rows sharing any (table,
     bucket) key with the query — an equi-join replaces the cross
-    product, probing ~n_tables/2^n_planes of the corpus. Recall < 1 by
-    design; tested against cosine_topk ground truth
-    (tests/test_northstar.py)."""
+    product, probing ~n_tables/2^n_planes of the corpus — scored with
+    the exact sequential-fold :func:`cosine`. Recall < 1 by design;
+    tested against cosine_topk ground truth (tests/test_northstar.py)."""
     cb = rp_lsh_tables(corpus, vec_col, dim, n_tables, n_planes).select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"), "table", "bucket"
     )
@@ -350,20 +368,12 @@ def cosine_topk_lsh(
         .select("query_id", "q_vec", "neighbor_id", "c_vec")
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    cos = cosine_pairs_pandas()
     scored = pairs.select(
         "query_id",
         "neighbor_id",
-        cos(F.col("q_vec"), F.col("c_vec")).alias("cos_sim"),
+        cosine(F.col("q_vec"), F.col("c_vec")).alias("cos_sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos_sim")
-    )
+    return _top_k(scored, "cos_sim", k, "cos_sim")
 
 
 def sign_bucket(vec: Column, sign_bits: int) -> Column:
@@ -402,19 +412,18 @@ def cosine_topk_signed(
     scheme does; recall vs the exact top-k is pinned in
     tests/test_northstar.py."""
     v = F.col(vec_col).cast("array<double>")
-    dotf = lambda x, y: F.aggregate(  # noqa: E731 — oracle-ordered fold
-        F.zip_with(x, y, lambda p, q: p * q), F.lit(0.0), lambda acc, z: acc + z
-    )
+    # Per-ROW norms, folded once per vector: the per-pair expression is
+    # then one dot fold (the oracle's list_dot_product order).
     base = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         v.alias("cv"),
         sign_bucket(v, sign_bits).alias("bucket"),
-    ).withColumn("cn", F.sqrt(dotf(F.col("cv"), F.col("cv"))))
+    ).withColumn("cn", norm(F.col("cv")))
     q = queries.select(
         F.col(id_col).alias("query_id"),
         v.alias("qv"),
         sign_bucket(v, sign_bits).alias("q_bucket"),
-    ).withColumn("qn", F.sqrt(dotf(F.col("qv"), F.col("qv"))))
+    ).withColumn("qn", norm(F.col("qv")))
     scored = (
         base.join(
             q,
@@ -423,18 +432,48 @@ def cosine_topk_signed(
         )
         .withColumn(
             "cos_sim",
-            dotf(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")),
+            dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")),
         )
         .select("query_id", "neighbor_id", "cos_sim")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
+    return _top_k(scored, "cos_sim", k, "cos_sim")
+
+
+# ---------------------------------------------------------------------------
+# Quantized index: train -> route -> encode -> score -> rescore -> top-k
+# ---------------------------------------------------------------------------
+
+
+class AnnModel(NamedTuple):
+    """A trained quantizer: what both trainers produce and every later
+    stage reads. A model — a few KB of floats — never data.
+
+    - ``centers``: coarse cells ``[{"id": int, "vec": [float]}, ...]``
+      for IVF routing; None scans the whole store.
+    - ``books``: PQ codebooks, m x n_codes x dim/m floats over UNIT
+      subvectors; None scores candidates with the exact cosine.
+    - ``unit``: the centers were trained on unit vectors (k-means,
+      spherical), so routing reads v/||v||; False routes the raw
+      vectors (k-center, replayable on the stored floats)."""
+
+    centers: list[dict] | None = None
+    books: list[list[list[float]]] | None = None
+    unit: bool = False
+
+
+def _dbl(vec: Column) -> Column:
+    return F.transform(vec, lambda x: x.cast("double"))
+
+
+def _unit(v: Column) -> Column:
+    """v / ||v|| with the sequential-fold norm (the oracles' order),
+    folded once per vector."""
+    return bind(
+        v, lambda vv: bind(F.sqrt(dot(vv, vv)), lambda n: F.transform(vv, lambda x: x / n))
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos_sim")
-    )
+
+
+# --- k-means trainer --------------------------------------------------------
 
 
 def _kmeans_centroids(
@@ -455,6 +494,36 @@ def _kmeans_centroids(
                 m = members.mean(axis=0)
                 C[c] = m / (np.linalg.norm(m) or 1.0)
     return C
+
+
+def train_pq_codebooks(
+    sample: np.ndarray, m: int = 8, n_codes: int = 32, n_iters: int = 15, seed: int = 42
+) -> np.ndarray:
+    """Product-quantization codebooks: split the (normalized) vector
+    space into ``m`` orthogonal subspaces and run seeded L2 k-means in
+    each. Returns (m, n_codes, dim/m). Like IVF centroids, the training
+    sample is a bounded stats object — the only vectors that ever
+    reach the driver."""
+    d = sample.shape[1]
+    assert d % m == 0, f"dim {d} not divisible into {m} subvectors"
+    dsub = d // m
+    X = sample / np.linalg.norm(sample, axis=1, keepdims=True)
+    rng = np.random.default_rng(seed)
+    books = np.empty((m, n_codes, dsub))
+    for j in range(m):
+        S = X[:, j * dsub : (j + 1) * dsub]
+        C = S[rng.choice(len(S), size=min(n_codes, len(S)), replace=False)]
+        for _ in range(n_iters):
+            d2 = ((S[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
+            assign = np.argmin(d2, axis=1)
+            for c in range(len(C)):
+                members = S[assign == c]
+                if len(members):
+                    C[c] = members.mean(axis=0)
+        books[j, : len(C)] = C
+        if len(C) < n_codes:  # degenerate tiny sample: pad with repeats
+            books[j, len(C):] = C[0]
+    return books
 
 
 # Above this many training vectors, Lloyd's loop moves off the driver:
@@ -505,415 +574,101 @@ def _distributed_training_rows(
 
 
 def _kmeans_centroids_distributed(
-    corpus: DataFrame,
-    id_col: str,
-    vec_col: str,
-    n_clusters: int,
-    train_sample: int,
-    seed: int = 42,
-    n_iters: int = 10,
-    train: DataFrame | None = None,
+    train: DataFrame, n_clusters: int, seed: int = 42, n_iters: int = 10
 ) -> np.ndarray:
-    """Large-regime centroid training: ``pyspark.ml.clustering.KMeans``
-    (k-means|| init, seeded) over the hash-strided normalized training
-    set. Only the (k, dim) centroid matrix returns to the driver;
-    centroids re-normalize to the unit sphere so assignment stays the
-    same max-dot-product the numpy path uses. ``train`` lets a caller
-    that also trains PQ codebooks (IVF+PQ) pass ONE shared — ideally
-    cached — training frame instead of re-deriving it."""
+    """Large-regime centroids: ``pyspark.ml.clustering.KMeans``
+    (k-means|| init, seeded) over the training rows. Only the (k, dim)
+    centroid matrix returns to the driver, re-normalized to the unit
+    sphere so routing stays spherical like the numpy path."""
     from pyspark.ml.clustering import KMeans
 
-    own = train is None
-    if own:
-        # Cache: k-means|| init + n_iters Lloyd steps each re-read the
-        # training rows; uncached that is a corpus re-scan per pass.
-        train = _distributed_training_rows(
-            corpus, id_col, vec_col, train_sample
-        ).cache()
-    try:
-        model = KMeans(
-            k=n_clusters, seed=seed, maxIter=n_iters, featuresCol="__feat"
-        ).fit(train)
-    finally:
-        if own:
-            train.unpersist()
+    model = KMeans(
+        k=n_clusters, seed=seed, maxIter=n_iters, featuresCol="__feat"
+    ).fit(train)
     C = np.stack([np.asarray(c, dtype=np.float64) for c in model.clusterCenters()])
     return C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
 
 
 def _pq_codebooks_distributed(
-    corpus: DataFrame,
-    id_col: str,
-    vec_col: str,
-    m: int,
-    n_codes: int,
-    train_sample: int,
-    seed: int = 42,
-    n_iters: int = 15,
-    train: DataFrame | None = None,
+    train: DataFrame, m: int, n_codes: int, seed: int = 42, n_iters: int = 15
 ) -> np.ndarray:
     """Large-regime PQ codebooks: one distributed L2 KMeans per
-    subspace over slices of the (full-vector-)normalized training set —
-    the same objective as ``train_pq_codebooks``, with the Lloyd loop
-    on the cluster. The training set is cached once and re-sliced m
-    times; only m*(n_codes, dim/m) codebook floats reach the driver.
-    ``train``: optional shared training frame, as in
-    ``_kmeans_centroids_distributed``."""
+    subspace over slices of the normalized training rows — the
+    objective of :func:`train_pq_codebooks` with the Lloyd loop on the
+    cluster; only m*(n_codes, dim/m) codebook floats reach the driver."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector, vector_to_array
 
-    if train is None:
-        train = _distributed_training_rows(corpus, id_col, vec_col, train_sample)
-    train = train.select(vector_to_array(F.col("__feat")).alias("__arr"))
-    train = train.cache()
-    try:
-        d = train.select(F.size("__arr").alias("d")).first()["d"]
-        assert d % m == 0, f"dim {d} not divisible into {m} subvectors"
-        dsub = d // m
-        books = np.empty((m, n_codes, dsub))
-        for j in range(m):
-            sub = train.select(
-                array_to_vector(
-                    F.slice(F.col("__arr"), j * dsub + 1, dsub)
-                ).alias("__f")
-            )
-            model = KMeans(
-                k=n_codes, seed=seed + j, maxIter=n_iters, featuresCol="__f"
-            ).fit(sub)
-            C = np.stack(
-                [np.asarray(c, dtype=np.float64) for c in model.clusterCenters()]
-            )
-            books[j, : len(C)] = C
-            if len(C) < n_codes:  # degenerate tiny train set: pad
-                books[j, len(C) :] = C[0]
-        return books
-    finally:
-        train.unpersist()
+    arr = train.select(vector_to_array(F.col("__feat")).alias("__arr"))
+    d = arr.select(F.size("__arr").alias("d")).first()["d"]
+    assert d % m == 0, f"dim {d} not divisible into {m} subvectors"
+    dsub = d // m
+    books = np.empty((m, n_codes, dsub))
+    for j in range(m):
+        sub = arr.select(
+            array_to_vector(F.slice(F.col("__arr"), j * dsub + 1, dsub)).alias("__f")
+        )
+        model = KMeans(
+            k=n_codes, seed=seed + j, maxIter=n_iters, featuresCol="__f"
+        ).fit(sub)
+        C = np.stack([np.asarray(c, dtype=np.float64) for c in model.clusterCenters()])
+        books[j, : len(C)] = C
+        if len(C) < n_codes:  # degenerate tiny train set: pad
+            books[j, len(C) :] = C[0]
+    return books
 
 
-def ivf_centroids_for(
+def kmeans_model(
     corpus: DataFrame,
-    id_col: str,
-    vec_col: str,
-    n_clusters: int,
-    train_sample: int,
-    seed: int = 42,
-    driver_train_bound: int = DRIVER_TRAIN_BOUND,
-) -> np.ndarray:
-    """Route IVF centroid training by regime (VERDICT r3 #6): numpy
-    Lloyd on a bounded driver sample below ``driver_train_bound``,
-    distributed ml KMeans above it. Path choice is logged."""
-    if train_sample <= driver_train_bound:
-        _log.info(
-            "IVF centroids: driver numpy path (train_sample=%d <= bound=%d)",
-            train_sample,
-            driver_train_bound,
-        )
-        return _kmeans_centroids(
-            _train_matrix(corpus, id_col, vec_col, train_sample),
-            n_clusters,
-            seed=seed,
-        )
-    _log.info(
-        "IVF centroids: distributed ml.KMeans path (train_sample=%d > bound=%d)",
-        train_sample,
-        driver_train_bound,
-    )
-    return _kmeans_centroids_distributed(
-        corpus, id_col, vec_col, n_clusters, train_sample, seed=seed
-    )
-
-
-def pq_codebooks_for(
-    corpus: DataFrame,
-    id_col: str,
-    vec_col: str,
-    m: int,
-    n_codes: int,
-    train_sample: int,
-    seed: int = 42,
-    driver_train_bound: int = DRIVER_TRAIN_BOUND,
-) -> np.ndarray:
-    """Route PQ codebook training by regime — see ivf_centroids_for."""
-    if train_sample <= driver_train_bound:
-        _log.info(
-            "PQ codebooks: driver numpy path (train_sample=%d <= bound=%d)",
-            train_sample,
-            driver_train_bound,
-        )
-        return train_pq_codebooks(
-            _train_matrix(corpus, id_col, vec_col, train_sample),
-            m=m,
-            n_codes=n_codes,
-            seed=seed,
-        )
-    _log.info(
-        "PQ codebooks: distributed ml.KMeans path (train_sample=%d > bound=%d)",
-        train_sample,
-        driver_train_bound,
-    )
-    return _pq_codebooks_distributed(
-        corpus, id_col, vec_col, m, n_codes, train_sample, seed=seed
-    )
-
-
-def ivf_assign_udf(centroids: np.ndarray, n_probe: int = 1):
-    """Arrow-vectorized IVF cluster assignment: vector in,
-    array<int> of the ``n_probe`` nearest centroid ids out (one GEMM
-    per batch). Factory-scoped; ships by value with the centroid
-    matrix embedded — executors never import this package."""
-    from pyspark.sql.functions import pandas_udf
-
-    C = np.asarray(centroids, dtype=np.float64)
-
-    @pandas_udf("array<int>")
-    def probe(vec: pd.Series) -> pd.Series:
-        import numpy as np
-
-        V = np.stack(vec.to_numpy()).astype(np.float64)
-        V = V / np.linalg.norm(V, axis=1, keepdims=True)
-        S = V @ C.T
-        top = np.argsort(-S, axis=1)[:, :n_probe]
-        return pd.Series([row.tolist() for row in top])
-
-    return probe
-
-
-def cosine_topk_ivf(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    n_clusters: int = 16,
-    n_probe: int = 4,
-    train_sample: int = 4096,
-    seed: int = 42,
-    driver_train_bound: int = DRIVER_TRAIN_BOUND,
-) -> DataFrame:
-    """X2 IVF (inverted-file) ANN: corpus rows are bucketed by nearest
-    k-means centroid; each query probes its ``n_probe`` nearest
-    centroids' lists — an equi-join on cluster id replaces the cross
-    product, scanning ~n_probe/n_clusters of the corpus. The
-    complementary scale path to LSH (data-adapted partitions vs
-    oblivious hyperplanes); recall vs the exact top-k asserted in
-    tests/test_northstar.py. Training routes by regime: driver numpy
-    below ``driver_train_bound``, distributed ml.KMeans above.
-    """
-    centroids = ivf_centroids_for(
-        corpus,
-        id_col,
-        vec_col,
-        n_clusters,
-        train_sample,
-        seed=seed,
-        driver_train_bound=driver_train_bound,
-    )
-
-    assign1 = ivf_assign_udf(centroids, n_probe=1)
-    cb = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        F.element_at(assign1(F.col(vec_col)), 1).alias("cluster"),
-    )
-    probe_n = ivf_assign_udf(centroids, n_probe=n_probe)
-    qb = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.explode(probe_n(F.col(vec_col))).alias("cluster"),
-    )
-    # AQE picks broadcast for bounded probe sets; no forced hint (see
-    # cosine_topk_lsh note).
-    pairs = cb.join(qb, "cluster").filter(
-        F.col("neighbor_id") != F.col("query_id")
-    )
-    cos = cosine_pairs_pandas()
-    scored = pairs.select(
-        "query_id",
-        "neighbor_id",
-        cos(F.col("q_vec"), F.col("c_vec")).alias("cos_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos_sim")
-    )
-
-
-def probe_cells(
-    queries: DataFrame,
-    centers: list[dict],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     *,
-    n_probe: int = 4,
-    driver_probe_bound: int = 1024,
-    quantum: float = 1e6,
-) -> DataFrame:
-    """Route each query to its ``n_probe`` nearest coarse-quantizer
-    cells (fixed-point argmin, ties to the smaller center id — the
-    array_sort struct convention). Threshold-gated like the dedup
-    union-find: a query batch within ``driver_probe_bound`` rows is
-    collected once and probed driver-side with the numpy fixed-point
-    kernel (``selection._fp_halfup`` — bit-identical to the
-    expression path, pinned in tests), skipping a whole Spark job; a
-    larger query table takes the distributed expression path. The
-    caller's ``quantum`` threads through BOTH paths (ADVICE r9: a
-    hardcoded 1e6 here would quantize probes and corpus differently
-    under a non-default quantum), and the driver-path schema carries
-    the input's own id type rather than assuming bigint. Returns
-    (query_id, qv, center_id) rows — one per probed cell."""
-    from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, StructType
-
-    from gas_data_pipeline_spark.operators.selection import (
-        _fp_halfup,
-        center_cands_sql,
+    n_clusters: int = 0,
+    m: int = 0,
+    n_codes: int = 32,
+    train_sample: int = 4096,
+    seed: int = 42,
+    driver_train_bound: int = DRIVER_TRAIN_BOUND,
+) -> AnnModel:
+    """The k-means trainer: ``n_clusters`` spherical IVF centroids
+    and/or ``m`` x ``n_codes`` PQ codebooks (0 skips either), on unit
+    vectors. The regime switch: up to ``driver_train_bound`` training
+    rows, seeded numpy Lloyd on ONE bounded driver sample (first rows
+    by id); above it, distributed ``pyspark.ml`` KMeans over ONE cached
+    hash-strided training frame, so only centroid floats ever reach
+    the driver. The path choice is logged."""
+    driver = train_sample <= driver_train_bound
+    _log.info(
+        "k-means training: %s path (train_sample=%d, bound=%d)",
+        "driver numpy" if driver else "distributed ml.KMeans",
+        train_sample,
+        driver_train_bound,
     )
-
-    qpts = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("qv"),
-    )
-    qrows = qpts.limit(driver_probe_bound + 1).collect()
-    if len(qrows) <= driver_probe_bound:
-        import numpy as np
-
-        cmat = np.array([c["vec"] for c in centers], dtype="float64")
-        cids = [int(c["id"]) for c in centers]
-        probe_rows = []
-        for r in qrows:
-            qv = list(r["qv"])
-            d = np.asarray(qv, dtype="float64") - cmat
-            sq = _fp_halfup(d * d * quantum).sum(axis=1)
-            order = sorted(range(len(cids)), key=lambda i: (sq[i], cids[i]))
-            for i in order[:n_probe]:
-                probe_rows.append((r["query_id"], qv, cids[i]))
-        return queries.sparkSession.createDataFrame(
-            probe_rows,
-            StructType(
-                [
-                    StructField("query_id", qpts.schema["query_id"].dataType),
-                    StructField("qv", ArrayType(DoubleType())),
-                    StructField("center_id", LongType()),
-                ]
-            ),
-        )
-    probe_structs = F.expr(center_cands_sql("qv", centers, quantum))
-    return qpts.select(
-        "query_id",
-        "qv",
-        F.explode(
-            F.transform(
-                F.slice(F.array_sort(probe_structs), 1, n_probe),
-                lambda s: s["center_id"],
-            )
-        ).alias("center_id"),
+    if driver:
+        sample = _train_matrix(corpus, id_col, vec_col, train_sample)
+        C = _kmeans_centroids(sample, n_clusters, seed=seed) if n_clusters else None
+        B = train_pq_codebooks(sample, m, n_codes, seed=seed) if m else None
+    else:
+        # Cached: k-means|| init plus every Lloyd step of every fit
+        # re-reads the training rows; uncached each is a corpus re-scan.
+        train = _distributed_training_rows(
+            corpus, id_col, vec_col, train_sample
+        ).cache()
+        try:
+            C = _kmeans_centroids_distributed(train, n_clusters, seed) if n_clusters else None
+            B = _pq_codebooks_distributed(train, m, n_codes, seed) if m else None
+        finally:
+            train.unpersist()
+    return AnnModel(
+        centers=None
+        if C is None
+        else [{"id": i, "vec": c.tolist()} for i, c in enumerate(C)],
+        books=None if B is None else B.tolist(),
+        unit=True,
     )
 
 
-def build_ivf_kcenter_index(
-    corpus: DataFrame,
-    centers: list[dict],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """The IVF inverted lists: every corpus vector routed to its
-    nearest k-center cell (zero-shuffle scan, fixed-point argmin) with
-    the vector riding along for exact rescoring. This is the INDEX —
-    build it once, search it many times (FAISS's build/search split);
-    at 100 TB it would persist as cell-partitioned parquet, here
-    callers localCheckpoint it per session. Single-file test inputs
-    spread across cores first (`selection.spread_small_scan`)."""
-    from gas_data_pipeline_spark.operators.selection import (
-        assign_to_centers,
-        spread_small_scan,
-    )
-
-    pts = spread_small_scan(
-        corpus.select(
-            F.col(id_col).alias("pid"),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias(
-                "v"
-            ),
-        )
-    )
-    return assign_to_centers(pts, centers, payload_cols=("v",))
-
-
-def cosine_topk_ivf_kcenter(
-    corpus: DataFrame,
-    queries: DataFrame,
-    centers: list[dict],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    n_probe: int = 4,
-    driver_probe_bound: int = 1024,
-    index: DataFrame | None = None,
-) -> DataFrame:
-    """X2 IVF ANN with a DETERMINISTIC coarse quantizer: the inverted
-    lists come from a greedy k-center codebook (``centers`` as built by
-    ``operators/selection.kcenter_greedy`` — same Voronoi routing role
-    as IVF's k-means, but exactly replayable in SQL), so the WHOLE
-    index pipeline — train, assign, probe, candidate join, exact
-    rescoring — is value-oracle-able, the ``dedup_semantic_buckets``
-    device applied to the IVF family (the k-means path stays in
-    ``cosine_topk_ivf`` / ``cosine_topk_ivfpq``).
-
-    Scale shape identical to the k-means IVF: corpus assignment is a
-    zero-shuffle scan against the broadcast center structs
-    (fixed-point argmin — engine-exact ties), each query explodes to
-    its ``n_probe`` nearest cells by the same fixed-point distance,
-    and a cells-keyed equi-join with the broadcast probe set replaces
-    the cross product (~n_probe/n_clusters of the corpus scanned per
-    query). Candidate cosine is the sequential-fold :func:`cosine` —
-    bit-deterministic, matching DuckDB's ``list_dot_product``.
-
-    Query routing is threshold-gated like the dedup union-find: a
-    query set within ``driver_probe_bound`` rows (the common ANN
-    shape — queries are a bounded batch, the corpus is the big side)
-    is collected once and probed driver-side with the numpy
-    fixed-point kernel (``selection._fp_halfup`` — bit-identical to
-    the expression path, pinned in tests/test_northstar.py), skipping
-    a whole Spark job; a larger query table takes the distributed
-    expression path. Both paths produce identical probe sets.
-
-    Pass ``index`` (a :func:`build_ivf_kcenter_index` result) to skip
-    re-assigning the corpus: the inverted lists are the INDEX, built
-    once and amortized across query batches — every production ANN
-    system's build-vs-search split."""
-    assigned = (
-        index
-        if index is not None
-        else build_ivf_kcenter_index(corpus, centers, id_col, vec_col)
-    )
-    qprobe = probe_cells(
-        queries,
-        centers,
-        id_col,
-        vec_col,
-        n_probe=n_probe,
-        driver_probe_bound=driver_probe_bound,
-    )
-    pairs = assigned.join(F.broadcast(qprobe), "center_id").filter(
-        F.col("pid") != F.col("query_id")
-    )
-    scored = pairs.select(
-        "query_id",
-        F.col("pid").alias("neighbor_id"),
-        cosine(F.col("qv"), F.col("v")).alias("cos_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos_sim")
-    )
+# --- k-center trainer (coarse centers: selection.kcenter_greedy_sampled) ----
 
 
 def pq_kcenter_codebooks(
@@ -929,8 +684,7 @@ def pq_kcenter_codebooks(
     greedy k-center codebook over the L2-NORMALIZED subvectors — the
     ``dedup_semantic_buckets`` / ``cosine_topk_ivf_kcenter`` device
     applied to PQ, so the codebooks (and therefore the codes and every
-    ADC score) are exactly replayable as SQL (the k-means trainer
-    stays in :func:`train_pq_codebooks` for the throughput path).
+    ADC score) are exactly replayable as SQL.
 
     Distributed shape: all ``m`` subspaces train SIMULTANEOUSLY — per
     round ONE job computes every subspace's farthest point (an
@@ -940,16 +694,13 @@ def pq_kcenter_codebooks(
     returned books are m x n_codes x (dim/m) Python floats — a model,
     not data. Selection ties break (mind DESC, pid ASC), the oracle's
     ORDER BY mind DESC, vec_id."""
-    from gas_data_pipeline_spark.functions.exprs import bind
-    from gas_data_pipeline_spark.operators.selection import sq_dist_fp
-
     dim = len(corpus.select(vec_col).first()[0])
     assert dim % m == 0, f"dim {dim} not divisible into {m} subvectors"
     dsub = dim // m
 
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    nv = bind(v, lambda vv: F.transform(vv, lambda x: x / F.sqrt(dot(vv, vv))))
-    pts = corpus.select(F.col(id_col).alias("pid"), nv.alias("nv"))
+    pts = corpus.select(
+        F.col(id_col).alias("pid"), _unit(_dbl(F.col(vec_col))).alias("nv")
+    )
 
     def sub(j: int) -> Column:
         return F.slice(F.col("nv"), j * dsub + 1, dsub)
@@ -1030,13 +781,6 @@ def pq_kcenter_codebooks_sampled(
     replayable as a per-subspace recursive CTE over the same sample.
     When the corpus has ≤ sample_n rows the result is identical to
     the full trainer (pinned in tests/test_northstar.py)."""
-    from gas_data_pipeline_spark.functions.exprs import bind
-    from gas_data_pipeline_spark.operators.selection import (
-        KC_SAMPLE_N,
-        KC_SAMPLE_SEED,
-        kcenter_greedy_local,
-    )
-
     sample_n = KC_SAMPLE_N if sample_n is None else sample_n
     seed = KC_SAMPLE_SEED if seed is None else seed
     if not (1 <= sample_n <= 1_000_000):
@@ -1046,14 +790,14 @@ def pq_kcenter_codebooks_sampled(
     assert dim % m == 0, f"dim {dim} not divisible into {m} subvectors"
     dsub = dim // m
 
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    nv = bind(v, lambda vv: F.transform(vv, lambda x: x / F.sqrt(dot(vv, vv))))
     key = F.md5(
         F.concat(F.lit(seed + ":"), F.col(id_col).cast("string"))
     )
     rows = (
         corpus.select(
-            F.col(id_col).alias("pid"), nv.alias("nv"), key.alias("__draw")
+            F.col(id_col).alias("pid"),
+            _unit(_dbl(F.col(vec_col))).alias("nv"),
+            key.alias("__draw"),
         )
         .orderBy("__draw")
         .limit(sample_n)
@@ -1071,56 +815,376 @@ def pq_kcenter_codebooks_sampled(
     return books
 
 
+# --- route / encode / score kernels -----------------------------------------
+
+
+def _route_queries(
+    qpts: DataFrame,
+    centers: list[dict] | None,
+    *,
+    n_probe: int,
+    driver_probe_bound: int,
+    quantum: float,
+) -> tuple[DataFrame, bool]:
+    """The query side of a search, threshold-gated like the dedup
+    union-find. ``qpts`` is (query_id, qv, payload...). A batch within
+    ``driver_probe_bound`` rows is collected once — with ``centers``,
+    probed driver-side by the numpy fixed-point kernel
+    (``selection._fp_halfup``, bit-identical to the expression path,
+    pinned in tests) — and served back as a local relation: ``small``
+    is True and the search join broadcasts it. A larger batch stays
+    distributed (the generated-SQL probe) and the join is left to AQE,
+    a skew-split shuffle join when the query set is corpus-sized: no
+    query set past the bound is ever driver-materialized. With
+    ``centers`` there is one row per probed cell (``center_id``), the
+    payload computed once per query and carried. Returns (frame,
+    small)."""
+    from pyspark.sql.types import ArrayType, LongType, StructField, StructType
+
+    rows = qpts.limit(driver_probe_bound + 1).collect()
+    small = len(rows) <= driver_probe_bound
+    if centers is None:
+        local = qpts.sparkSession.createDataFrame(rows, qpts.schema) if small else qpts
+        return local, small
+    if small:
+        cmat = np.array([c["vec"] for c in centers], dtype="float64")
+        cids = [int(c["id"]) for c in centers]
+        probed = []
+        for r in rows:
+            d = np.asarray(r["qv"], dtype="float64") - cmat
+            sq = _fp_halfup(d * d * quantum).sum(axis=1)
+            order = sorted(range(len(cids)), key=lambda i: (sq[i], cids[i]))
+            probed.append((*r, [cids[i] for i in order[:n_probe]]))
+        cells = StructField("cells", ArrayType(LongType()))
+        q = qpts.sparkSession.createDataFrame(
+            probed, StructType(qpts.schema.fields + [cells])
+        )
+    else:
+        cands = F.array_sort(F.expr(center_cands_sql("qv", centers, quantum)))
+        q = qpts.withColumn(
+            "cells",
+            F.transform(F.slice(cands, 1, n_probe), lambda s: s["center_id"]),
+        )
+    return q.select(*qpts.columns, F.explode("cells").alias("center_id")), small
+
+
+def probe_cells(
+    queries: DataFrame,
+    centers: list[dict],
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    *,
+    n_probe: int = 4,
+    driver_probe_bound: int = 1024,
+    quantum: float = 1e6,
+) -> DataFrame:
+    """Route each query to its ``n_probe`` nearest coarse-quantizer
+    cells (fixed-point argmin, ties to the smaller center id — the
+    array_sort struct convention), driver-side within
+    ``driver_probe_bound`` queries, distributed above it
+    (:func:`_route_queries`). The caller's ``quantum`` threads through
+    BOTH paths (ADVICE r9: a hardcoded 1e6 here would quantize probes
+    and corpus differently under a non-default quantum), and the
+    driver-path schema carries the input's own id type rather than
+    assuming bigint. Returns (query_id, qv, center_id) rows — one per
+    probed cell."""
+    qpts = queries.select(
+        F.col(id_col).alias("query_id"), _dbl(F.col(vec_col)).alias("qv")
+    )
+    q, _ = _route_queries(
+        qpts,
+        centers,
+        n_probe=n_probe,
+        driver_probe_bound=driver_probe_bound,
+        quantum=quantum,
+    )
+    return q
+
+
 def _pq_codes_sql(
     books: list[list[list[float]]], quantum: float = 1e6
 ) -> str:
     """The m-subspace PQ encoder as ONE generated SQL expression over
     a normalized-vector column named ``nv``: per subspace, fixed-point
     argmin over the codeword literals (ties to the earlier-selected
-    code — selection order, both engines)."""
-    from gas_data_pipeline_spark.operators.selection import sq_dist_fp_sql
-
-    m = len(books)
+    code — selection order, both engines). The distance is
+    ``selection.sq_dist_fp_sql``'s integer fold, written once per
+    subspace as a lambda over code ids, and the argmin an
+    ``array_min`` of (sq_fp, code) structs (native compares, where
+    ``array_sort`` calls a comparator lambda)."""
     dsub = len(books[0][0])
 
     def code_sql(j: int) -> str:
-        sub = f"slice(nv, {j * dsub + 1}, {dsub})"
-        cands = "array(" + ",".join(
-            f"named_struct('sq_fp', {sq_dist_fp_sql(sub, cw, quantum)}, "
-            f"'code', {c})"
-            for c, cw in enumerate(books[j])
-        ) + ")"
-        return f"element_at(array_sort({cands}), 1).code"
+        book = json_lit(books[j], "array<array<double>>")
+        d = (
+            f"aggregate(zip_with(slice(nv, {j * dsub + 1}, {dsub}), {book}[c], "
+            f"(a, b) -> (a - b) * (a - b) * {dlit(quantum)}), "
+            f"CAST(0 AS BIGINT), (acc, t) -> acc + {fp_round_sql('t')})"
+        )
+        return (
+            f"array_min(transform(sequence(0, {len(books[j]) - 1}), "
+            f"c -> named_struct('sq_fp', {d}, 'code', c))).code"
+        )
 
-    return "array(" + ",".join(code_sql(j) for j in range(m)) + ")"
+    return "array(" + ",".join(code_sql(j) for j in range(len(books))) + ")"
 
 
-def build_pq_codes(
+def _adc_tables_sql(
+    books: list[list[list[float]]], quantum: float = 1e6
+) -> str:
+    """Per-query ADC lookup tables as ONE generated SQL expression over
+    a unit query vector ``qnv``: ``lut[j][c] = round(<q_sub_j,
+    codeword_jc> * quantum)`` as BIGINT, the oracles' per-subspace
+    term. Built once per query, so a candidate's score is m integer
+    lookups (:func:`ann_topk`) instead of m float folds."""
+    dsub = len(books[0][0])
+
+    def table_sql(j: int) -> str:
+        d = (
+            f"aggregate(zip_with(slice(qnv, {j * dsub + 1}, {dsub}), cw, "
+            f"(a, b) -> a * b), CAST(0 AS DOUBLE), (acc, x) -> acc + x)"
+        )
+        return (
+            f"transform({json_lit(books[j], 'array<array<double>>')}, "
+            f"cw -> CAST(round({d} * {dlit(quantum)}, 0) AS BIGINT))"
+        )
+
+    return "array(" + ",".join(table_sql(j) for j in range(len(books))) + ")"
+
+
+# --- build / search ---------------------------------------------------------
+
+
+def build_index(
     corpus: DataFrame,
-    books: list[list[list[float]]],
+    model: AnnModel,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     quantum: float = 1e6,
 ) -> DataFrame:
-    """The PQ compressed store: every corpus vector encoded as its m
-    per-subspace fixed-point-argmin code ids (ties to the
-    earlier-selected code — selection order, both engines). This is
-    the 100 TB compression pass — 64 floats become m bytes — and like
-    the IVF inverted lists it is an INDEX: build once, search many
-    times; callers localCheckpoint it per session (at scale it
-    persists as parquet). Encoders are generated SQL (one parse per
-    subspace, :func:`_pq_codes_sql`); single-file test inputs spread
-    across cores first."""
-    from gas_data_pipeline_spark.functions.exprs import bind
-    from gas_data_pipeline_spark.operators.selection import (
-        spread_small_scan,
+    """The build half: every corpus vector routed to its nearest cell
+    (``centers``) and/or encoded to its m codes (``books``) — both are
+    row-wise functions of the vector, so the index is ONE zero-shuffle
+    scan (single-file test inputs spread across cores first). Columns:
+    ``neighbor_id``, ``center_id`` (IVF), then ``codes`` (PQ: 64 floats
+    become m small ints, the raw vectors never read at search time) or
+    ``v`` with its norm ``vn`` (no PQ: what exact scoring reads). Build
+    once, search many times — FAISS's build/search split; callers
+    localCheckpoint it per session, at 100 TB it persists as
+    cell-partitioned parquet."""
+    pts = spread_small_scan(
+        corpus.select(F.col(id_col).alias("pid"), _dbl(F.col(vec_col)).alias("v"))
+    )
+    if model.unit:
+        pts = pts.select("pid", _unit(F.col("v")).alias("v"))
+    cells = []
+    if model.centers is not None:
+        pts = assign_to_centers(pts, model.centers, quantum=quantum, payload_cols=("v",))
+        # Declared non-null (it is never null): otherwise the search
+        # join infers isnotnull(center_id) and pushes the whole routing
+        # expression below the spread repartition, recomputing it in
+        # the one scan task of an inline build.
+        pts = pts.withColumn("center_id", F.coalesce("center_id", F.lit(-1)))
+        cells = ["center_id"]
+    if model.books is None:
+        return pts.select(
+            F.col("pid").alias("neighbor_id"), *cells, "v", norm(F.col("v")).alias("vn")
+        )
+    nv = F.col("v") if model.unit else _unit(F.col("v"))
+    return pts.select(F.col("pid").alias("neighbor_id"), *cells, nv.alias("nv")).select(
+        "neighbor_id", *cells, F.expr(_pq_codes_sql(model.books, quantum)).alias("codes")
     )
 
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    nv = bind(v, lambda vv: F.transform(vv, lambda x: x / F.sqrt(dot(vv, vv))))
-    return spread_small_scan(
+
+def ann_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    model: AnnModel,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    *,
+    k: int = 10,
+    n_probe: int = 4,
+    rescore: int | None = None,
+    quantum: float = 1e6,
+    driver_probe_bound: int = 1024,
+    index: DataFrame | None = None,
+) -> DataFrame:
+    """The search half: approximate cosine top-k through ``model``.
+
+    - Route: with centers, each query probes its ``n_probe`` nearest
+      cells (:func:`_route_queries`) and a cells-keyed equi-join picks
+      candidates (~n_probe/n_cells of the store); without, the query
+      set crosses the whole store (the PQ full scan). A query batch
+      within ``driver_probe_bound`` rows is broadcast; a larger one
+      joins distributed, so the query set can be corpus-sized.
+    - Score: without books, the exact sequential-fold :func:`cosine`
+      (bit-matching DuckDB's list_dot_product) → ``cos_sim``. With
+      books, ADC: each query's (m x n_codes) table of quantized
+      subspace dot products is built once, before routing, and a
+      candidate's score is the integer sum of its m table entries —
+      quantized scores collide often, and integer ties break by
+      neighbor_id identically in both engines → ``approx_cos``.
+    - Rescore (books only): the top ``rescore`` ADC candidates per
+      query — a |Q|·rescore pool, joined (broadcast for a bounded
+      batch) over ONE more corpus scan — re-scored with the exact
+      fixed-point dot of the unit vectors, FAISS's refine step →
+      ``cos_sim``.
+
+    Returns (query_id, neighbor_id, rank, score). Pass ``index`` (a
+    :func:`build_index` result for the same model) to skip the build."""
+    if index is None:
+        index = build_index(corpus, model, id_col, vec_col, quantum)
+    qv = _dbl(F.col(vec_col))
+    q = queries.select(
+        F.col(id_col).alias("query_id"), (_unit(qv) if model.unit else qv).alias("qv")
+    )
+    if model.books is None:
+        # Norms fold once per vector (the index carries ``vn``), not
+        # once per pair: the same values :func:`cosine` computes.
+        q = q.withColumn("qn", norm(F.col("qv")))
+    else:
+        # Before routing: a query's table is built once, not once per
+        # probed cell.
+        qnv = F.col("qv") if model.unit else _unit(F.col("qv"))
+        q = q.select("query_id", "qv", qnv.alias("qnv")).select(
+            "query_id", "qv", F.expr(_adc_tables_sql(model.books, quantum)).alias("lut")
+        )
+    q, small = _route_queries(
+        q,
+        model.centers,
+        n_probe=n_probe,
+        driver_probe_bound=driver_probe_bound,
+        quantum=quantum,
+    )
+    side = F.broadcast(q) if small else q
+    pairs = (
+        index.crossJoin(side)
+        if model.centers is None
+        else index.join(side, "center_id")
+    ).filter(F.col("neighbor_id") != F.col("query_id"))
+    if model.books is None:
+        cos = dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("vn"))
+        scored = pairs.select("query_id", "neighbor_id", cos.alias("cos_sim"))
+        return _top_k(scored, "cos_sim", k, "cos_sim")
+    adc = " + ".join(f"lut[{j}][codes[{j}]]" for j in range(len(model.books)))
+    scored = pairs.select("query_id", "neighbor_id", F.expr(adc).alias("s_fp"))
+    if rescore is None:
+        approx = F.round(F.col("s_fp") / F.lit(quantum), 6).alias("approx_cos")
+        return _top_k(scored, "s_fp", k, approx)
+    nv = _unit(_dbl(F.col(vec_col)))
+    qn = queries.select(F.col(id_col).alias("query_id"), nv.alias("qnv"))
+    pool = _top_k(scored, "s_fp", rescore).select("query_id", "neighbor_id")
+    pool = pool.join(qn, "query_id")
+    refined = (
         corpus.select(F.col(id_col).alias("neighbor_id"), nv.alias("nv"))
-    ).select("neighbor_id", F.expr(_pq_codes_sql(books, quantum)).alias("codes"))
+        .join(F.broadcast(pool) if small else pool, "neighbor_id")
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.round(dot(F.col("qnv"), F.col("nv")) * F.lit(quantum), 0)
+            .cast("bigint")
+            .alias("e_fp"),
+        )
+    )
+    exact = F.round(F.col("e_fp") / F.lit(quantum), 6).alias("cos_sim")
+    return _top_k(refined, "e_fp", k, exact)
+
+
+# --- named configurations ---------------------------------------------------
+
+
+def cosine_topk_ivf(
+    corpus: DataFrame,
+    queries: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    k: int = 10,
+    n_clusters: int = 16,
+    n_probe: int = 4,
+    train_sample: int = 4096,
+    seed: int = 42,
+    driver_train_bound: int = DRIVER_TRAIN_BOUND,
+) -> DataFrame:
+    """IVF on k-means cells: queries probe ``n_probe`` of
+    ``n_clusters`` spherical centroids, candidates score with the exact
+    cosine. Recall vs the exact top-k pinned in tests/test_northstar.py."""
+    model = kmeans_model(
+        corpus, id_col, vec_col, n_clusters=n_clusters,
+        train_sample=train_sample, seed=seed,
+        driver_train_bound=driver_train_bound,
+    )
+    return ann_topk(corpus, queries, model, id_col, vec_col, k=k, n_probe=n_probe)
+
+
+def cosine_topk_pq(
+    corpus: DataFrame,
+    queries: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    k: int = 10,
+    m: int = 8,
+    n_codes: int = 32,
+    train_sample: int = 4096,
+    seed: int = 42,
+    driver_train_bound: int = DRIVER_TRAIN_BOUND,
+) -> DataFrame:
+    """PQ full scan with ADC over k-means codebooks: corpus vectors
+    stored as ``m`` code ids, a row's approximate cosine is m table
+    lookups. Scores are quantized; tests assert recall and the ADC
+    reconstruction, not score equality with the exact cosine."""
+    model = kmeans_model(
+        corpus, id_col, vec_col, m=m, n_codes=n_codes,
+        train_sample=train_sample, seed=seed,
+        driver_train_bound=driver_train_bound,
+    )
+    return ann_topk(corpus, queries, model, id_col, vec_col, k=k)
+
+
+def cosine_topk_ivfpq(
+    corpus: DataFrame,
+    queries: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    k: int = 10,
+    n_clusters: int = 16,
+    n_probe: int = 4,
+    m: int = 16,
+    n_codes: int = 32,
+    train_sample: int = 4096,
+    seed: int = 42,
+    driver_train_bound: int = DRIVER_TRAIN_BOUND,
+) -> DataFrame:
+    """IVF+PQ on k-means (the FAISS production shape): IVF prunes
+    WHICH inverted lists a query scans, PQ makes scanning a list cost
+    m lookups per row. Both quantizers train from one sample."""
+    model = kmeans_model(
+        corpus, id_col, vec_col, n_clusters=n_clusters, m=m, n_codes=n_codes,
+        train_sample=train_sample, seed=seed,
+        driver_train_bound=driver_train_bound,
+    )
+    return ann_topk(corpus, queries, model, id_col, vec_col, k=k, n_probe=n_probe)
+
+
+def cosine_topk_ivf_kcenter(
+    corpus: DataFrame,
+    queries: DataFrame,
+    centers: list[dict],
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    k: int = 10,
+    n_probe: int = 4,
+    driver_probe_bound: int = 1024,
+    index: DataFrame | None = None,
+) -> DataFrame:
+    """IVF on DETERMINISTIC k-center cells (``centers`` from
+    ``selection.kcenter_greedy[_sampled]``): the whole answer —
+    train, assign, probe, exact rescoring — value-oracles in SQL.
+    ``index``: a :func:`build_index` result for ``AnnModel(centers)``."""
+    return ann_topk(
+        corpus, queries, AnnModel(centers=centers), id_col, vec_col,
+        k=k, n_probe=n_probe, driver_probe_bound=driver_probe_bound, index=index,
+    )
 
 
 def cosine_topk_pq_kcenter(
@@ -1134,163 +1198,13 @@ def cosine_topk_pq_kcenter(
     codes: DataFrame | None = None,
     rescore: int | None = None,
 ) -> DataFrame:
-    """X2 PQ ANN with asymmetric distance over DETERMINISTIC codebooks
-    (:func:`pq_kcenter_codebooks`) — fully native expressions, fully
-    value-oracle-able: corpus rows encode per subspace by fixed-point
-    argmin over the codeword literals (ties to the earlier-selected
-    code), each (query, row) ADC score is the integer sum of the m
-    per-subspace quantized dot products ``round(<q_sub, codeword>
-    * 1e6)``, and ranking orders by that integer (quantized PQ scores
-    collide OFTEN — integer ties break by neighbor_id identically in
-    both engines, where a float rank could not be trusted).
-
-    Scale shape: encoding is a zero-shuffle scan against codeword
-    literals (the 100 TB compression pass); scoring joins the
-    broadcast query set against the encoded scan — the classic PQ
-    full-scan, composable with IVF pruning; the window sees only
-    corpus x queries candidate rows. Both the per-subspace encoders
-    and the ADC terms are generated SQL (`selection.dlit` /
-    `sq_dist_fp_sql`), so plan construction costs m parses instead
-    of O(m x n_codes x dsub) py4j calls, and the test-scale
-    single-file corpus scan spreads across cores
-    (`selection.spread_small_scan`). Pass ``codes`` (a
-    :func:`build_pq_codes` result) to skip re-encoding the corpus —
-    the compressed store is the index, amortized across query
-    batches.
-
-    ``rescore`` (VERDICT r13 #6) adds the standard PQ refinement
-    stage: ADC ranks a BOUNDED candidate pool (``rescore`` rows per
-    query), then only those rows are re-scored with the EXACT
-    fixed-point cosine against their full vectors and re-ranked. The
-    pool is |Q|·rescore rows — broadcast back over ONE more corpus
-    scan (no second cross product) — so the coarse quantizer's weak
-    raw recall lifts toward the exact scan's answer on everything
-    the ADC pool catches, at a bounded, corpus-size-independent
-    extra cost. The score column becomes ``cos_sim`` (it IS the
-    exact cosine then), matching the IVF family's output shape."""
-    from gas_data_pipeline_spark.functions.exprs import bind
-    from gas_data_pipeline_spark.operators.selection import dlit
-
-    m = len(books)
-    dsub = len(books[0][0])
-
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    nv = bind(v, lambda vv: F.transform(vv, lambda x: x / F.sqrt(dot(vv, vv))))
-
-    def sub_sql(col: str, j: int) -> str:
-        return f"slice({col}, {j * dsub + 1}, {dsub})"
-
-    encoded = (
-        codes
-        if codes is not None
-        else build_pq_codes(corpus, books, id_col, vec_col, quantum)
-    )
-    qdf = queries.select(
-        F.col(id_col).alias("query_id"), nv.alias("qv")
-    )
-
-    def adc_sql(j: int) -> str:
-        # codeword picked at runtime by the row's j-th code id.
-        book_lit = "array(" + ",".join(
-            "array(" + ",".join(dlit(x) for x in cw) + ")"
-            for cw in books[j]
-        ) + ")"
-        cw = f"element_at({book_lit}, element_at(codes, {j + 1}) + 1)"
-        d = (
-            f"aggregate(zip_with({sub_sql('qv', j)}, {cw}, "
-            f"(a, b) -> a * b), CAST(0 AS DOUBLE), (acc, x) -> acc + x)"
-        )
-        return f"CAST(round({d} * {dlit(quantum)}, 0) AS BIGINT)"
-
-    s_fp = F.expr(" + ".join(adc_sql(j) for j in range(m)))
-    pairs = encoded.crossJoin(F.broadcast(qdf)).filter(
-        F.col("neighbor_id") != F.col("query_id")
-    )
-    scored = pairs.select("query_id", "neighbor_id", s_fp.alias("s_fp"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("s_fp").desc(), F.col("neighbor_id")
-    )
-    if rescore is None:
-        return (
-            scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-            .filter(F.col("rank") <= k)
-            .select(
-                "query_id",
-                "neighbor_id",
-                "rank",
-                F.round(F.col("s_fp") / F.lit(quantum), 6).alias("approx_cos"),
-            )
-        )
-    # Refinement: the ADC pool (top ``rescore`` per query) joins its
-    # FULL vectors back in — candidates are |Q|·rescore rows, so they
-    # broadcast into one corpus scan; the exact cosine is the same
-    # sequential-fold fixed point the IVF family uses (bit-identical
-    # to DuckDB's list_dot_product, so the stage value-oracles).
-    cands = (
-        scored.withColumn("adc_rank", F.row_number().over(w))
-        .filter(F.col("adc_rank") <= rescore)
-        .select("query_id", "neighbor_id")
-    )
-    corp_nv = corpus.select(F.col(id_col).alias("neighbor_id"), nv.alias("nv"))
-    refined = corp_nv.join(
-        F.broadcast(cands.join(qdf, "query_id")), "neighbor_id"
-    ).select(
-        "query_id",
-        "neighbor_id",
-        F.round(dot(F.col("qv"), F.col("nv")) * F.lit(quantum), 0)
-        .cast("bigint")
-        .alias("e_fp"),
-    )
-    w_ex = Window.partitionBy("query_id").orderBy(
-        F.col("e_fp").desc(), F.col("neighbor_id")
-    )
-    return (
-        refined.withColumn("rank", F.row_number().over(w_ex).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "rank",
-            F.round(F.col("e_fp") / F.lit(quantum), 6).alias("cos_sim"),
-        )
-    )
-
-
-def build_ivfpq_kcenter_index(
-    corpus: DataFrame,
-    centers: list[dict],
-    books: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    quantum: float = 1e6,
-) -> DataFrame:
-    """The composed IVF+PQ index, the FAISS production layout: PQ
-    codes stored INSIDE the inverted lists — (neighbor_id, center_id,
-    codes). Cell routing and code encoding are BOTH row-wise
-    functions of the vector, so the index is ONE zero-shuffle scan —
-    never a corpus×corpus join of separately-built parts (at 100 TB
-    this persists as cell-partitioned parquet of m-byte codes; the
-    raw vectors never need to be read at search time)."""
-    from gas_data_pipeline_spark.functions.exprs import bind
-    from gas_data_pipeline_spark.operators.selection import (
-        center_cands_sql,
-        spread_small_scan,
-    )
-
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    nv = bind(v, lambda vv: F.transform(vv, lambda x: x / F.sqrt(dot(vv, vv))))
-    pts = spread_small_scan(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"), v.alias("v"), nv.alias("nv")
-        )
-    )
-    best = F.element_at(
-        F.array_sort(F.expr(center_cands_sql("v", centers, quantum))), 1
-    )
-    return pts.select(
-        "neighbor_id",
-        best["center_id"].alias("center_id"),
-        F.expr(_pq_codes_sql(books, quantum)).alias("codes"),
+    """PQ full scan with ADC over DETERMINISTIC k-center codebooks
+    (:func:`pq_kcenter_codebooks[_sampled]`), value-oracled; ``rescore``
+    adds the exact refinement stage. ``codes``: a :func:`build_index`
+    result for ``AnnModel(books=books)``."""
+    return ann_topk(
+        corpus, queries, AnnModel(books=books), id_col, vec_col,
+        k=k, rescore=rescore, quantum=quantum, index=codes,
     )
 
 
@@ -1308,436 +1222,14 @@ def cosine_topk_ivfpq_kcenter(
     index: DataFrame | None = None,
     rescore: int | None = None,
 ) -> DataFrame:
-    """X2 composed IVF+PQ with DETERMINISTIC k-center quantizers at
-    BOTH levels — the production FAISS shape (IVF prunes which
-    inverted lists a query scans; PQ makes scanning a list cost m
-    integer table lookups per row), now fully VALUE-ORACLE-ABLE: the
-    coarse router is the raw-vector k-center codebook `ann_ivf` uses,
-    the fine quantizer the normalized-subvector codebooks `ann_pq`
-    uses, candidates come from the cells-keyed equi-join, and each
-    candidate's ADC score is the integer sum of m quantized subspace
-    dot products — quantized scores collide often, and integer ties
-    break by neighbor_id identically in both engines. (The k-means
-    throughput variant stays in :func:`cosine_topk_ivfpq`.)
-
-    Scale shape: probe (bounded driver batch or distributed argmin)
-    -> broadcast probe set ⋈ the code-carrying inverted lists
-    (~n_probe/n_cells of the compressed corpus per query) -> ADC
-    expressions against the broadcast query subvectors -> per-query
-    top-k window over candidate rows only.
-
-    ``rescore`` applies the same exact-refinement stage as
-    :func:`cosine_topk_pq_kcenter`: the ADC ranking keeps a bounded
-    ``rescore``-candidate pool per query, whose FULL vectors are
-    fetched in one broadcast-candidates corpus scan and re-scored
-    with exact fixed-point cosine — FAISS's refine step on top of
-    IVF+PQ. Output column becomes ``cos_sim`` (the score IS exact)."""
-    from gas_data_pipeline_spark.functions.exprs import bind
-    from gas_data_pipeline_spark.operators.selection import dlit
-
-    m = len(books)
-    dsub = len(books[0][0])
-    idx = (
-        index
-        if index is not None
-        else build_ivfpq_kcenter_index(
-            corpus, centers, books, id_col, vec_col, quantum
-        )
-    )
-    qprobe = probe_cells(
-        queries,
-        centers,
-        id_col,
-        vec_col,
-        n_probe=n_probe,
-        driver_probe_bound=driver_probe_bound,
-        quantum=quantum,
-    ).select("query_id", "center_id")
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    nv = bind(v, lambda vv: F.transform(vv, lambda x: x / F.sqrt(dot(vv, vv))))
-    qdf = queries.select(F.col(id_col).alias("query_id"), nv.alias("qv"))
-
-    def adc_sql(j: int) -> str:
-        book_lit = "array(" + ",".join(
-            "array(" + ",".join(dlit(x) for x in cw) + ")"
-            for cw in books[j]
-        ) + ")"
-        cw = f"element_at({book_lit}, element_at(codes, {j + 1}) + 1)"
-        d = (
-            f"aggregate(zip_with(slice(qv, {j * dsub + 1}, {dsub}), {cw}, "
-            f"(a, b) -> a * b), CAST(0 AS DOUBLE), (acc, x) -> acc + x)"
-        )
-        return f"CAST(round({d} * {dlit(quantum)}, 0) AS BIGINT)"
-
-    cand = idx.join(F.broadcast(qprobe), "center_id").filter(
-        F.col("neighbor_id") != F.col("query_id")
-    )
-    scored = cand.join(F.broadcast(qdf), "query_id").select(
-        "query_id",
-        "neighbor_id",
-        F.expr(" + ".join(adc_sql(j) for j in range(m))).alias("s_fp"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("s_fp").desc(), F.col("neighbor_id")
-    )
-    if rescore is None:
-        return (
-            scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-            .filter(F.col("rank") <= k)
-            .select(
-                "query_id",
-                "neighbor_id",
-                "rank",
-                F.round(F.col("s_fp") / F.lit(quantum), 6).alias("approx_cos"),
-            )
-        )
-    cands = (
-        scored.withColumn("adc_rank", F.row_number().over(w))
-        .filter(F.col("adc_rank") <= rescore)
-        .select("query_id", "neighbor_id")
-    )
-    corp_nv = corpus.select(F.col(id_col).alias("neighbor_id"), nv.alias("nv"))
-    refined = corp_nv.join(
-        F.broadcast(cands.join(qdf, "query_id")), "neighbor_id"
-    ).select(
-        "query_id",
-        "neighbor_id",
-        F.round(dot(F.col("qv"), F.col("nv")) * F.lit(quantum), 0)
-        .cast("bigint")
-        .alias("e_fp"),
-    )
-    w_ex = Window.partitionBy("query_id").orderBy(
-        F.col("e_fp").desc(), F.col("neighbor_id")
-    )
-    return (
-        refined.withColumn("rank", F.row_number().over(w_ex).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "rank",
-            F.round(F.col("e_fp") / F.lit(quantum), 6).alias("cos_sim"),
-        )
-    )
-
-
-def train_pq_codebooks(
-    sample: np.ndarray, m: int = 8, n_codes: int = 32, n_iters: int = 15, seed: int = 42
-) -> np.ndarray:
-    """Product-quantization codebooks: split the (normalized) vector
-    space into ``m`` orthogonal subspaces and run seeded L2 k-means in
-    each. Returns (m, n_codes, dim/m). Like IVF centroids, the training
-    sample is a bounded stats object — the only vectors that ever
-    reach the driver."""
-    d = sample.shape[1]
-    assert d % m == 0, f"dim {d} not divisible into {m} subvectors"
-    dsub = d // m
-    X = sample / np.linalg.norm(sample, axis=1, keepdims=True)
-    rng = np.random.default_rng(seed)
-    books = np.empty((m, n_codes, dsub))
-    for j in range(m):
-        S = X[:, j * dsub : (j + 1) * dsub]
-        C = S[rng.choice(len(S), size=min(n_codes, len(S)), replace=False)]
-        for _ in range(n_iters):
-            d2 = ((S[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-            assign = np.argmin(d2, axis=1)
-            for c in range(len(C)):
-                members = S[assign == c]
-                if len(members):
-                    C[c] = members.mean(axis=0)
-        books[j, : len(C)] = C
-        if len(C) < n_codes:  # degenerate tiny sample: pad with repeats
-            books[j, len(C):] = C[0]
-    return books
-
-
-def pq_encode_udf(codebooks: np.ndarray):
-    """Arrow-vectorized PQ encoder: vector in, array<int> of ``m``
-    code ids out (argmin L2 per subspace over the normalized vector).
-    At 100 TB this is the compression pass — 64 float32 dims become 8
-    bytes — and it runs once, distributed, with the codebooks shipped
-    by value in the closure."""
-    from pyspark.sql.functions import pandas_udf
-
-    B = np.asarray(codebooks, dtype=np.float64)
-
-    @pandas_udf("array<int>")
-    def encode(vec: pd.Series) -> pd.Series:
-        import numpy as np
-
-        m, n_codes, dsub = B.shape
-        V = np.stack(vec.to_numpy()).astype(np.float64)
-        V = V / np.linalg.norm(V, axis=1, keepdims=True)
-        codes = np.empty((len(V), m), dtype=np.int64)
-        for j in range(m):
-            S = V[:, j * dsub : (j + 1) * dsub]
-            # ||s - c||^2 = ||s||^2 - 2 s.c + ||c||^2 -> argmin over c
-            d2 = (S**2).sum(1, keepdims=True) - 2 * (S @ B[j].T) + (B[j] ** 2).sum(1)
-            codes[:, j] = np.argmin(d2, axis=1)
-        return pd.Series([row.tolist() for row in codes])
-
-    return encode
-
-
-def cosine_topk_pq(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    m: int = 8,
-    n_codes: int = 32,
-    train_sample: int = 4096,
-    seed: int = 42,
-    n_blocks: int = 16,
-    n_query_blocks: int = 1,
-    driver_train_bound: int = DRIVER_TRAIN_BOUND,
-) -> DataFrame:
-    """X2 product-quantization ANN with asymmetric distance (ADC):
-    corpus vectors are stored only as ``m`` byte-sized code ids; each
-    query precomputes an (m x n_codes) lookup table of subspace dot
-    products, and a corpus row's approximate cosine is m table lookups
-    — no float vectors are ever read at scan time. This is the
-    compressed-storage scale path (IVF prunes WHAT you scan; PQ
-    shrinks what a scan COSTS — 32x smaller vectors, cache-resident
-    tables), composable with IVF in a real deployment.
-
-    Scale shape: codebook training is a bounded driver-side sample —
-    the ONLY vectors that ever reach the driver. Corpus encoding is
-    one distributed Arrow pass. Both sides then block-pack (corpus
-    codes into ``n_blocks`` code-matrix rows, queries into
-    ``n_query_blocks`` vector-matrix rows via ``pack_blocks``) and
-    every (code-block x query-block) pair scores in one mapInPandas
-    task: the ADC tables for the block's queries are built inside the
-    closure from the codebooks (shipped by value, a few KB) — a
-    (block_queries x m x n_codes) einsum — and all lookups happen as
-    one fancy-indexed sum. Each pair emits at most queries x k rows
-    map-side, then a global per-query top-k window. Neither side is
-    ever driver-materialized, so the query set can be corpus-sized:
-    raise ``n_query_blocks`` so one block's (ids + float64 matrix +
-    ADC tables) fits an Arrow batch.
-
-    Scores are approximate (quantized); tests assert recall against
-    the exact scan plus rank monotonicity, not score equality.
-    """
-    books = pq_codebooks_for(
-        corpus,
-        id_col,
-        vec_col,
-        m,
-        n_codes,
-        train_sample,
-        seed=seed,
-        driver_train_bound=driver_train_bound,
-    )
-
-    encode = pq_encode_udf(books)
-    codes = corpus.select(
-        F.col(id_col).cast("bigint").alias("neighbor_id"),
-        encode(F.col(vec_col)).alias("codes"),
-    )
-
-    def pack_codes(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        pdf = pdf.sort_values("neighbor_id")
-        C = np.stack(pdf["codes"].to_numpy()).astype(np.int64)
-        return pd.DataFrame(
-            {
-                "block": [int(pdf["__block"].iloc[0])],
-                "ids": [pdf["neighbor_id"].tolist()],
-                "codes": [C.ravel().tolist()],
-            }
-        )
-
-    code_blocks = (
-        codes.withColumn(
-            "__block", F.pmod(F.hash("neighbor_id"), F.lit(n_blocks))
-        )
-        .groupBy("__block")
-        .applyInPandas(
-            pack_codes, schema="block int, ids array<bigint>, codes array<int>"
-        )
-    )
-    qb = pack_blocks(queries, id_col, vec_col, n_query_blocks).select(
-        F.col("ids").alias("q_ids"),
-        F.col("mat").alias("q_mat"),
-        F.col("dim").alias("q_dim"),
-    )
-    paired = code_blocks.crossJoin(qb)
-
-    out_schema = "query_id bigint, neighbor_id bigint, approx_cos double"
-    topk = int(k)
-    B = books  # (m, n_codes, dim/m) — ships by value in the closure
-
-    def score(batches):
-        import numpy as np
-        import pandas as pd
-
-        mm, _, dsub = B.shape
-        for pdf in batches:
-            out = {"query_id": [], "neighbor_id": [], "approx_cos": []}
-            for row in pdf.itertuples():
-                C = np.asarray(row.codes, dtype=np.int64).reshape(-1, mm)
-                nid = np.asarray(row.ids, dtype=np.int64)
-                Q = np.asarray(row.q_mat, dtype=np.float64).reshape(
-                    -1, int(row.q_dim)
-                )
-                Q = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-                q_ids = np.asarray(row.q_ids, dtype=np.int64)
-                # Per-block ADC tables: T[q, j, c] = <q_sub_j, codeword_jc>
-                T = np.einsum("qjd,jcd->qjc", Q.reshape(len(Q), mm, dsub), B)
-                # S[q, b] = Σ_j T[q, j, C[b, j]] — all m lookups fancy-indexed.
-                S = T[:, np.arange(mm), C].sum(axis=2)  # (n_q, block_rows)
-                S = np.where(q_ids[:, None] == nid[None, :], -np.inf, S)
-                take = min(topk, S.shape[1])
-                idx = np.argpartition(-S, take - 1, axis=1)[:, :take]
-                for qi in range(len(q_ids)):
-                    cols = idx[qi]
-                    cols = cols[np.isfinite(S[qi, cols])]
-                    out["query_id"].extend([q_ids[qi]] * len(cols))
-                    out["neighbor_id"].extend(nid[cols].tolist())
-                    out["approx_cos"].extend(S[qi, cols].tolist())
-            yield pd.DataFrame(out)
-
-    scored = paired.mapInPandas(score, schema=out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("approx_cos", 6).alias("approx_cos"))
-    )
-
-
-def cosine_topk_ivfpq(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    n_clusters: int = 16,
-    n_probe: int = 4,
-    m: int = 16,
-    n_codes: int = 32,
-    train_sample: int = 4096,
-    seed: int = 42,
-    driver_train_bound: int = DRIVER_TRAIN_BOUND,
-) -> DataFrame:
-    """X2 composite IVF+PQ (the FAISS-style production index): IVF
-    prunes WHICH inverted lists a query scans (~n_probe/n_clusters of
-    the corpus), PQ shrinks what scanning a list COSTS (m table
-    lookups per row over byte codes). Both training passes share one
-    bounded driver-side sample; the corpus is encoded once,
-    distributed; candidate generation is the cluster equi-join; ADC
-    scoring is an Arrow-vectorized pass over the joined pairs.
-
-    Approximate on both axes (pruning misses + quantization noise):
-    the test contract is recall vs the exact scan, not score equality.
-
-    Scale shape: the only driver-side data is the bounded training
-    sample. Query vectors ride the cluster equi-join (no forced
-    broadcast — AQE picks broadcast when the probe set is small and a
-    skew-split shuffle join when it is corpus-sized), and the ADC
-    tables are built INSIDE the scoring UDF per Arrow batch: the
-    batch's queries are factorized to uniques, one einsum against the
-    by-value codebooks builds their (m x n_codes) tables, and every
-    pair scores with m fancy-indexed lookups. No query-set size ever
-    touches driver memory.
-    """
-    if train_sample <= driver_train_bound:
-        # Small regime: both training passes share ONE bounded driver
-        # sample (a single TakeOrderedAndProject job).
-        _log.info(
-            "IVF+PQ training: driver numpy path (train_sample=%d <= bound=%d)",
-            train_sample,
-            driver_train_bound,
-        )
-        sample = _train_matrix(corpus, id_col, vec_col, train_sample)
-        centroids = _kmeans_centroids(sample, n_clusters, seed=seed)
-        books = train_pq_codebooks(sample, m=m, n_codes=n_codes, seed=seed)
-    else:
-        _log.info(
-            "IVF+PQ training: distributed ml.KMeans path "
-            "(train_sample=%d > bound=%d)",
-            train_sample,
-            driver_train_bound,
-        )
-        # Both trainers consume ONE cached training frame: the corpus
-        # count + hash-stride filter + normalize run once, and the
-        # KMeans iterations (centroids + m subspace fits) all read the
-        # cached rows instead of re-scanning the corpus.
-        shared = _distributed_training_rows(
-            corpus, id_col, vec_col, train_sample
-        ).cache()
-        try:
-            centroids = _kmeans_centroids_distributed(
-                corpus, id_col, vec_col, n_clusters, train_sample,
-                seed=seed, train=shared,
-            )
-            books = _pq_codebooks_distributed(
-                corpus, id_col, vec_col, m, n_codes, train_sample,
-                seed=seed, train=shared,
-            )
-        finally:
-            shared.unpersist()
-
-    assign1 = ivf_assign_udf(centroids, n_probe=1)
-    encode = pq_encode_udf(books)
-    cb = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        encode(F.col(vec_col)).alias("codes"),
-        F.element_at(assign1(F.col(vec_col)), 1).alias("cluster"),
-    )
-
-    probe_n = ivf_assign_udf(centroids, n_probe=n_probe)
-    qb = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.explode(probe_n(F.col(vec_col))).alias("cluster"),
-    )
-    pairs = cb.join(qb, "cluster").filter(
-        F.col("neighbor_id") != F.col("query_id")
-    )
-
-    from pyspark.sql.functions import pandas_udf
-
-    B = books  # (m, n_codes, dim/m) — ships by value in the closure
-
-    @pandas_udf("double")
-    def adc(codes: pd.Series, qid: pd.Series, qvec: pd.Series) -> pd.Series:
-        import numpy as np
-
-        mm, _, dsub = B.shape
-        C = np.stack(codes.to_numpy()).astype(np.int64)  # (batch, m)
-        q = qid.to_numpy()
-        # One ADC table per UNIQUE query in the batch (each query joins
-        # ~|cluster| corpus rows, so uniques << batch rows).
-        uniq, first, inv = np.unique(q, return_index=True, return_inverse=True)
-        Qu = np.stack(qvec.iloc[first].to_numpy()).astype(np.float64)
-        Qu = Qu / np.linalg.norm(Qu, axis=1, keepdims=True)
-        T = np.einsum("qjd,jcd->qjc", Qu.reshape(len(Qu), mm, dsub), B)
-        # Gather each row's ADC table, then its m code lookups.
-        s = np.take_along_axis(
-            T[inv], C[:, :, None], axis=2
-        )[:, :, 0].sum(axis=1)
-        return pd.Series(s)
-
-    scored = pairs.select(
-        "query_id",
-        "neighbor_id",
-        adc(F.col("codes"), F.col("query_id"), F.col("q_vec")).alias("approx_cos"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id", "rank", F.round("approx_cos", 6).alias("approx_cos")
-        )
+    """IVF+PQ with DETERMINISTIC k-center quantizers at both levels:
+    raw-vector cells route, unit-subvector codebooks score, so the
+    composed index value-oracles. ``index``: a :func:`build_index`
+    result for ``AnnModel(centers, books)``."""
+    return ann_topk(
+        corpus, queries, AnnModel(centers=centers, books=books), id_col, vec_col,
+        k=k, n_probe=n_probe, rescore=rescore, quantum=quantum,
+        driver_probe_bound=driver_probe_bound, index=index,
     )
 
 
@@ -1750,7 +1242,8 @@ def semantic_bucket_near_dup(
 ) -> DataFrame:
     """SemDeDup-style semantic dedup with a DETERMINISTIC partitioner:
     bucket = the sign pattern of the first ``sign_bits`` embedding
-    coordinates, near-dup pairs searched only within a bucket.
+    coordinates (:func:`sign_bucket`), near-dup pairs searched only
+    within a bucket.
 
     The random-hyperplane LSH variant (``cosine_topk_lsh``) has better
     bucket geometry but engine-derived projections make it rows-only
@@ -1768,20 +1261,14 @@ def semantic_bucket_near_dup(
     cos_sim) with id_a < id_b.
     """
     v = F.col(vec_col).cast("array<double>")
-    bucket = F.lit(0)
-    for i in range(sign_bits):
-        bucket = bucket + F.when(v[i] > 0, F.lit(1 << i)).otherwise(F.lit(0))
-    dot = lambda x, y: F.aggregate(  # noqa: E731 — sequential fold, oracle-ordered
-        F.zip_with(x, y, lambda p, q: p * q), F.lit(0.0), lambda acc, z: acc + z
-    )
     # Per-ROW norm, folded once per vector — the per-pair expression is
     # then a single dot fold, not three (sqrt of the same sequential
     # fold the oracle computes, so values are identical).
     base = df.select(
         F.col(id_col).alias("id"),
         v.alias("v"),
-        bucket.cast("bigint").alias("bucket"),
-    ).withColumn("nv", F.sqrt(dot(F.col("v"), F.col("v"))))
+        sign_bucket(v, sign_bits).alias("bucket"),
+    ).withColumn("nv", norm(F.col("v")))
     a = base.select(
         "bucket",
         F.col("id").alias("id_a"),

@@ -233,6 +233,4 @@ def reset_model_seams() -> None:
     selection_suite._QCLF_CACHE.clear()
     northstar._COMPONENTS_CACHE.clear()
     northstar._PQ_BOOK_CACHE.clear()
-    _release(northstar._IVF_INDEX_CACHE)
-    _release(northstar._PQ_CODES_CACHE)
-    _release(northstar._IVFPQ_INDEX_CACHE)
+    _release(northstar._INDEX_CACHE)

@@ -671,33 +671,21 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     list_dot_product. Training goes through the session-scoped
     k-center seam; recall vs the exact top-k stays asserted in
     tests/test_northstar.py."""
-    from gas_data_pipeline_spark.operators.similarity import (
-        cosine_topk_ivf_kcenter,
-    )
-    from gas_data_pipeline_spark.suite.selection_suite import _corpus_kcenter
-
-    emb = table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 8)
-    centers = _corpus_kcenter(spark, sf_dir, "full", emb, k=16)
-    index = _corpus_ivf_index(spark, sf_dir, emb, centers)
-    return cosine_topk_ivf_kcenter(
-        emb, queries, centers, k=10, n_probe=4, index=index
-    )
+    return _kcenter_search(spark, sf_dir, coarse=True, pq=False, n_probe=4)
 
 
-# Session-scoped ANN index seams (the build/search split every
+# Session-scoped ANN index seam (the build/search split every
 # production ANN system has — FAISS builds inverted lists / code
-# tables once and amortizes them over query batches): the routed
-# corpus (IVF) and the encoded codes (PQ) are pure functions of
-# (corpus, model), localCheckpointed per (application, sf_dir) so
-# repeat query batches pay search cost only. At 100 TB these would
-# persist as cell-partitioned / code-packed parquet instead. Keys
-# carry a MODEL FINGERPRINT alongside (application, sf_dir) — ADVICE
-# r9: a second caller with different centers/books must never reuse
-# the wrong checkpointed index; registry.reset_model_seams releases
-# the checkpoint blocks when clearing.
-_IVF_INDEX_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-_PQ_CODES_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+# tables once and amortizes them over query batches): the index —
+# routed cells, PQ codes, or both — is a pure function of (corpus,
+# model), localCheckpointed per (application, sf_dir) so repeat query
+# batches pay search cost only. At 100 TB it would persist as
+# cell-partitioned / code-packed parquet instead. Keys carry a MODEL
+# FINGERPRINT alongside (application, sf_dir) — ADVICE r9: a second
+# caller with a different model must never reuse the wrong
+# checkpointed index; registry.reset_model_seams releases the
+# checkpoint blocks when clearing.
+_INDEX_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
 
 def _model_fp(model) -> str:
@@ -708,34 +696,37 @@ def _model_fp(model) -> str:
     return hashlib.md5(repr(model).encode()).hexdigest()[:16]
 
 
-def _corpus_ivf_index(
-    spark: SparkSession, sf_dir: str, emb: DataFrame, centers: list[dict]
+def _corpus_index(
+    spark: SparkSession, sf_dir: str, emb: DataFrame, model
 ) -> DataFrame:
-    from gas_data_pipeline_spark.operators.similarity import (
-        build_ivf_kcenter_index,
-    )
+    from gas_data_pipeline_spark.operators.similarity import build_index
 
-    key = (spark.sparkContext.applicationId, sf_dir, _model_fp(centers))
-    idx = _IVF_INDEX_CACHE.get(key)
+    key = (spark.sparkContext.applicationId, sf_dir, _model_fp(model))
+    idx = _INDEX_CACHE.get(key)
     if idx is None:
-        idx = build_ivf_kcenter_index(emb, centers).localCheckpoint(
-            eager=True
-        )
-        _IVF_INDEX_CACHE[key] = idx
+        idx = build_index(emb, model).localCheckpoint(eager=True)
+        _INDEX_CACHE[key] = idx
     return idx
 
 
-def _corpus_pq_codes(
-    spark: SparkSession, sf_dir: str, emb: DataFrame, books: list
+def _kcenter_search(
+    spark: SparkSession, sf_dir: str, *, coarse: bool, pq: bool, **search
 ) -> DataFrame:
-    from gas_data_pipeline_spark.operators.similarity import build_pq_codes
+    """The value-oracled ANN queries' one shape: a k-center model (16
+    raw-vector cells and/or the 8x8 unit-subvector codebooks, both
+    from session seams), its session index, and the first 8 vectors
+    searched for their top 10."""
+    from gas_data_pipeline_spark.operators.similarity import AnnModel, ann_topk
+    from gas_data_pipeline_spark.suite.selection_suite import _corpus_kcenter
 
-    key = (spark.sparkContext.applicationId, sf_dir, _model_fp(books))
-    enc = _PQ_CODES_CACHE.get(key)
-    if enc is None:
-        enc = build_pq_codes(emb, books).localCheckpoint(eager=True)
-        _PQ_CODES_CACHE[key] = enc
-    return enc
+    emb = table(spark, sf_dir, "embeddings")
+    model = AnnModel(
+        centers=_corpus_kcenter(spark, sf_dir, "full", emb, k=16) if coarse else None,
+        books=_corpus_pq_books(spark, sf_dir) if pq else None,
+    )
+    index = _corpus_index(spark, sf_dir, emb, model)
+    queries = emb.filter(F.col("vec_id") < 8)
+    return ann_topk(emb, queries, model, k=10, index=index, **search)
 
 
 # Deterministic PQ geometry: 8 subspaces x 8 codes over the 64-dim
@@ -864,18 +855,10 @@ def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     — integer sums, so the heavy code collisions PQ produces rank
     identically in both engines. The compressed-storage scale path (PQ
     shrinks what a scan COSTS; IVF/LSH prune scan SCOPE; production
-    composes them — the k-means/Arrow throughput variant lives on in
-    ann_ivfpq and `cosine_topk_pq`). Recall vs the exact scan stays
-    asserted in tests/test_northstar.py."""
-    from gas_data_pipeline_spark.operators.similarity import (
-        cosine_topk_pq_kcenter,
-    )
-
-    emb = table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 8)
-    books = _corpus_pq_books(spark, sf_dir)
-    codes = _corpus_pq_codes(spark, sf_dir, emb, books)
-    return cosine_topk_pq_kcenter(emb, queries, books, k=10, codes=codes)
+    composes them — the k-means-trained variant is `cosine_topk_pq`,
+    and `ann_ivfpq` composes it with IVF; both run this same pipeline).
+    Recall vs the exact scan stays asserted in tests/test_northstar.py."""
+    return _kcenter_search(spark, sf_dir, coarse=False, pq=True)
 
 
 _PQ_RESCORE = 100  # ADC pool size per query for the refinement stage
@@ -952,16 +935,8 @@ def ann_pq_rescored(spark: SparkSession, sf_dir: str) -> DataFrame:
     one extra corpus scan — bounded, corpus-size-independent — and
     every stage (codebooks, codes, ADC ranks, exact rescoring)
     value-oracles in SQL."""
-    from gas_data_pipeline_spark.operators.similarity import (
-        cosine_topk_pq_kcenter,
-    )
-
-    emb = table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 8)
-    books = _corpus_pq_books(spark, sf_dir)
-    codes = _corpus_pq_codes(spark, sf_dir, emb, books)
-    return cosine_topk_pq_kcenter(
-        emb, queries, books, k=10, codes=codes, rescore=_PQ_RESCORE
+    return _kcenter_search(
+        spark, sf_dir, coarse=False, pq=True, rescore=_PQ_RESCORE
     )
 
 
@@ -1079,57 +1054,16 @@ def ann_ivfpq_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
     scans (4 of 16 cells), and the normalized-subvector k-center
     codebooks `ann_pq` uses make scanning a list cost 8 integer
     table lookups per row (ADC). PQ codes live INSIDE the inverted
-    lists (`build_ivfpq_kcenter_index` — at scale, cell-partitioned
+    lists (`similarity.build_index` — at scale, cell-partitioned
     parquet of 8-byte codes; raw vectors never read at search time).
     Candidate ADC scores are integer sums, so the heavy quantized-
     score collisions rank identically in both engines; the oracle
     replays coarse routing, per-subspace codebooks (bounded 256-draw
     training samples), encoding, probing, and ranking end to end.
-    The k-means/Arrow throughput variant stays in `ann_ivfpq`
-    (rows-only, pytest recall floor); this one upgrades the composed
-    index family to the exact-oracle gate. Recall vs the exact scan
-    pinned in tests/test_northstar.py."""
-    from gas_data_pipeline_spark.operators.similarity import (
-        cosine_topk_ivfpq_kcenter,
-    )
-    from gas_data_pipeline_spark.suite.selection_suite import _corpus_kcenter
-
-    emb = table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 8)
-    centers = _corpus_kcenter(spark, sf_dir, "full", emb, k=16)
-    books = _corpus_pq_books(spark, sf_dir)
-    index = _corpus_ivfpq_index(spark, sf_dir, emb, centers, books)
-    return cosine_topk_ivfpq_kcenter(
-        emb, queries, centers, books, k=10, n_probe=4, index=index
-    )
-
-
-_IVFPQ_INDEX_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def _corpus_ivfpq_index(
-    spark: SparkSession,
-    sf_dir: str,
-    emb: DataFrame,
-    centers: list[dict],
-    books: list,
-) -> DataFrame:
-    from gas_data_pipeline_spark.operators.similarity import (
-        build_ivfpq_kcenter_index,
-    )
-
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _model_fp((centers, books)),
-    )
-    idx = _IVFPQ_INDEX_CACHE.get(key)
-    if idx is None:
-        idx = build_ivfpq_kcenter_index(emb, centers, books).localCheckpoint(
-            eager=True
-        )
-        _IVFPQ_INDEX_CACHE[key] = idx
-    return idx
+    The k-means-trained configuration of the same pipeline is
+    `ann_ivfpq` (rows-only, pytest recall floor). Recall vs the exact
+    scan pinned in tests/test_northstar.py."""
+    return _kcenter_search(spark, sf_dir, coarse=True, pq=True, n_probe=4)
 
 
 @register(
@@ -1175,19 +1109,8 @@ def ann_ivfpq_rescored(spark: SparkSession, sf_dir: str) -> DataFrame:
     coarse routing, codebooks, encoding, probing, ADC pool, exact
     rescore — value-oracles in SQL (shared CTE prefix with
     `ann_ivfpq_kcenter`)."""
-    from gas_data_pipeline_spark.operators.similarity import (
-        cosine_topk_ivfpq_kcenter,
-    )
-    from gas_data_pipeline_spark.suite.selection_suite import _corpus_kcenter
-
-    emb = table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 8)
-    centers = _corpus_kcenter(spark, sf_dir, "full", emb, k=16)
-    books = _corpus_pq_books(spark, sf_dir)
-    index = _corpus_ivfpq_index(spark, sf_dir, emb, centers, books)
-    return cosine_topk_ivfpq_kcenter(
-        emb, queries, centers, books, k=10, n_probe=4, index=index,
-        rescore=_IVFPQ_RESCORE,
+    return _kcenter_search(
+        spark, sf_dir, coarse=True, pq=True, n_probe=4, rescore=_IVFPQ_RESCORE
     )
 
 
@@ -1197,12 +1120,13 @@ def ann_ivfpq_rescored(spark: SparkSession, sf_dir: str) -> DataFrame:
 # in tests/test_northstar.py::test_ivfpq_topk_recall_and_soundness.
 @register("ann_ivfpq")
 def ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X2 composite IVF+PQ index (the FAISS production shape): IVF
-    prunes which inverted lists a query scans, PQ makes scanning a
-    list cost m byte-table lookups per row. One shared bounded
-    training sample; candidates via the cluster equi-join; ADC scoring
-    Arrow-vectorized over the joined pairs. Recall vs the exact scan
-    asserted in tests/test_northstar.py."""
+    """X2 composite IVF+PQ index (the FAISS production shape) on the
+    k-means trainer: IVF prunes which inverted lists a query scans, PQ
+    makes scanning a list cost m table lookups per row. Both quantizers
+    train from one bounded sample; routing, encoding and ADC scoring
+    are the generated-SQL stages the k-center queries use
+    (`similarity.ann_topk`). Recall vs the exact scan asserted in
+    tests/test_northstar.py."""
     from gas_data_pipeline_spark.operators.similarity import cosine_topk_ivfpq
 
     emb = table(spark, sf_dir, "embeddings")

@@ -379,7 +379,8 @@ def test_bitset_kernel_refuses_open_vocab(spark):
 
 def test_facade_exposes_new_operators(spark, tmp_path):
     """Wiring smoke for the latest facade methods: span dedup, LM
-    quality, SCD2 history, PQ search, JSONL quarantine."""
+    quality, SCD2 history, JSONL quarantine (search_similar has
+    test_search_similar_methods)."""
     from gas_data_pipeline_spark.engine import GasDataEngine
     from tests.conftest import SF_SMALL
 
@@ -399,16 +400,24 @@ def test_facade_exposes_new_operators(spark, tmp_path):
     hist = eng.dimension_history(log, "k", "v", "t").toPandas()
     assert len(hist) == 2 and hist.is_current.sum() == 1
 
-    emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
-    import pyspark.sql.functions as F
-
-    pq = eng.search_similar(emb, emb.filter(F.col("vec_id") < 2), k=3, method="pq")
-    assert pq.count() == 6
-
     p = tmp_path / "x.jsonl"
     p.write_text('{"a": 1}\nbroken\n')
     good, bad = eng.ingest_jsonl(str(p), "a bigint")
     assert good.count() == 1 and bad.count() == 1
+
+
+@pytest.mark.parametrize("method", ["exact", "lsh", "ivf", "pq", "ivfpq"])
+def test_search_similar_methods(engine, spark, method):
+    """Every search_similar method answers each query with exactly k
+    neighbors, never the query itself, ranked 1..k."""
+    emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
+    out = engine.search_similar(
+        emb, emb.filter(F.col("vec_id") < 2), k=3, method=method
+    ).toPandas()
+    assert sorted(out.query_id.unique()) == [0, 1]
+    assert (out.query_id != out.neighbor_id).all()
+    for _, grp in out.groupby("query_id"):
+        assert sorted(grp["rank"]) == [1, 2, 3]
 
 
 def test_engine_validate_batch(engine, spark):

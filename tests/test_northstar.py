@@ -533,9 +533,14 @@ def test_pq_topk_recall_and_soundness(spark, emb_pdf):
     """PQ/ADC scores are approximate, so the contract is recall vs the
     exact scan (deterministic: seeded codebooks + deterministic sample)
     plus structural soundness — contiguous ranks, no self-matches,
-    scores within the valid cosine range."""
+    scores within the valid cosine range, and each score equal to the
+    numpy ADC of the row's codes under the k-means trainer's codebooks."""
     from gas_data_pipeline_spark.catalog import table
-    from gas_data_pipeline_spark.operators.similarity import cosine_topk, cosine_topk_pq
+    from gas_data_pipeline_spark.operators.similarity import (
+        cosine_topk,
+        cosine_topk_pq,
+        kmeans_model,
+    )
 
     emb = table(spark, SF_SMALL, "embeddings")
     queries = emb.filter(F.col("vec_id") < 8)
@@ -544,6 +549,31 @@ def test_pq_topk_recall_and_soundness(spark, emb_pdf):
 
     assert (pq.query_id != pq.neighbor_id).all()
     assert pq.approx_cos.between(-1.5, 1.5).all()  # quantized, near cosine range
+
+    # Reconstruction (as in test_pq_kcenter_recall_and_determinism):
+    # approx_cos is the ADC sum over the nearest codewords.
+    B = np.asarray(kmeans_model(emb, m=16, n_codes=32).books)  # (16, 32, 4)
+    vecs = {
+        r.vec_id: np.asarray(r.embedding, dtype=float)
+        for r in emb_pdf.itertuples()
+    }
+
+    def codes_of(v):
+        nv = v / np.linalg.norm(v)
+        return [
+            int(np.argmin(((nv[j * 4 : (j + 1) * 4] - B[j]) ** 2).sum(1)))
+            for j in range(16)
+        ]
+
+    for row in pq.itertuples():
+        nq = vecs[row.query_id] / np.linalg.norm(vecs[row.query_id])
+        cs = codes_of(vecs[row.neighbor_id])
+        want = sum(
+            float(np.dot(nq[j * 4 : (j + 1) * 4], B[j][cs[j]]))
+            for j in range(16)
+        )
+        assert abs(row.approx_cos - want) < 1e-5, (row, want)
+
     for qid, grp in pq.groupby("query_id"):
         assert sorted(grp["rank"]) == list(range(1, len(grp) + 1))
 
@@ -656,7 +686,9 @@ def test_pq_ivfpq_corpus_scale_query_side(spark):
     corpus size runs through both paths, every query gets ranked
     neighbors, and the per-query results are IDENTICAL to a
     bounded-query run — per-query scoring is independent, so growing
-    the query set must not change any query's neighbors."""
+    the query set must not change any query's neighbors. Plan: only
+    the bounded batch carries a broadcast hint; the big one's join is
+    the optimizer's choice, never a forced driver collect."""
     from gas_data_pipeline_spark.catalog import table
     from gas_data_pipeline_spark.operators.similarity import (
         cosine_topk_ivfpq,
@@ -676,17 +708,23 @@ def test_pq_ivfpq_corpus_scale_query_side(spark):
     small_q = emb.filter(F.col("vec_id") < 8)
     key = ["query_id", "rank"]
 
-    pq_small = cosine_topk_pq(emb, small_q, k=5, m=16, n_codes=32).toPandas()
-    pq_big = cosine_topk_pq(
-        emb, big_q, k=5, m=16, n_codes=32, n_query_blocks=4
-    ).toPandas()
+    def forced_broadcast(df):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        return "strategy=broadcast" in plan
+
+    pq_small = cosine_topk_pq(emb, small_q, k=5, m=16, n_codes=32)
+    pq_big = cosine_topk_pq(emb, big_q, k=5, m=16, n_codes=32)
+    assert forced_broadcast(pq_small) and not forced_broadcast(pq_big)
+    pq_small, pq_big = pq_small.toPandas(), pq_big.toPandas()
     assert pq_big.query_id.nunique() == 3 * n
     assert (pq_big.groupby("query_id")["rank"].max() == 5).all()
     sub = pq_big[pq_big.query_id < 8].sort_values(key).reset_index(drop=True)
     assert sub.equals(pq_small.sort_values(key).reset_index(drop=True))
 
-    ivf_small = cosine_topk_ivfpq(emb, small_q, k=5).toPandas()
-    ivf_big = cosine_topk_ivfpq(emb, big_q, k=5).toPandas()
+    ivf_small = cosine_topk_ivfpq(emb, small_q, k=5)
+    ivf_big = cosine_topk_ivfpq(emb, big_q, k=5)
+    assert forced_broadcast(ivf_small) and not forced_broadcast(ivf_big)
+    ivf_small, ivf_big = ivf_small.toPandas(), ivf_big.toPandas()
     assert ivf_big.query_id.nunique() == 3 * n
     sub = ivf_big[ivf_big.query_id < 8].sort_values(key).reset_index(drop=True)
     assert sub.equals(ivf_small.sort_values(key).reset_index(drop=True))
@@ -1137,8 +1175,8 @@ def test_ann_index_build_search_split_is_result_identical(spark):
         kcenter_greedy_sampled,
     )
     from gas_data_pipeline_spark.operators.similarity import (
-        build_ivf_kcenter_index,
-        build_pq_codes,
+        AnnModel,
+        build_index,
         cosine_topk_ivf_kcenter,
         cosine_topk_pq_kcenter,
         pq_kcenter_codebooks_sampled,
@@ -1149,7 +1187,7 @@ def test_ann_index_build_search_split_is_result_identical(spark):
     key = ["query_id", "rank"]
 
     centers = kcenter_greedy_sampled(emb, "vec_id", "embedding", k=16)
-    idx = build_ivf_kcenter_index(emb, centers).localCheckpoint(eager=True)
+    idx = build_index(emb, AnnModel(centers=centers)).localCheckpoint(eager=True)
     inline = cosine_topk_ivf_kcenter(emb, queries, centers, k=5).toPandas()
     viaidx = cosine_topk_ivf_kcenter(
         emb, queries, centers, k=5, index=idx
@@ -1159,7 +1197,7 @@ def test_ann_index_build_search_split_is_result_identical(spark):
     )
 
     books = pq_kcenter_codebooks_sampled(emb, m=8, n_codes=8)
-    codes = build_pq_codes(emb, books).localCheckpoint(eager=True)
+    codes = build_index(emb, AnnModel(books=books)).localCheckpoint(eager=True)
     inline = cosine_topk_pq_kcenter(emb, queries, books, k=5).toPandas()
     viacodes = cosine_topk_pq_kcenter(
         emb, queries, books, k=5, codes=codes
@@ -1219,7 +1257,8 @@ def test_ivfpq_index_is_one_zero_shuffle_scan(spark):
         kcenter_greedy_sampled,
     )
     from gas_data_pipeline_spark.operators.similarity import (
-        build_ivfpq_kcenter_index,
+        AnnModel,
+        build_index,
         cosine_topk_ivfpq_kcenter,
         pq_kcenter_codebooks_sampled,
     )
@@ -1227,7 +1266,7 @@ def test_ivfpq_index_is_one_zero_shuffle_scan(spark):
     emb = table(spark, SF_SMALL, "embeddings")
     centers = kcenter_greedy_sampled(emb, "vec_id", "embedding", k=8)
     books = pq_kcenter_codebooks_sampled(emb, m=8, n_codes=4)
-    idx = build_ivfpq_kcenter_index(emb, centers, books)
+    idx = build_index(emb, AnnModel(centers=centers, books=books))
     build_plan = idx._jdf.queryExecution().executedPlan().toString()
     # the only allowed exchange is spread_small_scan's test-scale
     # round-robin repartition — never a join exchange
@@ -1308,7 +1347,8 @@ def test_ivfpq_kcenter_rescore_lifts_recall(spark):
         kcenter_greedy_sampled,
     )
     from gas_data_pipeline_spark.operators.similarity import (
-        build_ivfpq_kcenter_index,
+        AnnModel,
+        build_index,
         cosine_topk,
         cosine_topk_ivfpq_kcenter,
         pq_kcenter_codebooks_sampled,
@@ -1336,7 +1376,7 @@ def test_ivfpq_kcenter_rescore_lifts_recall(spark):
 
     # Soundness: the rescored top-10 IS the exact fixed-point cosine
     # ranking of the probed candidate set, per query.
-    idx = build_ivfpq_kcenter_index(emb, centers, books)
+    idx = build_index(emb, AnnModel(centers=centers, books=books))
     qp = probe_cells(
         queries, centers, "vec_id", "embedding", n_probe=4, quantum=1e6
     ).select("query_id", "center_id")
