@@ -680,38 +680,13 @@ class GasDataEngine:
         threshold: float = 0.5,
         method: str = "minhash",
     ) -> DataFrame:
-        """X1: near-dup pairs above `threshold`. method: 'minhash'
-        (LSH candidates + exact verify — the scale default), 'exact'
-        (inverted-index Jaccard), 'prefix' (PPJoin prefix filtering),
-        'bitset' (dense-vocabulary popcount kernel), 'auto' (probe the
-        shingle vocabulary with approx_count_distinct and route:
-        closed vocab → bitset, open vocab → prefix — so a caller can
-        never OOM the driver by picking the dense kernel on an open
-        vocabulary)."""
-        from gas_data_pipeline_spark.operators import dedup as D
+        """X1: near-dup pairs above `threshold` over word 3-gram
+        shingles. method: 'minhash' (the scale default), 'exact',
+        'prefix', 'bitset' or 'auto' — see
+        ``operators.dedup.near_dup_pairs``."""
+        from gas_data_pipeline_spark.operators.dedup import near_dup_pairs
 
-        shingles = D.word_shingles(F.col(text_col), n=3)
-        if method == "auto":
-            # One cheap aggregate (HLL sketch, no exact distinct
-            # shuffle) decides the regime; 1e5 is the documented bitset
-            # bound (~12.5 KB/doc bitmask, ~1 MB driver vocab).
-            n_vocab = (
-                df.select(
-                    F.explode(D.word_shingles(F.col(text_col), n=3)).alias("sh")
-                )
-                .agg(F.approx_count_distinct("sh").alias("v"))
-                .first()["v"]
-            )
-            method = "bitset" if n_vocab <= 80_000 else "prefix"
-        if method == "minhash":
-            return D.minhash_near_dup_pairs(df, id_col, shingles, threshold)
-        if method == "exact":
-            return D.jaccard_pairs_inverted_index(df, id_col, shingles, threshold)
-        if method == "prefix":
-            return D.jaccard_pairs_prefix_filter(df, id_col, shingles, threshold)
-        if method == "bitset":
-            return D.jaccard_pairs_bitset_gemm(df, id_col, shingles, threshold)
-        raise ValueError(f"unknown dedup method: {method}")
+        return near_dup_pairs(df, id_col, text_col, threshold, method)
 
     def dedup_clusters(
         self, df: DataFrame, id_col: str, text_col: str, threshold: float = 0.5

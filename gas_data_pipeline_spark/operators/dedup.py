@@ -1,27 +1,49 @@
 """Deduplication operators: exact, MinHash-LSH, SimHash, n-gram
 Jaccard (SURVEY §2.11 X1; BASELINE.json north star).
 
-Scale design (the whole point):
+Exact dedup is one hash aggregate (a shuffle on a 64-hex key). Every
+near-duplicate PAIR join is one filter-and-verify pipeline over a
+shared index ("Highly Efficient String Similarity Search and Join over
+Compressed Indexes", ICDE 2022), one function per stage:
 
-- exact: one hash aggregate — shuffle on a 64-hex key, trivially
-  AQE-balanced.
-- n-gram Jaccard: *inverted-index* join (explode shingle -> co-group)
-  — candidate generation is linear in total shingle count, never the
-  N² cross join.
-- MinHash-LSH: signature is a per-row narrow computation; banding
-  turns "similar pairs" into an equi-join on (band, band_hash) — the
-  classic shuffle-friendly formulation (MMDS ch.3); only candidates
-  pay the exact-Jaccard verification.
-- SimHash: 64-bit fingerprint per row (narrow); near-dup = equal
-  16-bit band keys, again an equi-join.
+1. hash: :func:`hashed_shingles` makes ``(id, shingles: array<bigint>,
+   n)`` with one xxhash64 per shingle (:func:`_hash_each`);
+2. bucket: each kernel emits ``(id, bucket key)`` rows
+   (:func:`shingle_postings`, :func:`_explode_bands`);
+3. pair: :func:`bucket_pairs` co-groups each bucket into candidate
+   pairs with ``a.id < b.id`` — linear in the posting stream, never an
+   N² cross join or a self-join (which would re-evaluate the shingle
+   subtree once per side: Spark shares no common subplan);
+4. score: :func:`count_scored` counts shared keys (exact when every
+   shingle is a key), :func:`verify_scored` intersects the exact sets
+   (when keys only nominate candidates); :func:`_jaccard` is the one
+   ratio and :func:`_cap_postings` the one document-frequency cap.
 
-Everything is built from native expressions (xxhash64, transform,
-aggregate) — no Python in the hot path.
+Kernel (registered queries): bucket keys -> scorer.
+
+- jaccard_pairs_inverted_index (dedup_ngram_jaccard; the
+  dedup_connected_components / keep_best / cluster_stats seam): every
+  shingle, optional df cap -> count.
+- jaccard_pairs_prefix_filter (dedup_prefix_jaccard): df-ranked prefix
+  shingles, PPJoin length bound -> verify.
+- minhash_near_dup_pairs (dedup_minhash_lsh, split_neardup_leakage):
+  (band, band_hash) of the MinHash signature -> verify.
+- simhash_band_pairs: max_hamming + 1 fingerprint bit-bands -> popcount
+  of XOR (dedup_simhash only fingerprints).
+- dedup_containment_pairs (suite/northstar): every shingle -> count,
+  normalized |A∩B|/|A|.
+- incremental_dedup (dedup_incremental_batch): every shingle, df cap
+  over both corpora -> count, over a cross-side posting join.
+
+jaccard_pairs_bitset_gemm (dedup_char_jaccard) is the dense-vocabulary
+regime: no buckets, all pairs scored by popcount(AND) over vocabulary
+bitmasks. :func:`near_dup_pairs` dispatches between the kernels.
 """
 
 from __future__ import annotations
 
 import math
+from functools import reduce
 
 import pandas as pd  # module-level: pandas_udf resolves string type hints here
 from pyspark.sql import Column, DataFrame
@@ -31,6 +53,20 @@ from pyspark.sql.window import Window
 from gas_data_pipeline_spark.functions.exprs import bind
 
 
+def _word_grams(words: Column, n: int, each, elem: str) -> Column:
+    """``each(gram)`` for every word n-gram of a word array, in order;
+    an empty ``array<elem>`` for fewer than n words."""
+    # Guarded: sequence(1, k) DESCENDS for k < 1 (yielding index 0, an
+    # ANSI INVALID_INDEX_OF_ZERO) — documents shorter than n words must
+    # short-circuit to an empty gram array.
+    k = F.size(words) - F.lit(n - 1)
+    grams = F.transform(
+        F.sequence(F.lit(1), k),
+        lambda i: each(F.concat_ws(" ", *[F.element_at(words, i + j) for j in range(n)])),
+    )
+    return F.when(k >= 1, grams).otherwise(F.array().cast(f"array<{elem}>"))
+
+
 def word_shingles(text: Column, n: int = 3) -> Column:
     """Distinct word n-gram shingles of lower-cased text.
 
@@ -38,25 +74,10 @@ def word_shingles(text: Column, n: int = 3) -> Column:
     CollapseProject inlines the regex split into every ``element_at``,
     re-splitting the text ~n times per shingle index (measured 16s vs
     <1s over 5k docs)."""
-
-    def grams(words: Column) -> Column:
-        # Guarded: sequence(1, k) DESCENDS for k < 1 (yielding index 0,
-        # an ANSI INVALID_INDEX_OF_ZERO) — documents shorter than n
-        # words must short-circuit to an empty shingle set.
-        k = F.size(words) - F.lit(n - 1)
-        return F.when(
-            k >= 1,
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(1), k),
-                    lambda i: F.concat_ws(
-                        " ", *[F.element_at(words, i + j) for j in range(n)]
-                    ),
-                )
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-
-    return bind(F.split(F.lower(F.trim(text)), r"\s+"), grams)
+    return bind(
+        F.split(F.lower(F.trim(text)), r"\s+"),
+        lambda words: F.array_distinct(_word_grams(words, n, lambda g: g, "string")),
+    )
 
 
 def char_shingles(text: Column, n: int = 4) -> Column:
@@ -174,26 +195,11 @@ def remove_repeated_ngrams(
         F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
         F.array().cast("array<string>"),
     )
-
-    def gram_hashes(ws: Column) -> Column:
-        # sequence(1, k) DESCENDS for k < 1 (same guard as
-        # word_shingles): docs shorter than n words emit no grams.
-        k = F.size(ws) - F.lit(n - 1)
-        return F.when(
-            k >= 1,
-            F.transform(
-                F.sequence(F.lit(1), k),
-                lambda i: F.xxhash64(
-                    F.concat_ws(
-                        " ", *[F.element_at(ws, i + j) for j in range(n)]
-                    )
-                ),
-            ),
-        ).otherwise(F.array().cast("array<bigint>"))
-
     occ = df.select(
         F.col(id_col).alias("_rid"),
-        F.posexplode(bind(words_expr, gram_hashes)).alias("pos", "gh"),
+        F.posexplode(
+            bind(words_expr, lambda ws: _word_grams(ws, n, F.xxhash64, "bigint"))
+        ).alias("pos", "gh"),
     )
     flagged = (
         occ.groupBy("gh")
@@ -239,34 +245,115 @@ def remove_repeated_ngrams(
     )
 
 
-def _df_cap_count(doc_ids: DataFrame, max_doc_frequency: int | float) -> int:
-    """Resolve a df cap given either an absolute posting-length bound
-    (int >= 1) or a corpus fraction (0 < f < 1, cap = ceil(f * n_docs)).
-    ``doc_ids`` is the PRE-explode one-column id frame, so the sizing
-    job is a column-pruned distinct count that never evaluates the
-    shingle explode (zero-shingle docs count toward the corpus size —
-    the fraction is of the corpus, not of the posting stream)."""
-    if isinstance(max_doc_frequency, float):
-        if not 0 < max_doc_frequency < 1:
-            raise ValueError(
-                "fractional max_doc_frequency must be in (0,1), got "
-                f"{max_doc_frequency}"
-            )
-        n_docs = doc_ids.distinct().count()
-        return max(1, math.ceil(n_docs * max_doc_frequency))
-    if max_doc_frequency < 1:
-        raise ValueError(
-            f"absolute max_doc_frequency must be >= 1, got {max_doc_frequency}"
-        )
-    return int(max_doc_frequency)
+def _hash_each(shingles: Column) -> Column:
+    """One xxhash64 per shingle: downstream shuffles and compares move
+    8-byte longs, not ~20-40-byte UTF-8 grams. A 64-bit collision
+    between distinct shingles of one pair (probability ~(distinct
+    shingles)^2 / 2^64) would perturb its count by 1 — negligible."""
+    return F.transform(shingles, lambda s: F.xxhash64(s))
 
 
-def _drop_capped_shingles(inv: DataFrame, cap: int) -> DataFrame:
-    """Drop every shingle whose document frequency exceeds ``cap`` from
-    an exploded ``(id, n_shingles, shingle)`` index, adjusting each
-    doc's set size to the CAPPED vocabulary so downstream Jaccard stays
-    a true Jaccard over the reduced universe (symmetric numerator /
-    denominator — the r3 verdict's requirement).
+def hashed_shingles(df: DataFrame, id_col: str, shingle_col: Column) -> DataFrame:
+    """Stage 1: ``(id, shingles: array<bigint>, n)``. The hashed array
+    is its own column below the size, so a consumer of both never
+    shingles a document twice."""
+    return df.select(
+        F.col(id_col).alias("id"), _hash_each(shingle_col).alias("shingles")
+    ).select("id", "shingles", F.size("shingles").alias("n"))
+
+
+def shingle_postings(sets: DataFrame) -> DataFrame:
+    """Stage 2, every shingle a key: ``(id, n, shingle)``.
+
+    explode_outer + a null filter, not explode: InferFiltersFromGenerate
+    turns a plain explode of the ``shingles`` attribute into a
+    ``size(shingles) > 0 AND isnotnull(shingles)`` guard, pushes it
+    below the spread exchange and substitutes the shingle expression
+    into it, so every document was shingled twice, once serially on
+    the scan's 1-2 splits (plan-audited r14). The outer form infers
+    nothing; the filter drops the null row an empty set explodes to."""
+    return sets.select(
+        "id", "n", F.explode_outer("shingles").alias("shingle")
+    ).filter(F.col("shingle").isNotNull())
+
+
+def _explode_bands(df: DataFrame, carry: list[str], keys: list[Column], key: str) -> DataFrame:
+    """Stage 2, one row per band: ``carry`` columns plus ``band`` (the
+    band's index) and ``key`` (its value, ``keys[band]``)."""
+    bands = F.array(*[F.struct(F.lit(b).alias("band"), k.alias(key)) for b, k in enumerate(keys)])
+    return df.select(*carry, F.explode(bands).alias("bk")).select(*carry, "bk.band", f"bk.{key}")
+
+
+def bucket_pairs(keyed: DataFrame, keys: list[str], members: list[str]) -> DataFrame:
+    """Stage 3: co-group the rows sharing a bucket key into one
+    ``(a, b)`` row per member pair with ``a.id < b.id``, once per
+    bucket the pair shares; ``a`` and ``b`` are structs of ``members``
+    (``id`` among them). Singleton buckets drop before the explode."""
+    return (
+        keyed.groupBy(*keys)
+        .agg(F.collect_list(F.struct(*members)).alias("docs"))
+        .filter(F.size("docs") > 1)
+        .select(F.explode("docs").alias("a"), "docs")
+        .select("a", F.explode("docs").alias("b"))
+        .filter(F.col("a.id") < F.col("b.id"))
+    )
+
+
+def count_scored(pairs: DataFrame) -> DataFrame:
+    """Stage 4, count scorer: ``(id_a, id_b, na, nb, n_common)`` from
+    pairs whose members are ``(id, n)``."""
+    return pairs.groupBy(
+        F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
+        F.col("a.n").alias("na"), F.col("b.n").alias("nb"),
+    ).agg(F.count(F.lit(1)).alias("n_common"))
+
+
+def verify_scored(pairs: DataFrame, sets: DataFrame, broadcast: bool = False) -> DataFrame:
+    """Stage 4, verify scorer: ``(id_a, id_b, na, nb, n_common)`` once
+    per distinct candidate pair of :func:`bucket_pairs` output, by
+    ``array_intersect`` of the two exact sets of
+    :func:`hashed_shingles`, which re-attach by two id joins.
+    ``broadcast`` is the small-corpus regime (see
+    jaccard_pairs_prefix_filter): candidates spread across the cluster,
+    both set sides broadcast-hinted."""
+    cand = pairs.select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")).distinct()
+    sa, sb = (sets.toDF(f"id_{t}", f"sh_{t}", f"n{t}") for t in "ab")
+    if broadcast:
+        cand = cand.repartition(int(sets.sparkSession.conf.get("spark.sql.shuffle.partitions")))
+        sa, sb = F.broadcast(sa), F.broadcast(sb)
+    return (
+        cand.join(sa, "id_a")
+        .join(sb, "id_b")
+        .withColumn("n_common", F.size(F.array_intersect("sh_a", "sh_b")))
+    )
+
+
+def _jaccard() -> Column:
+    return F.col("n_common") / (F.col("na") + F.col("nb") - F.col("n_common"))
+
+
+def _jaccard_pairs(scored: DataFrame, threshold: float) -> DataFrame:
+    """``(id_a, id_b, jaccard)`` with ``jaccard >= threshold``."""
+    jac = scored.select("id_a", "id_b", _jaccard().alias("jaccard"))
+    return jac.filter(F.col("jaccard") >= threshold)
+
+
+def _cap_postings(
+    postings: list[DataFrame], doc_ids: DataFrame, max_doc_frequency: int | float
+) -> list[DataFrame]:
+    """The document-frequency cap: drop every shingle whose document
+    frequency, counted over all of ``postings`` (``(id, n, shingle)``
+    frames) together, exceeds the cap, and recount each doc's ``n``
+    over the CAPPED vocabulary so Jaccard stays a true Jaccard over the
+    reduced universe (symmetric numerator / denominator — the r3
+    verdict's requirement).
+
+    The cap is an absolute posting-length bound (int >= 1) or a corpus
+    fraction (0 < f < 1, cap = ceil(f * n_docs)). ``doc_ids`` is the
+    PRE-explode one-column id frame, so the sizing job is a
+    column-pruned distinct count that never evaluates the shingle
+    explode (zero-shingle docs count toward the corpus size — the
+    fraction is of the corpus, not of the posting stream).
 
     Scale shape: two exchanges, both on keys the pipeline already
     shuffles on, and nothing per-doc ever converges on one node. The
@@ -292,19 +379,25 @@ def _drop_capped_shingles(inv: DataFrame, cap: int) -> DataFrame:
     the second evaluation ships (key, count) pairs, not the stream.
     Callers whose shingle expression dominates can persist it upstream.
     """
-    stop = (
-        inv.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > cap)
-        .select("shingle")
-    )
-    return (
-        inv.join(stop, "shingle", "left_anti")
-        .withColumn(
-            "n_shingles",
-            F.count(F.lit(1)).over(Window.partitionBy("id")),
+    if isinstance(max_doc_frequency, float):
+        if not 0 < max_doc_frequency < 1:
+            raise ValueError(
+                f"fractional max_doc_frequency must be in (0,1), got {max_doc_frequency}"
+            )
+        cap = max(1, math.ceil(doc_ids.distinct().count() * max_doc_frequency))
+    elif max_doc_frequency < 1:
+        raise ValueError(f"absolute max_doc_frequency must be >= 1, got {max_doc_frequency}")
+    else:
+        cap = int(max_doc_frequency)
+    keys = reduce(DataFrame.unionByName, [p.select("shingle") for p in postings])
+    df_counts = keys.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
+    stop = df_counts.filter(F.col("df") > cap).select("shingle")
+    return [
+        p.join(stop, "shingle", "left_anti").withColumn(
+            "n", F.count(F.lit(1)).over(Window.partitionBy("id"))
         )
-    )
+        for p in postings
+    ]
 
 
 def jaccard_pairs_inverted_index(
@@ -316,8 +409,9 @@ def jaccard_pairs_inverted_index(
 ) -> DataFrame:
     """X1 n-gram Jaccard: exact similarity join via inverted index.
 
-    explode(shingles) -> self-equi-join on shingle -> count common
-    shingles per pair -> |A∩B| / (|A|+|B|-|A∩B|) >= threshold.
+    Every hashed shingle is a bucket key; the count scorer's
+    ``|A∩B|`` per co-grouped pair is exact, so
+    |A∩B| / (|A|+|B|-|A∩B|) >= threshold needs no verification.
     Returns (id_a, id_b, jaccard) with id_a < id_b.
 
     ``max_doc_frequency`` (absolute posting length, or corpus fraction
@@ -325,55 +419,18 @@ def jaccard_pairs_inverted_index(
     shared by p% of a web corpus makes one posting list quadratic
     ((pN)^2 candidate pairs from a single gram). Capped shingles are
     dropped from the index AND from both set-size denominators
-    (``_drop_capped_shingles``), so the reported value is the exact
+    (:func:`_cap_postings`), so the reported value is the exact
     Jaccard over the capped vocabulary — pairs whose shingles are all
     under the cap score identically to the uncapped run. For a
     lossless alternative at the same corpus shape use
     ``jaccard_pairs_prefix_filter``.
-
-    The join key is the shingle's xxhash64, not the shingle string:
-    the shuffle moves 8-byte longs instead of ~20-40-byte UTF-8 grams
-    and the hash-join probe compares longs. A 64-bit collision between
-    distinct shingles of one pair (probability ~(distinct shingles)^2 /
-    2^64 per pair) would perturb the count by 1 — negligible.
     """
-    base = df.select(F.col(id_col).alias("id"), shingle_col.alias("shingles"))
-    sized = base.withColumn("n_shingles", F.size("shingles"))
-    inv = sized.select(
-        "id",
-        "n_shingles",
-        F.explode(
-            F.transform("shingles", lambda s: F.xxhash64(s))
-        ).alias("shingle"),
-    )
+    sets = hashed_shingles(df, id_col, shingle_col)
+    inv = shingle_postings(sets)
     if max_doc_frequency is not None:
-        inv = _drop_capped_shingles(
-            inv, _df_cap_count(base.select("id"), max_doc_frequency)
-        )
-    # Posting-list pair generation instead of a self-join (which would
-    # re-evaluate the shingle explode on both sides — no common-subplan
-    # sharing in Spark).
-    members = F.struct(F.col("id"), F.col("n_shingles"))
-    postings = (
-        inv.groupBy("shingle")
-        .agg(F.collect_list(members).alias("docs"))
-        .filter(F.size("docs") > 1)
-    )
-    pairs = (
-        postings.select(F.explode("docs").alias("a"), "docs")
-        .select("a", F.explode("docs").alias("b"))
-        .filter(F.col("a.id") < F.col("b.id"))
-    )
-    common = pairs.groupBy(
-        F.col("a.id").alias("id_a"),
-        F.col("b.id").alias("id_b"),
-        F.col("a.n_shingles").alias("na"),
-        F.col("b.n_shingles").alias("nb"),
-    ).agg(F.count(F.lit(1)).alias("n_common"))
-    jac = (F.col("n_common") / (F.col("na") + F.col("nb") - F.col("n_common"))).alias(
-        "jaccard"
-    )
-    return common.select("id_a", "id_b", jac).filter(F.col("jaccard") >= threshold)
+        (inv,) = _cap_postings([inv], sets.select("id"), max_doc_frequency)
+    pairs = bucket_pairs(inv, ["shingle"], ["id", "n"])
+    return _jaccard_pairs(count_scored(pairs), threshold)
 
 
 # Verification-stage broadcast bound for jaccard_pairs_prefix_filter's
@@ -439,10 +496,6 @@ def jaccard_pairs_prefix_filter(
     (sets must not ride a broadcast), no extra exchange, the planner's
     shuffled join parallelizes verification by construction.
     """
-    base = df.select(
-        F.col(id_col).alias("id"),
-        F.transform(shingle_col, lambda s: F.xxhash64(s)).alias("shingles"),
-    )
     # The hashed shingle sets feed FOUR consumers (df-count explode,
     # the rank join, and both sides of the verification join); without
     # a materialization each consumer re-runs the scan + shingling +
@@ -450,103 +503,34 @@ def jaccard_pairs_prefix_filter(
     # not text — same discipline as the bitset-GEMM kernel's `base`.
     # localCheckpoint (not persist): scoped to this invocation, so
     # repeated calls can't silently serve a stale cache entry.
-    sized = base.select(
-        "id", "shingles", F.size("shingles").alias("n_shingles")
-    ).localCheckpoint(eager=True)
-    ex = sized.select("id", "n_shingles", F.explode("shingles").alias("shingle"))
+    sets = hashed_shingles(df, id_col, shingle_col).localCheckpoint(eager=True)
+    ex = shingle_postings(sets)
     df_counts = ex.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     # Rank each doc's shingles by (global df, hash): regroup and keep
     # the prefix. sort_array on struct(df, shingle) gives the common
     # total order both sides of any candidate pair agree on.
-    prefix_len = (
-        F.col("n_shingles")
-        - F.ceil(F.col("n_shingles") * F.lit(threshold))
-        + F.lit(1)
-    ).cast("int")
+    prefix_len = (F.col("n") - F.ceil(F.col("n") * F.lit(threshold)) + F.lit(1)).cast("int")
     ranked = (
         ex.join(df_counts, "shingle")
-        .groupBy("id", "n_shingles")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct(F.col("df"), F.col("shingle")))
-            ).alias("ordered")
-        )
-        .select(
-            "id",
-            "n_shingles",
-            F.slice(F.col("ordered.shingle"), 1, prefix_len).alias("prefix"),
-        )
+        .groupBy("id", "n")
+        .agg(F.sort_array(F.collect_list(F.struct("df", "shingle"))).alias("ordered"))
+        .select("id", "n", F.slice(F.col("ordered.shingle"), 1, prefix_len).alias("prefix"))
     )
-    inv = ranked.select(
-        "id", "n_shingles", F.explode("prefix").alias("shingle")
-    )
-    postings = (
-        inv.groupBy("shingle")
-        .agg(F.collect_list(F.struct("id", "n_shingles")).alias("docs"))
-        .filter(F.size("docs") > 1)
-    )
-    cand = (
-        postings.select(F.explode("docs").alias("a"), "docs")
-        .select("a", F.explode("docs").alias("b"))
-        .filter(F.col("a.id") < F.col("b.id"))
-        # PPJoin length filter (lossless — see docstring): division, not
-        # t*max, so the compare is the exact double the verify runs.
-        .filter(
-            F.least("a.n_shingles", "b.n_shingles")
-            / F.greatest("a.n_shingles", "b.n_shingles")
-            >= F.lit(threshold)
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-    # Verify candidates exactly on the full shingle sets.
-    sa = sized.select(
-        F.col("id").alias("id_a"),
-        F.col("shingles").alias("sh_a"),
-        F.col("n_shingles").alias("na"),
-    )
-    sb = sized.select(
-        F.col("id").alias("id_b"),
-        F.col("shingles").alias("sh_b"),
-        F.col("n_shingles").alias("nb"),
+    inv = ranked.select("id", "n", F.explode("prefix").alias("shingle"))
+    # PPJoin length filter (lossless — see docstring): division, not
+    # t*max, so the compare is the exact double the verify runs.
+    pairs = bucket_pairs(inv, ["shingle"], ["id", "n"]).filter(
+        F.least("a.n", "b.n") / F.greatest("a.n", "b.n") >= F.lit(threshold)
     )
     # Small-corpus regime guard (see docstring): one tiny agg over the
     # checkpointed sets decides whether the doc-set sides are
     # broadcast-bounded. 16 B/element is a deliberate over-estimate of
     # the framed array cost (8 B value + offsets/validity + row
     # overhead spread across elements).
-    corpus = sized.agg(
-        F.coalesce(F.sum("n_shingles"), F.lit(0)).alias("tot")
-    ).collect()[0]
-    if corpus["tot"] * 16 <= _VERIFY_BCAST_MAX_BYTES:
-        spark = df.sparkSession
-        cand = cand.repartition(
-            int(spark.conf.get("spark.sql.shuffle.partitions"))
-        )
-        sa, sb = F.broadcast(sa), F.broadcast(sb)
-    verified = (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("n_common", F.size(F.array_intersect("sh_a", "sh_b")))
+    tot = sets.agg(F.coalesce(F.sum("n"), F.lit(0))).collect()[0][0]
+    return _jaccard_pairs(
+        verify_scored(pairs, sets, broadcast=tot * 16 <= _VERIFY_BCAST_MAX_BYTES), threshold
     )
-    jac = (F.col("n_common") / (F.col("na") + F.col("nb") - F.col("n_common"))).alias(
-        "jaccard"
-    )
-    return verified.select("id_a", "id_b", jac).filter(
-        F.col("jaccard") >= threshold
-    )
-
-
-def _xor_salts(k: int, seed: int = 42) -> list[int]:
-    """Fixed pseudorandom XOR salts (deterministic across runs), as
-    UNSIGNED 64-bit ints. Full 64 bits matter: 63-bit salts never flip
-    the sign bit of the signed xxhash64 values, so every "permutation"
-    would take its min from the same ~half of shingles whose hash is
-    negative — correlated slots, degraded LSH recall on small sets."""
-    import random
-
-    rng = random.Random(seed)
-    return [rng.getrandbits(64) for _ in range(k)]
 
 
 def minhash_signature_pandas(k: int = 64, seed: int = 42):
@@ -562,9 +546,17 @@ def minhash_signature_pandas(k: int = 64, seed: int = 42):
     interpreted Spark fold with a k-wide accumulator. Factory-scoped so
     cloudpickle ships it by value (executors don't import this
     package)."""
+    import random
+
     from pyspark.sql.functions import pandas_udf
 
-    salts = _xor_salts(k, seed)
+    # Fixed pseudorandom salts as UNSIGNED 64-bit ints. Full 64 bits
+    # matter: 63-bit salts never flip the sign bit of the signed
+    # xxhash64 values, so every "permutation" would take its min from
+    # the same ~half of shingles whose hash is negative — correlated
+    # slots, degraded LSH recall on small sets.
+    rng = random.Random(seed)
+    salts = [rng.getrandbits(64) for _ in range(k)]
 
     @pandas_udf("array<bigint>")
     def sig(hashes: pd.Series) -> pd.Series:
@@ -598,86 +590,48 @@ def minhash_near_dup_pairs(
     k: int = 64,
     bands: int = 32,
 ) -> DataFrame:
-    """X1 MinHash-LSH: banded signature equi-join for candidates, exact
-    Jaccard verification on candidates only.
+    """X1 MinHash-LSH: the banded signature's ``(band, band_hash)``
+    keys nominate candidates; the verify scorer computes their exact
+    Jaccard on the hashed sets.
 
     Default bands=32 × rows=2 (k=64) is a recall-leaning S-curve:
     capture probability at j=0.5 is 1-(1-0.25)^32 ≈ 0.9999 (vs ~40%
     for the textbook 8×4 split). At 100 TB trade the other way —
     fewer, wider bands (e.g. 16×8 at k=128) cut the candidate count
-    for the same threshold at the cost of borderline recall.
+    for the same threshold at the cost of borderline recall. ``bands``
+    must divide ``k``: every signature slot sits in exactly one band.
     Returns (id_a, id_b, jaccard) with id_a < id_b, jaccard >= threshold.
     """
+    if not 1 <= bands <= k or k % bands:
+        raise ValueError(f"bands must divide k (k={k}, bands={bands})")
     rows_per_band = k // bands
-    base = df.select(F.col(id_col).alias("id"), shingle_col.alias("shingles"))
+    sets = hashed_shingles(df, id_col, shingle_col)
     # Shingle string-hashing stays JVM-side; the k-permutation XOR-min
     # runs vectorized in numpy (identical output to the expression
     # formulation, ~30x faster on wide shingle sets).
-    sig_udf = minhash_signature_pandas(k)
-    sig = base.withColumn(
-        "sig", sig_udf(F.transform("shingles", lambda s: F.xxhash64(s)))
-    ).filter(F.size("shingles") > 0)
+    sig = sets.withColumn("sig", minhash_signature_pandas(k)("shingles")).filter(
+        F.size("shingles") > 0
+    )
     # ^ The empty-shingle guard (empty docs would share the all-MAX
     # signature and all-pairs explode in every band bucket) sits ABOVE
     # the nondeterministic sig projection, which Catalyst refuses to
-    # push predicates through. Filtering `base` directly let the
+    # push predicates through. Filtering the sets directly let the
     # optimizer substitute the shingle expression into the predicate
     # and push it below the spread exchange, so the whole shingle tree
     # ran twice per doc — once serially on the scan's 1-2 splits
     # (plan-audited r14). Same rows dropped before banding either way;
-    # sig_udf maps an empty array to the MAX sentinel, so the extra
-    # empty rows it sees are well-defined.
+    # the signature UDF maps an empty array to the MAX sentinel, so
+    # the extra empty rows it sees are well-defined.
     # Band keys only — the shingle arrays must NOT ride through the
     # band explode (a `bands`-fold payload blowup in the shuffle);
-    # they re-attach once per verified candidate below.
-    banded = sig.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            *[
-                                F.element_at("sig", b * rows_per_band + r + 1)
-                                for r in range(rows_per_band)
-                            ]
-                        ).alias("band_hash"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bh"),
-    ).select("id", "bh.band", "bh.band_hash")
-
-    # Bucket-group pair generation, NOT a self-join: a self-join
-    # re-evaluates the whole signature subtree on both sides (Spark
-    # has no common-subplan sharing), doubling the dominant cost.
-    # groupBy bucket + double explode touches each signature once;
-    # pairs per bucket are inherent to LSH either way.
-    candidates = (
-        banded.groupBy("band", "band_hash")
-        .agg(F.collect_list("id").alias("ids"))
-        .filter(F.size("ids") > 1)
-        .select(F.explode("ids").alias("id_a"), "ids")
-        .select("id_a", F.explode("ids").alias("id_b"))
-        .filter(F.col("id_a") < F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    pairs = candidates.join(
-        base.select(F.col("id").alias("id_a"), F.col("shingles").alias("sh_a")),
-        "id_a",
-    ).join(
-        base.select(F.col("id").alias("id_b"), F.col("shingles").alias("sh_b")),
-        "id_b",
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return (
-        pairs.withColumn("jaccard", inter / union)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    # they re-attach once per candidate in the verify scorer.
+    band_hashes = [
+        F.xxhash64(*[F.element_at("sig", b * rows_per_band + r + 1) for r in range(rows_per_band)])
+        for b in range(bands)
+    ]
+    banded = _explode_bands(sig, ["id"], band_hashes, "band_hash")
+    pairs = bucket_pairs(banded, ["band", "band_hash"], ["id"])
+    return _jaccard_pairs(verify_scored(pairs, sets), threshold)
 
 
 def md5_low64(value: Column) -> Column:
@@ -701,7 +655,7 @@ def simhash64(token_col: Column) -> Column:
     The shift amount must be a Python int (``F.shiftright`` rejects a
     Column), so the 64 bit positions are unrolled host-side; Catalyst's
     common-subexpression elimination shares the token-hash array."""
-    hashes = F.transform(token_col, lambda t: F.xxhash64(t))
+    hashes = _hash_each(token_col)
 
     def bit_signs(h: Column) -> Column:
         # ±1 per bit, MSB first; shift amounts unrolled host-side since
@@ -765,38 +719,35 @@ def simhash64_pandas():
 
 
 def simhash_band_pairs(df: DataFrame, id_col: str, sim_col: str, max_hamming: int = 3) -> DataFrame:
-    """SimHash near-dup candidates: equal 16-bit quarter-bands (any
-    pair within Hamming distance 3 shares at least one of 4 bands —
-    pigeonhole), verified by popcount of XOR."""
-    quarters = F.array(
-        *[
-            F.struct(
-                F.lit(q).alias("band"),
-                F.shiftright(F.col(sim_col), q * 16).bitwiseAND(F.lit(0xFFFF)).alias("band_val"),
-            )
-            for q in range(4)
-        ]
-    )
-    banded = df.select(
-        F.col(id_col).alias("id"), F.col(sim_col).alias("sim"), F.explode(quarters).alias("q")
-    ).select("id", "sim", "q.band", "q.band_val")
-    a, b = banded.alias("a"), banded.alias("b")
+    """SimHash near-dup pairs within Hamming distance ``max_hamming``:
+    the 64-bit fingerprint splits into ``max_hamming + 1`` contiguous
+    bit-bands, so by pigeonhole any pair within the bound agrees on at
+    least one whole band. Each ``(band, band value)`` is a bucket key;
+    the popcount of XOR scores each candidate. Returns
+    (id_a, id_b, hamming) with id_a < id_b."""
+    if not 0 <= max_hamming <= 63:
+        raise ValueError(f"max_hamming must be in 0..63, got {max_hamming}")
+    edges = [64 * b // (max_hamming + 1) for b in range(max_hamming + 2)]
+    keys = [
+        F.shiftright("sim", lo).bitwiseAND(F.lit((1 << (hi - lo)) - 1 if hi - lo < 64 else -1))
+        for lo, hi in zip(edges, edges[1:])
+    ]
+    sims = df.select(F.col(id_col).alias("id"), F.col(sim_col).alias("sim"))
+    banded = _explode_bands(sims, ["id", "sim"], keys, "band_val")
     hamming = F.bit_count(F.col("a.sim").bitwiseXOR(F.col("b.sim")))
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            hamming.alias("hamming"),
-        )
+        bucket_pairs(banded, ["band", "band_val"], ["id", "sim"])
+        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"), hamming.alias("hamming"))
         .dropDuplicates(["id_a", "id_b"])
         .filter(F.col("hamming") <= max_hamming)
     )
+
+
+# The dense-vocabulary bound: jaccard_pairs_bitset_gemm refuses a
+# corpus with more distinct hashed shingles (its vocabulary and the
+# per-doc bitmask must stay small), and near_dup_pairs(method='auto')
+# routes by the same count.
+BITSET_MAX_VOCAB = 100_000
 
 
 def jaccard_pairs_bitset_gemm(
@@ -806,7 +757,7 @@ def jaccard_pairs_bitset_gemm(
     threshold: float,
     n_blocks: int = 8,
     prehashed: bool = False,
-    max_vocab: int = 100_000,
+    max_vocab: int = BITSET_MAX_VOCAB,
 ) -> DataFrame:
     """Exact threshold-Jaccard pairs for the DENSE-vocabulary regime:
     encode each document as a bitmask over the global shingle
@@ -828,18 +779,16 @@ def jaccard_pairs_bitset_gemm(
     popcount; numpy<2 lacks bitwise_count). |A∩B| from bit math, sizes
     precomputed per row, Jaccard = inter / (na + nb - inter).
 
-    Scale dial: choose by vocabulary — V ≤ ~1e5 (bitmask ≤ 12.5 KB/doc)
-    → this kernel; open vocabulary → jaccard_pairs_prefix_filter. The
-    vocab index is one distinct + row_number pass (V rows, collected
-    count only) and broadcasts to the packers.
+    Scale dial: choose by vocabulary — V ≤ ``max_vocab`` (the
+    ``BITSET_MAX_VOCAB`` default: bitmask ≤ 12.5 KB/doc) → this kernel;
+    open vocabulary → jaccard_pairs_prefix_filter (the split
+    ``near_dup_pairs(method='auto')`` makes). The vocabulary is one
+    bounded distinct collected to the driver; its id→index map ships
+    inside the pack closure.
     """
     # prehashed: shingle_col already yields array<long> ids (e.g.
     # char_shingle_ids_pandas) — skip the per-gram xxhash64 transform.
-    id_expr = (
-        shingle_col
-        if prehashed
-        else F.transform(shingle_col, lambda s: F.xxhash64(s))
-    )
+    id_expr = shingle_col if prehashed else _hash_each(shingle_col)
     # A corpus small enough for this kernel scans as a handful of
     # parquet splits (2 tasks here) — spread it across the cluster
     # BEFORE the CPU-heavy shingling so every core works; the 5k-row
@@ -863,12 +812,7 @@ def jaccard_pairs_bitset_gemm(
     # limit(max_vocab+1) bounds the collect BEFORE it happens: if the
     # extra row comes back, the vocabulary is open and this kernel is
     # the wrong regime — refuse instead of OOMing the driver.
-    vocab_rows = (
-        base.select(F.explode("shingles").alias("sh"))
-        .distinct()
-        .limit(max_vocab + 1)
-        .collect()
-    )
+    vocab_rows = _bounded_vocab(base, F.col("shingles"), max_vocab).collect()
     if len(vocab_rows) > max_vocab:
         base.unpersist()
         raise ValueError(
@@ -910,17 +854,9 @@ def jaccard_pairs_bitset_gemm(
     blocks = indexed.groupBy("__block").applyInPandas(
         pack, schema="block int, ids array<bigint>, counts array<bigint>, words array<bigint>"
     )
-    a = blocks.select(
-        F.col("block").alias("block_a"),
-        F.col("ids").alias("ids_a"),
-        F.col("counts").alias("counts_a"),
-        F.col("words").alias("words_a"),
-    )
-    b = blocks.select(
-        F.col("block").alias("block_b"),
-        F.col("ids").alias("ids_b"),
-        F.col("counts").alias("counts_b"),
-        F.col("words").alias("words_b"),
+    a, b = (
+        blocks.select(*[F.col(c).alias(f"{c}_{t}") for c in ("block", "ids", "counts", "words")])
+        for t in "ab"
     )
     # One task per block pair: the join output is P(P+1)/2 tiny-byte /
     # heavy-CPU rows, and AQE's size-based coalescing would pack them
@@ -928,9 +864,7 @@ def jaccard_pairs_bitset_gemm(
     # round-robin costs a few MB of packed matrices and buys full
     # fan-out of the popcount GEMM.
     n_pairs = n_blocks * (n_blocks + 1) // 2
-    paired = a.join(b, F.col("block_a") <= F.col("block_b")).repartition(
-        n_pairs
-    )
+    paired = a.join(b, F.col("block_a") <= F.col("block_b")).repartition(n_pairs)
     thr = float(threshold)
     w_width = width
 
@@ -951,20 +885,14 @@ def jaccard_pairs_bitset_gemm(
         for pdf in batches:
             out = {"id_a": [], "id_b": [], "jaccard": []}
             for row in pdf.itertuples():
-                A = (
-                    np.asarray(row.words_a, dtype=np.int64)
-                    .view(np.uint64)
-                    .reshape(-1, w_width)
+                A, B = (
+                    np.asarray(w, dtype=np.int64).view(np.uint64).reshape(-1, w_width)
+                    for w in (row.words_a, row.words_b)
                 )
-                B = (
-                    np.asarray(row.words_b, dtype=np.int64)
-                    .view(np.uint64)
-                    .reshape(-1, w_width)
+                ia, ib, na, nb = (
+                    np.asarray(v, dtype=np.int64)
+                    for v in (row.ids_a, row.ids_b, row.counts_a, row.counts_b)
                 )
-                ia = np.asarray(row.ids_a, dtype=np.int64)
-                ib = np.asarray(row.ids_b, dtype=np.int64)
-                na = np.asarray(row.counts_a, dtype=np.int64)
-                nb = np.asarray(row.counts_b, dtype=np.int64)
                 inter = np.zeros((len(ia), len(ib)), dtype=np.int64)
                 for w in range(w_width):
                     inter += popcount(A[:, w][:, None] & B[None, :, w])
@@ -974,16 +902,40 @@ def jaccard_pairs_bitset_gemm(
                     keep &= ia[:, None] < ib[None, :]
                 r, c = np.nonzero(keep)
                 left, right = ia[r], ib[c]
-                lo = np.minimum(left, right)
-                hi = np.maximum(left, right)
-                out["id_a"].extend(lo.tolist())
-                out["id_b"].extend(hi.tolist())
+                out["id_a"].extend(np.minimum(left, right).tolist())
+                out["id_b"].extend(np.maximum(left, right).tolist())
                 out["jaccard"].extend(jac[r, c].tolist())
             yield pd.DataFrame(out)
 
-    return paired.mapInPandas(
-        score, schema="id_a bigint, id_b bigint, jaccard double"
-    )
+    return paired.mapInPandas(score, schema="id_a bigint, id_b bigint, jaccard double")
+
+
+def _bounded_vocab(df: DataFrame, hashed: Column, bound: int) -> DataFrame:
+    """The distinct hashed shingles of ``df``, cut at ``bound + 1``
+    rows: more than ``bound`` rows means an open vocabulary."""
+    return df.select(F.explode(hashed).alias("sh")).distinct().limit(bound + 1)
+
+
+def near_dup_pairs(
+    df: DataFrame, id_col: str, text_col: str, threshold: float = 0.5, method: str = "minhash"
+) -> DataFrame:
+    """Near-dup pairs ``(id_a, id_b, jaccard)`` over word 3-gram
+    shingles of ``text_col``. method: 'minhash' (LSH candidates + exact
+    verify — the scale default), 'exact' (inverted index), 'prefix'
+    (PPJoin prefix filter), 'bitset' (dense-vocabulary popcount
+    kernel), 'auto' (bitset when the distinct hashed shingles number at
+    most ``BITSET_MAX_VOCAB``, else prefix). 'auto' counts exactly what
+    the bitset kernel refuses on, so it never routes into a refusal,
+    and only the count reaches the driver."""
+    shingles = word_shingles(F.col(text_col), n=3)
+    if method == "auto":
+        n_vocab = _bounded_vocab(df, _hash_each(shingles), BITSET_MAX_VOCAB).count()
+        method = "bitset" if n_vocab <= BITSET_MAX_VOCAB else "prefix"
+    kernels = dict(minhash=minhash_near_dup_pairs, exact=jaccard_pairs_inverted_index,
+                   prefix=jaccard_pairs_prefix_filter, bitset=jaccard_pairs_bitset_gemm)
+    if method not in kernels:
+        raise ValueError(f"unknown dedup method: {method}")
+    return kernels[method](df, id_col, shingles, threshold)
 
 
 def connected_components(
@@ -1063,14 +1015,8 @@ def connected_components(
                 parent[hi] = lo
         nodes = sorted(set(src_vals) | set(dst_vals))
         out = [(n, find(n)) for n in nodes]
-        id_type = edges.schema["src"].dataType
-        spark = pairs.sparkSession
-        from pyspark.sql.types import StructField, StructType
-
-        schema = StructType(
-            [StructField("id", id_type), StructField("label", id_type)]
-        )
-        return spark.createDataFrame(out, schema)
+        id_type = edges.schema["src"].dataType.simpleString()
+        return pairs.sparkSession.createDataFrame(out, f"id {id_type}, label {id_type}")
     sc = pairs.sparkSession.sparkContext
     loop_parts = max(1, min(sc.defaultParallelism, n_edges // 100_000 + 1))
     edges = edges.repartition(loop_parts, "dst").localCheckpoint(eager=True)
@@ -1234,72 +1180,27 @@ def incremental_dedup(
     ex_h = existing.select(F.sha2(F.col(text_col), 256).alias("__h")).distinct()
     survivors = new_h.join(ex_h, "__h", "left_anti").drop("__h")
 
-    def postings(df: DataFrame, suffix: str) -> DataFrame:
-        # Materialize the hashed shingle array as a column FIRST: it is
-        # consumed twice (size + explode), and inlining the expression
-        # into both slots made Spark shingle every document twice per
-        # side (plan-audited r14 — the Generate and its sibling Project
-        # each carried the full split/transform tree).
-        hashed = df.select(
-            F.col(id_col).alias(f"id_{suffix}"),
-            F.transform(
-                word_shingles(F.col(text_col), n), lambda s: F.xxhash64(s)
-            ).alias("__sh"),
-        )
-        # explode_outer, not explode: InferFiltersFromGenerate turns a
-        # plain explode into a pushed-down `size(sh)>0 AND isnotnull(sh)`
-        # guard that re-evaluates the whole shingle tree BELOW the
-        # spread exchange (on the scan's 1-2 splits). The outer form
-        # infers no guard; its extra null-gram row for empty docs can
-        # never survive the inner join on `g`, so pair counts are
-        # identical.
-        return hashed.select(
-            f"id_{suffix}",
-            F.size("__sh").alias(f"n_{suffix}"),
-            F.explode_outer("__sh").alias("g"),
-        )
-
     # Per-side posting streams, built DIRECTLY from each corpus: a
     # union-then-filter formulation would re-evaluate both sides'
     # shingle explodes inside every side view (Spark shares no common
     # subplan across the two filters), doubling the most expensive
     # stage — measured 2.5x on dedup_incremental_batch at sf0.1.
-    pa = postings(survivors, "new")
-    pb = postings(existing, "ex")
-    if max_doc_frequency is not None:
-        # df counted across BOTH corpora (a gram-stream union — the
-        # per-side namespaces never mix because only (id, g) rows ride
-        # it); capped grams leave both posting sides, and set sizes are
-        # recounted per side over the FILTERED postings so both
-        # denominators shrink symmetrically.
-        grams = pa.select(F.col("id_new").alias("id"), "g").unionByName(
-            pb.select(F.col("id_ex").alias("id"), "g")
-        )
-        cap = _df_cap_count(
-            survivors.select(F.col(id_col).alias("id")).unionByName(
-                existing.select(F.col(id_col).alias("id"))
-            ),
-            max_doc_frequency,
-        )
-        stop = (
-            grams.groupBy("g")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > cap)
-            .select("g")
-        )
-        pa = pa.join(stop, "g", "left_anti").withColumn(
-            "n_new", F.count(F.lit(1)).over(Window.partitionBy("id_new"))
-        )
-        pb = pb.join(stop, "g", "left_anti").withColumn(
-            "n_ex", F.count(F.lit(1)).over(Window.partitionBy("id_ex"))
-        )
-    common = (
-        pa.join(pb, "g")
-        .groupBy("id_new", "id_ex", "n_new", "n_ex")
-        .agg(F.count(F.lit(1)).alias("c"))
+    pa, pb = (
+        shingle_postings(hashed_shingles(d, id_col, word_shingles(F.col(text_col), n)))
+        for d in (survivors, existing)
     )
-    jac = F.col("c") / (F.col("n_new") + F.col("n_ex") - F.col("c"))
-    dirty = common.filter(jac >= threshold).select(F.col("id_new").alias(id_col)).distinct()
+    if max_doc_frequency is not None:
+        # df counted across BOTH corpora; capped grams leave both
+        # posting sides, and each side's set sizes are recounted.
+        ids = survivors.select(id_col).unionByName(existing.select(id_col))
+        pa, pb = _cap_postings([pa, pb], ids, max_doc_frequency)
+    common = (
+        pa.select(F.col("id").alias("id_new"), F.col("n").alias("na"), "shingle")
+        .join(pb.select(F.col("id").alias("id_ex"), F.col("n").alias("nb"), "shingle"), "shingle")
+        .groupBy("id_new", "id_ex", "na", "nb")
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
+    dirty = common.filter(_jaccard() >= threshold).select(F.col("id_new").alias(id_col)).distinct()
     return survivors.join(dirty, id_col, "left_anti")
 
 
@@ -1543,6 +1444,7 @@ class BloomDedupState:
                 f"input already has reserved column(s) {sorted(reserved)}"
             )
         bc = new.sparkSession.sparkContext.broadcast(self._bitmap.tobytes())
+        k = self.k
         pos_new = new.withColumn("__h", F.sha2(F.col(text_col), 256)).withColumn(
             "__pos", _bloom_positions(F.col("__h"), self.m_bits, self.k, self.seed)
         )
@@ -1554,14 +1456,8 @@ class BloomDedupState:
         def probe(batches):
             bm = np.frombuffer(bc.value, dtype=np.uint8)
             for pdf in batches:
-                if len(pdf) == 0:
-                    pdf = pdf.drop(columns=["__pos"])
-                    pdf["__maybe"] = pd.Series([], dtype=bool)
-                    yield pdf
-                    continue
-                mat = np.stack([np.asarray(p, dtype=np.int64) for p in pdf["__pos"]])
+                mat = np.asarray(pdf.pop("__pos").tolist(), dtype=np.int64).reshape(len(pdf), k)
                 hit = (bm[mat >> 3] & (np.uint8(1) << (mat & 7).astype(np.uint8))) != 0
-                pdf = pdf.drop(columns=["__pos"])
                 pdf["__maybe"] = hit.all(axis=1)
                 yield pdf
 

@@ -190,47 +190,55 @@ def all_oracles() -> dict[str, str]:
     return {spec.name: spec.oracle for spec in _ordered() if spec.oracle is not None}
 
 
+_MODEL_CACHES: list[dict] = []
+
+
+def model_cache() -> dict:
+    """A new session-scoped compute-once model cache (a trained model
+    or a materialized index, keyed by application and inputs).
+    Registered here, so :func:`reset_model_seams` releases it with
+    every other."""
+    cache: dict = {}
+    _MODEL_CACHES.append(cache)
+    return cache
+
+
+def _release(cache: dict) -> None:
+    """Unpersist the checkpoint blocks behind every DataFrame held in
+    ``cache`` (a value or the parts of a tuple/list value), then clear
+    it. localCheckpointed entries hold executor cache blocks; dropping
+    the dict entry alone would leave them to GC (ADVICE r9). The
+    PERSISTED RDD is a LogicalRDD leaf's internal one — `df.rdd` would
+    build a NEW deserialized RDD whose unpersist is a no-op — so reach
+    it through the analyzed plan's leaves, which also finds a
+    checkpoint under a projection (connected_components' distributed
+    labels). Safe only because reset drops every seam reference
+    together: nothing re-reads a truncated-lineage Dataset whose blocks
+    are gone."""
+    for val in cache.values():
+        parts = val if isinstance(val, (tuple, list)) else (val,)
+        for part in parts:
+            if isinstance(part, DataFrame):
+                try:
+                    leaves = part._jdf.queryExecution().analyzed().collectLeaves()
+                    for i in range(leaves.size()):
+                        leaf = leaves.apply(i)
+                        if leaf.getClass().getSimpleName() == "LogicalRDD":
+                            leaf.rdd().unpersist(False)
+                except Exception:
+                    pass
+    cache.clear()
+
+
 def reset_model_seams() -> None:
-    """Clear every session-scoped compute-once model cache (BPE,
-    unigram, k-center, PQ codebooks, classifier, planted components).
+    """Release every session-scoped compute-once model cache registered
+    through :func:`model_cache` (BPE, unigram, k-center, PQ codebooks,
+    classifier, ANN index, planted components).
     Queries stay correct with warm seams — the caches hold pure
     functions of (corpus, params) — but MEASUREMENT needs cold ones:
     the bench scale probe compares a fresh scaled-dir run against a
     base run, and a warm base seam makes a perfectly linear trainer
     look superlinear (cold-vs-warm, the r8 unigram probe flag)."""
     _load_all()
-    from gas_data_pipeline_spark.suite import (
-        curation_suite,
-        northstar,
-        selection_suite,
-    )
-
-    def _release(cache: dict) -> None:
-        # localCheckpointed entries hold executor cache blocks; dropping
-        # the dict entry alone would leave them to GC (ADVICE r9). The
-        # PERSISTED RDD is the LogicalRDD's internal one — `df.rdd`
-        # would build a NEW deserialized RDD whose unpersist is a no-op
-        # — so reach it through the analyzed plan. Safe only because
-        # reset drops every seam reference together: nothing re-reads
-        # a truncated-lineage Dataset whose blocks are gone.
-        from pyspark.sql import DataFrame
-
-        for val in cache.values():
-            parts = val if isinstance(val, (tuple, list)) else (val,)
-            for part in parts:
-                if isinstance(part, DataFrame):
-                    try:
-                        plan = part._jdf.queryExecution().analyzed()
-                        if plan.getClass().getSimpleName() == "LogicalRDD":
-                            plan.rdd().unpersist(False)
-                    except Exception:
-                        pass
-        cache.clear()
-
-    _release(curation_suite._BPE_CACHE)
-    _release(curation_suite._UNIGRAM_CACHE)
-    selection_suite._KCENTER_CACHE.clear()
-    selection_suite._QCLF_CACHE.clear()
-    northstar._COMPONENTS_CACHE.clear()
-    northstar._PQ_BOOK_CACHE.clear()
-    _release(northstar._INDEX_CACHE)
+    for cache in _MODEL_CACHES:
+        _release(cache)

@@ -21,7 +21,7 @@ from gas_data_pipeline_spark.operators.curation import (
     seeded_shuffle_rank,
     weighted_sample,
 )
-from gas_data_pipeline_spark.registry import register
+from gas_data_pipeline_spark.registry import model_cache, register
 
 # Tokenizer SQL twin (operators/text.py TOKEN_PATTERN).
 _TOKS_SQL = "regexp_extract_all(lower(text), '[a-z0-9]+|[^\\sa-z0-9]')"
@@ -969,7 +969,7 @@ _BPE_ORACLE = (
 _BPE_RULES_SCHEMA = (
     "round int, left string, right string, merged string, pair_count long"
 )
-_BPE_CACHE: dict[tuple[str, str], tuple[DataFrame, list]] = {}
+_BPE_CACHE: dict[tuple[str, str], tuple[DataFrame, list]] = model_cache()
 
 
 def _corpus_bpe_training(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list]:
@@ -1232,7 +1232,7 @@ def bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 # unigram queries train the same 2 EM rounds on the shared BPE word
 # table; cache the final vocabulary and segmentation per
 # (application, sf_dir). A production deployment persists the model.
-_UNIGRAM_CACHE: dict[tuple[str, str], tuple[list, DataFrame]] = {}
+_UNIGRAM_CACHE: dict[tuple[str, str], tuple[list, DataFrame]] = model_cache()
 
 
 def _corpus_unigram_training(

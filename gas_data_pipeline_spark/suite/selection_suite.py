@@ -28,7 +28,7 @@ from gas_data_pipeline_spark.operators.selection import (
     quality_features,
     quality_score,
 )
-from gas_data_pipeline_spark.registry import register
+from gas_data_pipeline_spark.registry import model_cache, register
 
 # Whitespace word-array twin (operators/dedup.py convention).
 _WS_SQL = "regexp_split_to_array(lower(trim(text)), '\\s+')"
@@ -601,7 +601,7 @@ def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sf_dir, corpus-tag, k); assignment stays a fresh zero-shuffle scan
 # per caller. The oracle replays the identical sample via
 # ORDER BY md5(...) LIMIT 256 (_KC_SAMP_TAIL below).
-_KCENTER_CACHE: dict[tuple[str, str, str, int], list[dict]] = {}
+_KCENTER_CACHE: dict[tuple[str, str, str, int], list[dict]] = model_cache()
 
 
 def _corpus_kcenter(
@@ -750,7 +750,7 @@ def coreset_kcenter_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 # so the featurize+train scans run once per session. Training persists
 # the featurized frame for the loop and releases it immediately; the
 # filter's scoring pass featurizes inline (one scan, nothing held).
-_QCLF_CACHE: dict[tuple[str, str], list[dict[int, int]]] = {}
+_QCLF_CACHE: dict[tuple[str, str], list[dict[int, int]]] = model_cache()
 
 
 def _corpus_classifier_snapshots(

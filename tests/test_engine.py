@@ -277,9 +277,6 @@ def test_engine_curation_api(spark, tmp_path):
     exact = eng.dedup_exact(docs, "doc_id", "text")
     assert exact.count() == docs.count()
 
-    pairs = eng.dedup_near(docs.limit(200), "doc_id", "text", 0.3, "exact")
-    assert {"id_a", "id_b", "jaccard"} <= set(pairs.columns)
-
     prof = eng.profile_text(docs.limit(50))
     assert {"doc_id", "n_tokens", "quality_score", "lang_guess"} <= set(prof.columns)
     assert prof.count() == 50
@@ -324,6 +321,34 @@ def test_engine_training_curation_api(spark, tmp_path):
     sampled = eng.sample_weighted(docs, F.lit(0.5))
     frac = sampled.count() / n
     assert 0.35 < frac < 0.65  # binomial(n, 0.5) well inside 5 sigma
+
+
+@pytest.fixture(scope="module")
+def planted_exact_pairs(spark, tmp_path_factory):
+    from gas_data_pipeline_spark.engine import GasDataEngine
+    from gas_data_pipeline_spark.suite.northstar import _docs_with_planted
+
+    docs = _docs_with_planted(spark, SF_SMALL)
+    eng = GasDataEngine(spark, str(tmp_path_factory.mktemp("lake")))
+    return docs, _pair_rows(eng.dedup_near(docs, "doc_id", "text", 0.5, "exact"))
+
+
+def _pair_rows(df):
+    assert {"id_a", "id_b", "jaccard"} <= set(df.columns)
+    return sorted((r.id_a, r.id_b, round(r.jaccard, 9)) for r in df.collect())
+
+
+@pytest.mark.parametrize("method", ["minhash", "exact", "prefix", "bitset", "auto"])
+def test_dedup_near_methods(spark, tmp_path, planted_exact_pairs, method):
+    """Every dedup_near method returns the 'exact' pair set with equal
+    Jaccard on the planted corpus (the planted near-dups make it
+    nonempty)."""
+    from gas_data_pipeline_spark.engine import GasDataEngine
+
+    docs, exact = planted_exact_pairs
+    assert len(exact) > 0
+    eng = GasDataEngine(spark, str(tmp_path / "lake"))
+    assert _pair_rows(eng.dedup_near(docs, "doc_id", "text", 0.5, method)) == exact
 
 
 def test_dedup_near_auto_routes_open_vocab_to_prefix(spark, tmp_path):

@@ -108,6 +108,38 @@ def test_simhash_band_pairs_pigeonhole(spark):
             assert (a, b) in got, f"missed guaranteed pair {(a, b)}"
 
 
+def test_simhash_band_pairs_bands_follow_the_bound(spark):
+    """The band count follows max_hamming: 0 against a value with one
+    set bit in each 16-bit quarter plus one more bit (distance 5)
+    shares no quarter, so fixed 16-bit quarters miss it; with
+    max_hamming + 1 = 6 bands pigeonhole guarantees a shared band."""
+    from gas_data_pipeline_spark.operators.dedup import simhash_band_pairs
+
+    v = (1 << 0) | (1 << 1) | (1 << 16) | (1 << 32) | (1 << 48)
+    sh = spark.createDataFrame([(1, 0), (2, v)], "doc_id long, simhash long")
+    got = [tuple(r) for r in simhash_band_pairs(sh, "doc_id", "simhash", 5).collect()]
+    assert got == [(1, 2, 5)]
+    assert simhash_band_pairs(sh, "doc_id", "simhash", 4).count() == 0
+    for bad in (-1, 64):
+        with pytest.raises(ValueError, match="max_hamming"):
+            simhash_band_pairs(sh, "doc_id", "simhash", bad)
+
+
+def test_minhash_rejects_bands_that_do_not_divide_k(spark):
+    """bands must divide k: a remainder would leave signature slots in
+    no band, and bands > k would fail deep inside Spark."""
+    from gas_data_pipeline_spark.operators.dedup import (
+        minhash_near_dup_pairs,
+        word_shingles,
+    )
+
+    docs = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
+    sh = word_shingles(F.col("text"), n=3)
+    for k, bands in ((64, 24), (8, 16)):
+        with pytest.raises(ValueError, match="bands must divide k"):
+            minhash_near_dup_pairs(docs, "doc_id", sh, k=k, bands=bands)
+
+
 def test_lsh_candidates_superset_of_exact_pairs(spark):
     """The banded MinHash kernel is probabilistic per pair (~0.9999
     capture at j=0.5) but the queries built on it (dedup_minhash_lsh,

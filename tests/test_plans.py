@@ -267,6 +267,43 @@ def test_span_dedup_has_no_joins(spark):
     assert "Window" in plan
 
 
+@pytest.mark.parametrize("name", ["dedup_ngram_jaccard", "dedup_containment_pairs"])
+def test_shingle_pairs_come_from_one_cogroup_no_join(spark, name):
+    # Every shingle is a bucket key: pairs come from one posting-list
+    # co-group (collect_list) and a count, never from a self-join that
+    # would shingle the corpus once per side.
+    plan = _plan(spark, name)
+    assert "Join" not in plan
+    assert "collect_list" in plan
+
+
+def test_minhash_band_explode_carries_ids_only(spark):
+    # The band explode multiplies its rows by the band count: it must
+    # carry the doc id alone, never the shingle array; the sets
+    # re-attach by the two verification joins (id_a, then id_b) only.
+    import re
+
+    plan = _plan(spark, "dedup_minhash_lsh")
+    band = [ln.rstrip() for ln in plan.splitlines() if "Generate explode(array(struct(band" in ln]
+    assert len(band) == 1
+    carried = re.search(r"\), \[([^\]]*)\], (?:true|false), \[[^\]]*\]$", band[0]).group(1)
+    assert [c.split("#")[0] for c in carried.split(", ")] == ["id"]
+    assert sorted(re.findall(r"Join \[(\w+)#", plan)) == ["id_a", "id_b"]
+
+
+def test_prefix_jaccard_small_corpus_verifies_under_broadcasts(spark):
+    # Small-corpus regime: both verification joins broadcast the
+    # bounded doc-set sides (see jaccard_pairs_prefix_filter).
+    import re
+
+    from gas_data_pipeline_spark.registry import all_queries
+    from tests.conftest import SF_SMALL
+
+    df = all_queries()["dedup_prefix_jaccard"](spark, SF_SMALL)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert sorted(re.findall(r"BroadcastHashJoin \[(id_[ab])#", plan)) == ["id_a", "id_b"]
+
+
 def test_unigram_logprob_broadcasts_vocab(spark):
     """The vocabulary probability table joins back to the token stream
     as a broadcast; the only big exchange is the per-doc aggregate."""

@@ -278,3 +278,31 @@ def test_bench_io_canary_and_scratch_reaper(tmp_path, monkeypatch):
     assert not old.exists()
     assert new.exists() and other.exists() and unrelated.exists()
     assert (live_deep / "sub" / "fresh.parquet").exists()
+
+
+def test_model_caches_register_and_release_under_projection(spark):
+    """Every suite's compute-once cache is registered for
+    reset_model_seams, and a release reaches a checkpoint under a
+    projection (connected_components' distributed labels are one)."""
+    from gas_data_pipeline_spark import registry
+    from gas_data_pipeline_spark.suite import curation_suite, northstar, selection_suite
+
+    suite_caches = [
+        curation_suite._BPE_CACHE,
+        curation_suite._UNIGRAM_CACHE,
+        selection_suite._KCENTER_CACHE,
+        selection_suite._QCLF_CACHE,
+        northstar._COMPONENTS_CACHE,
+        northstar._INDEX_CACHE,
+        northstar._PQ_BOOK_CACHE,
+    ]
+    for cache in suite_caches:
+        assert any(cache is c for c in registry._MODEL_CACHES)
+
+    ckpt = spark.range(10).localCheckpoint(eager=True)
+    rdd = ckpt._jdf.queryExecution().analyzed().rdd()
+    assert rdd.getStorageLevel().useMemory() or rdd.getStorageLevel().useDisk()
+    cache = {"labels": ckpt.select("id")}
+    registry._release(cache)
+    assert cache == {}
+    assert not (rdd.getStorageLevel().useMemory() or rdd.getStorageLevel().useDisk())
