@@ -570,12 +570,15 @@ def _normalized_deltas(
     cpu_ref: float,
     sf: float,
     io_ref: float | None = None,
+    cpus: int | None = None,
 ) -> dict | None:
     """Canary-normalized round-over-round comparison (VERDICT r11 #5:
     cpu_ref_sec was recorded but not USED — regressions were still
     read off raw seconds, so the r11 '1.48x that isn't a regression'
     took a judge adjudication to clear). Against the most recent
-    BENCH_HISTORY entry at the same sf that carries a canary:
+    BENCH_HISTORY entry at the same sf and ``cpus`` (Spark's
+    defaultParallelism; a record without one matches only
+    ``cpus=None``) that carries a canary:
 
         canary_ratio = this_run.cpu_ref_sec / prev_run.cpu_ref_sec
         normalized(q) = (this_t / prev_t) / canary_ratio
@@ -599,8 +602,11 @@ def _normalized_deltas(
     The reported per-query values and median stay CPU-normalized
     (continuity with earlier rounds — the io share of each query is
     unknown, so cpu-normalized is the honest point estimate); only
-    the REGRESSION GATE uses host_ratio. An io-ratio BELOW 1 never
-    tightens the gate (max() keeps the cpu axis)."""
+    the REGRESSION GATE uses host_ratio. host_ratio is clamped to at
+    least 1: on a FASTER host both axis ratios fall below 1, and
+    dividing by them would flag queries that got faster but by less
+    than the host did; an io-ratio below 1 likewise never tightens the
+    gate."""
     hist_path = os.path.join(_REPO_ROOT, "BENCH_HISTORY.jsonl")
     prev = None
     try:
@@ -610,7 +616,11 @@ def _normalized_deltas(
                 if not line:
                     continue
                 rec = json.loads(line)
-                if rec.get("sf") == sf and rec.get("cpu_ref_sec"):
+                if (
+                    rec.get("sf") == sf
+                    and rec.get("cpus") == cpus
+                    and rec.get("cpu_ref_sec")
+                ):
                     prev = rec
     except (OSError, ValueError):
         return None
@@ -620,7 +630,7 @@ def _normalized_deltas(
     io_ratio = None
     if io_ref and prev.get("io_ref_sec"):
         io_ratio = round(io_ref / prev["io_ref_sec"], 4)
-    host_ratio = max(canary_ratio, io_ratio or 0.0)
+    host_ratio = max(1.0, canary_ratio, io_ratio or 0.0)
     ratios: dict[str, float] = {}
     raw: dict[str, float] = {}
     for name, t in timings.items():
@@ -990,8 +1000,9 @@ def main() -> None:
     }
     # Canary-normalized round-over-round deltas vs the last same-sf
     # history entry (computed BEFORE this run is appended below).
+    cpus = spark.sparkContext.defaultParallelism
     vs_prev = _normalized_deltas(
-        timings, payload["cpu_ref_sec"], sf, io_ref=payload["io_ref_sec"]
+        timings, payload["cpu_ref_sec"], sf, io_ref=payload["io_ref_sec"], cpus=cpus
     )
     if vs_prev is not None:
         payload["vs_prev"] = vs_prev
@@ -1017,6 +1028,7 @@ def main() -> None:
                 {
                     "ts": int(time.time()),
                     "sf": sf,
+                    "cpus": cpus,
                     "value": total,
                     "passes": n_passes,
                     "cpu_ref_sec": payload["cpu_ref_sec"],

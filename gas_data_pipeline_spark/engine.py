@@ -104,8 +104,11 @@ class GasDataEngine:
         """
         from concurrent.futures import ThreadPoolExecutor
 
-        # R1 + S1 — one-pass melt with derived series identity.
-        long = melt_numeric(batch, id_cols=[*id_cols, time_col])
+        # R1 + S1 — one-pass melt with derived series identity. The
+        # quality column rides through the melt as a key, so it reaches
+        # silver and never becomes a metric or a series.
+        quality = [quality_col] if quality_col else []
+        long = melt_numeric(batch, id_cols=[*id_cols, time_col, *quality])
         long = long.withColumn(
             "series_id",
             make_series_id(dataset_id, *[F.col(c) for c in id_cols], F.col("metric")),
@@ -115,7 +118,7 @@ class GasDataEngine:
             F.col(time_col).cast("timestamp").alias("observation_time"),
             F.col("value").cast("double").alias("value"),
             (
-                F.col(quality_col) if quality_col else F.lit("ok")
+                F.col(quality_col).cast("string") if quality_col else F.lit("ok")
             ).alias("quality_flag"),
             F.current_timestamp().alias("ingestion_time"),
         ).filter(F.col("value").isNotNull() & F.col("observation_time").isNotNull())
@@ -135,7 +138,7 @@ class GasDataEngine:
             for f in batch.schema.fields
             if isinstance(f.dataType, DoubleType)
             and f.name not in id_cols
-            and f.name != time_col
+            and f.name not in (time_col, *quality)
         )
         present = (
             batch.filter(F.col(time_col).isNotNull())

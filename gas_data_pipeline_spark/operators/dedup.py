@@ -51,6 +51,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from gas_data_pipeline_spark.functions.exprs import bind
+from gas_data_pipeline_spark.operators.similarity import block_count
 
 
 def _word_grams(words: Column, n: int, each, elem: str) -> Column:
@@ -755,7 +756,6 @@ def jaccard_pairs_bitset_gemm(
     id_col: str,
     shingle_col: Column,
     threshold: float,
-    n_blocks: int = 8,
     prehashed: bool = False,
     max_vocab: int = BITSET_MAX_VOCAB,
 ) -> DataFrame:
@@ -774,7 +774,8 @@ def jaccard_pairs_bitset_gemm(
     all-pairs, so compute it the dense way (same architecture as
     similarity.cosine_near_dup_pairs): pack hashed-shingle bitmasks
     into per-block matrices (V bits → V/64 uint64 words per doc), cross
-    join the P blocks, and per block pair compute the intersection
+    join the P blocks (P from ``similarity.block_count``: one count of
+    the persisted shingle sets), and per block pair compute the intersection
     matrix with W vectorized AND+popcount outer products (SWAR
     popcount; numpy<2 lacks bitwise_count). |A∩B| from bit math, sizes
     precomputed per row, Jaccard = inter / (na + nb - inter).
@@ -824,6 +825,7 @@ def jaccard_pairs_bitset_gemm(
     index_of = {sh: i for i, sh in enumerate(vocab_ids)}
     width = max(1, (len(vocab_ids) + 63) // 64)
 
+    n_blocks = block_count(base.count())
     # pmod, not abs(hash)%n: abs(INT_MIN) throws under ANSI mode.
     indexed = base.withColumn("__block", F.pmod(F.hash(F.col("id")), n_blocks))
 
@@ -858,7 +860,9 @@ def jaccard_pairs_bitset_gemm(
         blocks.select(*[F.col(c).alias(f"{c}_{t}") for c in ("block", "ids", "counts", "words")])
         for t in "ab"
     )
-    # One task per block pair: the join output is P(P+1)/2 tiny-byte /
+    # One task per block pair, sized as in similarity.block_count (a
+    # fixed Python-worker cost per Arrow task, so a one-block corpus
+    # scores in one task): the join output is P(P+1)/2 tiny-byte /
     # heavy-CPU rows, and AQE's size-based coalescing would pack them
     # onto 1-2 tasks (measured: 2 tasks for 36 pairs). The explicit
     # round-robin costs a few MB of packed matrices and buys full

@@ -7,12 +7,21 @@ dense-similarity formulation:
 
 - Vectors are packed into per-block matrix rows (``applyInPandas``:
   one row per block carrying ids + a flattened float64 matrix). A
-  cross join of blocks (P² rows for near-dup, P rows vs one packed
-  query block for top-k) moves each block ~2P times, where a pair
-  cross join duplicates every vector once per PAIR (~N times).
+  cross join of blocks (P(P+1)/2 rows for near-dup, P rows vs one
+  packed query block for top-k) moves each block ~P times, where a
+  pair cross join duplicates every vector once per PAIR (~N times).
 - Each block pair scores with ONE `A @ B.T` — BLAS-rate.
 - Top-k emits only k rows per (query, corpus-block) map-side — the
   shuffle into the final per-query window is O(P·Q·k), never O(N·Q).
+- Sizing: P = :func:`block_count` of one count of the corpus, the
+  fewest blocks averaging at most ``ROWS_PER_BLOCK`` rows (shared with
+  ``dedup.jaccard_pairs_bitset_gemm``). Every Arrow task pays a fixed
+  Python-worker cost, measured at 0.1-0.19 s of CPU on a 4-core
+  host (PySpark's per-task ``importlib.invalidate_caches()`` re-reads
+  the zip directories on the worker's path), so a no-op
+  ``mapInPandas`` over 36 partitions costs 6-8 s. A corpus that fits
+  one block therefore scores in one task; a large one fans out one
+  task per block pair, each block about ``ROWS_PER_BLOCK`` rows.
 
 Hash buckets: ``cosine_topk_lsh`` (seeded multi-table random
 hyperplanes, rows-only checkable) and the sign-signature twins
@@ -110,6 +119,21 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
+# Rows per packed block of the block-GEMM kernels: 2,048 rows put
+# sf0.1's 2,000 embeddings in one block (one scoring task) and its
+# 5,000 documents in three (six block pairs), and bound a block at
+# 2,048 x dim float64s (1 MB at dim 64).
+ROWS_PER_BLOCK = 2048
+
+
+def block_count(n_rows: int) -> int:
+    """The one sizing rule of the block-GEMM kernels: the fewest blocks
+    (at least one) that hold ``n_rows`` at an average of at most
+    ``ROWS_PER_BLOCK`` rows; ids hash to blocks, so each holds about
+    that many."""
+    return max(1, -(-n_rows // ROWS_PER_BLOCK))
+
+
 def pack_blocks(
     df: DataFrame,
     id_col: str,
@@ -150,15 +174,15 @@ def cosine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 10,
-    n_blocks: int = 16,
 ) -> DataFrame:
     """Exact brute-force top-k neighbors per query vector.
 
-    Returns (query_id, neighbor_id, rank, cos_sim). The query set packs
-    into ONE block row broadcast against corpus blocks; each pair
-    scores with a single GEMM and emits only the per-block top-k, so
-    the final window sees O(blocks · queries · k) rows."""
-    cb = pack_blocks(corpus, id_col, vec_col, n_blocks)
+    Returns (query_id, neighbor_id, rank, cos_sim). The corpus packs
+    into ``block_count`` blocks; the query set packs into ONE block row
+    broadcast against them; each pair scores with a single GEMM and
+    emits only the per-block top-k, so the final window sees
+    O(blocks · queries · k) rows."""
+    cb = pack_blocks(corpus, id_col, vec_col, block_count(corpus.count()))
     qb = pack_blocks(queries, id_col, vec_col, 1).select(
         F.col("ids").alias("q_ids"),
         F.col("mat").alias("q_mat"),
@@ -210,7 +234,6 @@ def cosine_near_dup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.45,
-    n_blocks: int = 8,
 ) -> DataFrame:
     """X1 embedding-cosine near-dup: all pairs (a<b) above threshold.
 
@@ -218,6 +241,7 @@ def cosine_near_dup_pairs(
     block pairs, one matrix multiply each, emitting only qualifying
     pairs. The correctness baseline the LSH path is tested against; at
     scale run LSH first and this kernel only within buckets."""
+    n_blocks = block_count(df.count())
     blocks = pack_blocks(df, id_col, vec_col, n_blocks)
     a = blocks.select(
         F.col("block").alias("block_a"),
@@ -231,9 +255,10 @@ def cosine_near_dup_pairs(
         F.col("mat").alias("mat_b"),
         F.col("dim").alias("dim_b"),
     )
-    # One task per block pair (see jaccard_pairs_bitset_gemm): AQE
-    # coalesces the tiny-byte join output onto 1-2 tasks, serializing
-    # the per-pair GEMMs; round-robin restores the fan-out.
+    # One task per block pair (see the module docstring for the
+    # sizing): AQE would coalesce the tiny-byte join output onto 1-2
+    # tasks, serializing the per-pair GEMMs; round-robin keeps the
+    # fan-out at P(P+1)/2 tasks, one when the corpus fits one block.
     paired = a.join(b, F.col("block_a") <= F.col("block_b")).repartition(
         n_blocks * (n_blocks + 1) // 2
     )

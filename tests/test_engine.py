@@ -98,6 +98,35 @@ def test_reingest_is_idempotent(engine, spark):
     assert (a.value == b.value).all()
 
 
+def test_quality_col_reaches_silver(engine, spark):
+    """``quality_col`` rides through the melt as a key: its value lands
+    in silver's ``quality_flag`` and the column is neither a metric
+    nor a series, whatever its type."""
+    import datetime as dt
+
+    batch = spark.createDataFrame(
+        [(1, dt.datetime(2024, 1, 1, 6), 4.5, "estimated", 0.25)],
+        "site_id int, observed_at timestamp, flow_rate double, q string, q_num double",
+    )
+    stats = engine.ingest_batch(
+        batch.drop("q_num"), "GAS_QUALITY", "national_gas", ["site_id"],
+        "observed_at", quality_col="q",
+    )
+    assert stats["observations"] == 1 and stats["new_series"] == 1
+    silver = engine.get_data().toPandas()
+    assert list(silver.series_id) == ["NG_GAS_QUALITY_1_FLOW_RATE"]
+    assert list(silver.quality_flag) == ["estimated"]
+    # A numeric quality column would otherwise melt as a metric.
+    stats = engine.ingest_batch(
+        batch.drop("q"), "GAS_QUALITY", "national_gas", ["site_id"],
+        "observed_at", quality_col="q_num",
+    )
+    assert stats["observations"] == 1 and stats["new_series"] == 0
+    series = spark.read.parquet(engine.series_path).toPandas()
+    assert list(series.series_id) == ["NG_GAS_QUALITY_1_FLOW_RATE"]
+    assert list(engine.get_data().toPandas().quality_flag) == ["0.25"]
+
+
 def test_series_id_and_history(engine, spark):
     batch = _wide_batch(spark)
     engine.ingest_batch(

@@ -786,6 +786,148 @@ def test_similarity_zero_vectors_and_empty_corpus(spark):
     assert cosine_topk(empty, emb.limit(1), k=2).count() == 0
 
 
+def _scoring_tasks(spark, df) -> int:
+    """Tasks of the last stage that ran to collect ``df``: for the
+    block-GEMM kernels, the ``mapInPandas`` scorer after the round-robin
+    exchange."""
+    sc = spark.sparkContext
+    group = f"scoring-tasks-{id(df)}"
+    sc.setJobGroup(group, "count the scorer's tasks")
+    try:
+        df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    stages = [
+        tracker.getStageInfo(s)
+        for j in tracker.getJobIdsForGroup(group)
+        for s in tracker.getJobInfo(j).stageIds
+    ]
+    ran = [st for st in stages if st is not None and st.numCompletedTasks]
+    return max(ran, key=lambda st: st.stageId).numCompletedTasks
+
+
+def test_block_gemm_small_corpus_scores_in_one_task(spark):
+    """A corpus under ROWS_PER_BLOCK packs into one block: each
+    block-GEMM kernel scores its one block pair in ONE Arrow task and
+    pays the fixed per-task Python-worker cost once."""
+    from gas_data_pipeline_spark.catalog import table
+    from gas_data_pipeline_spark.operators.dedup import (
+        char_shingle_ids_pandas,
+        jaccard_pairs_bitset_gemm,
+    )
+    from gas_data_pipeline_spark.operators.similarity import (
+        ROWS_PER_BLOCK,
+        cosine_near_dup_pairs,
+    )
+
+    emb = table(spark, SF_SMALL, "embeddings")
+    docs = table(spark, SF_SMALL, "documents")
+    assert docs.count() <= ROWS_PER_BLOCK and emb.count() <= ROWS_PER_BLOCK
+    assert _scoring_tasks(spark, cosine_near_dup_pairs(emb, threshold=0.45)) == 1
+    ids = char_shingle_ids_pandas(n=4)(F.col("text"))
+    bitset = jaccard_pairs_bitset_gemm(docs, "doc_id", ids, 0.6, prehashed=True)
+    assert _scoring_tasks(spark, bitset) == 1
+
+
+def _block_of(spark, ids: list[int], n_blocks: int) -> dict[int, int]:
+    """The block each id packs into (the kernels' pmod(hash(id), P))."""
+    rows = (
+        spark.createDataFrame([(i,) for i in ids], "id long")
+        .select("id", F.pmod(F.hash("id"), F.lit(n_blocks)).alias("b"))
+        .collect()
+    )
+    return {r.id: r.b for r in rows}
+
+
+def test_cosine_near_dup_pairs_multi_block_matches_numpy(spark):
+    """Above ROWS_PER_BLOCK the corpus packs into 2 blocks (3 block
+    pairs, 3 tasks): the off-diagonal pair must come out as id_a < id_b
+    whichever side holds the smaller id, and the diagonal blocks must
+    emit each pair once. Checked against a numpy all-pairs reference on
+    low-dimension vectors with near-duplicates planted across blocks."""
+    from gas_data_pipeline_spark.operators.similarity import (
+        ROWS_PER_BLOCK,
+        block_count,
+        cosine_near_dup_pairs,
+    )
+
+    rng = np.random.default_rng(7)
+    n = ROWS_PER_BLOCK + 400
+    vecs = rng.normal(size=(n, 4))
+    # Near-duplicates: id i + n // 2 is a slightly perturbed copy of i.
+    for i in range(0, 200, 2):
+        vecs[i + n // 2] = vecs[i] + rng.normal(scale=1e-3, size=4)
+    ids = list(range(n))
+    emb = spark.createDataFrame(
+        [(i, vecs[i].tolist()) for i in ids], "vec_id long, embedding array<double>"
+    )
+    assert block_count(n) == 2
+    threshold = 0.999
+
+    unit = vecs / np.linalg.norm(vecs, axis=1, keepdims=True)
+    sim = unit @ unit.T
+    r, c = np.nonzero(np.triu(sim >= threshold, k=1))
+    expected = sorted((int(a), int(b), round(float(sim[a, b]), 9)) for a, b in zip(r, c))
+
+    out = cosine_near_dup_pairs(emb, threshold=threshold)
+    got = sorted((x.id_a, x.id_b, round(x.cos_sim, 9)) for x in out.collect())
+    assert got == expected
+    # Both orientations of an off-diagonal pair occur, and so do
+    # diagonal pairs, so every branch of the canonicalization ran.
+    block = _block_of(spark, ids, 2)
+    cross = [(a, b) for a, b, _ in got if block[a] != block[b]]
+    assert any(block[a] < block[b] for a, b in cross)
+    assert any(block[a] > block[b] for a, b in cross)
+    assert any(block[a] == block[b] for a, b, _ in got)
+    assert _scoring_tasks(spark, out) == 3
+
+
+def test_jaccard_bitset_multi_block_matches_inverted_index(spark):
+    """The bitset-GEMM kernel above ROWS_PER_BLOCK (2 blocks) returns
+    exactly the inverted-index join's pairs, near-duplicates planted
+    across blocks included."""
+    from gas_data_pipeline_spark.operators.dedup import (
+        jaccard_pairs_bitset_gemm,
+        jaccard_pairs_inverted_index,
+        word_shingles,
+    )
+    from gas_data_pipeline_spark.operators.similarity import ROWS_PER_BLOCK
+
+    rng = np.random.default_rng(11)
+    n = ROWS_PER_BLOCK + 400
+    words = [f"w{j}" for j in range(12)]
+    texts = [" ".join(rng.choice(words, size=6)) for _ in range(n)]
+    # Near-duplicates: the last word of doc i changed, 3 of 4 shingles
+    # shared (Jaccard 0.6).
+    for i in range(0, 200, 2):
+        texts[i + n // 2] = texts[i].rsplit(" ", 1)[0] + " other"
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    sh = word_shingles(F.col("text"), n=3)
+
+    def rows(df):
+        return sorted((r.id_a, r.id_b, round(r.jaccard, 9)) for r in df.collect())
+
+    base = rows(jaccard_pairs_inverted_index(docs, "doc_id", sh, 0.5))
+    block = _block_of(spark, list(range(n)), 2)
+    cross = [(a, b) for a, b, _ in base if block[a] != block[b]]
+    assert any(block[a] < block[b] for a, b in cross)
+    assert any(block[a] > block[b] for a, b in cross)
+    assert rows(jaccard_pairs_bitset_gemm(docs, "doc_id", sh, 0.5)) == base
+
+
+def test_docs_with_planted_spreads_once(spark):
+    """The planted-docs input is spread once, after the union: one
+    defaultParallelism-wide input for every consumer's shingling
+    stage."""
+    from gas_data_pipeline_spark.catalog import table
+    from gas_data_pipeline_spark.suite.northstar import _docs_with_planted
+
+    docs = _docs_with_planted(spark, SF_SMALL)
+    assert docs.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    assert docs.count() == table(spark, SF_SMALL, "documents").count() + 20
+
+
 def test_remove_repeated_ngrams_python_recompute(spark):
     """Spark output == a sequential Python recompute of the same
     semantics on a corpus with overlapping repeats, partial coverage,

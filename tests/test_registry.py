@@ -167,6 +167,43 @@ def test_bench_normalized_deltas_adjudicate_io_drift(tmp_path, monkeypatch):
     assert list(out["normalized_regressions"]) == ["q_io"]
 
 
+def test_bench_normalized_deltas_faster_host_flags_no_faster_query(
+    tmp_path, monkeypatch
+):
+    """On a FASTER host both canary ratios fall below 1; the gate's
+    host_ratio is clamped to 1, so a query that got faster (but by less
+    than the host did) is never flagged, while a query that got slower
+    in raw seconds still is. Only history records with the same cpus
+    and sf are compared."""
+    import json
+
+    import bench
+
+    hist = tmp_path / "BENCH_HISTORY.jsonl"
+    prev = {
+        "ts": 1,
+        "sf": 0.1,
+        "cpus": 8,
+        "cpu_ref_sec": 0.4,
+        "io_ref_sec": 0.04,
+        "queries": {"q_a": 4.0, "q_b": 2.0, "q_c": 1.0},
+    }
+    other = dict(prev, ts=2, cpus=32, cpu_ref_sec=0.1, io_ref_sec=0.01)
+    hist.write_text(json.dumps(prev) + "\n" + json.dumps(other) + "\n")
+    monkeypatch.setattr(bench, "_REPO_ROOT", str(tmp_path))
+    # Host 2x faster on both axes; q_a and q_b got 1.25x faster, q_c
+    # got 1.6x slower in raw seconds.
+    out = bench._normalized_deltas(
+        {"q_a": 3.2, "q_b": 1.6, "q_c": 1.6}, 0.2, 0.1, io_ref=0.02, cpus=8
+    )
+    assert out["prev_ts"] == 1  # the 32-cpu record is not comparable
+    assert out["canary_ratio"] == 0.5 and out["io_ratio"] == 0.5
+    assert out["host_ratio"] == 1.0
+    assert list(out["normalized_regressions"]) == ["q_c"]
+    # No record at this core count: no comparison at all.
+    assert bench._normalized_deltas({"q_a": 3.2}, 0.2, 0.1, cpus=4) is None
+
+
 def test_bench_compact_summary_stays_inside_tail_window():
     """VERDICT r12 #3/#7: the driver parses the last complete line in
     a fixed-size stdout tail, and BENCH_r12's summary outgrew it —
