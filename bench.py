@@ -20,6 +20,11 @@ section: per-copy time ratio (scaled / (base * factor); > ~1 means
 superlinear growth) and whether any plan flipped to
 CartesianProduct/BroadcastNestedLoopJoin. Disable with
 ``SPARK_GRAFT_SCALE_PROBE=0``; run it alone with ``--scale-probe``.
+
+``--only NAMES`` (comma-separated query names) runs just those queries
+through the same warm-up and passes, prints one JSON line of their
+median timings, and writes no ``BENCH_*`` file: the tool for a quick
+A/B of a few queries.
 """
 
 from __future__ import annotations
@@ -853,17 +858,34 @@ def _cpu_ref_seconds() -> float:
     return round(time.perf_counter() - start, 4)
 
 
+def _only_names(argv: list[str]) -> list[str] | None:
+    """The query names of ``--only NAMES`` (comma-separated), or None."""
+    if "--only" not in argv:
+        return None
+    i = argv.index("--only")
+    names = [n for n in (argv[i + 1] if i + 1 < len(argv) else "").split(",") if n]
+    if not names:
+        raise SystemExit("--only needs a comma-separated list of query names")
+    return names
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     probe_only = "--scale-probe" in sys.argv[1:]
+    only = _only_names(sys.argv[1:])
 
     from gas_data_pipeline_spark.registry import all_queries
     from gas_data_pipeline_spark.session import get_spark
 
+    queries = all_queries()
+    if only is not None:
+        unknown = sorted(set(only) - set(queries))
+        if unknown:
+            raise SystemExit(f"--only: unknown queries {unknown}")
+        queries = {n: queries[n] for n in only}
     _reap_stale_scratch()
     spark = get_spark(app_name="gas-pipeline-bench")
     spark.sparkContext.setLogLevel("ERROR")
-    queries = all_queries()
 
     # Warm-up: touch every table + JIT/codegen paths once. A bare
     # count() prunes every column (parquet answers it from metadata),
@@ -973,6 +995,23 @@ def main() -> None:
 
     total = round(sum(timings.values()), 4)
     sf = _sf_of(sf_dir)
+    if only is not None:
+        # A subset run: its own timings only — no canaries, history,
+        # scale probe or BENCH_* file.
+        print(
+            json.dumps(
+                {
+                    "metric": "only_seconds",
+                    "value": total,
+                    "unit": "sec",
+                    "sf": sf,
+                    "passes": n_passes,
+                    "queries": timings,
+                }
+            )
+        )
+        sys.stdout.flush()
+        return
     # The driver keeps only (a) the parsed LAST stdout line and (b) the
     # last 2000 bytes of stdout, so layout is information design:
     # - big line: headline + probe first, then the queries dict sorted

@@ -9,7 +9,6 @@ from gas_data_pipeline_spark.operators.dedup import (  # noqa: F401
     exact_dedup_ranked,
     jaccard_pairs_inverted_index,
     minhash_near_dup_pairs,
-    simhash64,
     word_shingles,
 )
 from gas_data_pipeline_spark.operators.similarity import (  # noqa: F401

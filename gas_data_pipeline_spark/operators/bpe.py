@@ -34,8 +34,10 @@ offsets within each run.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Row
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from gas_data_pipeline_spark.catalog import local_table
 
 
 def _char_split(word: F.Column) -> F.Column:
@@ -109,7 +111,7 @@ def bpe_train_merges(words: DataFrame, rounds: int = 3) -> DataFrame:
         _char_split(F.col("word")).alias("syms"),
     ).localCheckpoint(eager=True)
 
-    learned: list[Row] = []
+    learned: list[tuple] = []
     for rnd in range(1, rounds + 1):
         pairs = (
             state.filter(F.size("syms") >= 2)
@@ -134,21 +136,13 @@ def bpe_train_merges(words: DataFrame, rounds: int = 3) -> DataFrame:
         if not top:
             break
         best = top[0]
-        learned.append(
-            Row(
-                round=rnd,
-                left=best["l"],
-                right=best["r"],
-                merged=best["l"] + best["r"],
-                pair_count=best["cnt"],
-            )
-        )
+        learned.append((rnd, best["l"], best["r"], best["l"] + best["r"], best["cnt"]))
         state = state.select(
             "freq", _merge_pair(F.col("syms"), best["l"], best["r"]).alias("syms")
         ).localCheckpoint(eager=True)
 
-    spark = words.sparkSession
-    return spark.createDataFrame(
+    return local_table(
+        words.sparkSession,
         learned,
         "round int, left string, right string, merged string, pair_count long",
     )

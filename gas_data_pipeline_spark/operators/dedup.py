@@ -50,6 +50,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from gas_data_pipeline_spark.catalog import local_table
 from gas_data_pipeline_spark.functions.exprs import bind
 from gas_data_pipeline_spark.operators.similarity import block_count
 
@@ -609,8 +610,12 @@ def minhash_near_dup_pairs(
     sets = hashed_shingles(df, id_col, shingle_col)
     # Shingle string-hashing stays JVM-side; the k-permutation XOR-min
     # runs vectorized in numpy (identical output to the expression
-    # formulation, ~30x faster on wide shingle sets).
-    sig = sets.withColumn("sig", minhash_signature_pandas(k)("shingles")).filter(
+    # formulation, ~30x faster on wide shingle sets). A corpus of one
+    # similarity.block_count block signs in ONE Arrow task (coalesce: no
+    # shuffle); a larger one keeps its partitions, since narrowing sf0.1's
+    # 3 blocks from 4 partitions cost more CPU and wall than it saved.
+    signed = sets.coalesce(1) if block_count(sets.count()) == 1 else sets
+    sig = signed.withColumn("sig", minhash_signature_pandas(k)("shingles")).filter(
         F.size("shingles") > 0
     )
     # ^ The empty-shingle guard (empty docs would share the all-MAX
@@ -648,51 +653,15 @@ def md5_low64(value: Column) -> Column:
     return F.shiftleft(hi, 32).bitwiseOR(lo)
 
 
-def simhash64(token_col: Column) -> Column:
-    """X1 SimHash: 64-bit fingerprint — per bit, majority vote of token
-    hashes' bits. Near-dups differ in few bits (small Hamming
-    distance). Pure expression; returns bigint.
-
-    The shift amount must be a Python int (``F.shiftright`` rejects a
-    Column), so the 64 bit positions are unrolled host-side; Catalyst's
-    common-subexpression elimination shares the token-hash array."""
-    hashes = _hash_each(token_col)
-
-    def bit_signs(h: Column) -> Column:
-        # ±1 per bit, MSB first; shift amounts unrolled host-side since
-        # F.shiftright requires a Python int.
-        return F.array(
-            *[
-                F.when(
-                    F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1, 1
-                ).otherwise(-1)
-                for b in range(63, -1, -1)
-            ]
-        )
-
-    votes = F.aggregate(
-        hashes,
-        F.array_repeat(F.lit(0), 64),
-        lambda acc, h: F.zip_with(acc, bit_signs(h), lambda a, v: a + v),
-    )
-    # Assemble with shiftleft/bitwiseOR, not acc*2+bit: setting bit 63
-    # of a signed bigint overflows multiplication under ANSI mode (the
-    # driver's session may run with spark.sql.ansi.enabled=true).
-    return F.aggregate(
-        votes,
-        F.lit(0).cast("bigint"),
-        lambda acc, vote: F.shiftleft(acc, 1).bitwiseOR(
-            F.when(vote >= 0, 1).otherwise(0).cast("bigint")
-        ),
-    )
-
-
 def simhash64_pandas():
     """Arrow-vectorized SimHash: array<bigint> of token hashes in,
-    bigint fingerprint out. Bit-identical to :func:`simhash64` (same
-    MSB-first majority vote), ~20x faster on wide token arrays; string
-    hashing stays JVM-side. Nondeterministic-marked for the same
-    PushProjectionThroughUnion reason as ``minhash_signature_pandas``."""
+    bigint fingerprint out — per bit, most significant first, the
+    majority vote of the token hashes' bits (a tie sets the bit; no
+    tokens give 0). Near-dups differ in few bits (small Hamming
+    distance). String hashing stays JVM-side; numpy votes ~20x faster
+    than an interpreted 64-wide fold. Nondeterministic-marked for the
+    same PushProjectionThroughUnion reason as
+    ``minhash_signature_pandas``."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("bigint")
@@ -1020,7 +989,7 @@ def connected_components(
         nodes = sorted(set(src_vals) | set(dst_vals))
         out = [(n, find(n)) for n in nodes]
         id_type = edges.schema["src"].dataType.simpleString()
-        return pairs.sparkSession.createDataFrame(out, f"id {id_type}, label {id_type}")
+        return local_table(pairs.sparkSession, out, f"id {id_type}, label {id_type}")
     sc = pairs.sparkSession.sparkContext
     loop_parts = max(1, min(sc.defaultParallelism, n_edges // 100_000 + 1))
     edges = edges.repartition(loop_parts, "dst").localCheckpoint(eager=True)

@@ -5,11 +5,13 @@ quantized-index pipeline for IVF, PQ and IVF-PQ.
 Exact kernels — block-partitioned GEMM, the distributed
 dense-similarity formulation:
 
-- Vectors are packed into per-block matrix rows (``applyInPandas``:
-  one row per block carrying ids + a flattened float64 matrix). A
-  cross join of blocks (P(P+1)/2 rows for near-dup, P rows vs one
-  packed query block for top-k) moves each block ~P times, where a
-  pair cross join duplicates every vector once per PAIR (~N times).
+- Vectors are packed into per-block matrix rows by one SQL aggregate
+  (:func:`pack_blocks`: one row per block carrying the sorted ids and
+  a flattened float64 matrix), so the GEMM scorer is each kernel's
+  only Python stage. A cross join of blocks (P(P+1)/2 rows for
+  near-dup, P rows vs one packed query block for top-k) moves each
+  block ~P times, where a pair cross join duplicates every vector once
+  per PAIR (~N times).
 - Each block pair scores with ONE `A @ B.T` — BLAS-rate.
 - Top-k emits only k rows per (query, corpus-block) map-side — the
   shuffle into the final per-query window is O(P·Q·k), never O(N·Q).
@@ -66,7 +68,7 @@ the plain ones train k-means (``GasDataEngine.search_similar``
 ones take k-center models (``ann_ivf``, ``ann_pq``,
 ``ann_pq_rescored``, ``ann_ivfpq_kcenter``, ``ann_ivfpq_rescored``).
 
-All pandas UDF / applyInPandas closures are factory-scoped and
+All pandas UDF / mapInPandas closures are factory-scoped and
 self-contained so cloudpickle ships them by value — executors never
 import this package.
 """
@@ -82,6 +84,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from gas_data_pipeline_spark.catalog import local_table
 from gas_data_pipeline_spark.functions.exprs import bind
 from gas_data_pipeline_spark.operators.selection import (
     KC_SAMPLE_N,
@@ -98,8 +101,6 @@ from gas_data_pipeline_spark.operators.selection import (
 )
 
 _log = logging.getLogger(__name__)
-
-BLOCK_SCHEMA = "block int, ids array<bigint>, mat array<double>, dim int"
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -143,29 +144,27 @@ def pack_blocks(
     """Pack (id, vector) rows into ``n_blocks`` matrix rows:
     ``(block, ids, row-major float64 mat, dim)``. Rows are sorted by id
     within a block so packing is deterministic. Block assignment hashes
-    the id — stable and uniform; one shuffle on the block key."""
-
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        pdf = pdf.sort_values("__id")
-        mat = np.stack(pdf["__vec"].to_numpy()).astype(np.float64)
-        return pd.DataFrame(
-            {
-                "block": [int(pdf["__block"].iloc[0])],
-                "ids": [pdf["__id"].tolist()],
-                "mat": [mat.ravel().tolist()],
-                "dim": [mat.shape[1]],
-            }
+    the id — stable and uniform; one shuffle on the block key. One JVM
+    aggregate: no Python worker runs before the GEMM scorer."""
+    rows = F.array_sort(
+        F.collect_list(
+            F.struct(
+                F.col(id_col).cast("bigint").alias("id"),
+                F.transform(vec_col, lambda x: x.cast("double")).alias("vec"),
+            )
         )
-
-    packed = df.select(
-        F.col(id_col).cast("bigint").alias("__id"),
-        F.col(vec_col).alias("__vec"),
-        # pmod, not abs(hash)%n: abs(INT_MIN) throws under ANSI mode.
-        F.pmod(F.hash(F.col(id_col)), F.lit(n_blocks)).alias("__block"),
     )
-    return packed.groupBy("__block").applyInPandas(pack, schema=BLOCK_SCHEMA)
+    return (
+        # pmod, not abs(hash)%n: abs(INT_MIN) throws under ANSI mode.
+        df.groupBy(F.pmod(F.hash(F.col(id_col)), F.lit(n_blocks)).alias("block"))
+        .agg(rows.alias("rows"))
+        .select(
+            "block",
+            F.transform("rows", lambda r: r["id"]).alias("ids"),
+            F.flatten(F.transform("rows", lambda r: r["vec"])).alias("mat"),
+            F.size(F.col("rows")[0]["vec"]).alias("dim"),
+        )
+    )
 
 
 def cosine_topk(
@@ -869,7 +868,7 @@ def _route_queries(
     rows = qpts.limit(driver_probe_bound + 1).collect()
     small = len(rows) <= driver_probe_bound
     if centers is None:
-        local = qpts.sparkSession.createDataFrame(rows, qpts.schema) if small else qpts
+        local = local_table(qpts.sparkSession, rows, qpts.schema) if small else qpts
         return local, small
     if small:
         cmat = np.array([c["vec"] for c in centers], dtype="float64")
@@ -881,9 +880,7 @@ def _route_queries(
             order = sorted(range(len(cids)), key=lambda i: (sq[i], cids[i]))
             probed.append((*r, [cids[i] for i in order[:n_probe]]))
         cells = StructField("cells", ArrayType(LongType()))
-        q = qpts.sparkSession.createDataFrame(
-            probed, StructType(qpts.schema.fields + [cells])
-        )
+        q = local_table(qpts.sparkSession, probed, StructType(qpts.schema.fields + [cells]))
     else:
         cands = F.array_sort(F.expr(center_cands_sql("qv", centers, quantum)))
         q = qpts.withColumn(

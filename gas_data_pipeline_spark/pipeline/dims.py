@@ -14,6 +14,8 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gas_data_pipeline_spark.catalog import local_table
+
 
 def insert_if_absent(
     spark: SparkSession, incoming: DataFrame, path: str, keys: list[str]
@@ -211,10 +213,8 @@ def _delete_reload_partitioned(
             raise AnalysisException(
                 f"partition column {partition_col} absent from replacement"
             )
-        vals_df = (
-            spark.createDataFrame(
-                [(v,) for v in part_dirs], "__pv_str string"
-            ).withColumn(partition_col, F.col("__pv_str").cast(dtype))
+        vals_df = local_table(spark, [(v,) for v in part_dirs], "__pv_str string").withColumn(
+            partition_col, F.col("__pv_str").cast(dtype)
         )
         pred_strs = {
             r[0] for r in vals_df.filter(pred).select("__pv_str").collect()

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gas_data_pipeline_spark.catalog import table
+from gas_data_pipeline_spark.catalog import local_table, table
 from gas_data_pipeline_spark.operators.timeseries import (
     asof_join,
     gap_fill_daily,
@@ -187,7 +187,7 @@ def band_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly right for a 4-row build side; the fact side never
     shuffles until the final 4-group aggregate."""
     part = table(spark, sf_dir, "part")
-    bands = spark.createDataFrame(_BANDS, ["band", "lo", "hi"])
+    bands = local_table(spark, _BANDS, "band string, lo double, hi double")
     joined = part.join(
         F.broadcast(bands),
         (F.col("p_retailprice") >= F.col("lo")) & (F.col("p_retailprice") < F.col("hi")),
@@ -401,17 +401,24 @@ def salted_skew_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT user_id, event_id, value,
                    CAST(date_trunc('microsecond', ts) AS TIMESTAMP) AS ts
             FROM events WHERE user_id < 10
+        ),
+        -- Exact mean, rounded half-up in integer cents: DuckDB's
+        -- decimal division returns a double.
+        win AS (
+            SELECT user_id, event_id, ts,
+                   CAST(sum(CAST(value AS DECIMAL(18, 2))) OVER w * 100 AS HUGEINT) AS cents,
+                   CAST(count(*) OVER w AS BIGINT) AS n_24h
+            FROM ev
+            WINDOW w AS (
+                PARTITION BY user_id ORDER BY ts
+                RANGE BETWEEN INTERVAL 24 HOURS PRECEDING AND CURRENT ROW
+            )
         )
         SELECT user_id, event_id, ts,
-               round(avg(value) OVER (
-                   PARTITION BY user_id ORDER BY ts
-                   RANGE BETWEEN INTERVAL 24 HOURS PRECEDING AND CURRENT ROW
-               ), 4) AS avg_24h,
-               CAST(count(*) OVER (
-                   PARTITION BY user_id ORDER BY ts
-                   RANGE BETWEEN INTERVAL 24 HOURS PRECEDING AND CURRENT ROW
-               ) AS BIGINT) AS n_24h
-        FROM ev
+               CAST(sign(cents) * ((abs(cents) * 200 + n_24h) // (2 * n_24h)) AS DOUBLE)
+                   / 10000 AS avg_24h,
+               n_24h
+        FROM win
     """,
 )
 def rolling_time_average(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -419,7 +426,9 @@ def rolling_time_average(spark: SparkSession, sf_dir: str) -> DataFrame:
     event time (peers included, exactly SQL RANGE semantics), the
     canonical smoothing query over the observation store. One shuffle
     on the series key; the frame is evaluated in a single sorted pass
-    per partition."""
+    per partition. The mean is exact: a decimal sum of the 2-decimal
+    values over the count, rounded half-up to 4 places, where a rounded
+    double average lands ties on either side."""
     from pyspark.sql.window import Window
 
     ev = table(spark, sf_dir, "events").filter(F.col("user_id") < 10)
@@ -434,7 +443,11 @@ def rolling_time_average(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "event_id",
         "ts",
-        F.round(F.avg("value").over(w), 4).alias("avg_24h"),
+        F.round(
+            F.sum(F.col("value").cast("decimal(18,2)")).over(w)
+            / F.count(F.lit(1)).over(w),
+            4,
+        ).cast("double").alias("avg_24h"),
         F.count(F.lit(1)).over(w).alias("n_24h"),
     )
 

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gas_data_pipeline_spark.catalog import spread_scan, table
+from gas_data_pipeline_spark.catalog import local_table, spread_scan, table
 from gas_data_pipeline_spark.operators.curation import (
     contamination_flags,
     pack_sequences,
@@ -569,7 +569,8 @@ def mixture_temperature_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for lang, nd, nt in stats
     ]
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         out,
         "lang string, n_docs bigint, n_tokens bigint, "
         "current_share double, target_share double, sample_boost double",
@@ -1012,7 +1013,7 @@ def bpe_train_merge_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed form (operators/bpe.py). Training runs once per session via
     the shared ``_corpus_bpe_training`` seam."""
     _, rules = _corpus_bpe_training(spark, sf_dir)
-    return spark.createDataFrame(rules, _BPE_RULES_SCHEMA)
+    return local_table(spark, rules, _BPE_RULES_SCHEMA)
 
 
 @register(
@@ -1360,7 +1361,8 @@ def unigram_lm_train_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     positions agree bit-for-bit."""
     vocab, _ = _corpus_unigram_training(spark, sf_dir)
     total = sum(c for _, c in vocab)
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         [(p, len(p), c, round(c / total, 6)) for p, c in vocab],
         "piece string, piece_len bigint, cnt bigint, prob double",
     )

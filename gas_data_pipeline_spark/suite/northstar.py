@@ -31,7 +31,6 @@ from gas_data_pipeline_spark.operators.dedup import (
     jaccard_pairs_prefix_filter,
     minhash_near_dup_pairs,
     shingle_postings,
-    simhash64,
     word_shingles,
 )
 from gas_data_pipeline_spark.operators.multimodal import attach_binary, extract_features
@@ -496,7 +495,7 @@ _SIMHASH_ORACLE = f"""
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X1 SimHash: 64-bit per-doc fingerprint (narrow, no shuffle;
     token hashing JVM-side, majority vote numpy-side — bit-identical
-    to the pure-expression :func:`simhash64`, which pytest asserts).
+    to a by-hand reference vote, which pytest asserts).
     The token-hash basis is :func:`md5_low64` (first 16 md5 hex chars
     as signed bigint) rather than xxhash64 *so the fingerprint is
     value-oracle-able*: DuckDB recomputes the identical tokenize →

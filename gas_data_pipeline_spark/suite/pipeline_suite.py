@@ -13,7 +13,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gas_data_pipeline_spark.catalog import table
+from gas_data_pipeline_spark.catalog import local_table, table
 from gas_data_pipeline_spark.pipeline.bronze import bronze_append, read_bronze
 from gas_data_pipeline_spark.pipeline.exports import export_csv
 from gas_data_pipeline_spark.pipeline.silver import upsert_observations
@@ -1697,7 +1697,8 @@ def observe_ingest_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     bronze_append(watched, "ds_observe", "events_feed", bronze)
     m = obs.get
     landed = read_bronze(spark, bronze, "ds_observe").count()
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         [
             (
                 m["n_rows"],

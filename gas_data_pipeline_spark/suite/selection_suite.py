@@ -14,7 +14,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from gas_data_pipeline_spark.catalog import table
+from gas_data_pipeline_spark.catalog import local_table, table
 from gas_data_pipeline_spark.functions.exprs import bind
 from gas_data_pipeline_spark.operators.selection import (
     QUALITY_STOPWORDS,
@@ -723,7 +723,8 @@ def coreset_kcenter_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("v"),
     )
     assigned = assign_to_centers(pts, centers)
-    centers_df = spark.createDataFrame(
+    centers_df = local_table(
+        spark,
         [(c["step"], c["id"], c["sq_fp"]) for c in centers],
         "step bigint, center_id bigint, sq_fp bigint",
     )
@@ -879,8 +880,8 @@ def quality_classifier_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     the filter query."""
     s1, s2, s3 = _corpus_classifier_snapshots(spark, sf_dir)
     rows = [(b, s1[b], s2[b], s3[b]) for b in sorted(s3)]
-    return spark.createDataFrame(
-        rows, "bucket bigint, w1_fp bigint, w2_fp bigint, w3_fp bigint"
+    return local_table(
+        spark, rows, "bucket bigint, w1_fp bigint, w2_fp bigint, w3_fp bigint"
     )
 
 
@@ -1092,8 +1093,8 @@ def ann_index_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("vec_id") % 10 == 0).alias("is_delta"),
     )
     assigned = assign_to_centers(pts, centers, payload_cols=("is_delta",))
-    centers_df = spark.createDataFrame(
-        [(c["step"], c["id"]) for c in centers], "step bigint, center_id bigint"
+    centers_df = local_table(
+        spark, [(c["step"], c["id"]) for c in centers], "step bigint, center_id bigint"
     )
     stats = assigned.groupBy("center_id").agg(
         F.sum(F.when(F.col("is_delta"), 0).otherwise(1)).alias("n_base"),

@@ -14,6 +14,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gas_data_pipeline_spark.catalog import local_table
 from gas_data_pipeline_spark.pipeline.silver import upsert_observations
 from gas_data_pipeline_spark.registry import register
 from gas_data_pipeline_spark.streaming.incremental import (
@@ -1373,7 +1374,7 @@ def cms_monitor_writer(state_dir: str, log_dir: str, tracked: list[int]):
             prev = sp.read.parquet(state_path(batch_id - 1))
             merged = cms_merge(prev.unionByName(batch_sk))
         merged.write.mode("overwrite").parquet(state_path(batch_id))
-        cands = sp.createDataFrame([(u,) for u in tracked], "user_id bigint")
+        cands = local_table(sp, [(u,) for u in tracked], "user_id bigint")
         est = cms_estimate(
             cands, sp.read.parquet(state_path(batch_id)), key
         )

@@ -20,15 +20,31 @@ from pyspark.sql import functions as F
 from tests.conftest import SF_SMALL
 
 
-def _simhash_map(spark):
-    from gas_data_pipeline_spark.operators.dedup import simhash64
+def _simhash_reference(hashes) -> int:
+    """SimHash by hand: per bit, most significant first, a majority
+    vote over the token hashes (a tie sets the bit); no tokens
+    fingerprint as 0, as in the oracle."""
+    if not len(hashes):
+        return 0
+    h = np.asarray(hashes, dtype=np.int64).astype(">u8")
+    bits = np.unpackbits(h.view(np.uint8).reshape(-1, 8), axis=1)
+    return int(np.packbits(2 * bits.sum(axis=0) >= len(h)).view(">i8")[0])
+
+
+def _simhashes(docs):
+    """(doc_id, simhash) through the engine's fingerprint UDF, over
+    xxhash64 token hashes."""
+    from gas_data_pipeline_spark.operators.dedup import simhash64_pandas
     from gas_data_pipeline_spark.operators.text import tokenize
+
+    hashes = F.transform(tokenize(F.col("text")), lambda t: F.xxhash64(t))
+    return docs.select("doc_id", simhash64_pandas()(hashes).alias("simhash"))
+
+
+def _simhash_map(spark):
     from gas_data_pipeline_spark.suite.northstar import _docs_with_planted
 
-    docs = _docs_with_planted(spark, SF_SMALL)
-    pdf = docs.select(
-        "doc_id", simhash64(tokenize(F.col("text"))).alias("simhash")
-    ).toPandas()
+    pdf = _simhashes(_docs_with_planted(spark, SF_SMALL)).toPandas()
     return dict(zip(pdf.doc_id, pdf.simhash))
 
 
@@ -36,25 +52,22 @@ def _hamming(a: int, b: int) -> int:
     return bin((int(a) ^ int(b)) & (2**64 - 1)).count("1")
 
 
-def test_simhash_pandas_matches_expression(spark):
-    """The numpy fast path must be bit-identical to the pure-expression
-    formulation (same MSB-first majority vote over token xxhash64s)."""
+def test_simhash_pandas_matches_reference(spark):
+    """The numpy fingerprint UDF is bit-identical to the by-hand
+    MSB-first majority vote, empty token lists included."""
     from gas_data_pipeline_spark.catalog import table
-    from gas_data_pipeline_spark.operators.dedup import (
-        simhash64,
-        simhash64_pandas,
-    )
+    from gas_data_pipeline_spark.operators.dedup import simhash64_pandas
     from gas_data_pipeline_spark.operators.text import tokenize
 
-    docs = table(spark, SF_SMALL, "documents").limit(50)
-    sh = simhash64_pandas()
-    both = docs.select(
-        simhash64(tokenize(F.col("text"))).alias("expr"),
-        sh(F.transform(tokenize(F.col("text")), lambda t: F.xxhash64(t))).alias(
-            "pd"
-        ),
+    docs = table(spark, SF_SMALL, "documents").select("text").limit(50)
+    docs = docs.unionByName(spark.createDataFrame([("",)], "text string"))
+    hashes = F.transform(tokenize(F.col("text")), lambda t: F.xxhash64(t))
+    got = docs.select(
+        hashes.alias("hashes"), simhash64_pandas()(hashes).alias("simhash")
     ).toPandas()
-    assert (both["expr"] == both["pd"]).all()
+    assert len(got) == 51 and got.hashes.map(len).min() == 0
+    for row in got.itertuples():
+        assert row.simhash == _simhash_reference(row.hashes)
 
 
 def test_simhash_separates_planted_near_dups(spark):
@@ -86,13 +99,8 @@ def test_simhash_band_pairs_pigeonhole(spark):
         PLANT_OFFSET,
         _docs_with_planted,
     )
-    from gas_data_pipeline_spark.operators.dedup import simhash64
-    from gas_data_pipeline_spark.operators.text import tokenize
 
-    docs = _docs_with_planted(spark, SF_SMALL)
-    sh = docs.select(
-        "doc_id", simhash64(tokenize(F.col("text"))).alias("simhash")
-    )
+    sh = _simhashes(_docs_with_planted(spark, SF_SMALL))
     pairs = simhash_band_pairs(sh, "doc_id", "simhash", max_hamming=3).toPandas()
 
     m = _simhash_map(spark)

@@ -92,6 +92,80 @@ def test_spread_scan_sees_through_fake_splits(spark, tmp_path):
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
 
 
+def _nan_safe(v):
+    """A collected value with NaN made comparable (NaN != NaN)."""
+    if isinstance(v, float) and v != v:
+        return "NaN"
+    if isinstance(v, (list, tuple)):
+        return tuple(_nan_safe(x) for x in v)
+    return v
+
+
+@pytest.mark.parametrize(
+    "rows, schema",
+    [
+        ([(2**53 + 1, 7, "x"), (-(2**62), None, None)], "a bigint, b int, s string"),
+        ([(float("nan"),), (None,), (1.5,)], "d double"),
+        (
+            [([1, None, 2**60], [0.5, None, float("nan")]), (None, [])],
+            "xs array<bigint>, ys array<double>",
+        ),
+        ([], "a bigint, s string"),
+    ],
+)
+def test_local_table_matches_create_dataframe(spark, rows, schema):
+    # Same schema and rows as the Python-RDD path, in a LocalTableScan.
+    from gas_data_pipeline_spark.catalog import local_table
+
+    got = local_table(spark, rows, schema)
+    want = spark.createDataFrame(rows, schema)
+    assert got.schema == want.schema
+    assert [_nan_safe(r) for r in got.collect()] == [_nan_safe(r) for r in want.collect()]
+    assert "LocalTableScan" in got._jdf.queryExecution().executedPlan().toString()
+
+
+def test_local_table_takes_rows_with_a_struct_type(spark):
+    from pyspark.sql import Row
+    from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, StructType
+
+    from gas_data_pipeline_spark.catalog import local_table
+
+    schema = StructType(
+        [StructField("id", LongType(), False), StructField("v", ArrayType(DoubleType()))]
+    )
+    rows = [Row(id=3, v=[1.0, 2.0]), Row(id=1, v=None)]
+    got = local_table(spark, rows, schema)
+    assert got.schema == spark.createDataFrame(rows, schema).schema == schema
+    assert got.collect() == rows
+
+
+def test_package_builds_driver_frames_only_through_local_table():
+    # createDataFrame(<list>) plans a Python RDD: every driver-built
+    # frame goes through catalog.local_table instead.
+    import ast
+    import pathlib
+
+    import gas_data_pipeline_spark
+
+    root = pathlib.Path(gas_data_pipeline_spark.__file__).parent
+    calls = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        allowed = set()
+        if path.name == "catalog.py" and path.parent == root:
+            fn = next(n for n in tree.body if getattr(n, "name", None) == "local_table")
+            allowed = {id(n) for n in ast.walk(fn)}
+        calls += [
+            f"{path.relative_to(root)}:{n.lineno}"
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr == "createDataFrame"
+            and id(n) not in allowed
+        ]
+    assert calls == []
+
+
 def test_text_profile_is_narrow(spark):
     plan = _plan(spark, "text_quality_langid")
     assert "Exchange" not in plan
@@ -289,6 +363,67 @@ def test_minhash_band_explode_carries_ids_only(spark):
     carried = re.search(r"\), \[([^\]]*)\], (?:true|false), \[[^\]]*\]$", band[0]).group(1)
     assert [c.split("#")[0] for c in carried.split(", ")] == ["id"]
     assert sorted(re.findall(r"Join \[(\w+)#", plan)) == ["id_a", "id_b"]
+
+
+def _plan_nodes(plan):
+    """Every node of a physical plan, through AQE query stages."""
+    yield plan
+    if plan.nodeName().endswith("QueryStage"):
+        yield from _plan_nodes(plan.plan())
+    kids = plan.children()
+    for i in range(kids.size()):
+        yield from _plan_nodes(kids.apply(i))
+
+
+def test_quality_classifier_result_is_a_local_table_scan(spark):
+    # The 26-row weight table is built on the driver: a JVM
+    # LocalTableScan, never a Python RDD that starts Python workers.
+    plan = _plan(spark, "quality_classifier_train")
+    assert "LocalTableScan" in plan
+    assert "Scan ExistingRDD" not in plan
+
+
+@pytest.mark.parametrize("name", ["embedding_cosine_near_dup", "ann_cosine_topk"])
+def test_block_gemm_runs_one_python_stage(spark, name):
+    # Blocks pack in one SQL aggregate: the GEMM scorer is the only
+    # Python operator of the exact cosine kernels.
+    plan = _plan(spark, name)
+    assert plan.count("MapInPandas") == 1
+    assert "FlatMapGroupsInPandas" not in plan
+
+
+def test_minhash_signature_small_corpus_runs_one_task(spark):
+    # A corpus of one ROWS_PER_BLOCK block signs in one Arrow task, not
+    # one per spread partition.
+    from gas_data_pipeline_spark.registry import all_queries
+    from tests.conftest import SF_SMALL
+
+    df = all_queries()["dedup_minhash_lsh"](spark, SF_SMALL)
+    df.collect()
+    final = df._jdf.queryExecution().executedPlan().executedPlan()
+    arrow = [n for n in _plan_nodes(final) if n.nodeName() == "ArrowEvalPython"]
+    assert len(arrow) == 1
+    assert arrow[0].execute().getNumPartitions() == 1
+
+
+@pytest.mark.parametrize("per_block", [1, "cores"])
+def test_minhash_signature_large_corpus_adds_no_exchange(spark, per_block):
+    # A corpus above one block (ROWS_PER_BLOCK documents; here also above
+    # ROWS_PER_BLOCK x defaultParallelism) signs on its own partitions:
+    # no repartition, no coalesce.
+    from pyspark.sql import functions as F
+
+    from gas_data_pipeline_spark.operators.dedup import minhash_near_dup_pairs, word_shingles
+    from gas_data_pipeline_spark.operators.similarity import ROWS_PER_BLOCK
+
+    cores = spark.sparkContext.defaultParallelism
+    n = ROWS_PER_BLOCK * (cores if per_block == "cores" else 1) + 1
+    docs = spark.range(n).select(
+        F.col("id").alias("doc_id"), F.concat_ws(" ", F.lit("a b"), F.col("id")).alias("text")
+    )
+    pairs = minhash_near_dup_pairs(docs, "doc_id", word_shingles(F.col("text"), n=2))
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    assert "RoundRobinPartitioning" not in plan and "Coalesce" not in plan
 
 
 def test_prefix_jaccard_small_corpus_verifies_under_broadcasts(spark):

@@ -3,6 +3,8 @@ real registrations, in the order the external driver will see."""
 
 from __future__ import annotations
 
+import pytest
+
 
 def test_driver_window_is_the_first_fifty():
     from gas_data_pipeline_spark.registry import _DRIVER_WINDOW, all_queries
@@ -75,6 +77,16 @@ def test_scale_probe_names_are_registered():
     from gas_data_pipeline_spark.registry import all_queries
 
     assert set(bench.SCALE_PROBE_QUERIES) <= set(all_queries())
+
+
+def test_bench_only_names():
+    import bench
+
+    assert bench._only_names(["--scale-probe"]) is None
+    assert bench._only_names(["--only", "a,b"]) == ["a", "b"]
+    for bad in (["--only"], ["--only", ","]):
+        with pytest.raises(SystemExit):
+            bench._only_names(bad)
 
 
 def test_bench_normalized_deltas_factor_out_host_speed(tmp_path, monkeypatch):
