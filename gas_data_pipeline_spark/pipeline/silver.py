@@ -49,6 +49,42 @@ def dedup_last_write_wins(df: DataFrame, order_cols: list[str]) -> DataFrame:
     )
 
 
+def merge_last_write_wins(
+    batch: DataFrame, existing: DataFrame | None, order_cols: list[str]
+) -> DataFrame:
+    """The one last-write-wins merge both upserts run (this module's
+    and :mod:`versioned`): ``batch`` (already carrying ``obs_date``)
+    unioned with the ``existing`` rows of its dates, one row kept per
+    (series_id, observation_time). Batch rows beat existing rows on a
+    key collision, then ``order_cols`` descending breaks ties — within
+    and across sides.
+
+    ONE shuffle settles dedup AND write shape. obs_date is a function
+    of observation_time, so hash-partitioning by obs_date clusters
+    every (series, time) group into one task — which satisfies the
+    dedup window's ClusteredDistribution when the window adds obs_date
+    to its partition keys (same groups: date is determined by time).
+    The window then plans with NO second exchange, and a write
+    partitioned by date inherits the clustering: files-per-partition
+    stays independent of task count. A huge single gas-day serializes
+    through one task; cap file size with
+    spark.sql.files.maxRecordsPerFile when that bites."""
+    merged = batch.withColumn("__prio", F.lit(1))
+    if existing is not None:
+        merged = merged.unionByName(
+            existing.withColumn("__prio", F.lit(0)), allowMissingColumns=True
+        )
+    w = Window.partitionBy(PARTITION_COL, *KEYS).orderBy(
+        *[F.col(c).desc() for c in ("__prio", *order_cols)]
+    )
+    return (
+        merged.repartition(F.col(PARTITION_COL))
+        .withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn", "__prio")
+    )
+
+
 def upsert_observations(
     spark: SparkSession,
     batch: DataFrame,
@@ -63,62 +99,28 @@ def upsert_observations(
     unique column (e.g. event id) after ingestion_time to make ties
     deterministic.
     """
-    order_cols = order_cols or ["ingestion_time"]
-    batch = batch.withColumn(PARTITION_COL, F.to_date("observation_time")).withColumn(
-        "__prio", F.lit(1)
-    )
-
-    cached = None
+    batch = batch.withColumn(PARTITION_COL, F.to_date("observation_time"))
+    existing = None
     if os.path.exists(path):
         # The batch is consumed twice on the merge path (the
         # affected-partition discovery collect, then the merge union) —
         # cache it so the melt/window lineage upstream isn't replayed.
-        cached = batch.persist()
-        # Only the partitions the batch touches participate in the
-        # merge. Discovery runs on the raw batch: dedup never changes
-        # the date set, so the in-batch dedup folds into the merge
-        # window below — ONE (series, time)-keyed shuffle settles
-        # in-batch ties AND batch-vs-existing priority in the same
-        # row_number (it was two full window shuffles through r9).
+        # Discovery runs on the raw batch: dedup never changes the date
+        # set, so the in-batch dedup folds into the merge window.
+        batch = batch.persist()
         affected = [r[0] for r in batch.select(PARTITION_COL).distinct().collect()]
-        existing = (
-            spark.read.parquet(path)
-            .filter(F.col(PARTITION_COL).isin(affected))
-            .withColumn("__prio", F.lit(0))
+        existing = spark.read.parquet(path).filter(
+            F.col(PARTITION_COL).isin(affected)
         )
-        merged = batch.unionByName(existing, allowMissingColumns=True)
-    else:
-        merged = batch
-
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    # ONE shuffle settles dedup AND write shape. obs_date is a function
-    # of observation_time, so hash-partitioning by obs_date clusters
-    # every (series, time) group into one task — which satisfies the
-    # dedup window's ClusteredDistribution when the window adds
-    # obs_date to its partition keys (same groups: date is determined
-    # by time). The window then plans with NO second exchange, and the
-    # write inherits the date clustering partitionBy needs:
-    # files-per-partition stays independent of task count (without the
-    # date hash, tasks x dates small files at cluster scale). New
-    # batch wins over existing on key collision (__prio desc), then
-    # the caller's tie-break — within and across sides. A huge single
-    # gas-day serializes through one task here exactly as the
-    # write-side repartition already forced through r9; cap file size
-    # with spark.sql.files.maxRecordsPerFile when that bites.
-    w = Window.partitionBy(PARTITION_COL, *KEYS).orderBy(
-        *[F.col(c).desc() for c in ("__prio", *order_cols)]
-    )
     (
-        merged.repartition(F.col(PARTITION_COL))
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "__prio")
+        merge_last_write_wins(batch, existing, order_cols or ["ingestion_time"])
         .write.mode("overwrite")
         .partitionBy(PARTITION_COL)
         .parquet(path)
     )
-    if cached is not None:
-        cached.unpersist()
+    if existing is not None:
+        batch.unpersist()
 
 
 def read_observations(

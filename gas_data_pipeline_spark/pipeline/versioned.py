@@ -1,46 +1,49 @@
-"""Versioned silver store: ATOMIC multi-partition upsert commits on
-plain parquet — the table-format gap in SNK2 closed without a Delta/
-Iceberg dependency (VERDICT r7-r9 "what's missing": the window-dedup
-+ dynamic-overwrite upsert is idempotent, but its commit rewrites N
-partition directories one by one, so a concurrent reader can see a
-half-committed table).
+"""Versioned silver store: ATOMIC multi-partition commits on plain
+parquet — the SNK2 sink with an Iceberg-shaped write-audit-publish
+protocol and no Delta/Iceberg dependency.
 
-Iceberg-shaped write-audit-publish, one JSON manifest:
+Layout:
 
 - data for version N lands under ``<root>/v<N>-<nonce>/__pdate=
   <date>/`` (the nonce keeps racing writers' staging dirs disjoint —
-  only the manifest CAS below decides who publishes);
+  only the manifest CAS decides who publishes);
 - the MANIFEST (``<root>/manifest.json``) maps every date partition
-  to the version directory that currently owns it;
-- commit = write ``manifest.json.tmp`` then ``os.replace`` — atomic
-  on POSIX, so a reader resolves the old or the new snapshot, never
-  a mix;
-- an upsert writes ONLY its affected partitions into the new version
-  dir; untouched partitions are STRUCTURALLY SHARED (their manifest
-  entries keep pointing at older version dirs) — nothing is copied
-  forward, exactly the Iceberg/Delta metadata trick;
-- every committed manifest is also kept as ``manifest-v<N>.json``,
-  so any past snapshot stays readable (time travel) until
-  :func:`vacuum` expires it past the retention window
-  (``retain_last_n`` snapshots stay fully readable; unreferenced
-  dirs younger than ``min_age_seconds`` are never reclaimed, so an
-  in-flight writer's staging dir survives its own commit race);
-- reader-side partition pruning is METADATA-level: a date filter
-  selects manifest entries before any file listing happens, and
-  ``obs_date`` rides in the data files (the physical dirs key on the
-  shadow column ``__pdate``), so the multi-path scan needs no
-  basePath gymnastics across version roots.
+  to the version directory that currently owns it, plus the declared
+  schema, partition-grain stats, per-month file-stats shard refs and
+  deletion-vector refs; every committed manifest is also kept as
+  ``manifest-v<N>.json`` for time travel until :func:`vacuum` expires
+  it;
+- commit = write ``manifest.json.tmp`` then ``os.replace`` under the
+  commit flock, fenced on the version number (:func:`publish_version`):
+  a reader resolves the old or the new snapshot, never a mix, and a
+  writer that merged against a stale snapshot is refused
+  (:class:`ConcurrentCommitError`) instead of dropping the interleaved
+  commit's rows;
+- untouched partitions are STRUCTURALLY SHARED: their entries keep
+  pointing at older version dirs, nothing is copied forward.
 
-Writers are optimistically concurrent: a writer that merged against
-a stale manifest is FENCED at publish (version CAS) instead of
-silently dropping the interleaved commit's rows — the single-node
-form of Iceberg's commit protocol; the reference scheduler's
-``max_instances=1`` (app/scheduler/scheduler.py:13-17) never hits
-the fence. Production table formats add file-level manifests on top
-of exactly this commit shape. The merge itself reuses the one-shuffle
-plan of :mod:`gas_data_pipeline_spark.pipeline.silver`: hash by date
-clusters every (series, time) group, the dedup window rides that
-exchange, and the partitioned write inherits it.
+One commit path. Every writer only decides WHICH ROWS to write over
+WHICH DATES; :func:`_rewrite_commit` does the rest in one step —
+stage the rows into a fresh version dir, audit which dates were
+written, collect footer stats once (:func:`_collect_stats`), evolve
+the declared schema (:func:`_evolve_schema`) and fold the result into
+the partition map (:func:`_publish_fold`): a written date points at
+its new directory with fresh stats, a touched date the write emitted
+nothing for leaves the manifest. The writers:
+
+- upsert: the last-write-wins merge of the batch with the live rows of
+  the batch's dates (:func:`silver.merge_last_write_wins`, the same
+  one-shuffle plan the plain silver upsert runs);
+- compaction: the range-clustered rewrite of the fragmented dates;
+- copy-on-write delete: the surviving rows of the matched dates;
+- update: the assigned rows of the matched dates.
+
+Merge-on-read deletes (positional deletion vectors, and equality
+deletes by key) write no data files: they publish the unchanged
+partition map plus vector deltas through the same fold. Every rewrite
+reads through :func:`_live_rows`, so vectors apply before the rewrite
+and drop with the repointed dates — a rewrite is the materialization
+point for merge-on-read deletes.
 """
 
 from __future__ import annotations
@@ -53,10 +56,14 @@ import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+from pyspark.sql.types import StructType
 
 from gas_data_pipeline_spark.pipeline.fileio import io_for
-from gas_data_pipeline_spark.pipeline.silver import KEYS, PARTITION_COL
+from gas_data_pipeline_spark.pipeline.silver import (
+    KEYS,
+    PARTITION_COL,
+    merge_last_write_wins,
+)
 
 _MANIFEST = "manifest.json"
 _PDATE = "__pdate"
@@ -129,6 +136,19 @@ def _commit_lock(root: str):
 def _manifest_path(root: str, version: int | None = None) -> str:
     name = _MANIFEST if version is None else f"manifest-v{version}.json"
     return os.path.join(root, name)
+
+
+_HISTORY = re.compile(r"^manifest-v(\d+)\.json$")
+_VERSION_DIR = re.compile(r"^v(\d+)(-[0-9a-f]{8})?$")
+
+
+def _history_versions(root: str) -> list[int]:
+    """Versions with a ``manifest-v<N>.json`` snapshot on disk."""
+    return sorted(
+        int(h.group(1))
+        for e in io_for(root).listdir(root)
+        if (h := _HISTORY.match(e))
+    )
 
 
 def read_manifest(
@@ -628,6 +648,15 @@ def _merge_file_stats(a: dict, b: dict) -> dict:
     return out
 
 
+def _data_files(pdir: str) -> list[str]:
+    """The parquet file names in a partition directory, sorted; none
+    when the directory cannot be listed."""
+    try:
+        return sorted(f for f in os.listdir(pdir) if f.endswith(".parquet"))
+    except OSError:
+        return []
+
+
 def _partition_stats(pdir: str) -> dict:
     """Per-partition column stats from parquet FOOTERS — plus ONE
     data-page read per file, the dictionary-encoded key column that
@@ -644,20 +673,12 @@ def _partition_stats(pdir: str) -> dict:
 
     This serial form is the REFERENCE implementation (and the
     single-directory convenience); the commit path uses
-    :func:`_partition_stats_many`, which runs the same per-file kernel
-    as a parallelized Spark job. Equality of the two is pinned by
+    :func:`_collect_stats`, which runs the same per-file kernel as a
+    parallelized Spark job. Equality of the two is pinned by
     tests/test_pipeline.py."""
-    try:
-        files = sorted(
-            os.path.join(pdir, f)
-            for f in os.listdir(pdir)
-            if f.endswith(".parquet")
-        )
-    except OSError:
-        return {}
     agg: dict = {}
-    for f in files:
-        agg = _merge_file_stats(agg, _file_stats(f))
+    for f in _data_files(pdir):
+        agg = _merge_file_stats(agg, _file_stats(os.path.join(pdir, f)))
     return {c: v for c, v in agg.items() if v is not None}
 
 
@@ -698,13 +719,11 @@ def _collect_stats(
     Partitions with no files are absent from both results; partitions
     whose every column is disqualified map to ``{}`` in the partition
     grain."""
-    pairs: list[tuple[str, str, str]] = []
-    for d, pdir in pdirs.items():
-        try:
-            files = [f for f in os.listdir(pdir) if f.endswith(".parquet")]
-        except OSError:
-            files = []
-        pairs.extend((d, f, os.path.join(pdir, f)) for f in files)
+    pairs = [
+        (d, f, os.path.join(pdir, f))
+        for d, pdir in pdirs.items()
+        for f in _data_files(pdir)
+    ]
     if not pairs:
         return {}, {}
     if local_max is None:
@@ -761,10 +780,133 @@ def _collect_stats(
     return per_part, per_file
 
 
-def _partition_stats_many(spark: SparkSession, pdirs: dict[str, str]) -> dict:
-    """Partition-grain view of :func:`_collect_stats` — kept as the
-    equality surface against the serial :func:`_partition_stats`."""
-    return _collect_stats(spark, pdirs)[0]
+def _snapshot(root: str, version: int | None = None, with_stats: bool = True) -> dict:
+    """The committed snapshot a writer or reader works against; raises
+    ``FileNotFoundError`` for a missing or empty table."""
+    m = read_manifest(root, version, with_stats=with_stats)
+    if m is None or not m["partitions"]:
+        raise FileNotFoundError(f"no committed snapshot under {root}")
+    return m
+
+
+def _snapshot_reader(spark: SparkSession, m: dict | None):
+    """A reader under the snapshot's DECLARED schema (manifest
+    metadata, evolved at commit). Structural sharing mixes version
+    directories with different file schemas in one scan, and a
+    file-anchored read would drop a column a later commit added
+    whenever it anchors on an older shared partition; files that
+    predate an added column yield nulls for it. Pre-schema manifests
+    fall back to the file-anchored read."""
+    reader = spark.read
+    if m is not None and m.get("schema") is not None:
+        reader = reader.schema(StructType.fromJson(m["schema"]))
+    return reader
+
+
+def _live_rows(
+    spark: SparkSession, root: str, m: dict | None, dates, positions: bool = False
+) -> DataFrame | None:
+    """The rows snapshot ``m`` shows on ``dates``: one scan of those
+    dates' directories under the declared schema, minus their deletion
+    vectors — so a rewrite never resurrects rows a merge-on-read
+    delete removed. ``positions`` keeps each row's physical identity
+    (see :func:`_apply_dv`). None when ``m`` holds none of ``dates``."""
+    dates = sorted(d for d in dates if d in m["partitions"]) if m else []
+    if not dates:
+        return None
+    scan = _snapshot_reader(spark, m).parquet(
+        *[os.path.join(root, m["partitions"][d]) for d in dates]
+    )
+    return _apply_dv(
+        spark, root, scan, _dv_rels(m, dates), _eq_delete_condition(m, dates),
+        positions=positions,
+    )
+
+
+def _touched_dates(df: DataFrame) -> list[str]:
+    """The manifest keys ``df``'s rows belong to: its distinct
+    partition values (one metadata-sized collect). A null date maps to
+    Hive's default-partition name — the directory a null
+    observation_time writes to, which the manifest must reference like
+    any other date or those rows would be invisible to every reader."""
+    return sorted(
+        str(r[0]) if r[0] is not None else _NULL_PART
+        for r in df.select(PARTITION_COL).distinct().collect()
+    )
+
+
+def _next_version(current: dict | None) -> int:
+    return (current["version"] if current else 0) + 1
+
+
+def _new_tag(current: dict | None) -> str:
+    """A staging name for the next version, unique PER WRITER ATTEMPT:
+    two racing writers must never share a directory (a stale writer
+    would overwrite the winner's committed files before the fence can
+    refuse it). Orphaned staging dirs are unreferenced; :func:`vacuum`
+    reclaims them."""
+    return f"v{_next_version(current)}-{uuid.uuid4().hex[:8]}"
+
+
+def _publish_fold(root: str, current: dict | None, rewritten: dict, **deltas) -> dict:
+    """The one publish of every commit: fold ``rewritten`` ({date: new
+    relative dir, or None for a date the commit emptied}) into the
+    current partition map and publish the next version through the CAS
+    fence. Untouched dates keep their entries (structural sharing).
+    ``deltas`` are :func:`publish_version`'s per-date stats and vector
+    deltas, so a repointed date carries only what this commit gives
+    it, and a vanished date leaves every map."""
+    partitions = dict(current["partitions"]) if current else {}
+    for d, rel in rewritten.items():
+        if rel is None:
+            partitions.pop(d, None)
+        else:
+            partitions[d] = rel
+    return publish_version(root, _next_version(current), partitions, **deltas)
+
+
+def _rewrite_commit(
+    spark: SparkSession,
+    root: str,
+    current: dict | None,
+    rows: DataFrame,
+    touched,
+    stats_local_max: int | None,
+    key_fingerprints: bool,
+) -> dict:
+    """The rewrite commit every data-writing commit shares: ``rows``
+    (carrying ``obs_date``) become the whole new content of the
+    ``touched`` dates. The schema evolves from ``rows`` BEFORE
+    anything is staged, so an off-chain type refuses the commit
+    (:class:`SchemaEvolutionError`) without writing a file. Then the
+    rows stage into a fresh version dir partitioned by date, the audit
+    lists which touched dates were written, footer stats for exactly
+    those come from one :func:`_collect_stats` call, and
+    :func:`_publish_fold` publishes: written dates repoint with fresh
+    stats, touched dates with no rows vanish."""
+    schema = _evolve_schema(current.get("schema") if current else None, rows)
+    vtag = _new_tag(current)
+    with _stats_bearing_writes(spark):
+        rows.withColumn(_PDATE, F.col(PARTITION_COL).cast("string")).write.mode(
+            "overwrite"
+        ).partitionBy(_PDATE).parquet(os.path.join(root, vtag))
+    rels = {d: f"{vtag}/{_PDATE}={d}" for d in touched}
+    written = {
+        d: os.path.join(root, rel)
+        for d, rel in rels.items()
+        if os.path.isdir(os.path.join(root, rel))
+    }
+    stats, file_stats = _collect_stats(
+        spark, written, local_max=stats_local_max, fingerprints=key_fingerprints
+    )
+    return _publish_fold(
+        root,
+        current,
+        {d: rels[d] if d in written else None for d in rels},
+        schema=schema,
+        stats=stats,
+        file_stats=file_stats,
+    )
 
 
 def upsert_observations_versioned(
@@ -784,135 +926,25 @@ def upsert_observations_versioned(
     footer job fans out — VERDICT r13 #7): default 64 fits local
     disk; drop to ~16 against object storage where a footer read
     costs 20-50 ms. Values are path-independent."""
-    order_cols = order_cols or ["ingestion_time"]
     os.makedirs(root, exist_ok=True)
     current = read_manifest(root, with_stats=False)
-    version = (current["version"] + 1) if current else 1
-    partitions = dict(current["partitions"]) if current else {}
-    # Stats DELTAS: only the dates this commit rewrites — untouched
-    # dates carry inside publish_version (partition grain inline,
-    # file grain by shard ref, no parse).
-    stats: dict = {}
-    fstats: dict = {}
-
-    batch = batch.withColumn(PARTITION_COL, F.to_date("observation_time")).withColumn(
-        "__prio", F.lit(1)
-    )
-    cached = batch.persist()
+    # Cached: the batch feeds both the date discovery and the merge.
+    batch = batch.withColumn(
+        PARTITION_COL, F.to_date("observation_time")
+    ).persist()
     try:
-        # Manifest keys are the PHYSICAL partition values: a null
-        # observation_time writes under Hive's default-partition name,
-        # and the manifest must reference it like any other date or
-        # the committed rows would be invisible to every reader (the
-        # plain upsert keeps such rows readable — same contract here).
-        affected = sorted(
-            str(r[0]) if r[0] is not None else _NULL_PART
-            for r in batch.select(PARTITION_COL).distinct().collect()
+        affected = _touched_dates(batch)
+        merged = merge_last_write_wins(
+            batch,
+            _live_rows(spark, root, current, affected),
+            order_cols or ["ingestion_time"],
         )
-        old_paths = [
-            os.path.join(root, partitions[d]) for d in affected if d in partitions
-        ]
-        merged = batch
-        if old_paths:
-            # Read the survivors under the manifest's DECLARED schema,
-            # exactly like delete/compact/read do: affected partitions
-            # can live in version dirs with DIFFERENT file schemas
-            # (normal after a schema-evolving commit), and a bare
-            # file-anchored read (mergeSchema=false) anchors on one
-            # file's schema — an evolved column present only in some
-            # dirs would silently drop out of the merge and surviving
-            # rows would be rewritten WITHOUT its values (silent data
-            # loss on the next read; ADVICE r12 medium). Pre-schema
-            # manifests fall back to the file-anchored read as before.
-            reader = spark.read
-            if current is not None and current.get("schema") is not None:
-                from pyspark.sql.types import StructType
-
-                reader = reader.schema(StructType.fromJson(current["schema"]))
-            # Deletion vectors on the affected dates apply BEFORE the
-            # merge — otherwise rows a merge-on-read DELETE removed
-            # would resurrect into the rewrite (the rewrite then
-            # clears those dates' DV refs via the publish carry rule:
-            # changed dir + no given entry = dropped).
-            existing = (
-                _apply_dv(
-                    spark, root, reader.parquet(*old_paths),
-                    _dv_rels(current, affected),
-                    _eq_delete_condition(current, affected),
-                )
-                .withColumn("__prio", F.lit(0))
-            )
-            merged = batch.unionByName(existing, allowMissingColumns=True)
-        # Unique staging dir PER WRITER ATTEMPT: two racing writers
-        # must never share a data directory (a stale writer computing
-        # v{N+1} from an old manifest would overwrite the winner's
-        # committed files before the fence below can refuse). Only the
-        # manifest CAS decides who publishes; orphaned staging dirs
-        # are unreferenced and vacuum() reclaims them.
-        vtag = f"v{version}-{uuid.uuid4().hex[:8]}"
-        vdir = os.path.join(root, vtag)
-        w = Window.partitionBy(PARTITION_COL, *KEYS).orderBy(
-            *[F.col(c).desc() for c in ("__prio", *order_cols)]
-        )
-        final = (
-            merged.repartition(F.col(PARTITION_COL))
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn", "__prio")
-            .withColumn(_PDATE, F.col(PARTITION_COL).cast("string"))
-        )
-        with _stats_bearing_writes(spark):
-            final.write.mode("overwrite").partitionBy(_PDATE).parquet(vdir)
-        # Audit before publish: every affected partition the merge
-        # produced must exist on disk (an empty merge result for a
-        # date means the date vanished — point its entry nowhere).
-        written = {
-            d: os.path.join(root, f"{vtag}/{_PDATE}={d}")
-            for d in affected
-            if os.path.isdir(os.path.join(root, f"{vtag}/{_PDATE}={d}"))
-        }
-        # Business-key min/max from the freshly written files' FOOTERS
-        # (no data pages), collected as ONE parallelized job across all
-        # written partitions — at BOTH grains (partition bounds for
-        # date-level pruning, per-file bounds for file selection);
-        # structural sharing keeps the untouched partitions' stats
-        # as-is, exactly like their directory entries.
-        new_stats, new_fstats = _collect_stats(
-            spark, written, local_max=stats_local_max,
-            fingerprints=key_fingerprints,
-        )
-        for d in affected:
-            if d in written:
-                partitions[d] = f"{vtag}/{_PDATE}={d}"
-                pstats = new_stats.get(d)
-                if pstats:
-                    stats[d] = pstats
-                else:
-                    stats.pop(d, None)
-                if new_fstats.get(d):
-                    fstats[d] = new_fstats[d]
-                else:
-                    fstats.pop(d, None)
-            else:
-                partitions.pop(d, None)
-                stats.pop(d, None)
-                fstats.pop(d, None)
-        # Optimistic-concurrency fence (Iceberg's CAS, single-node
-        # form) — see :func:`publish_version`. Single-writer
-        # deployments never contend here.
-        schema = _evolve_schema(
-            current.get("schema") if current else None, final
-        )
-        return publish_version(
-            root,
-            version,
-            partitions,
-            schema=schema,
-            stats=stats,
-            file_stats=fstats,
+        return _rewrite_commit(
+            spark, root, current, merged, affected, stats_local_max,
+            key_fingerprints,
         )
     finally:
-        cached.unpersist()
+        batch.unpersist()
 
 
 def upsert_with_retry(
@@ -1003,12 +1035,16 @@ def _dv_dates_differ(a: dict | None, b: dict | None, d: str) -> bool:
     return False
 
 
+_DV_COLS = ("__dv_file", "__dv_pos")
+
+
 def _apply_dv(
     spark: SparkSession,
     root: str,
     df: DataFrame,
     rels: list[str],
     eq_cond=None,
+    positions: bool = False,
 ) -> DataFrame:
     """Subtract deletion vectors from a parquet scan: tag every row
     with its physical identity (file suffix + row position from the
@@ -1018,27 +1054,29 @@ def _apply_dv(
     scan. No refs = the scan untouched (zero plan change; pinned in
     tests). Must be applied DIRECTLY on the scan DataFrame —
     ``_metadata`` is only resolvable against a file source.
+    ``positions=True`` keeps the identity columns (``__dv_file``,
+    ``__dv_pos``) on the result: what a merge-on-read delete writes as
+    its vector.
 
     ``eq_cond`` is the compiled EQUALITY-delete condition
     (:func:`_eq_delete_condition` — Iceberg's second delete-file
     kind): rows matching it are subtracted with a plain Catalyst
     FILTER — no join at all, and the predicate pushes toward the
     scan like any other."""
+    if rels or positions:
+        df = df.withColumns({
+            "__dv_file": F.substring_index(
+                F.col("_metadata.file_path"), "/", -_DV_SUFFIX_PARTS
+            ),
+            "__dv_pos": F.col("_metadata.row_index"),
+        })
     if rels:
         dv = spark.read.parquet(
             *[os.path.join(root, r) for r in sorted(set(rels))]
         )
-        tagged = df.withColumn(
-            "__dv_file",
-            F.substring_index(
-                F.col("_metadata.file_path"), "/", -_DV_SUFFIX_PARTS
-            ),
-        ).withColumn("__dv_pos", F.col("_metadata.row_index"))
-        df = tagged.join(
-            F.broadcast(dv.select("__dv_file", "__dv_pos")),
-            ["__dv_file", "__dv_pos"],
-            "left_anti",
-        ).drop("__dv_file", "__dv_pos")
+        df = df.join(F.broadcast(dv.select(*_DV_COLS)), list(_DV_COLS), "left_anti")
+        if not positions:
+            df = df.drop(*_DV_COLS)
     if eq_cond is not None:
         # Keep a row unless the condition is TRUE — a NULL evaluation
         # (null series_id) keeps the row, SQL DELETE's three-valued
@@ -1065,13 +1103,11 @@ def resolve_version_at(root: str, as_of) -> int:
         as_of = as_of.timestamp()
     io = io_for(root)
     best = None
-    hpat = re.compile(r"^manifest-v(\d+)\.json$")
-    candidates = ["manifest.json"] + [
-        e for e in io.listdir(root) if hpat.match(e)
-    ]
-    for entry in candidates:
+    for path in [_manifest_path(root)] + [
+        _manifest_path(root, v) for v in _history_versions(root)
+    ]:
         try:
-            m = json.loads(io.read_text(os.path.join(root, entry)))
+            m = json.loads(io.read_text(path))
         except (ValueError, OSError):
             continue
         ts = m.get("committed_at")
@@ -1086,6 +1122,21 @@ def resolve_version_at(root: str, as_of) -> int:
             "timestamps)"
         )
     return best
+
+
+def _may_hold_keys(st: dict, wanted: list[str]) -> bool:
+    """Could an object with these recorded stats (a partition's or a
+    file's) hold a row of any ``wanted`` series? Its ``series_id``
+    [min, max] must overlap one of them, and its key fingerprint
+    (the Parquet/Iceberg bloom analog) must plausibly contain one —
+    the fingerprint prunes inside an overlapping range, where
+    interleaved writers make every file span the keyspace. Absent
+    stats admit: no stats means no pruning, never wrong results."""
+    b = st.get("series_id")
+    if b is not None and not any(b[0] <= s <= b[1] for s in wanted):
+        return False
+    fp = st.get(FP_KEY)
+    return fp is None or any(fp_might_contain(fp, s) for s in wanted)
 
 
 def read_observations_versioned(
@@ -1129,22 +1180,8 @@ def read_observations_versioned(
         if version is not None:
             raise ValueError("pass either version or as_of, not both")
         version = resolve_version_at(root, as_of)
-    m = read_manifest(root, version, with_stats=False)
-    if m is None or not m["partitions"]:
-        raise FileNotFoundError(f"no committed snapshot under {root}")
-    # The snapshot's DECLARED schema (manifest metadata, evolved at
-    # commit), applied to the scan: structural sharing mixes version
-    # directories with different file schemas in one read, and without
-    # this a column added by a later commit silently vanishes whenever
-    # the scan anchors its schema on an older shared partition. Files
-    # that predate an added column yield nulls for it — standard
-    # parquet missing-column semantics. Pre-schema manifests (older
-    # stores) fall back to the file-anchored read.
-    reader = spark.read
-    if m.get("schema") is not None:
-        from pyspark.sql.types import StructType
-
-        reader = reader.schema(StructType.fromJson(m["schema"]))
+    m = _snapshot(root, version, with_stats=False)
+    reader = _snapshot_reader(spark, m)
     items = sorted(m["partitions"].items())
     sk = _time_bound_key(start) if start is not None else None
     ek = _time_bound_key(end) if end is not None else None
@@ -1175,22 +1212,8 @@ def read_observations_versioned(
         row-level filters below keep results exact. One predicate for
         both grains: partitions (manifest ``stats``) and single files
         (manifest ``file_stats``)."""
-        if wanted is not None:
-            b = st.get("series_id")
-            if b is not None and not any(b[0] <= s <= b[1] for s in wanted):
-                return False
-            # Key fingerprint (round 14 — the Parquet/Iceberg bloom
-            # analog): prune when NO wanted id is plausibly PRESENT,
-            # even though the [min, max] range overlaps (interleaved
-            # writers make every file span the keyspace, so range
-            # checks stop discriminating exactly when tables get
-            # big). Exact for small per-file key sets; one-sided
-            # (no false negatives) for the bloom form.
-            fp = st.get(FP_KEY)
-            if fp is not None and not any(
-                fp_might_contain(fp, s) for s in wanted
-            ):
-                return False
+        if wanted is not None and not _may_hold_keys(st, wanted):
+            return False
         b = st.get("observation_time")
         if b is not None:
             if sk is not None and b[1] < sk:
@@ -1229,27 +1252,20 @@ def read_observations_versioned(
             reader.parquet(os.path.join(root, next(iter(m["partitions"].values()))))
             .limit(0)
         )
-    df = reader.parquet(*paths)
-    # Subtract deletion vectors (merge-on-read DELETE, round 14) for
-    # the SURVIVING dates only — a pruned read loads vectors in
-    # proportion to what it scans. Rows a DV names are invisible to
-    # every reader of this snapshot; a pinned pre-delete version has
-    # no ``dv`` entry and reads them as before.
+    # Subtract deletion vectors for the SURVIVING dates only — a pruned
+    # read loads vectors in proportion to what it scans; a pinned
+    # pre-delete version has no refs and reads the rows as before.
     surviving = {d for d, _ in items}
-    df = _apply_dv(
-        spark, root, df,
+    out = _apply_dv(
+        spark, root, reader.parquet(*paths),
         _dv_rels(m, surviving),
         _eq_delete_condition(m, surviving),
     )
-    out = df
     if start is not None:
         out = out.filter(F.col("observation_time") >= start)
     if end is not None:
         out = out.filter(F.col("observation_time") <= end)
-    if series_ids is not None:
-        wanted = (
-            [series_ids] if isinstance(series_ids, str) else list(series_ids)
-        )
+    if wanted is not None:
         out = out.filter(F.col("series_id").isin(wanted))
     return out
 
@@ -1265,24 +1281,24 @@ def compact_versioned(
 ) -> dict:
     """Layout-only commit (Iceberg's ``rewrite_data_files``): rewrite
     every partition whose directory holds >= ``min_files`` part files
-    into a fresh version directory — ``ceil(partition_bytes /
-    target_bytes)`` files per partition (never fewer tasks than that,
-    so a TB-sized date partition compacts across the cluster instead
-    of through one task — the bin-pack half of Iceberg's rewrite),
-    rows optionally sorted by the business keys within each output
-    file for scan locality — and publish the result as a normal
-    snapshot. Content is EXACTLY preserved (pinned by the compaction
-    query's oracle and tests/test_pipeline.py), so:
+    — or carries deletion vectors — into a fresh version directory,
+    ``ceil(partition_bytes / target_bytes)`` files per partition (never
+    fewer tasks than that, so a TB-sized date partition compacts across
+    the cluster instead of through one task — the bin-pack half of
+    Iceberg's rewrite), rows optionally sorted by the business keys
+    within each output file for scan locality. Content is EXACTLY
+    preserved (pinned by the compaction query's oracle and
+    tests/test_pipeline.py):
 
     - readers pinned on pre-compaction versions keep working until
-      retention expires them (structural sharing: unrewritten
-      partitions' entries still point at their old dirs);
-    - stats are recomputed from the new files' footers (same values —
-      min/max are order-independent — but the new footers are the
-      authoritative source, and partitions that predate stats gain
-      them here);
-    - the schema key carries forward (``publish_version(schema=None)``
-      semantics);
+      retention expires them (unrewritten partitions' entries still
+      point at their old dirs);
+    - stats are recomputed from the new files' footers (same values,
+      but partitions that predate stats gain them here);
+    - compaction is the MATERIALIZATION point for merge-on-read
+      deletes: the rewrite applies the vectors and the publish drops
+      their refs, returning reads to a plain scan; a date whose every
+      row was deleted leaves the manifest;
     - the publish goes through the same CAS fence as any writer — a
       compaction racing an upsert loses cleanly and can simply re-run.
 
@@ -1293,121 +1309,63 @@ def compact_versioned(
     rewritten partitions only, never the table. Returns the committed
     manifest (the CURRENT one when nothing is fragmented — a no-op
     publishes nothing)."""
-    current = read_manifest(root)
-    if current is None or not current["partitions"]:
-        raise FileNotFoundError(f"no committed snapshot under {root}")
-    fragmented = {}
+    current = _snapshot(root)
+    dv_dates = {*(current.get("dv") or {}), *(current.get("dv_eq") or {})}
     n_out = {}
-    dv_map = {
-        **(current.get("dv") or {}),
-        **(current.get("dv_eq") or {}),
-    }
     for d, rel in current["partitions"].items():
         pdir = os.path.join(root, rel)
-        try:
-            files = [
-                f for f in os.listdir(pdir) if f.endswith(".parquet")
-            ]
-        except OSError:
-            files = []
-        # A partition carrying deletion vectors compacts regardless of
-        # file count — compaction is the MATERIALIZATION point for
-        # merge-on-read deletes (round 14): the rewrite applies the
-        # vectors and the publish drops their refs, returning reads
-        # to a plain scan.
-        if files and (len(files) >= min_files or d in dv_map):
-            fragmented[d] = rel
-            size = sum(
-                os.path.getsize(os.path.join(pdir, f)) for f in files
-            )
+        files = _data_files(pdir)
+        if files and (len(files) >= min_files or d in dv_dates):
+            size = sum(os.path.getsize(os.path.join(pdir, f)) for f in files)
             n_out[d] = max(1, -(-size // target_bytes))
-    if not fragmented:
+    if not n_out:
         return current
-    version = current["version"] + 1
-    vtag = f"v{version}-{uuid.uuid4().hex[:8]}"
-    vdir = os.path.join(root, vtag)
-    reader = spark.read
-    if current.get("schema") is not None:
-        from pyspark.sql.types import StructType
-
-        reader = reader.schema(StructType.fromJson(current["schema"]))
-    df = _apply_dv(
-        spark,
-        root,
-        reader.parquet(
-            *[os.path.join(root, rel) for rel in fragmented.values()]
-        ),
-        _dv_rels(current, sorted(fragmented)),
-        _eq_delete_condition(current, sorted(fragmented)),
-    )
-    # PARTITION_COL rides in the data files (the physical dirs key on
-    # the shadow column), so the partition identity reconstructs from
-    # content — null dates land back under the Hive default partition.
-    out = df.withColumn(_PDATE, F.col(PARTITION_COL).cast("string"))
     # RANGE-cluster the rewrite on (date, business keys) with an
-    # EXPLICIT partition count (the global bin total — the same number
-    # Iceberg's sort-rewrite would plan as file-group tasks; an
-    # unsized repartition lets AQE coalesce the exchange back into one
-    # task, silently undoing the fan-out — the round-12 lesson). Range
-    # instead of the earlier hash-bucket fan-out (round 13): each date
-    # still spreads over ~ceil(bytes/target) tasks (the sampler
-    # allocates bins by row share and dates sort contiguously), but
-    # now every output FILE covers a narrow contiguous (series_id,
-    # observation_time) slice — which is exactly what makes the
-    # manifest's per-file stats selective: a one-series read after
-    # compaction touches ~1 file per partition, not all of them
-    # (Iceberg's sort-order rewrite, pinned by inputFiles in
-    # tests/test_pipeline.py). Hash buckets gave the same parallelism
-    # but scattered every series across every file, so file bounds
-    # always spanned the full range and file pruning never bit.
-    out = out.repartitionByRange(
+    # EXPLICIT partition count (the global bin total — an unsized
+    # repartition lets AQE coalesce the exchange back into one task,
+    # silently undoing the fan-out). Each date spreads over ~ceil(bytes/
+    # target) tasks, and every output FILE covers a narrow contiguous
+    # (series_id, observation_time) slice — which is what makes the
+    # per-file stats selective: a one-series read after compaction
+    # touches ~1 file per partition (pinned by inputFiles in
+    # tests/test_pipeline.py). Hash buckets would give the same
+    # parallelism but scatter every series across every file.
+    rows = _live_rows(spark, root, current, n_out).repartitionByRange(
         int(sum(n_out.values())),
         F.col(PARTITION_COL),
         *[F.col(k) for k in KEYS],
     )
     if sort_within:
-        out = out.sortWithinPartitions(PARTITION_COL, *KEYS)
-    with _stats_bearing_writes(spark):
-        out.write.mode("overwrite").partitionBy(_PDATE).parquet(vdir)
-    partitions = dict(current["partitions"])
-    stats: dict = {}
-    fstats: dict = {}
-    written = {
-        d: os.path.join(root, f"{vtag}/{_PDATE}={d}")
-        for d in fragmented
-        if os.path.isdir(os.path.join(root, f"{vtag}/{_PDATE}={d}"))
-    }
-    new_stats, new_fstats = _collect_stats(
-        spark, written, local_max=stats_local_max,
-        fingerprints=key_fingerprints,
+        rows = rows.sortWithinPartitions(PARTITION_COL, *KEYS)
+    return _rewrite_commit(
+        spark, root, current, rows, n_out, stats_local_max, key_fingerprints
     )
-    for d in written:
-        partitions[d] = f"{vtag}/{_PDATE}={d}"
-        pstats = new_stats.get(d)
-        if pstats:
-            stats[d] = pstats
-        else:
-            stats.pop(d, None)
-        if new_fstats.get(d):
-            fstats[d] = new_fstats[d]
-        else:
-            fstats.pop(d, None)
-    # A fragmented partition that produced no output: for a
-    # DV-bearing date this is a LEGITIMATE outcome — every row was
-    # merge-on-read-deleted, the materializing rewrite emitted
-    # nothing, and the date vanishes from the manifest exactly as a
-    # full copy-on-write delete would end it (its old files survive
-    # for time travel until retention expires them). Without vectors
-    # it cannot happen for non-empty inputs, so the entry stays on
-    # the OLD dir — nothing vanishes (belt only).
-    for d in fragmented:
-        if d not in written and d in dv_map:
-            partitions.pop(d, None)
-            stats.pop(d, None)
-            fstats.pop(d, None)
-    return publish_version(
-        root, version, partitions, schema=None, stats=stats,
-        file_stats=fstats,
+
+
+def _rewrite_matching(
+    spark: SparkSession,
+    root: str,
+    predicate,
+    keep,
+    stats_local_max: int | None,
+    key_fingerprints: bool,
+) -> dict:
+    """Copy-on-write DELETE/UPDATE: find the dates holding a row where
+    ``predicate`` is TRUE (a NULL evaluation counts as no match — SQL's
+    three-valued logic) with one scan that prunes like any read, then
+    rewrite exactly those dates with ``keep(live_rows, pred)``. A
+    no-match predicate publishes nothing and returns the current
+    manifest."""
+    current = _snapshot(root)
+    pred = F.coalesce(predicate, F.lit(False))
+    hit = _touched_dates(read_observations_versioned(spark, root).filter(pred))
+    if not hit:
+        return current
+    rows = keep(_live_rows(spark, root, current, hit), pred).repartition(
+        F.col(PARTITION_COL)
+    )
+    return _rewrite_commit(
+        spark, root, current, rows, hit, stats_local_max, key_fingerprints
     )
 
 
@@ -1427,26 +1385,20 @@ def delete_versioned(
     retention expires them), and the publish goes through the same CAS
     fence as any writer.
 
-    ``mode="merge-on-read"`` (round 14 — Iceberg v2's positional
-    deletes) commits the SAME logical delete without rewriting any
-    data file: see :func:`_delete_versioned_mor`. Copy-on-write pays
-    a partition rewrite to keep reads plain; merge-on-read pays a
-    deleted-rows-sized vector write and a broadcast anti-join on
-    reads until compaction materializes it — at 100 TB, deleting a
-    handful of rows (GDPR erasure, a bad sensor hour) must not cost
-    a rewrite of every partition it touches.
+    ``mode="merge-on-read"`` (Iceberg v2's positional deletes) commits
+    the SAME logical delete without rewriting any data file: see
+    :func:`_delete_versioned_mor`. Copy-on-write pays a partition
+    rewrite to keep reads plain; merge-on-read pays a
+    deleted-rows-sized vector write and a broadcast anti-join on reads
+    until compaction materializes it — at 100 TB, deleting a handful
+    of rows (GDPR erasure, a bad sensor hour) must not cost a rewrite
+    of every partition it touches.
 
     Null-safe three-valued logic the way SQL DELETE means it: only
     rows where ``predicate`` evaluates TRUE are removed — a NULL
-    predicate keeps the row (a bare ``filter(~pred)`` would silently
-    delete every null-eval row).
-
-    Cost: one scan to find the affected partitions (manifest-pruned
-    readers can't know where arbitrary-predicate matches live — the
-    same reason Iceberg's copy-on-write DELETE plans a scan; a
-    predicate on a stats column prunes that scan like any read) plus a
-    rewrite of exactly those partitions. The matched-dates collect is
-    metadata-sized (distinct partition values). A no-match delete
+    predicate keeps the row. Cost: one scan to find the affected
+    partitions (a predicate on a stats column prunes it like any read)
+    plus a rewrite of exactly those partitions. A no-match delete
     publishes nothing and returns the current manifest."""
     if mode == "merge-on-read":
         return _delete_versioned_mor(spark, root, predicate)
@@ -1455,78 +1407,9 @@ def delete_versioned(
             f"unknown delete mode {mode!r}: expected 'copy-on-write' "
             "or 'merge-on-read'"
         )
-    current = read_manifest(root)
-    if current is None or not current["partitions"]:
-        raise FileNotFoundError(f"no committed snapshot under {root}")
-    pred = F.coalesce(predicate, F.lit(False))
-    full = read_observations_versioned(spark, root)
-    hit_dates = {
-        str(r[0]) if r[0] is not None else _NULL_PART
-        for r in full.filter(pred).select(PARTITION_COL).distinct().collect()
-    }
-    if not hit_dates:
-        return current
-    version = current["version"] + 1
-    vtag = f"v{version}-{uuid.uuid4().hex[:8]}"
-    vdir = os.path.join(root, vtag)
-    reader = spark.read
-    if current.get("schema") is not None:
-        from pyspark.sql.types import StructType
-
-        reader = reader.schema(StructType.fromJson(current["schema"]))
-    paths = [
-        os.path.join(root, current["partitions"][d])
-        for d in sorted(hit_dates)
-        if d in current["partitions"]
-    ]
-    survivors = (
-        # Prior deletion vectors on the rewritten dates subtract
-        # BEFORE the rewrite (their refs drop with the changed dirs
-        # at publish) — skipping this would resurrect MOR-deleted
-        # rows into the new files.
-        _apply_dv(
-            spark, root, reader.parquet(*paths),
-            _dv_rels(current, sorted(hit_dates)),
-            _eq_delete_condition(current, sorted(hit_dates)),
-        )
-        .filter(~pred)
-        .withColumn(_PDATE, F.col(PARTITION_COL).cast("string"))
-        .repartition(F.col(PARTITION_COL))
-    )
-    with _stats_bearing_writes(spark):
-        survivors.write.mode("overwrite").partitionBy(_PDATE).parquet(vdir)
-    partitions = dict(current["partitions"])
-    stats: dict = {}
-    fstats: dict = {}
-    written = {
-        d: os.path.join(root, f"{vtag}/{_PDATE}={d}")
-        for d in hit_dates
-        if os.path.isdir(os.path.join(root, f"{vtag}/{_PDATE}={d}"))
-    }
-    new_stats, new_fstats = _collect_stats(
-        spark, written, local_max=stats_local_max,
-        fingerprints=key_fingerprints,
-    )
-    for d in sorted(hit_dates):
-        if d in written:
-            partitions[d] = f"{vtag}/{_PDATE}={d}"
-            pstats = new_stats.get(d)
-            if pstats:
-                stats[d] = pstats
-            else:
-                stats.pop(d, None)
-            if new_fstats.get(d):
-                fstats[d] = new_fstats[d]
-            else:
-                fstats.pop(d, None)
-        else:
-            # Every row of the partition matched: the date is gone.
-            partitions.pop(d, None)
-            stats.pop(d, None)
-            fstats.pop(d, None)
-    return publish_version(
-        root, version, partitions, schema=None, stats=stats,
-        file_stats=fstats,
+    return _rewrite_matching(
+        spark, root, predicate, lambda live, pred: live.filter(~pred),
+        stats_local_max, key_fingerprints,
     )
 
 
@@ -1549,15 +1432,13 @@ def update_versioned(
     are REFUSED as targets: updating a key is a delete+insert that
     can move rows across partitions — express it as exactly that
     (the two commits are each atomic and the intent is explicit)
-    rather than as a silent partition migration.
+    rather than as a silent partition migration. An assignment whose
+    type is off the column's widening chain (a string into a double)
+    raises :class:`SchemaEvolutionError` and publishes nothing.
 
-    Same three-valued logic as DELETE: only predicate-TRUE rows
-    update. Prior deletion vectors on the rewritten dates apply
-    before the rewrite and their refs drop with the changed dirs —
-    an UPDATE is a materialization point like any rewrite. A
-    no-match update publishes nothing. Cost mirrors copy-on-write
-    DELETE: one scan to find affected partitions plus a rewrite of
-    exactly those."""
+    Same three-valued logic and cost as copy-on-write DELETE: only
+    predicate-TRUE rows update, and a no-match update publishes
+    nothing."""
     forbidden = {*KEYS, PARTITION_COL} & set(assignments)
     if forbidden:
         raise ValueError(
@@ -1566,70 +1447,16 @@ def update_versioned(
         )
     if not assignments:
         raise ValueError("assignments must name at least one column")
-    current = read_manifest(root)
-    if current is None or not current["partitions"]:
-        raise FileNotFoundError(f"no committed snapshot under {root}")
-    pred = F.coalesce(predicate, F.lit(False))
-    full = read_observations_versioned(spark, root)
-    hit_dates = {
-        str(r[0]) if r[0] is not None else _NULL_PART
-        for r in full.filter(pred).select(PARTITION_COL).distinct().collect()
-    }
-    if not hit_dates:
-        return current
-    version = current["version"] + 1
-    vtag = f"v{version}-{uuid.uuid4().hex[:8]}"
-    vdir = os.path.join(root, vtag)
-    reader = spark.read
-    if current.get("schema") is not None:
-        from pyspark.sql.types import StructType
-
-        reader = reader.schema(StructType.fromJson(current["schema"]))
-    paths = [
-        os.path.join(root, current["partitions"][d])
-        for d in sorted(hit_dates)
-        if d in current["partitions"]
-    ]
     sets = {
         c: (v if isinstance(v, Column) else F.lit(v))
         for c, v in assignments.items()
     }
-    base = _apply_dv(
-        spark, root, reader.parquet(*paths),
-        _dv_rels(current, sorted(hit_dates)),
-        _eq_delete_condition(current, sorted(hit_dates)),
-    )
-    updated = base.withColumns(
-        {c: F.when(pred, expr).otherwise(F.col(c)) for c, expr in sets.items()}
-    )
-    out = (
-        updated.withColumn(_PDATE, F.col(PARTITION_COL).cast("string"))
-        .repartition(F.col(PARTITION_COL))
-    )
-    with _stats_bearing_writes(spark):
-        out.write.mode("overwrite").partitionBy(_PDATE).parquet(vdir)
-    partitions = dict(current["partitions"])
-    stats: dict = {}
-    fstats: dict = {}
-    written = {
-        d: os.path.join(root, f"{vtag}/{_PDATE}={d}")
-        for d in hit_dates
-        if os.path.isdir(os.path.join(root, f"{vtag}/{_PDATE}={d}"))
-    }
-    new_stats, new_fstats = _collect_stats(
-        spark, written, local_max=stats_local_max,
-        fingerprints=key_fingerprints,
-    )
-    for d in sorted(hit_dates):
-        if d in written:
-            partitions[d] = f"{vtag}/{_PDATE}={d}"
-            if new_stats.get(d):
-                stats[d] = new_stats[d]
-            if new_fstats.get(d):
-                fstats[d] = new_fstats[d]
-    return publish_version(
-        root, version, partitions, schema=None, stats=stats,
-        file_stats=fstats,
+    return _rewrite_matching(
+        spark, root, predicate,
+        lambda live, pred: live.withColumns({
+            c: F.when(pred, expr).otherwise(F.col(c)) for c, expr in sets.items()
+        }),
+        stats_local_max, key_fingerprints,
     )
 
 
@@ -1643,57 +1470,25 @@ def _delete_versioned_mor(spark: SparkSession, root: str, predicate) -> dict:
     "vector" under ``<root>/dv/``, keyed by the data file's
     store-relative suffix so the table survives relocation. The
     commit publishes the UNCHANGED partition map plus a ``dv`` ref
-    map; every reader then subtracts the vectors with a broadcast
+    delta; every reader then subtracts the vectors with a broadcast
     anti-join (:func:`_apply_dv`), pinned snapshots before the
     delete read the rows as before, and the next rewrite of a date
-    (upsert / compaction / copy-on-write delete) applies its vectors
-    and drops the refs — compaction is the materialization point.
+    applies its vectors and drops the refs.
 
     Same three-valued logic as copy-on-write: only predicate-TRUE
     rows are deleted. Prior vectors apply before matching, so an
     already-deleted row can never be named twice. A no-match delete
     publishes nothing. Cost at 100 TB: one pruned scan + a vector
-    write proportional to the DELETED rows — zero data-file IO —
-    versus copy-on-write's full rewrite of every touched partition."""
+    write proportional to the DELETED rows — zero data-file IO."""
     import shutil
 
-    current = read_manifest(root, with_stats=False)
-    if current is None or not current["partitions"]:
-        raise FileNotFoundError(f"no committed snapshot under {root}")
+    current = _snapshot(root, with_stats=False)
     pred = F.coalesce(predicate, F.lit(False))
-    version = current["version"] + 1
-    reader = spark.read
-    if current.get("schema") is not None:
-        from pyspark.sql.types import StructType
-
-        reader = reader.schema(StructType.fromJson(current["schema"]))
-    paths = [
-        os.path.join(root, rel)
-        for _, rel in sorted(current["partitions"].items())
-    ]
-    scan = reader.parquet(*paths)
-    tagged = scan.withColumn(
-        "__dv_file",
-        F.substring_index(F.col("_metadata.file_path"), "/", -_DV_SUFFIX_PARTS),
-    ).withColumn("__dv_pos", F.col("_metadata.row_index"))
-    prior = _dv_rels(current)
-    if prior:
-        dv_prior = spark.read.parquet(
-            *[os.path.join(root, r) for r in sorted(set(prior))]
-        )
-        tagged = tagged.join(
-            F.broadcast(dv_prior.select("__dv_file", "__dv_pos")),
-            ["__dv_file", "__dv_pos"],
-            "left_anti",
-        )
-    prior_eq = _eq_delete_condition(current)
-    if prior_eq is not None:
-        tagged = tagged.filter(~F.coalesce(prior_eq, F.lit(False)))
     hits = (
-        tagged.filter(pred)
+        _live_rows(spark, root, current, current["partitions"], positions=True)
+        .filter(pred)
         .select(
-            "__dv_file",
-            "__dv_pos",
+            *_DV_COLS,
             F.coalesce(
                 F.col(PARTITION_COL).cast("string"), F.lit(_NULL_PART)
             ).alias(_PDATE),
@@ -1703,7 +1498,7 @@ def _delete_versioned_mor(spark: SparkSession, root: str, predicate) -> dict:
         # thousand KB-sized files under dv/.
         .repartition(F.col(_PDATE))
     )
-    vtag = f"v{version}-{uuid.uuid4().hex[:8]}"
+    vtag = _new_tag(current)
     dvdir = os.path.join(root, _DV_DIR, vtag)
     hits.write.mode("overwrite").partitionBy(_PDATE).parquet(dvdir)
     try:
@@ -1718,10 +1513,9 @@ def _delete_versioned_mor(spark: SparkSession, root: str, predicate) -> dict:
         shutil.rmtree(dvdir, ignore_errors=True)
         return current
     prev_dv = current.get("dv") or {}
-    dv_delta = {d: prev_dv.get(d, []) + [rel] for d, rel in written.items()}
-    return publish_version(
-        root, version, dict(current["partitions"]), schema=None,
-        stats=None, file_stats=None, dv=dv_delta,
+    return _publish_fold(
+        root, current, {},
+        dv={d: prev_dv.get(d, []) + [rel] for d, rel in written.items()},
     )
 
 
@@ -1735,12 +1529,9 @@ def delete_versioned_by_key(
     row positions, a key delete already knows its predicate is
     ``series_id IN (...)``, so the commit only decides WHICH
     partitions need a reference — and the manifest's own inline
-    per-partition stats answer that without touching data: a
-    partition whose recorded [min, max] range excludes every key, or
-    whose distinct-key fingerprint says none is present, is not
-    referenced at all. The round's two features compose: fingerprints
-    bound the delete's blast radius exactly as they bound a point
-    lookup's.
+    per-partition stats answer that without touching data
+    (:func:`_may_hold_keys`, the same predicate a point read prunes
+    with).
 
     The key list itself lives IN the manifest (``dv_eq_sets``, one
     entry per delete commit, referenced per date by ``dv_eq`` under
@@ -1752,11 +1543,9 @@ def delete_versioned_by_key(
     series is in the set) — date-scoped, so RE-INSERTING a deleted
     series works: the upsert's rewrite drops the rewritten date's
     refs and the new rows read back, while untouched dates stay
-    deleted. Rewrites materialize (upsert / compaction / copy-on-
-    write delete apply the condition during their reads), pinned
-    pre-delete versions read unchanged, and a delete whose keys no
-    partition can hold publishes nothing. At 100 TB this is erasure
-    by key as a constant-time commit."""
+    deleted. Rewrites materialize the delete, pinned pre-delete
+    versions read unchanged, and a delete whose keys no partition can
+    hold publishes nothing."""
     wanted = [series_ids] if isinstance(series_ids, str) else list(series_ids)
     if not wanted or not all(isinstance(s, str) for s in wanted):
         raise ValueError("series_ids must be one or more strings")
@@ -1767,36 +1556,20 @@ def delete_versioned_by_key(
             "delete_versioned(mode='merge-on-read') for broad "
             "predicate deletes"
         )
-    current = read_manifest(root, with_stats=False)
-    if current is None or not current["partitions"]:
-        raise FileNotFoundError(f"no committed snapshot under {root}")
-
-    def _could_hold(st: dict) -> bool:
-        b = st.get("series_id")
-        if b is not None and not any(b[0] <= s <= b[1] for s in wanted):
-            return False
-        fp = st.get(FP_KEY)
-        if fp is not None and not any(
-            fp_might_contain(fp, s) for s in wanted
-        ):
-            return False
-        return True
-
+    current = _snapshot(root, with_stats=False)
     all_stats = current.get("stats", {})
     affected = sorted(
         d
         for d in current["partitions"]
-        if _could_hold(all_stats.get(d, {}))
+        if _may_hold_keys(all_stats.get(d, {}), wanted)
     )
     if not affected:
         return current
-    version = current["version"] + 1
-    tag = f"eq-v{version}-{uuid.uuid4().hex[:8]}"
+    tag = "eq-" + _new_tag(current)
     prev_eq = current.get("dv_eq") or {}
-    eq_delta = {d: prev_eq.get(d, []) + [tag] for d in affected}
-    return publish_version(
-        root, version, dict(current["partitions"]), schema=None,
-        stats=None, file_stats=None, dv=None, dv_eq=eq_delta,
+    return _publish_fold(
+        root, current, {},
+        dv_eq={d: prev_eq.get(d, []) + [tag] for d in affected},
         dv_eq_sets={tag: sorted(set(wanted))},
     )
 
@@ -1833,24 +1606,13 @@ def _churned_sides(
     )
 
     def _side(m: dict) -> DataFrame:
-        reader = spark.read
-        if m.get("schema") is not None:
-            from pyspark.sql.types import StructType
-
-            reader = reader.schema(StructType.fromJson(m["schema"]))
-        parts = m["partitions"]
-        paths = [os.path.join(root, parts[d]) for d in churned if d in parts]
-        if paths:
-            # Each side subtracts its OWN snapshot's vectors, so a
-            # MOR-deleted row shows on the old side only — a removal.
-            side_dates = [d for d in churned if d in parts]
-            return _apply_dv(
-                spark, root, reader.parquet(*paths),
-                _dv_rels(m, side_dates),
-                _eq_delete_condition(m, side_dates),
-            )
+        # Each side subtracts its OWN snapshot's vectors, so a
+        # MOR-deleted row shows on the old side only — a removal.
+        rows = _live_rows(spark, root, m, churned)
+        if rows is not None:
+            return rows
         anchor = next(iter((pn or po).values()))
-        return reader.parquet(os.path.join(root, anchor)).limit(0)
+        return _snapshot_reader(spark, m).parquet(os.path.join(root, anchor)).limit(0)
 
     return _side(old_m), _side(new_m)
 
@@ -1932,18 +1694,12 @@ def table_status(root: str) -> dict:
     m = read_manifest(root, with_stats=False)
     if m is None:
         raise FileNotFoundError(f"no committed snapshot under {root}")
-    io = io_for(root)
     n_files = 0
     total_bytes = 0
     fragmented = []
     for d, rel in sorted(m["partitions"].items()):
         pdir = os.path.join(root, rel)
-        try:
-            files = [
-                f for f in os.listdir(pdir) if f.endswith(".parquet")
-            ]
-        except OSError:
-            files = []
+        files = _data_files(pdir)
         n_files += len(files)
         total_bytes += sum(
             os.path.getsize(os.path.join(pdir, f)) for f in files
@@ -1978,12 +1734,6 @@ def table_status(root: str) -> dict:
     with_fp = sum(
         1 for d in m["partitions"] if stats.get(d, {}).get(FP_KEY) is not None
     )
-    hpat = re.compile(r"^manifest-v(\d+)\.json$")
-    history = sorted(
-        int(hm.group(1))
-        for entry in io.listdir(root)
-        if (hm := hpat.match(entry))
-    )
     return {
         "version": m["version"],
         "n_partitions": len(m["partitions"]),
@@ -2003,7 +1753,7 @@ def table_status(root: str) -> dict:
         "fingerprint_coverage": (
             with_fp / len(m["partitions"]) if m["partitions"] else 0.0
         ),
-        "history_versions": history,
+        "history_versions": _history_versions(root),
     }
 
 
@@ -2057,12 +1807,7 @@ def vacuum(
         m = read_manifest(root, with_stats=False)
         if m is None:
             return []
-        hpat = re.compile(r"^manifest-v(\d+)\.json$")
-        hist_versions = sorted(
-            int(hm.group(1))
-            for entry in io.listdir(root)
-            if (hm := hpat.match(entry)) and int(hm.group(1)) != m["version"]
-        )
+        hist_versions = [v for v in _history_versions(root) if v != m["version"]]
         # A history manifest numbered ABOVE the live version is a
         # crashed commit's orphan: _commit_manifest writes the history
         # snapshot BEFORE the live manifest, so a crash between the two
@@ -2084,12 +1829,7 @@ def vacuum(
         retained = hist_versions[
             max(0, len(hist_versions) - (retain_last_n - 1)):
         ] if retain_last_n > 1 else []
-        live = {p.split("/", 1)[0] for p in m["partitions"].values()}
-        live_shards = set(m.get("fs_shards", {}).values())
-        # Deletion-vector tag dirs (dv/<vtag>/...) stay live while ANY
-        # retained snapshot references one of their per-date vectors —
-        # the same structural-sharing rule as data dirs and shards.
-        live_dv = {rel.split("/")[1] for rel in _dv_rels(m)}
+        snapshots = [m]
         for v in retained:
             try:
                 hist = read_manifest(root, v, with_stats=False)
@@ -2102,26 +1842,7 @@ def vacuum(
                 io.remove(_manifest_path(root, v))
                 continue
             if hist is not None:
-                live |= {p.split("/", 1)[0] for p in hist["partitions"].values()}
-                live_shards |= set(hist.get("fs_shards", {}).values())
-                live_dv |= {rel.split("/")[1] for rel in _dv_rels(hist)}
-        now = time.time()
-        gone: list[str] = []
-        vpat = re.compile(r"^v(\d+)(-[0-9a-f]{8})?$")
-        for entry in sorted(io.listdir(root)):
-            full = os.path.join(root, entry)
-            if not (vpat.match(entry) and io.isdir(full)):
-                continue
-            if entry in live:
-                continue
-            try:
-                age = now - io.getmtime(full)
-            except OSError:
-                continue
-            if age < min_age_seconds:
-                continue  # possibly an in-flight writer's staging dir
-            io.rmtree(full)
-            gone.append(entry)
+                snapshots.append(hist)
         # Expire history manifests outside the retention window —
         # intact or not (unreadable ones are exactly the pre-atomic-
         # write crash artifacts ADVICE r10 flagged; intact ones are
@@ -2131,45 +1852,38 @@ def vacuum(
         for v in hist_versions:
             if v not in retained:
                 io.remove(_manifest_path(root, v))
-        # Reclaim file-stats shard files no retained snapshot
-        # references (they structurally share across versions exactly
-        # like data dirs, so a shard stays live as long as ANY
-        # retained manifest points at it). The same min-age guard
-        # protects an in-flight writer's freshly staged shards — they
-        # are written before its manifest CAS publishes the refs.
-        shard_dir = os.path.join(root, _SHARD_DIR)
-        if io.isdir(shard_dir):
-            for entry in sorted(io.listdir(shard_dir)):
-                rel = os.path.join(_SHARD_DIR, entry)
-                if rel in live_shards:
-                    continue
-                full = os.path.join(root, rel)
-                try:
-                    age = now - io.getmtime(full)
-                except OSError:
-                    continue
-                if age < min_age_seconds:
-                    continue
-                io.remove(full)
-                gone.append(rel)
-        # Reclaim deletion-vector tag dirs no retained snapshot
-        # references; the min-age guard protects an in-flight
-        # merge-on-read delete that has staged its vectors but not
-        # yet published the refs.
-        dv_root = os.path.join(root, _DV_DIR)
-        if io.isdir(dv_root):
-            for entry in sorted(io.listdir(dv_root)):
-                if entry in live_dv:
-                    continue
-                full = os.path.join(dv_root, entry)
-                if not io.isdir(full):
-                    continue
-                try:
-                    age = now - io.getmtime(full)
-                except OSError:
-                    continue
-                if age < min_age_seconds:
-                    continue
+        # Version dirs, file-stats shards and deletion-vector tag dirs
+        # all share structurally across versions: each stays live while
+        # ANY retained snapshot references it.
+        live: set[str] = set()
+        for snap in snapshots:
+            live |= {rel.split("/", 1)[0] for rel in snap["partitions"].values()}
+            live |= set(snap.get("fs_shards", {}).values())
+            live |= {rel.rsplit("/", 1)[0] for rel in _dv_rels(snap)}
+        candidates = [e for e in sorted(io.listdir(root)) if _VERSION_DIR.match(e)]
+        for sub in (_SHARD_DIR, _DV_DIR):
+            if io.isdir(os.path.join(root, sub)):
+                candidates += [
+                    f"{sub}/{e}" for e in sorted(io.listdir(os.path.join(root, sub)))
+                ]
+        now = time.time()
+        gone: list[str] = []
+        for rel in candidates:
+            if rel in live:
+                continue
+            full = os.path.join(root, rel)
+            try:
+                age = now - io.getmtime(full)
+            except OSError:
+                continue
+            # A young unreferenced entry may be an in-flight writer's
+            # staging: data, shards and vectors are all written before
+            # its manifest CAS publishes the refs.
+            if age < min_age_seconds:
+                continue
+            if io.isdir(full):
                 io.rmtree(full)
-                gone.append(f"{_DV_DIR}/{entry}")
+            else:
+                io.remove(full)
+            gone.append(rel)
     return gone

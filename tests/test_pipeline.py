@@ -1510,8 +1510,8 @@ def test_versioned_stats_parallel_job_matches_serial_reader(spark, scratch):
     import os
 
     from gas_data_pipeline_spark.pipeline.versioned import (
+        _collect_stats,
         _partition_stats,
-        _partition_stats_many,
         read_manifest,
         upsert_observations_versioned,
     )
@@ -1549,9 +1549,9 @@ def test_versioned_stats_parallel_job_matches_serial_reader(spark, scratch):
     old_max = _v._STATS_LOCAL_MAX
     try:
         _v._STATS_LOCAL_MAX = 10**9
-        assert _partition_stats_many(spark, pdirs) == serial
+        assert _collect_stats(spark, pdirs)[0] == serial
         _v._STATS_LOCAL_MAX = 0
-        assert _partition_stats_many(spark, pdirs) == serial
+        assert _collect_stats(spark, pdirs)[0] == serial
     finally:
         _v._STATS_LOCAL_MAX = old_max
     assert m["stats"] == {d: s for d, s in serial.items() if s}
@@ -1566,10 +1566,10 @@ def test_versioned_stats_parallel_job_matches_serial_reader(spark, scratch):
     empty_dir = os.path.join(scratch, "empty_part")
     os.makedirs(empty_dir)
     assert _partition_stats(bad_dir) == {}
-    got = _partition_stats_many(
+    got = _collect_stats(
         spark,
         {"bad": bad_dir, "empty": empty_dir, "gone": os.path.join(scratch, "nope")},
-    )
+    )[0]
     assert got.get("bad") == {} and "empty" not in got and "gone" not in got
 
 
@@ -2640,16 +2640,15 @@ def test_versioned_compaction_rewrites_only_fragmented(spark, scratch):
     assert compact_versioned(spark, scratch, min_files=2)["version"] == 3
 
 
-def test_versioned_maintenance_ops_are_cas_fenced(spark, scratch):
-    """delete_versioned and compact_versioned publish through the same
-    CAS fence as any writer: a commit interleaving between their
-    manifest read and their publish gets them REFUSED
-    (ConcurrentCommitError), the interloper's snapshot stays intact,
-    and a plain re-run succeeds against the new snapshot. The
-    interference is injected at the _collect_stats seam — it
-    runs after the maintenance write, before the publish, exactly the
-    race window."""
-    import pytest
+@pytest.mark.parametrize("writer", ["upsert", "compaction", "delete", "update"])
+def test_versioned_maintenance_ops_are_cas_fenced(spark, scratch, writer):
+    """Every rewrite writer publishes through the same CAS fence: a
+    commit interleaving between its manifest read and its publish gets
+    it REFUSED (ConcurrentCommitError), the interloper's snapshot
+    stays intact, and a plain re-run succeeds against the new
+    snapshot. The interference is injected at the _collect_stats seam
+    — it runs after the rewrite's write, before the publish, exactly
+    the race window."""
     from pyspark.sql import functions as F
 
     from gas_data_pipeline_spark.pipeline import versioned
@@ -2670,47 +2669,198 @@ def test_versioned_maintenance_ops_are_cas_fenced(spark, scratch):
     finally:
         spark.conf.set(key, old)
 
+    commit, n_rows, landed, n_landed = {
+        "upsert": (
+            lambda: versioned.upsert_observations_versioned(
+                spark,
+                _vs_batch(spark, [("A_0", "2024-01-01 00:00:00", 99.0,
+                                   "2024-01-02 01:00:00", 99)]),
+                scratch, order_cols=["ingestion_time", "event_id"],
+            ),
+            30, F.col("value") == 99.0, 1,
+        ),
+        "compaction": (
+            lambda: versioned.compact_versioned(spark, scratch, min_files=2),
+            30, F.lit(True), 30,
+        ),
+        "delete": (
+            lambda: versioned.delete_versioned(
+                spark, scratch, F.col("value") < 5.0
+            ),
+            25, F.col("value") >= 5.0, 25,
+        ),
+        "update": (
+            lambda: versioned.update_versioned(
+                spark, scratch, F.col("value") < 5.0, {"value": F.lit(-1.0)}
+            ),
+            30, F.col("value") == -1.0, 5,
+        ),
+    }[writer]
+
     real_stats = versioned._collect_stats
+    armed = {"fired": False}
 
-    def interfering(fire_once: dict):
-        def _stats(spark_, pdirs, **kw):
-            if not fire_once["armed"]:
-                fire_once["armed"] = True
-                m = versioned.read_manifest(scratch)
-                versioned.publish_version(
-                    scratch, m["version"] + 1, dict(m["partitions"])
-                )
-            return real_stats(spark_, pdirs, **kw)
+    def interfering(spark_, pdirs, **kw):
+        if not armed["fired"]:
+            armed["fired"] = True
+            m = versioned.read_manifest(scratch)
+            versioned.publish_version(
+                scratch, m["version"] + 1, dict(m["partitions"])
+            )
+        return real_stats(spark_, pdirs, **kw)
 
-        return _stats
-
-    # Compaction fenced by an interleaved commit, then re-run lands.
-    versioned._collect_stats = interfering({"armed": False})
+    versioned._collect_stats = interfering
     try:
         with pytest.raises(versioned.ConcurrentCommitError):
-            versioned.compact_versioned(spark, scratch, min_files=2)
+            commit()
     finally:
         versioned._collect_stats = real_stats
+    assert armed["fired"]
     assert versioned.read_manifest(scratch)["version"] == 2
-    m3 = versioned.compact_versioned(spark, scratch, min_files=2)
-    assert m3["version"] == 3
-    n_after_compact = versioned.read_observations_versioned(
-        spark, scratch
-    ).count()
-    assert n_after_compact == 30
-
-    # Delete fenced the same way; re-run applies against the winner.
-    versioned._collect_stats = interfering({"armed": False})
-    try:
-        with pytest.raises(versioned.ConcurrentCommitError):
-            versioned.delete_versioned(spark, scratch, F.col("value") < 5.0)
-    finally:
-        versioned._collect_stats = real_stats
-    assert versioned.read_manifest(scratch)["version"] == 4
     assert versioned.read_observations_versioned(spark, scratch).count() == 30
-    m5 = versioned.delete_versioned(spark, scratch, F.col("value") < 5.0)
-    assert m5["version"] == 5
-    assert versioned.read_observations_versioned(spark, scratch).count() == 25
+    assert commit()["version"] == 3
+    after = versioned.read_observations_versioned(spark, scratch)
+    assert after.count() == n_rows
+    assert after.filter(landed).count() == n_landed
+
+
+@pytest.mark.parametrize("writer", ["upsert", "compaction", "delete", "update"])
+def test_versioned_rewrite_fold_invariants(spark, scratch, writer):
+    """Every rewrite folds its result into the manifest by one rule:
+    a rewritten date's ``file_stats`` list exactly the parquet files in
+    its new directory and it carries no deletion-vector refs; a date
+    the rewrite emptied leaves ``partitions``, ``stats``,
+    ``file_stats``, ``dv`` and ``dv_eq`` (and its equality key set
+    with it); untouched months keep their ``fs_shards`` refs as they
+    were. Compaction and delete keep the declared schema."""
+    from pyspark.sql import functions as F
+
+    from gas_data_pipeline_spark.pipeline import versioned as V
+
+    jan1, jan2 = "2024-01-01", "2024-01-02"
+    rows = [
+        ("A_%d" % i, "2024-01-01 %02d:00:00" % i, float(i),
+         "2024-01-01 12:00:00", i)
+        for i in range(4)
+    ] + [
+        ("B_%d" % i, "2024-01-02 %02d:00:00" % i, float(10 + i),
+         "2024-01-02 12:00:00", 10 + i)
+        for i in range(1, 5)
+    ] + [
+        ("C_1", "2024-02-01 00:00:00", 20.0, "2024-02-01 12:00:00", 20),
+        ("D_1", "2024-03-01 00:00:00", 30.0, "2024-03-01 12:00:00", 30),
+    ]
+    key = "spark.sql.files.maxRecordsPerFile"
+    old = spark.conf.get(key, "0")
+    spark.conf.set(key, "2")  # fragment both January dates
+    try:
+        V.upsert_observations_versioned(
+            spark, _vs_batch(spark, rows), scratch,
+            order_cols=["ingestion_time", "event_id"],
+        )
+    finally:
+        spark.conf.set(key, old)
+    # Both vector kinds on jan2; for compaction they delete every row
+    # of it, so the materializing rewrite empties the date.
+    mor = ["B_1", "B_3", "B_4"] if writer == "compaction" else ["B_1"]
+    V.delete_versioned(
+        spark, scratch, F.col("series_id").isin(mor), mode="merge-on-read"
+    )
+    V.delete_versioned_by_key(spark, scratch, "B_2")
+    prev = V.read_manifest(scratch)
+    assert jan2 in prev["dv"] and jan2 in prev["dv_eq"]
+
+    commit, rewritten, emptied = {
+        "upsert": (
+            lambda: V.upsert_observations_versioned(
+                spark,
+                _vs_batch(spark, [
+                    ("A_9", "2024-01-01 09:00:00", 9.0, "2024-01-01 12:00:00", 9),
+                    ("B_9", "2024-01-02 09:00:00", 9.0, "2024-01-02 12:00:00", 19),
+                ]),
+                scratch, order_cols=["ingestion_time", "event_id"],
+            ),
+            {jan1, jan2}, set(),
+        ),
+        "compaction": (
+            lambda: V.compact_versioned(spark, scratch, min_files=2),
+            {jan1}, {jan2},
+        ),
+        "delete": (
+            lambda: V.delete_versioned(
+                spark, scratch,
+                F.col("series_id").startswith("B_") | (F.col("value") < 1.0),
+            ),
+            {jan1}, {jan2},
+        ),
+        "update": (
+            lambda: V.update_versioned(
+                spark, scratch,
+                (F.col("series_id") == "B_3") | (F.col("value") < 1.0),
+                {"value": F.lit(-1.0)},
+            ),
+            {jan1, jan2}, set(),
+        ),
+    }[writer]
+    commit()
+    m = V.read_manifest(scratch)
+    assert m["version"] == prev["version"] + 1
+    assert {
+        d for d, rel in m["partitions"].items()
+        if rel != prev["partitions"].get(d)
+    } == rewritten
+    assert set(prev["partitions"]) - set(m["partitions"]) == emptied
+    for d in rewritten:
+        pdir = os.path.join(scratch, m["partitions"][d])
+        on_disk = {f for f in os.listdir(pdir) if f.endswith(".parquet")}
+        assert set(m["file_stats"][d]) == on_disk
+        assert d in m["stats"]
+        assert d not in m.get("dv", {}) and d not in m.get("dv_eq", {})
+    for d in emptied:
+        for grain in ("partitions", "stats", "file_stats", "dv", "dv_eq"):
+            assert d not in m.get(grain, {}), grain
+        assert not m.get("dv_eq_sets")
+    untouched = {"2024-02", "2024-03"}
+    assert {V._shard_key(d) for d in rewritten | emptied} == {"2024-01"}
+    for month in untouched:
+        assert m["fs_shards"][month] == prev["fs_shards"][month]
+    if writer in ("compaction", "delete"):
+        assert m["schema"] == prev["schema"]
+    # Vector-deleted rows never resurrect into a rewrite.
+    ids = {r.series_id for r in V.read_observations_versioned(spark, scratch).collect()}
+    assert not ids & {"B_1", "B_2"}
+
+
+def test_versioned_update_off_chain_assignment_is_refused(spark, scratch):
+    """UPDATE evolves the declared schema like every rewrite: a string
+    assigned into a ``double`` column is off every widening chain, so
+    the commit raises SchemaEvolutionError and publishes nothing.
+    Publishing would declare ``double`` over rewritten ``string``
+    files and make every later read of the table fail."""
+    from pyspark.sql import functions as F
+
+    from gas_data_pipeline_spark.pipeline import versioned as V
+
+    V.upsert_observations_versioned(
+        spark,
+        _vs_batch(spark, [
+            ("a", "2024-01-01 00:00:00", 1.0, "2024-01-01 01:00:00", 1),
+            ("b", "2024-01-02 00:00:00", 2.0, "2024-01-02 01:00:00", 2),
+        ]),
+        scratch, order_cols=["ingestion_time", "event_id"],
+    )
+    with pytest.raises(V.SchemaEvolutionError):
+        V.update_versioned(
+            spark, scratch, F.col("series_id") == "a", {"value": F.lit("9.5")}
+        )
+    m = V.read_manifest(scratch)
+    assert m["version"] == 1
+    assert {f["name"]: f["type"] for f in m["schema"]["fields"]}["value"] == "double"
+    got = sorted(
+        (r.series_id, r.value)
+        for r in V.read_observations_versioned(spark, scratch).collect()
+    )
+    assert got == [("a", 1.0), ("b", 2.0)]
 
 
 def test_versioned_changelog_across_compaction_is_empty(spark, scratch):
