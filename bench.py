@@ -23,8 +23,10 @@ CartesianProduct/BroadcastNestedLoopJoin. Disable with
 
 ``--only NAMES`` (comma-separated query names) runs just those queries
 through the same warm-up and passes, prints one JSON line of their
-median timings, and writes no ``BENCH_*`` file: the tool for a quick
-A/B of a few queries.
+median timings and median process-tree CPU seconds (``queries_cpu``,
+from ``perfbench.harness.tree_cpu_s``: the driver, its JVM and Python
+workers, without JIT threads), and writes no ``BENCH_*`` file: the
+tool for a quick A/B of a few queries.
 """
 
 from __future__ import annotations
@@ -874,6 +876,7 @@ def main() -> None:
     probe_only = "--scale-probe" in sys.argv[1:]
     only = _only_names(sys.argv[1:])
 
+    from perfbench.harness import tree_cpu_s
     from gas_data_pipeline_spark.registry import all_queries
     from gas_data_pipeline_spark.session import get_spark
 
@@ -941,6 +944,8 @@ def main() -> None:
         sys.stdout.flush()
         return
 
+    cpu_passes: list[dict[str, float]] = []  # per pass, --only runs only
+
     def run_pass(pass_idx: int = 0) -> dict[str, float]:
         import gc
         import random
@@ -956,11 +961,15 @@ def main() -> None:
         order = sorted(queries)
         random.Random(pass_idx).shuffle(order)
         out: dict[str, float] = {}
+        cpu: dict[str, float] = {}
         for name in order:
             fn = queries[name]
+            cpu0 = tree_cpu_s() if only is not None else 0.0
             start = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             out[name] = round(time.perf_counter() - start, 4)
+            if only is not None:
+                cpu[name] = tree_cpu_s() - cpu0
             # Measurement hygiene, not a speed hack: localCheckpoint /
             # persist blocks from query i stay pinned in the JVM until
             # Python's lazy GC drops the py4j refs, so without this a
@@ -970,6 +979,7 @@ def main() -> None:
             # after each query lets the ContextCleaner release blocks
             # so every query is measured against the same JVM state.
             gc.collect()
+        cpu_passes.append(cpu)
         return out
 
     # Host-level noise on shared machines swings identical suite runs
@@ -1007,6 +1017,9 @@ def main() -> None:
                     "sf": sf,
                     "passes": n_passes,
                     "queries": timings,
+                    "queries_cpu": {
+                        k: round(median([p[k] for p in cpu_passes]), 2) for k in timings
+                    },
                 }
             )
         )

@@ -36,8 +36,11 @@ Kernel (registered queries): bucket keys -> scorer.
   over both corpora -> count, over a cross-side posting join.
 
 jaccard_pairs_bitset_gemm (dedup_char_jaccard) is the dense-vocabulary
-regime: no buckets, all pairs scored by popcount(AND) over vocabulary
-bitmasks. :func:`near_dup_pairs` dispatches between the kernels.
+regime: no buckets, every pair scored. It runs on the exact all-pairs
+pipeline of ``similarity.block_self_pairs`` (pack the hashed sets in
+SQL → pair the blocks → score → emit ``id_a < id_b``) and adds only its
+block-pair scorer: vocabulary bitmasks, popcount(AND) → Jaccard.
+:func:`near_dup_pairs` dispatches between the kernels.
 """
 
 from __future__ import annotations
@@ -45,6 +48,7 @@ from __future__ import annotations
 import math
 from functools import reduce
 
+import numpy as np
 import pandas as pd  # module-level: pandas_udf resolves string type hints here
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -52,7 +56,7 @@ from pyspark.sql.window import Window
 
 from gas_data_pipeline_spark.catalog import local_table
 from gas_data_pipeline_spark.functions.exprs import bind
-from gas_data_pipeline_spark.operators.similarity import block_count
+from gas_data_pipeline_spark.operators.similarity import block_count, block_self_pairs
 
 
 def _word_grams(words: Column, n: int, each, elem: str) -> Column:
@@ -740,21 +744,23 @@ def jaccard_pairs_bitset_gemm(
     matter how it is pruned — on our documents table, char 4-grams
     yield ~1k distinct shingles across 5k docs, and the index path
     produces ~170M candidate pairs. In that regime the exact answer IS
-    all-pairs, so compute it the dense way (same architecture as
-    similarity.cosine_near_dup_pairs): pack hashed-shingle bitmasks
-    into per-block matrices (V bits → V/64 uint64 words per doc), cross
-    join the P blocks (P from ``similarity.block_count``: one count of
-    the persisted shingle sets), and per block pair compute the intersection
-    matrix with W vectorized AND+popcount outer products (SWAR
-    popcount; numpy<2 lacks bitwise_count). |A∩B| from bit math, sizes
-    precomputed per row, Jaccard = inter / (na + nb - inter).
+    all-pairs, so compute it the dense way, on the pack → pair → score
+    pipeline of ``similarity.block_self_pairs`` (which
+    ``similarity.cosine_near_dup_pairs`` shares): the hashed-shingle
+    sets pack into blocks in SQL, and per block pair this kernel's
+    scorer builds each side's bitmasks (V bits → V/64 uint64 words per
+    doc, a shingle's bit its rank in the sorted vocabulary, one
+    ``np.searchsorted``) and the intersection matrix with W vectorized
+    AND+popcount outer products (SWAR popcount; numpy<2 lacks
+    bitwise_count). Jaccard = inter / (na + nb - inter), the sizes
+    from the pack.
 
     Scale dial: choose by vocabulary — V ≤ ``max_vocab`` (the
     ``BITSET_MAX_VOCAB`` default: bitmask ≤ 12.5 KB/doc) → this kernel;
     open vocabulary → jaccard_pairs_prefix_filter (the split
     ``near_dup_pairs(method='auto')`` makes). The vocabulary is one
-    bounded distinct collected to the driver; its id→index map ships
-    inside the pack closure.
+    bounded distinct collected to the driver; the sorted array ships
+    inside the scorer closure.
     """
     # prehashed: shingle_col already yields array<long> ids (e.g.
     # char_shingle_ids_pandas) — skip the per-gram xxhash64 transform.
@@ -770,15 +776,13 @@ def jaccard_pairs_bitset_gemm(
     base = spread.select(
         F.col(id_col).cast("bigint").alias("id"),
         F.array_distinct(id_expr).alias("shingles"),
-    ).persist()  # shingling is the scan-heavy step; the width-sizing
-    # action below and the main job both read it, so materialize once
-    # (hashed sets only: N × avg-set-size longs, not the raw text).
+    ).persist()  # shingling is the scan-heavy step; the vocabulary
+    # collect, the block count and the pack all read it, so
+    # materialize once (hashed sets only, not the raw text).
     # Vocabulary to the driver: by this kernel's regime definition V is
     # small (≤ ~1e5 → ≤ ~1 MB of longs), so the distinct-shingle set is
     # a collectible stats object, exactly like the IVF centroids or the
-    # z-order bounds row. Shipping the id→index dict inside the pack
-    # closure deletes the distributed indexing join + one shuffle that
-    # the previous version paid to do the same mapping.
+    # z-order bounds row.
     # limit(max_vocab+1) bounds the collect BEFORE it happens: if the
     # extra row comes back, the vocabulary is open and this kernel is
     # the wrong regime — refuse instead of OOMing the driver.
@@ -790,58 +794,10 @@ def jaccard_pairs_bitset_gemm(
             "distinct shingles); this corpus exceeds it — use "
             "jaccard_pairs_prefix_filter (or dedup_near(method='auto'))"
         )
-    vocab_ids = sorted(r["sh"] for r in vocab_rows)
-    index_of = {sh: i for i, sh in enumerate(vocab_ids)}
-    width = max(1, (len(vocab_ids) + 63) // 64)
+    vocab = np.array(sorted(r["sh"] for r in vocab_rows), dtype=np.int64)
+    width = max(1, (len(vocab) + 63) // 64)
 
-    n_blocks = block_count(base.count())
-    # pmod, not abs(hash)%n: abs(INT_MIN) throws under ANSI mode.
-    indexed = base.withColumn("__block", F.pmod(F.hash(F.col("id")), n_blocks))
-
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        pdf = pdf.sort_values("id")
-        n = len(pdf)
-        words = np.zeros((n, width), dtype=np.uint64)
-        counts = np.zeros(n, dtype=np.int64)
-        for r, shingles in enumerate(pdf["shingles"]):
-            ix = np.fromiter(
-                (index_of[s] for s in shingles), dtype=np.int64, count=len(shingles)
-            )
-            np.bitwise_or.at(
-                words[r], ix >> 6, np.uint64(1) << (ix & 63).astype(np.uint64)
-            )
-            counts[r] = len(ix)
-        return pd.DataFrame(
-            {
-                "block": [int(pdf["__block"].iloc[0])],
-                "ids": [pdf["id"].tolist()],
-                "counts": [counts.tolist()],
-                "words": [words.view(np.int64).ravel().tolist()],
-            }
-        )
-
-    blocks = indexed.groupBy("__block").applyInPandas(
-        pack, schema="block int, ids array<bigint>, counts array<bigint>, words array<bigint>"
-    )
-    a, b = (
-        blocks.select(*[F.col(c).alias(f"{c}_{t}") for c in ("block", "ids", "counts", "words")])
-        for t in "ab"
-    )
-    # One task per block pair, sized as in similarity.block_count (a
-    # fixed Python-worker cost per Arrow task, so a one-block corpus
-    # scores in one task): the join output is P(P+1)/2 tiny-byte /
-    # heavy-CPU rows, and AQE's size-based coalescing would pack them
-    # onto 1-2 tasks (measured: 2 tasks for 36 pairs). The explicit
-    # round-robin costs a few MB of packed matrices and buys full
-    # fan-out of the popcount GEMM.
-    n_pairs = n_blocks * (n_blocks + 1) // 2
-    paired = a.join(b, F.col("block_a") <= F.col("block_b")).repartition(n_pairs)
-    thr = float(threshold)
-    w_width = width
-
-    def score(batches):
+    def jaccard(a, b):
         import numpy as np
 
         m1 = np.uint64(0x5555555555555555)
@@ -855,32 +811,22 @@ def jaccard_pairs_bitset_gemm(
             x = (x + (x >> np.uint64(4))) & m4
             return ((x * h01) >> np.uint64(56)).astype(np.int64)
 
-        for pdf in batches:
-            out = {"id_a": [], "id_b": [], "jaccard": []}
-            for row in pdf.itertuples():
-                A, B = (
-                    np.asarray(w, dtype=np.int64).view(np.uint64).reshape(-1, w_width)
-                    for w in (row.words_a, row.words_b)
-                )
-                ia, ib, na, nb = (
-                    np.asarray(v, dtype=np.int64)
-                    for v in (row.ids_a, row.ids_b, row.counts_a, row.counts_b)
-                )
-                inter = np.zeros((len(ia), len(ib)), dtype=np.int64)
-                for w in range(w_width):
-                    inter += popcount(A[:, w][:, None] & B[None, :, w])
-                jac = inter / (na[:, None] + nb[None, :] - inter)
-                keep = jac >= thr
-                if row.block_a == row.block_b:
-                    keep &= ia[:, None] < ib[None, :]
-                r, c = np.nonzero(keep)
-                left, right = ia[r], ib[c]
-                out["id_a"].extend(np.minimum(left, right).tolist())
-                out["id_b"].extend(np.maximum(left, right).tolist())
-                out["jaccard"].extend(jac[r, c].tolist())
-            yield pd.DataFrame(out)
+        def words(flat, sizes):
+            # A shingle's bit is its rank in the sorted vocabulary.
+            sizes = np.asarray(sizes, dtype=np.int64)
+            ix = np.searchsorted(vocab, np.asarray(flat, dtype=np.int64))
+            w = np.zeros((len(sizes), width), dtype=np.uint64)
+            rows = np.repeat(np.arange(len(sizes)), sizes)
+            np.bitwise_or.at(w, (rows, ix >> 6), np.uint64(1) << (ix & 63).astype(np.uint64))
+            return w, sizes
 
-    return paired.mapInPandas(score, schema="id_a bigint, id_b bigint, jaccard double")
+        (A, na), (B, nb) = words(*a), words(*b)
+        inter = np.zeros((len(na), len(nb)), dtype=np.int64)
+        for w in range(width):
+            inter += popcount(A[:, w][:, None] & B[None, :, w])
+        return inter / (na[:, None] + nb[None, :] - inter)
+
+    return block_self_pairs(base, "id", F.col("shingles"), jaccard, threshold, "jaccard")
 
 
 def _bounded_vocab(df: DataFrame, hashed: Column, bound: int) -> DataFrame:

@@ -2,25 +2,29 @@
 and near-dup pairs, hash-bucketed approximate top-k, and one
 quantized-index pipeline for IVF, PQ and IVF-PQ.
 
-Exact kernels — block-partitioned GEMM, the distributed
-dense-similarity formulation:
+Exact all-pairs kernels — ONE block pipeline, pack → pair → score:
 
-- Vectors are packed into per-block matrix rows by one SQL aggregate
-  (:func:`pack_blocks`: one row per block carrying the sorted ids and
-  a flattened float64 matrix), so the GEMM scorer is each kernel's
-  only Python stage. A cross join of blocks (P(P+1)/2 rows for
-  near-dup, P rows vs one packed query block for top-k) moves each
-  block ~P times, where a pair cross join duplicates every vector once
-  per PAIR (~N times).
-- Each block pair scores with ONE `A @ B.T` — BLAS-rate.
-- Top-k emits only k rows per (query, corpus-block) map-side — the
-  shuffle into the final per-query window is O(P·Q·k), never O(N·Q).
+- Pack: :func:`pack_blocks` is the one SQL aggregate for any per-row
+  array payload (float vectors here, the bitset kernel's hashed
+  shingle sets in ``dedup``): one row per block with the sorted ids,
+  the payloads flattened in id order and each payload's size, so a
+  kernel's block scorer is its only Python stage.
+- Pair and emit: :func:`block_self_pairs` self-joins the P blocks on
+  ``block_a <= block_b`` (P(P+1)/2 block pairs, one task each — a pair
+  cross join would duplicate every row once per PAIR, ~N times), masks
+  the diagonal block to ``ia < ib`` and emits ``(min, max)`` ids.
+- Score: a kernel passes only its block-pair score matrix —
+  :func:`cosine_near_dup_pairs` one normalized ``A @ B.T`` (BLAS-rate),
+  ``dedup.jaccard_pairs_bitset_gemm`` popcount(AND) → Jaccard.
+- :func:`cosine_topk` packs the same way but broadcasts one packed
+  query block against the corpus blocks and keeps its own top-k
+  scorer: k rows per (query, corpus-block) map-side, so the shuffle
+  into the final per-query window is O(P·Q·k), never O(N·Q).
 - Sizing: P = :func:`block_count` of one count of the corpus, the
-  fewest blocks averaging at most ``ROWS_PER_BLOCK`` rows (shared with
-  ``dedup.jaccard_pairs_bitset_gemm``). Every Arrow task pays a fixed
-  Python-worker cost, measured at 0.1-0.19 s of CPU on a 4-core
-  host (PySpark's per-task ``importlib.invalidate_caches()`` re-reads
-  the zip directories on the worker's path), so a no-op
+  fewest blocks averaging at most ``ROWS_PER_BLOCK`` rows. Every Arrow
+  task pays a fixed Python-worker cost, measured at 0.1-0.19 s of CPU
+  on a 4-core host (PySpark's per-task ``importlib.invalidate_caches()``
+  re-reads the zip directories on the worker's path), so a no-op
   ``mapInPandas`` over 36 partitions costs 6-8 s. A corpus that fits
   one block therefore scores in one task; a large one fans out one
   task per block pair, each block about ``ROWS_PER_BLOCK`` rows.
@@ -138,21 +142,17 @@ def block_count(n_rows: int) -> int:
 def pack_blocks(
     df: DataFrame,
     id_col: str,
-    vec_col: str,
+    payload: Column,
     n_blocks: int,
 ) -> DataFrame:
-    """Pack (id, vector) rows into ``n_blocks`` matrix rows:
-    ``(block, ids, row-major float64 mat, dim)``. Rows are sorted by id
-    within a block so packing is deterministic. Block assignment hashes
-    the id — stable and uniform; one shuffle on the block key. One JVM
-    aggregate: no Python worker runs before the GEMM scorer."""
+    """The one pack of the block kernels: (id, array payload) rows
+    become ``n_blocks`` rows ``(block, ids, flat, sizes)`` — the ids
+    sorted, their payloads concatenated in id order, and each payload's
+    length (a vector's dim, a set's size). Block assignment hashes the
+    id — stable and uniform; one shuffle on the block key. One JVM
+    aggregate: no Python worker runs before the block scorer."""
     rows = F.array_sort(
-        F.collect_list(
-            F.struct(
-                F.col(id_col).cast("bigint").alias("id"),
-                F.transform(vec_col, lambda x: x.cast("double")).alias("vec"),
-            )
-        )
+        F.collect_list(F.struct(F.col(id_col).cast("bigint").alias("id"), payload.alias("v")))
     )
     return (
         # pmod, not abs(hash)%n: abs(INT_MIN) throws under ANSI mode.
@@ -161,10 +161,62 @@ def pack_blocks(
         .select(
             "block",
             F.transform("rows", lambda r: r["id"]).alias("ids"),
-            F.flatten(F.transform("rows", lambda r: r["vec"])).alias("mat"),
-            F.size(F.col("rows")[0]["vec"]).alias("dim"),
+            F.flatten(F.transform("rows", lambda r: r["v"])).alias("flat"),
+            F.transform("rows", lambda r: F.size(r["v"])).alias("sizes"),
         )
     )
+
+
+def block_self_pairs(
+    df: DataFrame,
+    id_col: str,
+    payload: Column,
+    score,
+    threshold: float,
+    score_col: str,
+) -> DataFrame:
+    """The pair and emit half of the exact all-pairs kernels: every
+    pair ``(id_a < id_b, score_col)`` of ``df`` whose score is at
+    least ``threshold``.
+
+    ``df`` packs into :func:`block_count` blocks (one count), the
+    blocks self-join on ``block_a <= block_b`` — P(P+1)/2 block pairs,
+    one task each — and ``score((flat_a, sizes_a), (flat_b, sizes_b))``
+    returns the block pair's (rows_a x rows_b) score matrix. A diagonal
+    block keeps ``ia < ib``; an off-diagonal pair comes out once, in
+    either id order, and is emitted as (min, max). ``score`` must be a
+    self-contained closure (numpy imported inside)."""
+    n_blocks = block_count(df.count())
+    blocks = pack_blocks(df, id_col, payload, n_blocks)
+    a, b = (blocks.select(*[F.col(c).alias(f"{c}_{t}") for c in blocks.columns]) for t in "ab")
+    # One task per block pair (see the module docstring for the
+    # sizing): AQE would coalesce the tiny-byte join output onto 1-2
+    # tasks, serializing the per-pair scorers; round-robin keeps the
+    # fan-out at P(P+1)/2 tasks, one when the corpus fits one block.
+    paired = a.join(b, F.col("block_a") <= F.col("block_b")).repartition(
+        n_blocks * (n_blocks + 1) // 2
+    )
+    thr = float(threshold)
+
+    def emit(batches):
+        import numpy as np
+
+        for pdf in batches:
+            out = {"id_a": [], "id_b": [], score_col: []}
+            for row in pdf.itertuples():
+                ia, ib = (np.asarray(v, dtype=np.int64) for v in (row.ids_a, row.ids_b))
+                S = score((row.flat_a, row.sizes_a), (row.flat_b, row.sizes_b))
+                keep = S >= thr
+                if row.block_a == row.block_b:
+                    keep &= ia[:, None] < ib[None, :]
+                r, c = np.nonzero(keep)
+                left, right = ia[r], ib[c]
+                out["id_a"].extend(np.minimum(left, right).tolist())
+                out["id_b"].extend(np.maximum(left, right).tolist())
+                out[score_col].extend(S[r, c].tolist())
+            yield pd.DataFrame(out)
+
+    return paired.mapInPandas(emit, schema=f"id_a bigint, id_b bigint, {score_col} double")
 
 
 def cosine_topk(
@@ -181,11 +233,12 @@ def cosine_topk(
     broadcast against them; each pair scores with a single GEMM and
     emits only the per-block top-k, so the final window sees
     O(blocks · queries · k) rows."""
-    cb = pack_blocks(corpus, id_col, vec_col, block_count(corpus.count()))
-    qb = pack_blocks(queries, id_col, vec_col, 1).select(
-        F.col("ids").alias("q_ids"),
-        F.col("mat").alias("q_mat"),
-        F.col("dim").alias("q_dim"),
+    # Vectors pack as stored: the scorers widen float32 to float64 in
+    # numpy, exactly as a SQL cast would, on half the shuffled bytes.
+    vec = F.col(vec_col)
+    cb = pack_blocks(corpus, id_col, vec, block_count(corpus.count()))
+    qb = pack_blocks(queries, id_col, vec, 1).select(
+        *[F.col(c).alias(f"q_{c}") for c in ("ids", "flat", "sizes")]
     )
     paired = cb.crossJoin(F.broadcast(qb))
 
@@ -195,9 +248,10 @@ def cosine_topk(
         for pdf in batches:
             out = {"query_id": [], "neighbor_id": [], "cos_sim": []}
             for row in pdf.itertuples():
-                dim = int(row.dim)
-                A = np.asarray(row.mat, dtype=np.float64).reshape(-1, dim)
-                Q = np.asarray(row.q_mat, dtype=np.float64).reshape(-1, dim)
+                A, Q = (
+                    np.asarray(flat, dtype=np.float64).reshape(len(sizes), -1)
+                    for flat, sizes in ((row.flat, row.sizes), (row.q_flat, row.q_sizes))
+                )
                 a_ids = np.asarray(row.ids, dtype=np.int64)
                 q_ids = np.asarray(row.q_ids, dtype=np.int64)
                 A = A / np.linalg.norm(A, axis=1, keepdims=True)
@@ -218,14 +272,7 @@ def cosine_topk(
     scored = paired.mapInPandas(
         score, schema="query_id bigint, neighbor_id bigint, cos_sim double"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos_sim")
-    )
+    return _top_k(scored, "cos_sim", k, "cos_sim")
 
 
 def cosine_near_dup_pairs(
@@ -236,66 +283,23 @@ def cosine_near_dup_pairs(
 ) -> DataFrame:
     """X1 embedding-cosine near-dup: all pairs (a<b) above threshold.
 
-    Exact O(N²) *comparisons* — but via block-pair GEMM: P·(P+1)/2
-    block pairs, one matrix multiply each, emitting only qualifying
-    pairs. The correctness baseline the LSH path is tested against; at
-    scale run LSH first and this kernel only within buckets."""
-    n_blocks = block_count(df.count())
-    blocks = pack_blocks(df, id_col, vec_col, n_blocks)
-    a = blocks.select(
-        F.col("block").alias("block_a"),
-        F.col("ids").alias("ids_a"),
-        F.col("mat").alias("mat_a"),
-        "dim",
-    )
-    b = blocks.select(
-        F.col("block").alias("block_b"),
-        F.col("ids").alias("ids_b"),
-        F.col("mat").alias("mat_b"),
-        F.col("dim").alias("dim_b"),
-    )
-    # One task per block pair (see the module docstring for the
-    # sizing): AQE would coalesce the tiny-byte join output onto 1-2
-    # tasks, serializing the per-pair GEMMs; round-robin keeps the
-    # fan-out at P(P+1)/2 tasks, one when the corpus fits one block.
-    paired = a.join(b, F.col("block_a") <= F.col("block_b")).repartition(
-        n_blocks * (n_blocks + 1) // 2
-    )
+    Exact O(N²) *comparisons* — but via block-pair GEMM
+    (:func:`block_self_pairs`): one normalized matrix multiply per
+    block pair, emitting only qualifying pairs. The correctness
+    baseline the LSH path is tested against; at scale run LSH first
+    and this kernel only within buckets."""
 
-    def score(batches):
+    def gemm(a, b):
         import numpy as np
 
-        for pdf in batches:
-            out = {"id_a": [], "id_b": [], "cos_sim": []}
-            for row in pdf.itertuples():
-                dim = int(row.dim)
-                A = np.asarray(row.mat_a, dtype=np.float64).reshape(-1, dim)
-                B = np.asarray(row.mat_b, dtype=np.float64).reshape(-1, dim)
-                ia = np.asarray(row.ids_a, dtype=np.int64)
-                ib = np.asarray(row.ids_b, dtype=np.int64)
-                A = A / np.linalg.norm(A, axis=1, keepdims=True)
-                B = B / np.linalg.norm(B, axis=1, keepdims=True)
-                S = A @ B.T
-                keep = S >= threshold
-                if row.block_a == row.block_b:
-                    # Diagonal block: both sides are the same set —
-                    # dedup the unordered pair by id order here.
-                    keep &= ia[:, None] < ib[None, :]
-                r, c = np.nonzero(keep)
-                left, right = ia[r], ib[c]
-                # Off-diagonal pairs appear once (each unordered block
-                # pair joins once) but in arbitrary id order —
-                # canonicalize to id_a < id_b on emission.
-                lo = np.minimum(left, right)
-                hi = np.maximum(left, right)
-                out["id_a"].extend(lo.tolist())
-                out["id_b"].extend(hi.tolist())
-                out["cos_sim"].extend(S[r, c].tolist())
-            yield pd.DataFrame(out)
+        A, B = (
+            np.asarray(flat, dtype=np.float64).reshape(len(sizes), -1) for flat, sizes in (a, b)
+        )
+        A = A / np.linalg.norm(A, axis=1, keepdims=True)
+        B = B / np.linalg.norm(B, axis=1, keepdims=True)
+        return A @ B.T
 
-    return paired.mapInPandas(
-        score, schema="id_a bigint, id_b bigint, cos_sim double"
-    )
+    return block_self_pairs(df, id_col, F.col(vec_col), gemm, threshold, "cos_sim")
 
 
 def _top_k(scored: DataFrame, score: str, k: int, *out: Column | str) -> DataFrame:

@@ -13,6 +13,7 @@ import shutil
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from gas_data_pipeline_spark.catalog import local_table
 
@@ -29,10 +30,14 @@ def insert_if_absent(
     session's autoBroadcastJoinThreshold, but a forced hint would OOM
     the driver if series cardinality ever exploded — let the runtime
     pick shuffle join in that regime.
+
+    The existing keys are read under the incoming frame's key types: a
+    schema-less read would start a schema-inference job on every call.
     """
     incoming = incoming.dropDuplicates(keys)
     if os.path.exists(path):
-        existing_keys = spark.read.parquet(path).select(*keys)
+        key_schema = StructType([incoming.schema[k] for k in keys])
+        existing_keys = spark.read.schema(key_schema).parquet(path)
         new_rows = incoming.join(existing_keys, keys, "left_anti")
     else:
         new_rows = incoming

@@ -1336,7 +1336,13 @@ def compact_versioned(
         *[F.col(k) for k in KEYS],
     )
     if sort_within:
-        rows = rows.sortWithinPartitions(PARTITION_COL, *KEYS)
+        # Sort on the write's own partition key (``__pdate``, the date
+        # as a string, which orders like the date): the partitioned
+        # write requires its rows ordered by that key. A sort on
+        # ``obs_date`` does not satisfy it, so the write would add its
+        # own sort on ``__pdate`` alone, and the optimizer would drop
+        # this one as redundant.
+        rows = rows.sortWithinPartitions(F.col(PARTITION_COL).cast("string"), *KEYS)
     return _rewrite_commit(
         spark, root, current, rows, n_out, stats_local_max, key_fingerprints
     )

@@ -105,6 +105,27 @@ def test_insert_if_absent(spark, scratch):
     assert final == {"k1": "v1", "k2": "v2", "k3": "v3"}  # k2 NOT updated
 
 
+def test_insert_if_absent_reads_existing_keys_without_inference(spark, scratch):
+    # A second insert into an existing dim dir reads the existing keys
+    # under the incoming key schema: three jobs (the anti-join and the
+    # write), where a schema-less read ran a fourth first, the footer
+    # read that infers the schema.
+    from gas_data_pipeline_spark.pipeline.dims import insert_if_absent
+
+    d1 = spark.createDataFrame([("k1", "v1"), ("k2", "v2")], "k string, v string")
+    insert_if_absent(spark, d1, scratch, keys=["k"])
+    d2 = spark.createDataFrame([("k2", "OTHER"), ("k3", "v3")], "k string, v string")
+    sc = spark.sparkContext
+    group = "dims-second-insert"
+    sc.setJobGroup(group, "count the jobs of a second insert")
+    try:
+        inserted = insert_if_absent(spark, d2, scratch, keys=["k"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 3
+    assert [r.k for r in inserted.collect()] == ["k3"]
+
+
 def test_delete_reload(spark, scratch):
     from gas_data_pipeline_spark.pipeline.dims import delete_reload
 
@@ -2638,6 +2659,48 @@ def test_versioned_compaction_rewrites_only_fragmented(spark, scratch):
     assert pinned == before
     # Re-compacting a compacted store is a no-op (no new version).
     assert compact_versioned(spark, scratch, min_files=2)["version"] == 3
+
+
+def test_versioned_compaction_sorts_each_file(spark, scratch):
+    """``sort_within=True``: every compacted file, read in file order,
+    is sorted by (obs_date, series_id, observation_time) — not several
+    sorted runs of the fragments laid end to end."""
+    import random
+
+    import pyarrow.parquet as pq
+
+    from gas_data_pipeline_spark.pipeline.versioned import (
+        compact_versioned,
+        upsert_observations_versioned,
+    )
+
+    rng = random.Random(3)
+    rows = [
+        ("S_%03d" % rng.randrange(60), "2024-01-%02d %02d:00:00" % (1 + i % 3, i % 24),
+         float(i), "2024-02-01 00:00:00", i)
+        for i in range(288)
+    ]
+    rng.shuffle(rows)
+    key = "spark.sql.files.maxRecordsPerFile"
+    old = spark.conf.get(key, "0")
+    spark.conf.set(key, "20")  # fragments whose key ranges interleave
+    try:
+        for k in range(0, len(rows), 96):
+            upsert_observations_versioned(
+                spark, _vs_batch(spark, rows[k:k + 96]), scratch,
+                order_cols=["ingestion_time", "event_id"],
+            )
+    finally:
+        spark.conf.set(key, old)
+    m = compact_versioned(spark, scratch, min_files=2)
+    assert len(m["partitions"]) == 3
+    for rel in m["partitions"].values():
+        pdir = os.path.join(scratch, rel)
+        for f in sorted(os.listdir(pdir)):
+            if f.endswith(".parquet"):
+                t = pq.read_table(os.path.join(pdir, f)).to_pydict()
+                keys = list(zip(t["obs_date"], t["series_id"], t["observation_time"]))
+                assert keys == sorted(keys), f"{rel}/{f} is not sorted"
 
 
 @pytest.mark.parametrize("writer", ["upsert", "compaction", "delete", "update"])

@@ -392,6 +392,19 @@ def test_block_gemm_runs_one_python_stage(spark, name):
     assert "FlatMapGroupsInPandas" not in plan
 
 
+def test_char_jaccard_runs_one_shingler_and_one_scorer(spark):
+    # The shingle sets pack in the shared SQL pack and the bitset words
+    # are built inside the block scorer: the shingler UDF and the
+    # scorer are the only Python operators, and no grouped-map pack is
+    # left. The cached sets print once per scan of them (and again
+    # under AQE's initial plan), so identical operator lines count once.
+    plan = _plan(spark, "dedup_char_jaccard")
+    lines = {ln.strip(" :+-") for ln in plan.splitlines()}
+    assert sum(ln.startswith("ArrowEvalPython") for ln in lines) == 1
+    assert sum(ln.startswith("MapInPandas") for ln in lines) == 1
+    assert "FlatMapGroupsInPandas" not in plan
+
+
 def test_minhash_signature_small_corpus_runs_one_task(spark):
     # A corpus of one ROWS_PER_BLOCK block signs in one Arrow task, not
     # one per spread partition.
