@@ -1,25 +1,26 @@
-"""Grouped top-k with sketch-bounded shuffle.
+"""Grouped top-k with a map-side cut.
 
 ``row_number() OVER (PARTITION BY g ORDER BY v) <= k`` is the
-canonical formulation, but it shuffles EVERY row to cluster groups
-before sorting — at 100 TB the tail (the rows that can never rank)
-dominates the exchange. This operator prunes map-side first: each
-input partition keeps only its own per-group top-k, which is a
-guaranteed superset of the global answer — if row r is in group g's
-global top-k, then fewer than k rows of g outrank it anywhere, so in
-particular fewer than k outrank it inside r's own partition, and r
-survives the partition-local cut. Only partitions x groups x k
-candidate rows ride the shuffle into the final (ordinary) window.
+canonical formulation. Planned naively it shuffles EVERY row to
+cluster groups before sorting, and at 100 TB the tail (the rows that
+can never rank) dominates the exchange. Catalyst prunes it map-side
+first (``InferWindowGroupLimit``, k up to
+``spark.sql.optimizer.windowGroupLimitThreshold`` = 1000): a
+``WindowGroupLimit … Partial`` keeps each input partition's own
+per-group top-k, which is a guaranteed superset of the global answer —
+if row r is in group g's global top-k, then fewer than k rows of g
+outrank it anywhere, so in particular fewer than k outrank it inside
+r's own partition, and r survives the partition-local cut. Only
+partitions x groups x k candidate rows ride the shuffle into the
+``Final`` limit and the window.
 
-Same family as ``sketches.heavy_hitters_exact`` and
-``dedup.bloom_prefilter_dedup``: a partition-local summary bounds the
-shuffle, an exact confirm keeps the answer identical to the naive
-plan — which is what the DuckDB oracle runs.
+Both stages are Spark's own sort, so they agree on the total order
+(NaN greatest, nulls where the window puts them) and the answer is the
+naive plan's — which is what the DuckDB oracle runs.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -35,82 +36,15 @@ def grouped_topk(
     rank_col: str = "rk",
 ) -> DataFrame:
     """Exact top-``k`` rows per group under a deterministic total
-    order (``order_col`` asc/desc, then ``tiebreak`` ascending —
-    required, ties would otherwise make "top k" ill-defined across
-    engines). Output = input columns + ``rank_col`` (1..k).
-
-    Map-side cut: a per-partition pandas fold keeps a bounded
-    candidate buffer (per batch: sort + ``groupby().head(k)``;
-    re-truncated whenever it doubles, so memory is O(groups-present x
-    k), never O(partition rows)). The final window then runs on the
-    pruned stream — one exchange of candidates only, same
-    ``row_number`` semantics as the naive plan.
-
-    Float NaN in ``order_col`` is unsupported — pandas sorts NaN as
-    *missing* (always last) while Spark orders NaN *greatest*, so the
-    two stages would disagree on the total order. Rather than silently
-    returning wrong rows, a float/double order column carries a
-    map-side ``assert_true`` guard that fails the job on the first NaN
-    encountered; null-out or filter NaNs first
-    (``functions/series.py`` cleaning does).
-    """
-    from pyspark.sql.types import DoubleType, FloatType
-
+    order (``order_col`` asc/desc with nulls last, then ``tiebreak``
+    ascending — required, ties would otherwise make "top k"
+    ill-defined across engines). Output = input columns + ``rank_col``
+    (1..k). The plan carries the map-side cut described in the module
+    docstring."""
     if tiebreak is None:
         raise ValueError("tiebreak column is required for a deterministic order")
     if k < 1:
         raise ValueError("k must be >= 1")
-    if "__topk_nan_guard" in df.columns:
-        raise ValueError("input already has reserved column __topk_nan_guard")
-    # The guard column rides through the map-side cut (mapInPandas
-    # requires its child's full schema, so pruning can't elide the
-    # assert) and is dropped after the final window.
-    nan_guarded = isinstance(df.schema[order_col].dataType, (FloatType, DoubleType))
-    if nan_guarded:
-        df = df.withColumn(
-            "__topk_nan_guard",
-            F.assert_true(
-                F.col(order_col).isNull() | ~F.isnan(F.col(order_col)),
-                F.lit(
-                    f"grouped_topk: NaN in order column '{order_col}' is "
-                    "unsupported (pandas and Spark disagree on NaN order); "
-                    "filter or null-out NaNs first"
-                ),
-            ),
-        )
-
-    sort_cols = [order_col, tiebreak]
-    ascending = [not descending, True]
-
-    def cut_frame(pdf):
-        return (
-            pdf.sort_values(sort_cols, ascending=ascending, kind="mergesort")
-            .groupby(group_cols, dropna=False, sort=False)
-            .head(k)
-            .reset_index(drop=True)
-        )
-
-    def cut(batches):
-        acc = None
-        limit = 0
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            top = cut_frame(pdf)
-            acc = top if acc is None else pd.concat([acc, top], ignore_index=True)
-            # Amortized re-truncate: cut when the buffer doubles past
-            # the last cut's size, so the fold is O(n log b), and the
-            # buffer never exceeds ~2x (groups-present x k).
-            if len(acc) > limit:
-                acc = cut_frame(acc)
-                limit = 2 * len(acc) + 1024
-        if acc is not None:
-            yield cut_frame(acc)
-
-    candidates = df.mapInPandas(cut, schema=df.schema)
-    # nulls-last on BOTH directions: pandas sort_values places NaN/None
-    # last regardless of `ascending`, and the two stages must agree on
-    # the total order or the map-side cut could drop a survivor.
     order = (
         F.col(order_col).desc_nulls_last()
         if descending
@@ -118,7 +52,6 @@ def grouped_topk(
         F.col(tiebreak).asc_nulls_last(),
     )
     w = Window.partitionBy(*group_cols).orderBy(*order)
-    out = candidates.withColumn(rank_col, F.row_number().over(w)).filter(
+    return df.withColumn(rank_col, F.row_number().over(w)).filter(
         F.col(rank_col) <= k
     )
-    return out.drop("__topk_nan_guard") if nan_guarded else out

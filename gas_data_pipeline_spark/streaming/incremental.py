@@ -3,12 +3,11 @@
 The reference is batch-plus-scheduler: an hourly APScheduler loop
 (app/scheduler/scheduler.py:7-18, ``max_instances=1, coalesce=True``)
 re-fetches a lookback window and upserts (ST3). The engine maps that
-to Structured Streaming:
+loop to Structured Streaming:
 
-- ST1 micro-batch trigger: ``Trigger.ProcessingTime("1 hour")`` in
-  production, ``Trigger.AvailableNow`` for deterministic runs/tests
-  (single-query exclusivity ≈ max_instances=1 — one streaming query
-  per checkpoint).
+- ST1 micro-batch trigger: ``Trigger.ProcessingTime`` for the
+  long-lived scheduler loop, ``Trigger.AvailableNow`` for one-shot
+  drains (one streaming query per checkpoint ≈ max_instances=1).
 - ST2 event vs processing time: ``ts`` is event time; watermarks key
   off it, ``current_timestamp()`` stamps ingestion.
 - ST3 late data: ``withWatermark`` bounds state exactly like the
@@ -18,6 +17,16 @@ to Structured Streaming:
   key.
 - ST5 snapshot sources: each poll lands as one micro-batch append.
 
+Three runners drive the package's streams:
+:func:`run_stream_to_table` (AvailableNow into a memory sink),
+:func:`run_foreach_batch` (AvailableNow into a batch writer), and
+:func:`run_staged_stream`, the scheduler loop: it stages a frame's
+batches as files, drops them one at a time into a watched directory
+and runs each through one long-lived ProcessingTime query started by
+:func:`start_processing_time_stream`. Every staged scheduler cycle
+therefore runs in one place. Each stream starts with
+``STATE_PARTITIONS`` shuffle partitions.
+
 At 100 TB: the state store only holds keys inside the watermark
 horizon; shuffle partitioning of the windowed agg is the same hash
 partitioning the batch rollup uses.
@@ -25,7 +34,11 @@ partitioning the batch rollup uses.
 
 from __future__ import annotations
 
+import os
+import time
 import uuid
+import warnings
+from contextlib import contextmanager
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
@@ -86,68 +99,51 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return events_stream_from_dir(spark, sf_dir, glob="events.parquet")
 
 
-class _state_partitions:
-    """Temporarily size ``spark.sql.shuffle.partitions`` for a streaming
-    query: a stateful stream materializes one state store PER shuffle
-    partition at checkpoint creation, and per-micro-batch commit cost
-    scales with store count, not data. The harness's key cardinality
-    (~1e4 series) wants far fewer stores than a batch shuffle wants
-    tasks — measured 2x per stream query at sf0.1 (e.g. 4.3s -> 2.1s)
-    going 32 -> 8. At cluster scale pass ``None`` to keep the cluster
-    default: state partitioning is fixed at first checkpoint write, so
-    production sizing belongs to the deployment, not this wrapper."""
+# Shuffle partitions a stream starts with. A stateful stream fixes one
+# state store per shuffle partition at its first checkpoint write, and
+# per-micro-batch commit cost scales with the store count, not the
+# data: the harness's ~1e4 series want far fewer stores than a batch
+# shuffle wants tasks (measured 2x per stream query at sf0.1, 4.3 s ->
+# 2.1 s, going 32 -> 8). The stream's cloned session also hands this
+# value to the shuffles inside every foreachBatch cycle.
+STATE_PARTITIONS = 8
 
-    def __init__(self, spark, n: int | None):
-        self.spark, self.n = spark, n
-
-    def __enter__(self):
-        if self.n is not None:
-            self.saved = self.spark.conf.get("spark.sql.shuffle.partitions")
-            self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
-
-    def __exit__(self, *exc):
-        if self.n is not None:
-            self.spark.conf.set("spark.sql.shuffle.partitions", self.saved)
+_NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
 
 
-class _no_data_batches:
-    """Temporarily toggle ``spark.sql.streaming.noDataMicroBatches.
-    enabled`` around one stream start. The engine's trailing no-data
-    micro-batch exists to let WATERMARK-GATED operators emit/evict once
-    the watermark advances past buffered state; it pays a full
-    state-store commit cycle across every store instance (measured: the
-    interval join's empty batch 1 costs the same order as its data
-    batch — all of it commitTimeMs + eviction). Queries whose sinks are
-    already complete after the last data batch — inner stream-stream
-    joins (matches emit eagerly), eager-emit dedup, NoTimeout
-    applyInPandasWithState, and complete-mode aggregations (the sink
-    rewrites the same state-derived table) — get identical results
-    without it, so skipping it removes one commit cycle per run at any
-    scale. Watermark-gated APPEND emission (session/tumbling windows in
-    append mode) NEEDS the flush batch: callers keep the default there.
-    The conf is captured by the stream's cloned session at start, so
-    save/restore around ``start()`` scopes it to this query."""
+@contextmanager
+def _stream_confs(spark: SparkSession, flush_no_data: bool = True):
+    """Set ``STATE_PARTITIONS`` (and, with ``flush_no_data=False``,
+    switch off the trailing no-data micro-batch) around a stream start,
+    then restore the session. The stream's cloned session captures both
+    at ``start()``.
 
-    _KEY = "spark.sql.streaming.noDataMicroBatches.enabled"
-
-    def __init__(self, spark, skip: bool):
-        self.spark, self.skip = spark, skip
-
-    def __enter__(self):
-        if self.skip:
-            self.saved = self.spark.conf.get(self._KEY)
-            self.spark.conf.set(self._KEY, "false")
-
-    def __exit__(self, *exc):
-        if self.skip:
-            self.spark.conf.set(self._KEY, self.saved)
+    The no-data batch exists to let WATERMARK-GATED operators emit and
+    evict once the watermark passes buffered state; it pays a full
+    state-store commit cycle (measured: the interval join's empty batch
+    costs the same order as its data batch). Sinks already complete
+    after the last data batch (inner stream-stream joins, eager-emit
+    dedup, NoTimeout applyInPandasWithState, complete-mode
+    aggregations) give identical results without it. Watermark-gated
+    APPEND emission (session/tumbling windows in append mode) needs the
+    flush batch: callers keep the default there."""
+    confs = {"spark.sql.shuffle.partitions": str(STATE_PARTITIONS)}
+    if not flush_no_data:
+        confs[_NO_DATA_BATCHES] = "false"
+    saved = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
 
 
 def run_stream_to_table(
     df: DataFrame,
     name: str | None = None,
     output_mode: str = "append",
-    state_partitions: int | None = 8,
     flush_no_data: bool = True,
 ) -> DataFrame:
     """Run a streaming plan to completion (AvailableNow) into a memory
@@ -155,13 +151,11 @@ def run_stream_to_table(
     harness for every streaming operator (SURVEY §7 Phase 4).
 
     ``flush_no_data=False`` skips the trailing no-data micro-batch (see
-    ``_no_data_batches``) — pass it ONLY for queries whose output is
+    ``_stream_confs``) — pass it ONLY for queries whose output is
     complete after the last data batch."""
     name = name or f"stream_{uuid.uuid4().hex[:12]}"
     spark = df.sparkSession
-    with _state_partitions(spark, state_partitions), _no_data_batches(
-        spark, not flush_no_data
-    ):
+    with _stream_confs(spark, flush_no_data):
         q = (
             df.writeStream.format("memory")
             .queryName(name)
@@ -173,13 +167,11 @@ def run_stream_to_table(
     return spark.table(name)
 
 
-def run_foreach_batch(
-    df: DataFrame, batch_fn, checkpoint: str, state_partitions: int | None = 8
-) -> None:
+def run_foreach_batch(df: DataFrame, batch_fn, checkpoint: str) -> None:
     """ST3: the production upsert loop — each micro-batch handed to a
     batch writer (e.g. silver upsert), exactly-once via checkpoint +
     idempotent MERGE semantics."""
-    with _state_partitions(df.sparkSession, state_partitions):
+    with _stream_confs(df.sparkSession):
         q = (
             df.writeStream.foreachBatch(batch_fn)
             .option("checkpointLocation", checkpoint)
@@ -194,7 +186,6 @@ def start_processing_time_stream(
     batch_fn,
     checkpoint: str,
     interval: str = "1 second",
-    state_partitions: int | None = 8,
 ):
     """ST1 production trigger: a continuously-running micro-batch loop
     (``Trigger.ProcessingTime``), the Structured-Streaming analog of
@@ -207,7 +198,7 @@ def start_processing_time_stream(
     :func:`await_processed_batches` and ``query.stop()`` for a
     graceful, bounded shutdown.
     """
-    with _state_partitions(df.sparkSession, state_partitions):
+    with _stream_confs(df.sparkSession):
         return (
             df.writeStream.foreachBatch(batch_fn)
             .option("checkpointLocation", checkpoint)
@@ -226,8 +217,6 @@ def await_processed_batches(
     the query's own failure immediately instead of timing out on it.
     ``lastProgress`` is touched each poll so a hung source shows the
     last committed batch in the TimeoutError."""
-    import time
-
     deadline = time.time() + timeout_sec
     while time.time() < deadline:
         if query.exception() is not None:
@@ -286,8 +275,6 @@ def run_stream_until(
     and retry exhaustion all re-raise immediately. ``on_retry(exc)`` is
     called before each retry (logging/test hook).
     """
-    import warnings
-
     attempt = 0
     while True:
         query = start()
@@ -319,36 +306,67 @@ def run_stream_until(
             raise
 
 
-def run_staged_stream(
-    stream_df: DataFrame,
-    batch_fn,
-    checkpoint: str,
-    drops,
-    interval: str = "50 milliseconds",
-    state_partitions: int | None = 8,
-    timeout_sec: float = 180.0,
-    poll_sec: float = 0.025,
-) -> None:
-    """Feed pre-staged files through ONE long-lived ProcessingTime
-    micro-batch loop (optimization r14, guide §1.2 — remove work the
-    result never needed): the suite's multi-cycle streaming queries
-    used to run a fresh AvailableNow query per staged file, paying a
-    full stream start/stop (checkpoint resolve, source listing, offset
-    planning, shutdown — measured ~0.7-1 s each at sf0.1 on local[32])
-    per cycle. The production analog (the reference's APScheduler loop)
-    is one long-lived query, so this runner matches the hourly
-    lifecycle's shape: start once, then for each ``drop`` (a callable
-    that moves ONE staged file into the watched dir) await one
-    committed non-empty micro-batch before the next drop — cycles stay
-    strictly sequential, so batch boundaries and contents are identical
-    to the N sequential AvailableNow drains over the same checkpoint.
+# The scheduler loop's fixed cadence. The production cadence is hourly;
+# the short trigger and poll here only bound the dead time between a
+# file drop and its cycle. Cycles still run strictly one after another,
+# so the no-overlap semantics are the same at any interval.
+STAGED_TRIGGER = "50 milliseconds"
+STAGED_POLL_SEC = 0.025
+STAGED_TIMEOUT_SEC = 180.0
 
-    ``batch_fn(batch_df, seq)`` receives ``seq`` = number of prior
-    non-empty batches (0, 1, …) — the same numbering the sequential
-    drains produced — independent of Spark's internal batch ids, so a
-    skipped empty trigger can never shift the sequence. The start is
-    retry-hardened through :func:`run_stream_until` (a transient
-    worker-spawn failure gets one bounded restart)."""
+
+def run_staged_stream(
+    batches: DataFrame, batch_fn, scratch: str, fmt: str = "parquet"
+) -> None:
+    """Run the rows of ``batches`` through ONE long-lived ProcessingTime
+    micro-batch loop, one micro-batch per value of its integer ``batch``
+    column, in ascending order: the reference's scheduler loop, one
+    poll per cycle.
+
+    The runner owns the whole harness under ``scratch``:
+
+    - ``staged/``: one write of ``batches``, repartitioned and
+      partitioned by ``batch`` in format ``fmt`` (``parquet``, or
+      ``text`` for a single string ``value`` column of raw lines), so
+      every batch is one file;
+    - ``incoming/``: the watched dir; the stream's schema is the staged
+      frame's minus ``batch``;
+    - ``ckpt/``: the stream's checkpoint.
+
+    It starts the stream once, then drops one staged file into
+    ``incoming/`` (an atomic rename) and waits for its committed
+    non-empty micro-batch before the next drop. Batch boundaries and
+    contents are therefore those of one AvailableNow drain per file,
+    without a stream start and stop per file (measured ~0.7-1 s each
+    at sf0.1). The start goes through :func:`run_stream_until`, so a
+    transient worker-spawn failure gets one bounded restart.
+
+    ``batch_fn(batch_df, seq)`` receives ``seq`` = the number of prior
+    non-empty batches (0, 1, …), independent of Spark's batch ids, so
+    a skipped empty trigger can never shift the sequence."""
+    staged, src, ckpt = (
+        os.path.join(scratch, d) for d in ("staged", "incoming", "ckpt")
+    )
+    os.makedirs(src)
+    batches.repartition(F.col("batch")).write.partitionBy("batch").format(
+        fmt
+    ).save(staged)
+    stream = (
+        batches.sparkSession.readStream.schema(batches.drop("batch").schema)
+        .format(fmt)
+        .load(src)
+    )
+    dirs = sorted(
+        (int(d.split("=", 1)[1]), os.path.join(staged, d))
+        for d in os.listdir(staged)
+        if d.startswith("batch=")
+    )
+
+    def drop(n: int) -> None:
+        b, pdir = dirs[n]
+        (part,) = [f for f in os.listdir(pdir) if f.startswith("part-")]
+        os.replace(os.path.join(pdir, part), os.path.join(src, f"b{b}-{part}"))
+
     done: list[int] = []
 
     def _wrapped(bdf: DataFrame, _bid: int) -> None:
@@ -359,29 +377,24 @@ def run_staged_stream(
 
     def _start():
         return start_processing_time_stream(
-            stream_df,
-            _wrapped,
-            checkpoint,
-            interval=interval,
-            state_partitions=state_partitions,
+            stream, _wrapped, ckpt, interval=STAGED_TRIGGER
         )
 
-    drops = list(drops)
-    drops[0]()
+    drop(0)
     q = run_stream_until(
         _start,
         lambda: len(done) >= 1,
-        timeout_sec=timeout_sec,
-        poll_sec=poll_sec,
+        timeout_sec=STAGED_TIMEOUT_SEC,
+        poll_sec=STAGED_POLL_SEC,
     )
     try:
-        for i, drop in enumerate(drops[1:], start=2):
-            drop()
+        for n in range(1, len(dirs)):
+            drop(n)
             await_processed_batches(
                 q,
-                lambda n=i: len(done) >= n,
-                timeout_sec=timeout_sec,
-                poll_sec=poll_sec,
+                lambda n=n: len(done) > n,
+                timeout_sec=STAGED_TIMEOUT_SEC,
+                poll_sec=STAGED_POLL_SEC,
             )
     finally:
         q.stop()
@@ -441,7 +454,6 @@ def run_incremental_upsert(
     checkpoint: str,
     now=None,
     order_cols: list[str] | None = None,
-    state_partitions: int | None = 8,
 ) -> None:
     """ST3 with per-series lookback: the production scheduler loop —
     each micro-batch reconciles against each series' own
@@ -452,9 +464,7 @@ def run_incremental_upsert(
             bdf, series_dim, path, now=now, order_cols=order_cols
         )
 
-    run_foreach_batch(
-        stream_df, write_batch, checkpoint, state_partitions=state_partitions
-    )
+    run_foreach_batch(stream_df, write_batch, checkpoint)
 
 
 GIE_DELETE_LOOKBACK_DAYS = 10  # reference gie/constants.py:7
@@ -467,7 +477,6 @@ def run_gie_delete_reload(
     now=None,
     lookback_days: int = GIE_DELETE_LOOKBACK_DAYS,
     date_col: str = "obs_date",
-    state_partitions: int | None = 8,
     stats: list | None = None,
 ) -> None:
     """SNK4 composed with ST3 (VERDICT r3 #7): the reference's GIE
@@ -506,7 +515,6 @@ def run_gie_delete_reload(
             stats=stats,
         ),
         checkpoint,
-        state_partitions=state_partitions,
     )
 
 

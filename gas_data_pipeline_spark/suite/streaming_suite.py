@@ -1,9 +1,11 @@
 """Driver-facing streaming queries (SURVEY §2.9): each runs a real
-Structured Streaming job to completion (Trigger.AvailableNow — the
-deterministic form of the reference's hourly scheduler loop) and
-returns the materialized result for the batch oracle to check.
-Streaming vs batch equivalence IS the correctness property: the same
-plan over the same data must give the same answer either way.
+Structured Streaming job to completion and returns the materialized
+result for the batch oracle to check. One-shot drains run
+Trigger.AvailableNow; the multi-cycle queries hand their batches, as
+one frame with a ``batch`` column, to ``run_staged_stream``, the one
+scheduler loop. Streaming vs batch equivalence IS the correctness
+property: the same plan over the same data must give the same answer
+either way.
 """
 
 from __future__ import annotations
@@ -477,8 +479,8 @@ def stream_gie_delete_reload(spark: SparkSession, sf_dir: str) -> DataFrame:
     every later window day (A's provisional values REPLACED), and NO
     row for the omitted day (A's rows DELETED — a mere upsert would
     leave them and fail the oracle). Deterministic: 'now' is the max
-    event day, each snapshot is one file, and each AvailableNow run
-    consumes exactly the one new file recorded by the checkpoint."""
+    event day, and :func:`run_staged_stream` runs each snapshot as one
+    file and one micro-batch."""
     import os
 
     from gas_data_pipeline_spark.catalog import table
@@ -488,9 +490,6 @@ def stream_gie_delete_reload(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     scratch = tempfile.mkdtemp(prefix="gas_stream_gie_")
     target = os.path.join(scratch, "daily")
-    ckpt = os.path.join(scratch, "ckpt")
-    src = os.path.join(scratch, "incoming")
-    os.makedirs(src)
 
     ev = table(spark, sf_dir, "events")
 
@@ -531,49 +530,23 @@ def stream_gie_delete_reload(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(target)
     )
 
-    def stage_snapshot(df: DataFrame, name: str) -> str:
-        stage = os.path.join(scratch, f"stage_{name}")
-        df.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
-        return os.path.join(stage, part)
-
-    # Batch 1: provisional poll — half the events, full window.
-    # Batch 2: authoritative poll — full data, oldest window day gone.
-    staged = {
-        "b0": stage_snapshot(
-            daily.filter(
-                (F.col("n_obs_half") > 0) & (F.col("obs_date") >= cutoff)
-            ).select(
-                "obs_date",
-                "series_id",
-                F.col("n_obs_half").alias("n_obs"),
-                F.col("sum_value_half").alias("sum_value"),
-            ),
-            "b0",
-        ),
-        "b1": stage_snapshot(
-            daily.filter(F.col("obs_date") > cutoff).select(
-                "obs_date", "series_id", "n_obs", "sum_value"
-            ),
-            "b1",
-        ),
-    }
-
-    def drop(name: str):
-        def _move() -> None:
-            shutil.move(staged[name], os.path.join(src, f"{name}.parquet"))
-
-        return _move
-
-    snap_schema = "obs_date date, series_id bigint, n_obs bigint, sum_value double"
-    # ONE long-lived ProcessingTime stream replaces the two per-snapshot
-    # AvailableNow drains (see run_staged_stream) — identical batch
-    # boundaries, one fewer stream start/stop.
+    # Batch 0: provisional poll — half the events, full window.
+    # Batch 1: authoritative poll — full data, oldest window day gone.
+    polls = daily.filter(
+        (F.col("n_obs_half") > 0) & (F.col("obs_date") >= cutoff)
+    ).select(
+        "obs_date",
+        "series_id",
+        F.col("n_obs_half").alias("n_obs"),
+        F.col("sum_value_half").alias("sum_value"),
+        F.lit(0).alias("batch"),
+    ).unionByName(
+        daily.filter(F.col("obs_date") > cutoff).select(
+            "obs_date", "series_id", "n_obs", "sum_value", F.lit(1).alias("batch")
+        )
+    )
     run_staged_stream(
-        spark.readStream.schema(snap_schema).parquet(src),
-        gie_delete_reload_batch_fn(target, now=now_day),
-        ckpt,
-        [drop("b0"), drop("b1")],
+        polls, gie_delete_reload_batch_fn(target, now=now_day), scratch
     )
 
     return spark.read.parquet(target).select(
@@ -625,9 +598,6 @@ def stream_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     scratch = tempfile.mkdtemp(prefix="gas_stream_bloom_")
     corpus = os.path.join(scratch, "corpus")
-    ckpt = os.path.join(scratch, "ckpt")
-    src = os.path.join(scratch, "incoming")
-    os.makedirs(src)
 
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
     donor = docs.select(
@@ -643,7 +613,7 @@ def stream_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .otherwise(F.col("text"))
             .alias("text"),
-            (F.col("doc_id") % 3).alias("batch_id"),
+            (F.col("doc_id") % 3).alias("batch"),
         )
     )
 
@@ -659,36 +629,7 @@ def stream_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         admitted.write.mode("append").parquet(corpus)
         state.absorb(admitted)
 
-    # All three batch files staged in ONE write (optimization r14,
-    # guide §1.2: the per-batch coalesce(1) writes re-ran the donor
-    # join three times), then ONE long-lived 50 ms ProcessingTime
-    # stream consumes them via awaited atomic moves — batch contents
-    # and boundaries identical to the old three AvailableNow drains,
-    # minus two stream start/stop cycles and two staging jobs.
-    staged = os.path.join(scratch, "staged")
-    batched.repartition(F.col("batch_id")).write.partitionBy(
-        "batch_id"
-    ).parquet(staged)
-
-    def drop(b: int):
-        def _move() -> None:
-            pdir = os.path.join(staged, f"batch_id={b}")
-            part = next(
-                f for f in os.listdir(pdir) if f.endswith(".parquet")
-            )
-            shutil.move(
-                os.path.join(pdir, part), os.path.join(src, f"b{b}.parquet")
-            )
-
-        return _move
-
-    stream_schema = "doc_id bigint, text string"
-    run_staged_stream(
-        spark.readStream.schema(stream_schema).parquet(src),
-        admit,
-        ckpt,
-        [drop(b) for b in (0, 1, 2)],
-    )
+    run_staged_stream(batched, admit, scratch)
 
     return spark.read.parquet(corpus).select("doc_id")
 
@@ -772,11 +713,12 @@ def _hourly_lifecycle(
     the series dim), the field catalog's (name, inferred-type lattice)
     entries, and the bronze row count.
 
-    Deterministic despite the wall-clock trigger: each poll is one
-    file moved atomically into the watched dir, and the driver awaits
-    each cycle's completion before dropping the next file, so the two
-    ingests run strictly sequentially (max_instances=1 semantics) with
-    cycle 2's batch-priority beating cycle 1 regardless of timestamps.
+    Deterministic despite the wall-clock trigger: both polls run
+    through :func:`run_staged_stream`, which drops each as one file into
+    the watched dir and awaits its cycle before the next drop, so the
+    two ingests run strictly sequentially (max_instances=1 semantics)
+    with cycle 2's batch-priority beating cycle 1 regardless of
+    timestamps.
 
     Cost breakdown (sf0.1, local[32], median-of-3 — VERDICT r9 #6):
     harness ~0.9 s (polls aggregate 0.5 + staging 0.3 + stream start
@@ -792,17 +734,9 @@ def _hourly_lifecycle(
 
     from gas_data_pipeline_spark.catalog import table
     from gas_data_pipeline_spark.engine import GasDataEngine
-    from gas_data_pipeline_spark.streaming.incremental import (
-        await_processed_batches,
-        run_stream_until,
-        start_processing_time_stream,
-    )
 
     scratch = tempfile.mkdtemp(prefix="gas_hourly_e2e_")
     root = os.path.join(scratch, "lake")
-    ckpt = os.path.join(scratch, "ckpt")
-    src = os.path.join(scratch, "incoming")
-    os.makedirs(src)
     engine = GasDataEngine(spark, root, atomic_silver=atomic)
 
     ev = table(spark, sf_dir, "events")
@@ -812,15 +746,15 @@ def _hourly_lifecycle(
     # (user, hour) — identical rows to aggregating each subset
     # separately (a group with no even-id rows is excluded from the
     # provisional page by the n_events_half filter, exactly as the
-    # subset aggregate would exclude it). Staging both pages BEFORE
-    # the stream starts leaves only an atomic file move between
-    # scheduler cycles — the harness adds no Spark work mid-lifecycle.
+    # subset aggregate would exclude it). run_staged_stream stages both
+    # pages BEFORE the stream starts, which leaves only an atomic file
+    # move between scheduler cycles — the harness adds no Spark work
+    # mid-lifecycle.
     dec_val = F.col("value").cast("decimal(18,4)")
     even = F.col("event_id") % 2 == 0
-    # localCheckpoint: both staged poll pages project from this one
-    # aggregate — without it each stage_poll write re-runs the events
-    # scan+groupBy (harness cost, not lifecycle cost).
-    polls = ev.groupBy(
+    # localCheckpoint: both poll pages project from this one aggregate
+    # (harness cost, not lifecycle cost).
+    agg = ev.groupBy(
         "user_id", F.date_trunc("hour", F.col("ts")).alias("obs_hour")
     ).agg(
         F.count(F.lit(1)).cast("double").alias("n_events"),
@@ -828,71 +762,31 @@ def _hourly_lifecycle(
         F.count(F.when(even, F.lit(1))).cast("double").alias("n_events_half"),
         F.sum(F.when(even, dec_val)).cast("double").alias("sum_value_half"),
     ).localCheckpoint(eager=True)
-    p0 = polls.filter(F.col("n_events_half") > 0).select(
+    # Scheduler cycle 1: provisional poll (the even-id half). Cycle 2:
+    # authoritative re-poll, late revisions of every cycle-1 key.
+    polls = agg.filter(F.col("n_events_half") > 0).select(
         "user_id",
         "obs_hour",
         F.col("n_events_half").alias("n_events"),
         F.col("sum_value_half").alias("sum_value"),
+        F.lit(0).alias("batch"),
+    ).unionByName(
+        agg.select(
+            "user_id", "obs_hour", "n_events", "sum_value", F.lit(1).alias("batch")
+        )
     )
-    p1 = polls.select("user_id", "obs_hour", "n_events", "sum_value")
 
-    def stage_poll(df: DataFrame, name: str) -> str:
-        stage = os.path.join(scratch, f"stage_{name}")
-        df.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
-        return os.path.join(stage, part)
-
-    staged = {name: stage_poll(df, name) for name, df in (("p0", p0), ("p1", p1))}
-
-    def drop_poll(name: str) -> None:
-        shutil.move(staged[name], os.path.join(src, f"{name}.parquet"))
-
-    done: list[int] = []
-
-    def cycle(bdf: DataFrame, batch_id: int) -> None:
-        if bdf.isEmpty():
-            return
+    def cycle(bdf: DataFrame, seq: int) -> None:
         engine.ingest_batch(
-            bdf.select("user_id", "obs_hour", "n_events", "sum_value"),
+            bdf,
             dataset_id="hourlyfeed",
             source="rest-poll",
             id_cols=["user_id"],
             time_col="obs_hour",
             collect_stats=False,
         )
-        done.append(batch_id)
 
-    poll_schema = (
-        "user_id bigint, obs_hour timestamp, n_events double, sum_value double"
-    )
-    stream = spark.readStream.schema(poll_schema).parquet(src)
-    # 50 ms trigger / 25 ms poll: the production cadence is hourly —
-    # the short interval here only bounds the HARNESS dead time between
-    # a file drop and its cycle (VERDICT r5 #5); cycles still execute
-    # strictly sequentially, so the no-overlap semantics are identical.
-    def start():
-        return start_processing_time_stream(
-            stream, cycle, ckpt, interval="50 milliseconds"
-        )
-
-    # Scheduler cycle 1: provisional poll (the even-id half). Started
-    # through run_stream_until so a transient worker-spawn failure at
-    # stream start (zero committed offsets) gets one bounded restart
-    # against the same checkpoint.
-    drop_poll("p0")
-    q = run_stream_until(
-        start, lambda: len(done) >= 1, timeout_sec=180, poll_sec=0.025
-    )
-    try:
-        # Scheduler cycle 2: authoritative re-poll, late revisions of
-        # every cycle-1 key.
-        drop_poll("p1")
-        await_processed_batches(
-            q, lambda: len(done) >= 2, timeout_sec=180, poll_sec=0.025
-        )
-    finally:
-        q.stop()
-        q.awaitTermination()
+    run_staged_stream(polls, cycle, scratch)
 
     # Resolve silver through the configured commit layer: a plain scan,
     # or one atomic manifest resolution in versioned mode.
@@ -1116,15 +1010,11 @@ def stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gas_data_pipeline_spark.operators.drift import (
         baseline_bounds,
         histogram_on_bounds,
-        psi_from_histograms,
     )
 
     feature_cols = ["value", "hour_of_day"]
     scratch = tempfile.mkdtemp(prefix="gas_drift_mon_")
-    src = os.path.join(scratch, "incoming")
-    ckpt = os.path.join(scratch, "ckpt")
     log_path = os.path.join(scratch, "drift_log")
-    os.makedirs(src)
 
     ev = table(spark, sf_dir, "events")
     feats = ev.select(
@@ -1152,34 +1042,10 @@ def stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         bounds_path, base_hist_path, scratch, log_path, feature_cols
     )
 
-    # Both micro-batch files staged in ONE write, consumed by ONE
-    # long-lived ProcessingTime stream (optimization r14 — see
-    # run_staged_stream): contents and batch numbering identical to
-    # the old two AvailableNow drains, minus one stream start/stop
-    # and one staging job.
-    cur = feats.filter(F.col("event_id") % 2 == 1)
-    staged = os.path.join(scratch, "staged")
-    cur.withColumn(
+    cur = feats.filter(F.col("event_id") % 2 == 1).withColumn(
         "batch", F.when(F.col("event_id") % 4 == 1, 0).otherwise(1)
-    ).repartition(F.col("batch")).write.partitionBy("batch").parquet(staged)
-
-    def drop(b: int):
-        def _move() -> None:
-            pdir = os.path.join(staged, f"batch={b}")
-            part = next(f for f in os.listdir(pdir) if f.endswith(".parquet"))
-            shutil.move(
-                os.path.join(pdir, part), os.path.join(src, f"b{b}.parquet")
-            )
-
-        return _move
-
-    stream_schema = "event_id bigint, value double, hour_of_day double"
-    run_staged_stream(
-        spark.readStream.schema(stream_schema).parquet(src),
-        monitor,
-        ckpt,
-        [drop(0), drop(1)],
     )
+    run_staged_stream(cur, monitor, scratch)
 
     return spark.read.parquet(os.path.join(log_path, "batch_*")).select(
         "batch_seq", "feature", "n_base", "n_cur", "psi"
@@ -1217,11 +1083,8 @@ def stream_quarantine_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gas_data_pipeline_spark.catalog import table
 
     scratch = tempfile.mkdtemp(prefix="gas_stream_quar_")
-    src = os.path.join(scratch, "incoming")
-    ckpt = os.path.join(scratch, "ckpt")
     silver = os.path.join(scratch, "silver")
     quar = os.path.join(scratch, "quarantine")
-    os.makedirs(src)
 
     docs = table(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
     line = F.to_json(F.struct("doc_id", "lang", "n_chars"))
@@ -1270,24 +1133,7 @@ def stream_quarantine_split(spark: SparkSession, sf_dir: str) -> DataFrame:
             for w in writes:
                 w.result()
 
-    # Both batch files staged in ONE write, consumed by ONE long-lived
-    # ProcessingTime stream (optimization r14 — see run_staged_stream):
-    # same contents and batch numbering as the old two AvailableNow
-    # drains, minus one stream start/stop and one staging job.
-    staged = os.path.join(scratch, "staged")
-    batched.repartition(F.col("batch")).write.partitionBy("batch").text(staged)
-
-    def drop(b: int):
-        def _move() -> None:
-            pdir = os.path.join(staged, f"batch={b}")
-            part = next(f for f in os.listdir(pdir) if f.endswith(".txt"))
-            shutil.move(
-                os.path.join(pdir, part), os.path.join(src, f"b{b}.txt")
-            )
-
-        return _move
-
-    run_staged_stream(spark.readStream.text(src), split, ckpt, [drop(0), drop(1)])
+    run_staged_stream(batched, split, scratch, fmt="text")
 
     per_lang = (
         spark.read.parquet(silver)
@@ -1417,10 +1263,7 @@ def stream_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gas_data_pipeline_spark.catalog import table
 
     scratch = tempfile.mkdtemp(prefix="gas_cms_mon_")
-    src = os.path.join(scratch, "incoming")
-    ckpt = os.path.join(scratch, "ckpt")
     log_dir = os.path.join(scratch, "hh_log")
-    os.makedirs(src)
 
     ev = table(spark, sf_dir, "events").select("event_id", "user_id")
     tracked = [
@@ -1433,32 +1276,8 @@ def stream_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     monitor = cms_monitor_writer(scratch, log_dir, tracked)
 
-    # Both batch files staged in ONE write, consumed by ONE long-lived
-    # ProcessingTime stream (optimization r14 — see run_staged_stream):
-    # same contents and batch numbering as the old two AvailableNow
-    # drains, minus one stream start/stop and one staging job.
-    staged = os.path.join(scratch, "staged")
-    ev.withColumn("batch", (F.col("event_id") % 2).cast("int")).repartition(
-        F.col("batch")
-    ).write.partitionBy("batch").parquet(staged)
-
-    def drop(b: int):
-        def _move() -> None:
-            pdir = os.path.join(staged, f"batch={b}")
-            part = next(f for f in os.listdir(pdir) if f.endswith(".parquet"))
-            shutil.move(
-                os.path.join(pdir, part), os.path.join(src, f"b{b}.parquet")
-            )
-
-        return _move
-
-    stream_schema = "event_id bigint, user_id bigint"
-    run_staged_stream(
-        spark.readStream.schema(stream_schema).parquet(src),
-        monitor,
-        ckpt,
-        [drop(0), drop(1)],
-    )
+    batched = ev.withColumn("batch", (F.col("event_id") % 2).cast("int"))
+    run_staged_stream(batched, monitor, scratch)
 
     return spark.read.parquet(os.path.join(log_dir, "batch_*")).select(
         "batch_seq", "user_id", "cms_estimate"
@@ -1535,22 +1354,28 @@ def stream_rest_datasource_ingest(spark: SparkSession, sf_dir: str) -> DataFrame
         .load()
     )
 
+    started: list = []
+
     def start():
-        return (
+        started.append(
             sdf.writeStream.format("memory")
             .queryName(name)
             .option("checkpointLocation", scratch + "/ckpt")
             .trigger(processingTime="0 seconds")
             .start()
         )
+        return started[-1]
+
+    def rows_in() -> int:
+        # The query's own progress, reported after each batch's sink
+        # commit: polling it starts no Spark job.
+        return sum(p["numInputRows"] for p in started[-1].recentProgress)
 
     # Start with a bounded one-retry: a transient Python-worker spawn
     # failure at stream start (query still INITIALIZING, zero offsets
     # committed) gets one fresh start against the same checkpoint —
     # nothing was committed, so the restart is exactly-once-safe.
-    q = run_stream_until(
-        start, lambda: spark.table(name).count() >= 12, timeout_sec=120.0
-    )
+    q = run_stream_until(start, lambda: rows_in() >= 12, timeout_sec=120.0)
     q.stop()
     return spark.table(name).select(
         "chunk_start",

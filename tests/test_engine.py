@@ -415,6 +415,44 @@ def test_dedup_near_auto_routes_closed_vocab_to_bitset(spark, tmp_path):
     assert pairs.count() > 0  # rotated docs share 90%+ of shingles
 
 
+def test_dedup_near_auto_routes_a_27k_vocabulary_to_prefix(spark, tmp_path):
+    """sf0.1's documents have ~27k distinct word 3-grams, under
+    BITSET_MAX_VOCAB; there the bitset kernel is the slow one, so 'auto'
+    routes a vocabulary that size to the prefix filter. Only the plan
+    is read: the kernel never runs."""
+    from gas_data_pipeline_spark.engine import GasDataEngine
+
+    eng = GasDataEngine(spark, str(tmp_path / "lake"))
+    # 970 docs x 28 unique word 3-grams = 27,160 distinct shingles.
+    docs = spark.range(970).selectExpr(
+        "id AS doc_id",
+        "array_join(transform(sequence(0, 29), i -> concat('w', id * 30 + i)), ' ') AS text",
+    )
+    pairs = eng.dedup_near(docs, "doc_id", "text", 0.5, "auto")
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" not in plan
+    assert "Join" in plan
+
+
+def test_bitset_kernel_leaves_no_cached_sets(spark):
+    """The kernel caches nothing: once its result is collected the
+    session's cache manager is empty, so a later call shingles again
+    instead of reading the sets of an earlier one."""
+    from gas_data_pipeline_spark.operators.dedup import (
+        jaccard_pairs_bitset_gemm,
+        word_shingles,
+    )
+
+    spark.catalog.clearCache()
+    docs = spark.range(60).selectExpr(
+        "id AS doc_id",
+        "array_join(transform(sequence(0, 9), i -> concat('t', (id + i) % 20)), ' ') AS text",
+    )
+    pairs = jaccard_pairs_bitset_gemm(docs, "doc_id", word_shingles(F.col("text"), n=3), 0.5)
+    assert pairs.collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_bitset_kernel_refuses_open_vocab(spark):
     from gas_data_pipeline_spark.operators.dedup import (
         jaccard_pairs_bitset_gemm,

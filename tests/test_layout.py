@@ -377,46 +377,49 @@ def test_heavy_hitters_decimal_threshold_boundary(spark):
     assert got == {"edge"}
 
 
-def test_grouped_topk_raises_on_nan_order_values(spark):
-    """NaN in the order column must fail loudly (pandas and Spark
-    disagree on NaN placement), not silently return wrong rows."""
-    import pytest
+def test_grouped_topk_ranks_nan_like_the_naive_window(spark):
+    """NaN order values rank exactly where the naive window ranks them
+    (Spark orders NaN greatest, on both sides of the map-side cut), next
+    to nulls, which sort last in either direction."""
     from pyspark.sql import functions as F
+    from pyspark.sql.window import Window
     from gas_data_pipeline_spark.operators.topk import grouped_topk
 
-    df = spark.range(20).select(
+    df = spark.range(40).select(
         (F.col("id") % 2).alias("g"),
-        F.when(F.col("id") == 7, F.lit(float("nan")))
+        F.when(F.col("id").isin(7, 8), F.lit(float("nan")))
+        .when(F.col("id") % 5 == 0, F.lit(None))
         .otherwise(F.col("id").cast("double"))
         .alias("v"),
         F.col("id").alias("tid"),
     )
-    out = grouped_topk(df.repartition(4), ["g"], "v", k=3, tiebreak="tid")
-    with pytest.raises(Exception) as exc_info:
-        out.collect()
-    assert "NaN" in str(exc_info.value)
-    # nulls (not NaN) stay supported
-    clean = df.withColumn(
-        "v", F.when(F.isnan("v"), F.lit(None)).otherwise(F.col("v"))
-    )
-    rows = grouped_topk(clean.repartition(4), ["g"], "v", k=3, tiebreak="tid").collect()
-    assert len(rows) == 6
-    assert "__topk_nan_guard" not in rows[0].asDict()
 
+    def naive(descending):
+        v = F.col("v").desc_nulls_last() if descending else F.col("v").asc_nulls_last()
+        w = Window.partitionBy("g").orderBy(v, F.col("tid").asc_nulls_last())
+        # A threshold of -1 turns off the map-side cut: the full window.
+        spark.conf.set("spark.sql.optimizer.windowGroupLimitThreshold", "-1")
+        try:
+            return {
+                (r.g, r.tid, r.rk)
+                for r in df.withColumn("rk", F.row_number().over(w))
+                .filter(F.col("rk") <= 3)
+                .collect()
+            }
+        finally:
+            spark.conf.unset("spark.sql.optimizer.windowGroupLimitThreshold")
 
-def test_grouped_topk_rejects_reserved_guard_column(spark):
-    import pytest
-    from pyspark.sql import functions as F
-    from gas_data_pipeline_spark.operators.topk import grouped_topk
-
-    df = spark.range(10).select(
-        (F.col("id") % 2).alias("g"),
-        F.col("id").cast("double").alias("v"),
-        F.col("id").alias("tid"),
-        F.lit(None).cast("string").alias("__topk_nan_guard"),
-    )
-    with pytest.raises(ValueError):
-        grouped_topk(df, ["g"], "v", k=3, tiebreak="tid")
+    for descending in (True, False):
+        got = {
+            (r.g, r.tid, r.rk)
+            for r in grouped_topk(
+                df.repartition(4), ["g"], "v", k=3, descending=descending, tiebreak="tid"
+            ).collect()
+        }
+        assert got == naive(descending)
+        if descending:
+            # NaN is greatest: both NaN rows lead their groups.
+            assert {(1, 7, 1), (0, 8, 1)} <= got
 
 
 def test_hll_register_rollup_identical_to_direct(spark):

@@ -166,6 +166,28 @@ def test_package_builds_driver_frames_only_through_local_table():
     assert calls == []
 
 
+def test_suite_moves_no_file_into_a_watched_dir():
+    # streaming.incremental.run_staged_stream is the one place a staged
+    # file moves into a stream's watched dir: no suite query moves
+    # files itself.
+    import ast
+    import pathlib
+
+    import gas_data_pipeline_spark
+
+    root = pathlib.Path(gas_data_pipeline_spark.__file__).parent
+    calls = [
+        f"{path.relative_to(root)}:{n.lineno}"
+        for path in sorted((root / "suite").rglob("*.py"))
+        for n in ast.walk(ast.parse(path.read_text()))
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and isinstance(n.func.value, ast.Name)
+        and (n.func.value.id, n.func.attr) in {("shutil", "move"), ("os", "replace")}
+    ]
+    assert calls == []
+
+
 def test_text_profile_is_narrow(spark):
     plan = _plan(spark, "text_quality_langid")
     assert "Exchange" not in plan
@@ -392,17 +414,29 @@ def test_block_gemm_runs_one_python_stage(spark, name):
     assert "FlatMapGroupsInPandas" not in plan
 
 
-def test_char_jaccard_runs_one_shingler_and_one_scorer(spark):
-    # The shingle sets pack in the shared SQL pack and the bitset words
-    # are built inside the block scorer: the shingler UDF and the
-    # scorer are the only Python operators, and no grouped-map pack is
-    # left. The cached sets print once per scan of them (and again
-    # under AQE's initial plan), so identical operator lines count once.
+def test_char_jaccard_scores_checkpointed_sets_in_one_python_stage(spark):
+    # The shingler runs once, in the kernel's eager localCheckpoint of
+    # the shingle sets, so the query's plan scans the checkpoint and
+    # holds no shingler. The sets pack in the shared SQL pack and the
+    # bitset words are built inside the block scorer: the scorer is the
+    # plan's one Python operator, and no grouped-map pack is left.
+    # Identical operator lines (AQE prints the plan twice) count once.
     plan = _plan(spark, "dedup_char_jaccard")
     lines = {ln.strip(" :+-") for ln in plan.splitlines()}
-    assert sum(ln.startswith("ArrowEvalPython") for ln in lines) == 1
+    assert "Scan ExistingRDD" in plan
+    assert "ArrowEvalPython" not in plan
     assert sum(ln.startswith("MapInPandas") for ln in lines) == 1
     assert "FlatMapGroupsInPandas" not in plan
+
+
+@pytest.mark.parametrize("name", ["grouped_topk_bounded", "sample_k_per_group"])
+def test_grouped_topk_cuts_map_side_without_python(spark, name):
+    # Catalyst's partial WindowGroupLimit keeps each partition's
+    # per-group top-k before the exchange: no pandas fold is left.
+    plan = _plan(spark, name)
+    assert "MapInPandas" not in plan
+    partial = [ln for ln in plan.splitlines() if "WindowGroupLimit" in ln]
+    assert any(ln.rstrip().endswith("Partial") for ln in partial)
 
 
 def test_minhash_signature_small_corpus_runs_one_task(spark):
