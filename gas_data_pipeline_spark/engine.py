@@ -18,8 +18,9 @@ root::
 
 The ingest path is ONE linear DataFrame job (SURVEY §3.2): land bronze
 → melt wide→long with the series id derived in the same pass → window
-dedup → partition-scoped upsert. The reference's per-series loop
-(run_all.py:91-118, O(series × batch)) does not exist here.
+dedup → one atomic versioned commit of the batch's dates. The
+reference's per-series loop (run_all.py:91-118, O(series × batch))
+does not exist here.
 """
 
 from __future__ import annotations
@@ -31,12 +32,12 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gas_data_pipeline_spark.functions import make_series_id
+# The store's functions are looked up on the module at call time, so a
+# patched ``versioned`` attribute (a tracing span, a test double)
+# takes effect without re-importing the engine.
+from gas_data_pipeline_spark.pipeline import versioned
 from gas_data_pipeline_spark.pipeline.bronze import bronze_append, read_bronze
 from gas_data_pipeline_spark.pipeline.dims import insert_if_absent
-from gas_data_pipeline_spark.pipeline.silver import (
-    read_observations,
-    upsert_observations,
-)
 from gas_data_pipeline_spark.suite.reshape import melt_numeric
 
 
@@ -47,20 +48,21 @@ class GasDataEngine:
     def __init__(
         self, spark: SparkSession, root: str, atomic_silver: bool = True
     ):
-        """``atomic_silver=True`` (the default since round 12 — VERDICT
-        r11 #6) routes the observation store through the versioned
-        manifest-commit layer (pipeline/versioned.py): identical
-        upsert semantics, but each commit is one atomic manifest
-        rename (snapshot-isolated readers, structural partition
-        sharing, time travel, manifest-declared schema evolution,
-        stats-pruned reads) instead of a dynamic partition overwrite.
-        The plain path stays available as an explicit opt-out for
-        stores that predate the manifest layer — it carries no
-        schema-evolution contract (pipeline/silver.py documents
-        that)."""
+        """The observation store is the versioned manifest-commit
+        store (pipeline/versioned.py): each upsert is one atomic
+        manifest rename, with snapshot-isolated readers, structural
+        partition sharing, time travel, manifest-declared schema
+        evolution and stats-pruned reads. ``atomic_silver`` accepts
+        only ``True``; ``False`` named the plain dynamic-overwrite
+        store, which is removed, and raises."""
+        if not atomic_silver:
+            raise ValueError(
+                "atomic_silver=False selected the plain dynamic-overwrite "
+                "silver store, which is removed; the versioned store "
+                "(pipeline/versioned.py) is the only observation store"
+            )
         self.spark = spark
         self.root = root
-        self.atomic_silver = atomic_silver
         self.bronze_path = os.path.join(root, "bronze")
         self.obs_path = os.path.join(root, "silver", "observations")
         self.series_path = os.path.join(root, "dims", "meta_series")
@@ -81,7 +83,7 @@ class GasDataEngine:
         collect_stats: bool = True,
     ) -> dict[str, int] | None:
         """Full ingest: bronze landing, schema discovery, series
-        auto-registration, melt, silver upsert — the reference's
+        auto-registration, melt, versioned silver upsert — the reference's
         fetch→raw→discover→register→transform→load chain
         (run_all.py:70-118) as one set-based job per stage.
 
@@ -186,28 +188,18 @@ class GasDataEngine:
                 self.series_path,
                 keys=["series_id"],
             )
-            # SNK2 — idempotent last-write-wins upsert (atomic
-            # manifest-commit variant when configured). The atomic
-            # path goes through the client retry loop: a scheduler
-            # cycle fenced by a concurrent committer re-reads the new
-            # snapshot and re-merges instead of failing the whole
-            # ingest (the raw upsert raises — correct for callers that
-            # manage their own retry, wrong as the engine default).
-            if self.atomic_silver:
-                from gas_data_pipeline_spark.pipeline.versioned import (
-                    upsert_with_retry,
-                )
-
-                f_obs = pool.submit(
-                    upsert_with_retry,
-                    self.spark,
-                    observations,
-                    self.obs_path,
-                )
-            else:
-                f_obs = pool.submit(
-                    upsert_observations, self.spark, observations, self.obs_path
-                )
+            # SNK2 — idempotent last-write-wins upsert, one atomic
+            # manifest commit, through the client retry loop: a
+            # scheduler cycle fenced by a concurrent committer re-reads
+            # the new snapshot and re-merges instead of failing the
+            # whole ingest (the raw upsert raises — correct for callers
+            # that manage their own retry, wrong as the engine default).
+            f_obs = pool.submit(
+                versioned.upsert_with_retry,
+                self.spark,
+                observations,
+                self.obs_path,
+            )
             f_bronze.result()
             f_fields.result()
             new_series = f_series.result()
@@ -283,25 +275,16 @@ class GasDataEngine:
     def _read_obs(
         self, series_id: str | None = None, start=None, end=None
     ) -> DataFrame:
-        """The observation store, resolved through the configured
-        commit layer: a plain parquet scan, or the current manifest
-        snapshot when ``atomic_silver`` (one atomic resolution — a
-        concurrent upsert never yields a mixed read). Under the
-        versioned store the optional predicates prune at the MANIFEST
-        level — a date range selects partition entries and a series id
-        consults the per-partition column stats BEFORE any file
-        listing (round 12: get_data previously read every partition
-        and filtered at row level, so the metadata prune never fired
-        on the API's hottest path). Row-level filters still apply
-        inside, so callers that also filter are merely redundant,
-        never wrong."""
-        if not self.atomic_silver:
-            return self.spark.read.parquet(self.obs_path)
-        from gas_data_pipeline_spark.pipeline.versioned import (
-            read_observations_versioned,
-        )
-
-        return read_observations_versioned(
+        """The observation store's current manifest snapshot (one
+        atomic resolution — a concurrent upsert never yields a mixed
+        read). The optional predicates prune at the MANIFEST level — a
+        date range selects partition entries and a series id consults
+        the per-partition column stats BEFORE any file listing (the
+        reference's B-tree on (series_id, observation_time) —
+        db_queries.sql:79-80 — re-expressed as commit metadata).
+        Row-level filters still apply inside, so callers that also
+        filter are merely redundant, never wrong."""
+        return versioned.read_observations_versioned(
             self.spark,
             self.obs_path,
             start=start,
@@ -399,39 +382,11 @@ class GasDataEngine:
         if last_days is not None:
             now = datetime.now(timezone.utc)
             start, end = now - timedelta(days=last_days), now
-        if not self.atomic_silver:
-            return read_observations(
-                self.spark, self.obs_path, series_id=series_id, start=start, end=end
-            )
-        from gas_data_pipeline_spark.pipeline.versioned import (
-            read_observations_versioned,
-        )
-
-        # Manifest-level pruning replaces directory-listing pruning;
-        # the series predicate prunes on the manifest's per-partition
-        # column stats too (the reference's B-tree on (series_id,
-        # observation_time) — db_queries.sql:79-80 — re-expressed as
-        # commit metadata), and the row-level filter rides inside.
-        df = read_observations_versioned(
-            self.spark,
-            self.obs_path,
-            start=start,
-            end=end,
-            series_ids=series_id,
-        )
-        return df.orderBy("observation_time")
+        return self._read_obs(series_id, start, end).orderBy("observation_time")
 
     # ------------------------------------------------------------------
-    # Table maintenance (atomic store only — round 12)
+    # Table maintenance (round 12)
     # ------------------------------------------------------------------
-
-    def _require_atomic(self, op: str) -> None:
-        if not self.atomic_silver:
-            raise ValueError(
-                f"{op} requires the versioned store "
-                "(GasDataEngine(atomic_silver=True), the default); the "
-                "plain silver store has no snapshot/manifest layer"
-            )
 
     def read_observations_at(
         self, version: int | None = None, as_of=None
@@ -441,23 +396,13 @@ class GasDataEngine:
         datetime, or ISO string; resolves to the newest snapshot
         committed at or before the bound). Either, not both; until
         vacuum retention expires the snapshot."""
-        self._require_atomic("read_observations_at")
-        from gas_data_pipeline_spark.pipeline.versioned import (
-            read_observations_versioned,
-        )
-
-        return read_observations_versioned(
+        return versioned.read_observations_versioned(
             self.spark, self.obs_path, version=version, as_of=as_of
         )
 
     def changelog(self, from_version: int, to_version: int | None = None):
         """CDC between committed versions (churned partitions only)."""
-        self._require_atomic("changelog")
-        from gas_data_pipeline_spark.pipeline.versioned import (
-            changelog_versioned,
-        )
-
-        return changelog_versioned(
+        return versioned.changelog_versioned(
             self.spark, self.obs_path, from_version, to_version
         )
 
@@ -469,23 +414,15 @@ class GasDataEngine:
         the same logical delete as a deleted-rows-sized deletion
         vector instead of a partition rewrite — the small-delete path
         on a large table. Returns the committed manifest."""
-        self._require_atomic("delete_observations")
-        from gas_data_pipeline_spark.pipeline.versioned import (
-            delete_versioned,
+        return versioned.delete_versioned(
+            self.spark, self.obs_path, predicate, mode=mode
         )
-
-        return delete_versioned(self.spark, self.obs_path, predicate, mode=mode)
 
     def update_observations(self, predicate: Column, assignments: dict) -> dict:
         """Row-level UPDATE as a commit (copy-on-write; key and
         partition columns are refused targets — a key change is
         delete + insert). Returns the committed manifest."""
-        self._require_atomic("update_observations")
-        from gas_data_pipeline_spark.pipeline.versioned import (
-            update_versioned,
-        )
-
-        return update_versioned(
+        return versioned.update_versioned(
             self.spark, self.obs_path, predicate, assignments
         )
 
@@ -495,12 +432,9 @@ class GasDataEngine:
         or writes; the manifest's stats and key fingerprints bound
         which partitions are even referenced). The next rewrite of
         each date materializes it. Returns the committed manifest."""
-        self._require_atomic("erase_series")
-        from gas_data_pipeline_spark.pipeline.versioned import (
-            delete_versioned_by_key,
+        return versioned.delete_versioned_by_key(
+            self.spark, self.obs_path, series_ids
         )
-
-        return delete_versioned_by_key(self.spark, self.obs_path, series_ids)
 
     def compact_silver(
         self,
@@ -509,12 +443,7 @@ class GasDataEngine:
     ) -> dict:
         """Layout-only rewrite commit for fragmented partitions
         (bin-packed to target_bytes). Returns the committed manifest."""
-        self._require_atomic("compact_silver")
-        from gas_data_pipeline_spark.pipeline.versioned import (
-            compact_versioned,
-        )
-
-        return compact_versioned(
+        return versioned.compact_versioned(
             self.spark,
             self.obs_path,
             min_files=min_files,
@@ -526,20 +455,14 @@ class GasDataEngine:
         Iceberg's metadata tables, one dict): fragmentation
         candidates, both delete-debt grains, fingerprint coverage,
         and the time-travel window. Metadata-only."""
-        self._require_atomic("silver_status")
-        from gas_data_pipeline_spark.pipeline.versioned import table_status
-
-        return table_status(self.obs_path)
+        return versioned.table_status(self.obs_path)
 
     def vacuum_silver(
         self, retain_last_n: int = 1, min_age_seconds: float = 86400.0
     ) -> list[str]:
         """Expire snapshots outside the retention window and reclaim
         unreferenced version directories. Returns the deleted dirs."""
-        self._require_atomic("vacuum_silver")
-        from gas_data_pipeline_spark.pipeline.versioned import vacuum
-
-        return vacuum(
+        return versioned.vacuum(
             self.obs_path,
             retain_last_n=retain_last_n,
             min_age_seconds=min_age_seconds,

@@ -236,7 +236,7 @@ def _file_key_fingerprint(pf, idx: dict) -> "list | dict | None":
         return None
 
 
-def _file_stats(path: str, fingerprints: bool = True) -> dict:
+def _file_stats(path: str) -> dict:
     """Footer min/max of ONE parquet file: ``{col: [min, max] | None}``
     over STATS_COLS, plus the file's distinct-key fingerprint under
     ``FP_KEY`` (round 14 — see the parameter block above). ``None``
@@ -279,6 +279,5 @@ def _file_stats(path: str, fingerprints: bool = True) -> dict:
             lo = mn if lo is None else min(lo, mn)
             hi = mx if hi is None else max(hi, mx)
         out[c] = [lo, hi] if ok and lo is not None else None
-    if fingerprints:
-        out[FP_KEY] = _file_key_fingerprint(pf, idx)
+    out[FP_KEY] = _file_key_fingerprint(pf, idx)
     return out

@@ -274,13 +274,15 @@ def _delete_reload_partitioned(
         out = survivors.unionByName(replacement, allowMissingColumns=True)
 
     if remaining:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         # Redistribute on the partition key before partitionBy so file
-        # count tracks partitions, not tasks x partitions (see
-        # silver.upsert_observations).
+        # count tracks partitions, not tasks x partitions. Dynamic
+        # overwrite is this write's own option: setting it on the
+        # session would turn every later static partitioned overwrite
+        # in the session into one that keeps stale partitions.
         (
             out.repartition(F.col(partition_col))
             .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy(partition_col)
             .parquet(path)
         )

@@ -32,8 +32,8 @@ its new directory with fresh stats, a touched date the write emitted
 nothing for leaves the manifest. The writers:
 
 - upsert: the last-write-wins merge of the batch with the live rows of
-  the batch's dates (:func:`silver.merge_last_write_wins`, the same
-  one-shuffle plan the plain silver upsert runs);
+  the batch's dates (:func:`silver.merge_last_write_wins`, one
+  shuffle for dedup and write shape);
 - compaction: the range-clustered rewrite of the fragmented dates;
 - copy-on-write delete: the surviving rows of the matched dates;
 - update: the assigned rows of the matched dates.
@@ -683,10 +683,7 @@ def _partition_stats(pdir: str) -> dict:
 
 
 def _collect_stats(
-    spark: SparkSession,
-    pdirs: dict[str, str],
-    local_max: int | None = None,
-    fingerprints: bool = True,
+    spark: SparkSession, pdirs: dict[str, str]
 ) -> tuple[dict, dict]:
     """Footer stats for MANY partitions in ONE parallelized job
     (VERDICT r12 #3): the commit path used to read every affected part
@@ -697,13 +694,11 @@ def _collect_stats(
     fanned out over the cluster) and the driver collects one
     STATS_COLS-bounded row per file — metadata-sized, the same
     planning-time material Iceberg's driver reads from its manifests.
-    Commits of at most ``local_max`` files (defaulting to the module's
-    ``_STATS_LOCAL_MAX``; a deployment knob — ~16 for object storage,
-    where a footer read costs 20-50 ms) skip the job and read locally
-    (the job's fixed scheduling cost dwarfs a handful of footer reads
-    — adaptive, not a scale ceiling). Values are identical on every
-    path by construction (shared :func:`_file_stats` kernel, pinned by
-    test).
+    Commits of at most ``_STATS_LOCAL_MAX`` files skip the job and
+    read locally (the job's fixed scheduling cost dwarfs a handful of
+    footer reads — adaptive, not a scale ceiling). Values are
+    identical on every path by construction (shared
+    :func:`_file_stats` kernel, pinned by test).
 
     Returns ``(per_partition, per_file)``:
 
@@ -726,19 +721,14 @@ def _collect_stats(
     ]
     if not pairs:
         return {}, {}
-    if local_max is None:
-        local_max = _STATS_LOCAL_MAX
-    if len(pairs) <= local_max:
+    if len(pairs) <= _STATS_LOCAL_MAX:
         # Small commit: a Spark job costs a fixed scheduling round-trip
         # (~0.2-0.3 s) that DWARFS a handful of local footer reads —
         # the adaptive cutoff keeps hourly-shaped commit latency flat
         # while wide commits (backfills, compactions of many dates)
         # still fan out. Same kernel either path, so values cannot
         # differ (both paths pinned by the equality test).
-        rows = [
-            (d, fn, _file_stats(path, fingerprints=fingerprints))
-            for d, fn, path in pairs
-        ]
+        rows = [(d, fn, _file_stats(path)) for d, fn, path in pairs]
     else:
         # The map closure must ship BY VALUE: cloudpickle's default
         # serializes a module-level function as a (module, qualname)
@@ -763,7 +753,7 @@ def _collect_stats(
         n = max(1, min(len(pairs), int(sc.defaultParallelism)))
         rows = (
             sc.parallelize(pairs, n)
-            .map(lambda t: (t[0], t[1], kernel(t[2], fingerprints)))
+            .map(lambda t: (t[0], t[1], kernel(t[2])))
             .collect()
         )
     per_file: dict = {}
@@ -871,8 +861,6 @@ def _rewrite_commit(
     current: dict | None,
     rows: DataFrame,
     touched,
-    stats_local_max: int | None,
-    key_fingerprints: bool,
 ) -> dict:
     """The rewrite commit every data-writing commit shares: ``rows``
     (carrying ``obs_date``) become the whole new content of the
@@ -896,9 +884,7 @@ def _rewrite_commit(
         for d, rel in rels.items()
         if os.path.isdir(os.path.join(root, rel))
     }
-    stats, file_stats = _collect_stats(
-        spark, written, local_max=stats_local_max, fingerprints=key_fingerprints
-    )
+    stats, file_stats = _collect_stats(spark, written)
     return _publish_fold(
         root,
         current,
@@ -914,18 +900,14 @@ def upsert_observations_versioned(
     batch: DataFrame,
     root: str,
     order_cols: list[str] | None = None,
-    stats_local_max: int | None = None,
-    key_fingerprints: bool = True,
 ) -> dict:
-    """SNK2 with an atomic commit: same idempotent last-write-wins
-    semantics as :func:`silver.upsert_observations`, published as a
-    new table version. Returns the committed manifest.
-
-    ``stats_local_max`` tunes the commit-time stats crossover (how
-    many touched files are read serially on the driver before the
-    footer job fans out — VERDICT r13 #7): default 64 fits local
-    disk; drop to ~16 against object storage where a footer read
-    costs 20-50 ms. Values are path-independent."""
+    """SNK2 with an atomic commit: the reference's idempotent
+    ``ON CONFLICT DO UPDATE`` (loader.py:7-35) as one last-write-wins
+    merge (:func:`silver.merge_last_write_wins`) of the batch with the
+    live rows of its dates, published as a new table version.
+    ``order_cols`` (default ``ingestion_time``) break ties descending;
+    add a unique column (e.g. an event id) to make ties
+    deterministic. Returns the committed manifest."""
     os.makedirs(root, exist_ok=True)
     current = read_manifest(root, with_stats=False)
     # Cached: the batch feeds both the date discovery and the merge.
@@ -939,10 +921,7 @@ def upsert_observations_versioned(
             _live_rows(spark, root, current, affected),
             order_cols or ["ingestion_time"],
         )
-        return _rewrite_commit(
-            spark, root, current, merged, affected, stats_local_max,
-            key_fingerprints,
-        )
+        return _rewrite_commit(spark, root, current, merged, affected)
     finally:
         batch.unpersist()
 
@@ -953,8 +932,6 @@ def upsert_with_retry(
     root: str,
     order_cols: list[str] | None = None,
     max_attempts: int = 3,
-    stats_local_max: int | None = None,
-    key_fingerprints: bool = True,
 ) -> dict:
     """The Iceberg client loop around the fence: a writer refused at
     publish re-reads the NEW snapshot and re-merges the same batch
@@ -967,11 +944,7 @@ def upsert_with_retry(
     deployment problem, not one more silent retry."""
     for attempt in range(max_attempts):
         try:
-            return upsert_observations_versioned(
-                spark, batch, root, order_cols,
-                stats_local_max=stats_local_max,
-                key_fingerprints=key_fingerprints,
-            )
+            return upsert_observations_versioned(spark, batch, root, order_cols)
         except ConcurrentCommitError:
             if attempt == max_attempts - 1:
                 raise
@@ -1276,8 +1249,6 @@ def compact_versioned(
     min_files: int = 2,
     sort_within: bool = True,
     target_bytes: int = 128 * 1024 * 1024,
-    stats_local_max: int | None = None,
-    key_fingerprints: bool = True,
 ) -> dict:
     """Layout-only commit (Iceberg's ``rewrite_data_files``): rewrite
     every partition whose directory holds >= ``min_files`` part files
@@ -1343,9 +1314,7 @@ def compact_versioned(
         # own sort on ``__pdate`` alone, and the optimizer would drop
         # this one as redundant.
         rows = rows.sortWithinPartitions(F.col(PARTITION_COL).cast("string"), *KEYS)
-    return _rewrite_commit(
-        spark, root, current, rows, n_out, stats_local_max, key_fingerprints
-    )
+    return _rewrite_commit(spark, root, current, rows, n_out)
 
 
 def _rewrite_matching(
@@ -1353,8 +1322,6 @@ def _rewrite_matching(
     root: str,
     predicate,
     keep,
-    stats_local_max: int | None,
-    key_fingerprints: bool,
 ) -> dict:
     """Copy-on-write DELETE/UPDATE: find the dates holding a row where
     ``predicate`` is TRUE (a NULL evaluation counts as no match — SQL's
@@ -1370,18 +1337,14 @@ def _rewrite_matching(
     rows = keep(_live_rows(spark, root, current, hit), pred).repartition(
         F.col(PARTITION_COL)
     )
-    return _rewrite_commit(
-        spark, root, current, rows, hit, stats_local_max, key_fingerprints
-    )
+    return _rewrite_commit(spark, root, current, rows, hit)
 
 
 def delete_versioned(
     spark: SparkSession,
     root: str,
     predicate,
-    stats_local_max: int | None = None,
     mode: str = "copy-on-write",
-    key_fingerprints: bool = True,
 ) -> dict:
     """Row-level DELETE as a commit (Delta/Iceberg copy-on-write
     DELETE): partitions containing matches rewrite WITHOUT the matched
@@ -1414,8 +1377,7 @@ def delete_versioned(
             "or 'merge-on-read'"
         )
     return _rewrite_matching(
-        spark, root, predicate, lambda live, pred: live.filter(~pred),
-        stats_local_max, key_fingerprints,
+        spark, root, predicate, lambda live, pred: live.filter(~pred)
     )
 
 
@@ -1424,8 +1386,6 @@ def update_versioned(
     root: str,
     predicate,
     assignments: dict,
-    stats_local_max: int | None = None,
-    key_fingerprints: bool = True,
 ) -> dict:
     """Row-level UPDATE as a commit (Delta/Iceberg copy-on-write
     UPDATE): partitions containing matches rewrite with the
@@ -1462,7 +1422,6 @@ def update_versioned(
         lambda live, pred: live.withColumns({
             c: F.when(pred, expr).otherwise(F.col(c)) for c, expr in sets.items()
         }),
-        stats_local_max, key_fingerprints,
     )
 
 

@@ -422,8 +422,8 @@ def lookback_bounded_upsert(
 
     Scale shape: the series dim is a broadcast-sized join (AQE picks
     it), the bound is a codegen'd per-row filter, and the surviving
-    rows flow into the partition-scoped silver upsert — no new
-    shuffles beyond the upsert's own.
+    rows flow into the versioned silver upsert (one atomic commit of
+    their dates) — no new shuffles beyond the upsert's own.
     """
     now_col = (
         F.lit(now).cast("timestamp") if now is not None else F.current_timestamp()
@@ -442,9 +442,13 @@ def lookback_bounded_upsert(
         )
         .drop("__lb_days")
     )
-    from gas_data_pipeline_spark.pipeline.silver import upsert_observations
+    from gas_data_pipeline_spark.pipeline.versioned import (
+        upsert_observations_versioned,
+    )
 
-    upsert_observations(batch.sparkSession, bounded, path, order_cols=order_cols)
+    upsert_observations_versioned(
+        batch.sparkSession, bounded, path, order_cols=order_cols
+    )
 
 
 def run_incremental_upsert(

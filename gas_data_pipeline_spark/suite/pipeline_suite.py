@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 from gas_data_pipeline_spark.catalog import local_table, table
 from gas_data_pipeline_spark.pipeline.bronze import bronze_append, read_bronze
 from gas_data_pipeline_spark.pipeline.exports import export_csv
-from gas_data_pipeline_spark.pipeline.silver import upsert_observations
 from gas_data_pipeline_spark.registry import register
 
 
@@ -68,10 +67,16 @@ def bronze_zero_loss_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def silver_upsert_idempotent(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SNK2: the same batch upserted TWICE into a fresh silver table
-    must equal one clean last-write-wins dedup of the source — the
-    ``ON CONFLICT DO UPDATE`` idempotency contract (reference
-    loader.py:7-35), through disk, with dynamic partition overwrite."""
+    """SNK2: the same batch upserted TWICE into a fresh versioned
+    silver store must equal one clean last-write-wins dedup of the
+    source — the ``ON CONFLICT DO UPDATE`` idempotency contract
+    (reference loader.py:7-35), through disk: the second commit
+    re-merges every date against the first and changes no row."""
+    from gas_data_pipeline_spark.pipeline.versioned import (
+        read_observations_versioned,
+        upsert_observations_versioned,
+    )
+
     path = _scratch()
     e = table(spark, sf_dir, "events")
     batch = e.select(
@@ -83,9 +88,12 @@ def silver_upsert_idempotent(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ts").alias("ingestion_time"),
         F.col("event_id"),
     )
-    upsert_observations(spark, batch, path, order_cols=["ingestion_time", "event_id"])
-    upsert_observations(spark, batch, path, order_cols=["ingestion_time", "event_id"])
-    return spark.read.parquet(path).select("series_id", "observation_time", "value")
+    order = ["ingestion_time", "event_id"]
+    upsert_observations_versioned(spark, batch, path, order_cols=order)
+    upsert_observations_versioned(spark, batch, path, order_cols=order)
+    return read_observations_versioned(spark, path).select(
+        "series_id", "observation_time", "value"
+    )
 
 
 @register(
@@ -105,16 +113,15 @@ def silver_upsert_idempotent(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def silver_upsert_atomic_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SNK2, atomic-commit variant (pipeline/versioned.py — the
+    """SNK2 over a provisional commit (pipeline/versioned.py — the
     Iceberg-shaped write-audit-publish closing the table-format gap):
     a provisional upsert of the even-id half (v1), then the full
     batch twice (v2, v3 — idempotency through the versioned path).
     Every key in v1 also appears in the full batch and the new batch
     wins on key collision, so the CURRENT snapshot equals one clean
     last-write-wins dedup of the source — same contract (and oracle)
-    as silver_upsert_idempotent, but each commit is a single atomic
-    manifest rename and untouched partitions are structurally shared
-    across versions instead of rewritten."""
+    as silver_upsert_idempotent, with the full batch re-merging
+    against rows an earlier version committed."""
     from gas_data_pipeline_spark.pipeline.versioned import (
         read_observations_versioned,
         upsert_observations_versioned,

@@ -17,7 +17,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gas_data_pipeline_spark.catalog import local_table
-from gas_data_pipeline_spark.pipeline.silver import upsert_observations
+from gas_data_pipeline_spark.pipeline.versioned import (
+    read_observations_versioned,
+    upsert_observations_versioned,
+)
 from gas_data_pipeline_spark.registry import register
 from gas_data_pipeline_spark.streaming.incremental import (
     dedup_within_watermark,
@@ -87,10 +90,11 @@ def stream_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ST3: the full production loop — stream -> foreachBatch -> silver
-    upsert -> lake table. Late/updated rows reconcile exactly like the
-    reference's ON CONFLICT DO UPDATE (loader.py:22-30); the final
-    table must equal the batch last-write-wins dedup."""
+    """ST3: the full production loop — stream -> foreachBatch ->
+    versioned silver upsert (one commit per micro-batch) -> lake table.
+    Late/updated rows reconcile exactly like the reference's ON
+    CONFLICT DO UPDATE (loader.py:22-30); the final snapshot must
+    equal the batch last-write-wins dedup."""
     scratch = tempfile.mkdtemp(prefix="gas_stream_silver_")
     shutil.rmtree(scratch, ignore_errors=True)
     silver = scratch + "/silver"
@@ -105,12 +109,14 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def write_batch(bdf: DataFrame, batch_id: int) -> None:
-        upsert_observations(
+        upsert_observations_versioned(
             bdf.sparkSession, bdf, silver, order_cols=["ingestion_time", "event_id"]
         )
 
     run_foreach_batch(batch_shape, write_batch, ckpt)
-    return spark.read.parquet(silver).select("series_id", "observation_time", "value")
+    return read_observations_versioned(spark, silver).select(
+        "series_id", "observation_time", "value"
+    )
 
 
 @register(
@@ -446,7 +452,7 @@ def stream_lookback_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         now=datetime(2024, 1, 31),
         order_cols=["ingestion_time", "event_id"],
     )
-    return spark.read.parquet(silver).select(
+    return read_observations_versioned(spark, silver).select(
         "series_id", "observation_time", "value"
     )
 
@@ -689,15 +695,17 @@ _HOURLY_E2E_ORACLE = r"""
     """
 
 
-def _hourly_lifecycle(
-    spark: SparkSession, sf_dir: str, atomic: bool
-) -> DataFrame:
+def _hourly_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's whole production lifecycle under the streaming
     scheduler, end to end: fetch -> bronze -> discover/register fields
     -> melt -> series auto-register -> silver upsert (reference
     app/scheduler/scheduler.py + app/ingestion/run_all.py:70-118), run
     as TWO real Trigger.ProcessingTime scheduler cycles — not
-    AvailableNow — through ``GasDataEngine.ingest_batch``.
+    AvailableNow — through ``GasDataEngine.ingest_batch``. Each
+    cycle's silver commit is a manifest CAS publish on the versioned
+    store (pipeline/versioned.py): cycle 2 lands as version 2 with
+    cycle 1's untouched partitions structurally shared, and the final
+    read is one atomic snapshot resolution.
 
     Cycle 1 is a provisional early poll (only the even-id half of the
     events, aggregated to the wide per-(user, hour) shape an API fetch
@@ -725,7 +733,7 @@ def _hourly_lifecycle(
     0.1), cycle 1 ~1.4 s, cycle 2 ~1.8 s, result assembly ~0.3 s;
     ~4.9 s total. Each cycle's wall-clock is the silver upsert (the
     four ingest sinks run concurrently; the other three finish
-    earlier) — the r10 one-shuffle upsert (pipeline/silver.py: the
+    earlier) — the r10 one-shuffle merge (pipeline/silver.py: the
     dedup window rides the write's obs_date exchange) cut cycle 2
     from ~2.2 s. The remainder is genuine lifecycle: two sequential
     Structured-Streaming micro-batches, each committing four stores.
@@ -737,7 +745,7 @@ def _hourly_lifecycle(
 
     scratch = tempfile.mkdtemp(prefix="gas_hourly_e2e_")
     root = os.path.join(scratch, "lake")
-    engine = GasDataEngine(spark, root, atomic_silver=atomic)
+    engine = GasDataEngine(spark, root)
 
     ev = table(spark, sf_dir, "events")
 
@@ -788,8 +796,6 @@ def _hourly_lifecycle(
 
     run_staged_stream(polls, cycle, scratch)
 
-    # Resolve silver through the configured commit layer: a plain scan,
-    # or one atomic manifest resolution in versioned mode.
     silver = engine._read_obs()
     dim = spark.read.parquet(engine.series_path).select("series_id")
     obs_rows = silver.join(dim, "series_id").select(
@@ -816,25 +822,17 @@ def _hourly_lifecycle(
 
 @register("hourly_pipeline_e2e", oracle=_HOURLY_E2E_ORACLE)
 def hourly_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X6/ST1 — the full scheduler lifecycle on the plain dynamic-
-    overwrite silver store; see :func:`_hourly_lifecycle`."""
-    return _hourly_lifecycle(spark, sf_dir, atomic=False)
+    """X6/ST1 — the full scheduler lifecycle; see
+    :func:`_hourly_lifecycle`."""
+    return _hourly_lifecycle(spark, sf_dir)
 
 
 @register("hourly_pipeline_atomic_e2e", oracle=_HOURLY_E2E_ORACLE)
 def hourly_pipeline_atomic_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X6/ST1 through the VERSIONED silver store (VERDICT r10 #7):
-    the identical two-cycle ProcessingTime lifecycle — provisional
-    poll, authoritative late-revision re-poll — with
-    ``GasDataEngine(atomic_silver=True)``, so every scheduler cycle's
-    silver commit is a manifest CAS publish (pipeline/versioned.py)
-    exercised under real micro-batch triggers, and the final read is
-    one atomic snapshot resolution. Same final-state oracle as the
-    plain lifecycle: the commit layer must be behaviorally invisible
-    to the pipeline's results — cycle 2 lands as version 2 with
-    cycle 1's partitions structurally shared, and last-write-wins
-    tie-breaks are identical."""
-    return _hourly_lifecycle(spark, sf_dir, atomic=True)
+    """X6/ST1 — the same lifecycle and oracle as
+    :func:`hourly_pipeline_e2e`, kept under its registered name: every
+    scheduler cycle commits to the versioned silver store."""
+    return _hourly_lifecycle(spark, sf_dir)
 
 
 def _psi_cum_block(batch_seq: int, cum_filter: str) -> str:

@@ -526,47 +526,63 @@ def test_engine_validate_batch(engine, spark):
 
 
 def test_engine_atomic_silver_lifecycle(spark):
-    """atomic_silver=True routes SNK2 through the versioned manifest
-    layer: same ingest/query/history results as the dynamic-overwrite
-    engine, re-ingest is a no-op commit, and the store carries a
-    committed manifest instead of flat date partitions."""
+    """SNK2 through the versioned manifest store: ingesting the same
+    batch twice leaves exactly one row per (series, time) — the
+    batch's own values, last write wins — the re-ingest publishes
+    version 2, and get_history returns one series' rows time-ordered."""
     import tempfile
+
+    import pandas as pd
 
     from gas_data_pipeline_spark.engine import GasDataEngine
     from gas_data_pipeline_spark.pipeline.versioned import read_manifest
 
-    roots = [tempfile.mkdtemp(prefix="gas_atomic_") for _ in range(2)]
+    root = tempfile.mkdtemp(prefix="gas_atomic_")
     try:
-        plain = GasDataEngine(spark, roots[0], atomic_silver=False)
-        atomic = GasDataEngine(spark, roots[1])  # atomic is the default
+        eng = GasDataEngine(spark, root)
         batch = _wide_batch(spark)
-        for eng in (plain, atomic):
+        for _ in range(2):
             eng.ingest_batch(
                 batch, "GAS_QUALITY", "national_gas", ["site_id"], "observed_at"
             )
-            eng.ingest_batch(
-                batch, "GAS_QUALITY", "national_gas", ["site_id"], "observed_at"
-            )
+        wide = batch.toPandas()
         cols = ["series_id", "observation_time", "value"]
-        a = (
-            plain.get_data(limit=5000).toPandas()[cols]
+        want = (
+            pd.concat([
+                pd.DataFrame({
+                    "series_id": [f"NG_GAS_QUALITY_{s}_{m.upper()}" for s in wide.site_id],
+                    "observation_time": wide.observed_at,
+                    "value": wide[m].astype(float),
+                })
+                for m in ("flow_rate", "energy")
+            ])
             .sort_values(cols).reset_index(drop=True)
         )
-        b = (
-            atomic.get_data(limit=5000).toPandas()[cols]
+        got = (
+            eng.get_data(limit=5000).toPandas()[cols]
             .sort_values(cols).reset_index(drop=True)
         )
-        assert a.equals(b)
-        assert read_manifest(atomic.obs_path)["version"] == 2
-        sid = a.series_id.iloc[0]
-        ha = plain.get_history(sid, start="2024-01-01", end="2025-01-01").toPandas()
-        hb = atomic.get_history(sid, start="2024-01-01", end="2025-01-01").toPandas()
-        assert list(ha.value) == list(hb.value)
+        pd.testing.assert_frame_equal(got, want, check_dtype=False)
+        assert read_manifest(eng.obs_path)["version"] == 2
+        sid = want.series_id.iloc[0]
+        hist = eng.get_history(sid, start="2024-01-01", end="2025-01-01").toPandas()
+        one = want[want.series_id == sid].sort_values("observation_time")
+        assert list(hist.value) == list(one.value)
+        assert hist.observation_time.is_monotonic_increasing
     finally:
         import shutil
 
-        for r in roots:
-            shutil.rmtree(r, ignore_errors=True)
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def test_engine_refuses_the_removed_plain_store(spark, tmp_path):
+    """``atomic_silver`` has one accepted value: ``False`` named the
+    removed plain dynamic-overwrite store and raises at construction."""
+    from gas_data_pipeline_spark.engine import GasDataEngine
+
+    with pytest.raises(ValueError, match="plain dynamic-overwrite"):
+        GasDataEngine(spark, str(tmp_path / "lake"), atomic_silver=False)
+    assert GasDataEngine(spark, str(tmp_path / "lake"), atomic_silver=True)
 
 
 def test_engine_atomic_ingest_retries_on_fence(spark, monkeypatch):
@@ -656,9 +672,7 @@ def test_get_data_prunes_partitions_at_manifest_level(spark):
 def test_engine_table_maintenance_surface(spark):
     """Round 12: the table-format maintenance operations ride the
     engine facade — time travel, CDC, copy-on-write delete, compaction
-    and vacuum all resolve against the engine's observation store, and
-    every one of them refuses the plain (manifest-less) path with a
-    clear error instead of corrupting it."""
+    and vacuum all resolve against the engine's observation store."""
     import tempfile
 
     from gas_data_pipeline_spark.engine import GasDataEngine
@@ -686,30 +700,15 @@ def test_engine_table_maintenance_surface(spark):
         # Vacuum with retention keeps the pinned v1 readable.
         eng.vacuum_silver(retain_last_n=2, min_age_seconds=0)
         assert eng.read_observations_at(1).count() == n1
-        # The plain path refuses every maintenance op.
-        import pytest as _pytest
-
-        plain = GasDataEngine(spark, root + "_plain", atomic_silver=False)
-        for call in (
-            lambda: plain.read_observations_at(1),
-            lambda: plain.changelog(1),
-            lambda: plain.delete_observations(F.lit(True)),
-            lambda: plain.compact_silver(),
-            lambda: plain.vacuum_silver(),
-        ):
-            with _pytest.raises(ValueError, match="versioned store"):
-                call()
     finally:
         shutil.rmtree(root, ignore_errors=True)
-        shutil.rmtree(root + "_plain", ignore_errors=True)
 
 
 def test_engine_mor_delete_and_erase_series(spark):
     """Round 14: both small-delete paths ride the engine facade —
     delete_observations(mode="merge-on-read") commits a positional
     vector without rewriting data, erase_series commits a
-    metadata-only key erasure — and the plain (manifest-less) path
-    refuses both."""
+    metadata-only key erasure."""
     import tempfile
 
     from gas_data_pipeline_spark.engine import GasDataEngine
@@ -737,20 +736,12 @@ def test_engine_mor_delete_and_erase_series(spark):
         assert (m2.get("dv_eq") or {})
         assert eng._read_obs().count() < n2
         assert eng.get_data(series_id=victim2).count() == 0
-        import pytest as _pytest
-
-        plain = GasDataEngine(spark, root + "_plain", atomic_silver=False)
-        with _pytest.raises(ValueError, match="versioned store"):
-            plain.erase_series("x")
-        with _pytest.raises(ValueError, match="versioned store"):
-            plain.delete_observations(F.lit(True), mode="merge-on-read")
     finally:
         shutil.rmtree(root, ignore_errors=True)
-        shutil.rmtree(root + "_plain", ignore_errors=True)
 
 
 def test_engine_silver_status(spark):
-    """silver_status rides the facade; the plain store refuses it."""
+    """silver_status rides the facade."""
     import tempfile
 
     from gas_data_pipeline_spark.engine import GasDataEngine
@@ -765,11 +756,5 @@ def test_engine_silver_status(spark):
         st = eng.silver_status()
         assert st["version"] == 1 and st["n_partitions"] >= 1
         assert st["dv_debt"]["dates"] == []
-        import pytest as _pytest
-
-        plain = GasDataEngine(spark, root + "_plain", atomic_silver=False)
-        with _pytest.raises(ValueError, match="versioned store"):
-            plain.silver_status()
     finally:
         shutil.rmtree(root, ignore_errors=True)
-        shutil.rmtree(root + "_plain", ignore_errors=True)

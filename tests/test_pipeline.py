@@ -31,23 +31,35 @@ def _obs_batch(spark, rows):
     )
 
 
-def test_upsert_updates_on_conflict(spark, scratch):
-    from gas_data_pipeline_spark.pipeline.silver import upsert_observations
+def _upsert(spark, batch, root, order_cols=("ingestion_time", "event_id")):
+    from gas_data_pipeline_spark.pipeline.versioned import (
+        upsert_observations_versioned,
+    )
 
+    return upsert_observations_versioned(
+        spark, batch, root, order_cols=list(order_cols)
+    )
+
+
+def _read_silver(spark, root):
+    from gas_data_pipeline_spark.pipeline.versioned import (
+        read_observations_versioned,
+    )
+
+    return read_observations_versioned(spark, root)
+
+
+def test_upsert_updates_on_conflict(spark, scratch):
     t0 = "2024-01-01 00:00:00"
-    b1 = _obs_batch(spark, [("s1", t0, 1.0, "2024-01-01 01:00:00", 1)])
-    upsert_observations(spark, b1, scratch, order_cols=["ingestion_time", "event_id"])
+    _upsert(spark, _obs_batch(spark, [("s1", t0, 1.0, "2024-01-01 01:00:00", 1)]), scratch)
     # Same key, newer ingestion_time -> value must be replaced.
-    b2 = _obs_batch(spark, [("s1", t0, 2.0, "2024-01-01 02:00:00", 2)])
-    upsert_observations(spark, b2, scratch, order_cols=["ingestion_time", "event_id"])
-    rows = spark.read.parquet(scratch).collect()
+    _upsert(spark, _obs_batch(spark, [("s1", t0, 2.0, "2024-01-01 02:00:00", 2)]), scratch)
+    rows = _read_silver(spark, scratch).collect()
     assert len(rows) == 1
     assert rows[0].value == 2.0
 
 
 def test_upsert_is_idempotent(spark, scratch):
-    from gas_data_pipeline_spark.pipeline.silver import upsert_observations
-
     b = _obs_batch(
         spark,
         [
@@ -55,24 +67,25 @@ def test_upsert_is_idempotent(spark, scratch):
             ("s2", "2024-01-02 00:00:00", 5.0, "2024-01-01 01:00:00", 2),
         ],
     )
-    upsert_observations(spark, b, scratch, order_cols=["ingestion_time", "event_id"])
-    first = sorted(map(tuple, spark.read.parquet(scratch).collect()))
-    upsert_observations(spark, b, scratch, order_cols=["ingestion_time", "event_id"])
-    second = sorted(map(tuple, spark.read.parquet(scratch).collect()))
+    _upsert(spark, b, scratch)
+    first = sorted(map(tuple, _read_silver(spark, scratch).collect()))
+    _upsert(spark, b, scratch)
+    second = sorted(map(tuple, _read_silver(spark, scratch).collect()))
     assert first == second
 
 
 def test_upsert_touches_only_affected_partitions(spark, scratch):
-    """Dynamic partition overwrite must leave other dates untouched."""
-    from gas_data_pipeline_spark.pipeline.silver import upsert_observations
+    """An upsert of one date leaves every other date's manifest entry
+    as it was: the untouched date is neither rewritten nor dropped."""
+    from gas_data_pipeline_spark.pipeline.versioned import read_manifest
 
     day1 = _obs_batch(spark, [("s1", "2024-01-01 00:00:00", 1.0, "2024-01-01 01:00:00", 1)])
     day2 = _obs_batch(spark, [("s1", "2024-01-02 00:00:00", 2.0, "2024-01-01 01:00:00", 2)])
-    upsert_observations(spark, day1, scratch)
-    upsert_observations(spark, day2, scratch)
-    vals = {r.value for r in spark.read.parquet(scratch).collect()}
+    entry1 = _upsert(spark, day1, scratch)["partitions"]["2024-01-01"]
+    _upsert(spark, day2, scratch)
+    vals = {r.value for r in _read_silver(spark, scratch).collect()}
     assert vals == {1.0, 2.0}
-    assert os.path.isdir(os.path.join(scratch, "obs_date=2024-01-01"))
+    assert read_manifest(scratch)["partitions"]["2024-01-01"] == entry1
 
 
 def test_bronze_zero_loss_nested(spark, scratch):
@@ -174,6 +187,38 @@ def test_delete_reload_partition_scoped(spark, scratch):
     # untouched partitions: identical files, never rewritten
     assert _partition_files(scratch, "entsog") == before_entsog
     assert _partition_files(scratch, "ng") == before_ng
+
+
+def test_delete_reload_leaves_session_overwrite_mode(spark, scratch):
+    """A partitioned delete_reload overwrites dynamically through its
+    own write option: the session's partitionOverwriteMode is the same
+    afterwards, so a later static overwrite of a partitioned table in
+    the session still drops the partitions it does not write."""
+    from gas_data_pipeline_spark.pipeline.dims import delete_reload
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    schema = "source string, value double"
+    spark.createDataFrame([("gie", 1.0), ("ng", 4.0)], schema).write.partitionBy(
+        "source"
+    ).parquet(scratch)
+    delete_reload(
+        spark,
+        spark.createDataFrame([("gie", 9.0)], schema),
+        scratch,
+        F.col("source") == "gie",
+        partition_col="source",
+    )
+    assert spark.conf.get(key) == before
+    static = scratch + "_static"
+    spark.createDataFrame([("a", 1.0), ("b", 2.0)], schema).write.partitionBy(
+        "source"
+    ).parquet(static)
+    spark.createDataFrame([("a", 3.0)], schema).write.mode("overwrite").partitionBy(
+        "source"
+    ).parquet(static)
+    rows = [(r.source, r.value) for r in spark.read.parquet(static).collect()]
+    assert rows == [("a", 3.0)]
 
 
 def test_delete_reload_partitioned_pure_delete(spark, scratch):
@@ -646,7 +691,7 @@ def test_lookback_bounded_upsert_per_series_windows(spark, tmp_path):
 
     got = sorted(
         (r.series_id, r.value)
-        for r in spark.read.parquet(silver).collect()
+        for r in _read_silver(spark, silver).collect()
     )
     assert got == [("s_long", 2.0), ("s_long", 4.0), ("s_new", 5.0), ("s_short", 3.0)]
 
@@ -685,7 +730,7 @@ def test_run_incremental_upsert_streaming_lookback(spark, tmp_path):
     )
     run_incremental_upsert(stream, dim, silver, str(tmp_path / "ckpt1"), now=now)
     got = sorted(
-        (r.series_id, r.value) for r in spark.read.parquet(silver).collect()
+        (r.series_id, r.value) for r in _read_silver(spark, silver).collect()
     )
     assert got == [("s_long", 2.0), ("s_short", 3.0)]
 
@@ -698,7 +743,7 @@ def test_run_incremental_upsert_streaming_lookback(spark, tmp_path):
     )
     run_incremental_upsert(stream2, dim, silver, str(tmp_path / "ckpt2"), now=now)
     again = sorted(
-        (r.series_id, r.value) for r in spark.read.parquet(silver).collect()
+        (r.series_id, r.value) for r in _read_silver(spark, silver).collect()
     )
     assert again == got
 
@@ -714,7 +759,6 @@ def test_processing_time_stream_multi_batch_no_overlap(spark, tmp_path):
     import time
     from datetime import datetime
 
-    from gas_data_pipeline_spark.pipeline.silver import upsert_observations
     from gas_data_pipeline_spark.streaming.incremental import (
         await_processed_batches,
         start_processing_time_stream,
@@ -752,7 +796,7 @@ def test_processing_time_stream_multi_batch_no_overlap(spark, tmp_path):
 
     def batch_fn(bdf, batch_id):
         t0 = time.monotonic()
-        upsert_observations(spark, bdf, silver, order_cols=["event_id"])
+        _upsert(spark, bdf, silver, order_cols=["event_id"])
         records.append((batch_id, t0, time.monotonic()))
 
     # Spark's default stopActiveRunOnRestart lets a NEW run of the same
@@ -795,7 +839,7 @@ def test_processing_time_stream_multi_batch_no_overlap(spark, tmp_path):
         assert nxt_start >= prev_end, "micro-batches overlapped"
 
     final = {
-        r.series_id: r.value for r in spark.read.parquet(silver).collect()
+        r.series_id: r.value for r in _read_silver(spark, silver).collect()
     }
     assert final == {"s1": 20.0, "s2": 5.0, "s3": 7.0}
     # Idempotency across batches: replaying the last revision directly
@@ -803,9 +847,9 @@ def test_processing_time_stream_multi_batch_no_overlap(spark, tmp_path):
     replay = spark.createDataFrame(
         [("s1", datetime(2024, 6, 29, 10), 20.0, 4, ing)], schema
     )
-    upsert_observations(spark, replay, silver, order_cols=["event_id"])
+    _upsert(spark, replay, silver, order_cols=["event_id"])
     again = {
-        r.series_id: r.value for r in spark.read.parquet(silver).collect()
+        r.series_id: r.value for r in _read_silver(spark, silver).collect()
     }
     assert again == final
 
@@ -1103,9 +1147,9 @@ def _vs_batch(spark, rows):
 
 
 def test_versioned_upsert_semantics_match_silver(spark, scratch):
-    """Same keys/tie-breaks as the dynamic-overwrite upsert: conflict
-    replaces, re-upsert is a no-op (published as version 3 with
-    identical content)."""
+    """The silver merge's keys and tie-breaks through the versioned
+    commit: conflict replaces, re-upsert is a no-op (published as
+    version 3 with identical content)."""
     from gas_data_pipeline_spark.pipeline.versioned import (
         read_manifest,
         read_observations_versioned,
@@ -3301,7 +3345,7 @@ def test_flush_no_data_skip_same_rows_and_conf_restored(spark, tmp_path):
 
 # ---------------------------------------------------------------------------
 # ADVICE r13 fixes: stats-key zero padding, tz-aware date-grain pruning,
-# scoped by-value pickling, and the stats_local_max store option.
+# scoped by-value pickling, and the stats crossover's two paths.
 # ---------------------------------------------------------------------------
 
 
@@ -3374,7 +3418,7 @@ def test_versioned_tz_aware_bound_keeps_utc_boundary_day(spark, scratch):
     assert got == [1.0, 3.0]
 
 
-def test_parallel_stats_registers_only_kernel_module(spark, scratch):
+def test_parallel_stats_registers_only_kernel_module(spark, scratch, monkeypatch):
     """The parallel footer job must not flip the WHOLE versioned module
     to by-value pickling (a process-global side effect that ships
     mutated store globals into every later unrelated closure). Only
@@ -3389,6 +3433,7 @@ def test_parallel_stats_registers_only_kernel_module(spark, scratch):
     )
 
     # Force the Spark-job path regardless of commit size.
+    monkeypatch.setattr(_v, "_STATS_LOCAL_MAX", 0)
     upsert_observations_versioned(
         spark,
         _vs_batch(
@@ -3397,7 +3442,6 @@ def test_parallel_stats_registers_only_kernel_module(spark, scratch):
         ),
         scratch,
         order_cols=["ingestion_time", "event_id"],
-        stats_local_max=0,
     )
     m = read_manifest(scratch)
     assert m["stats"]  # the job actually ran and recorded stats
@@ -3409,12 +3453,14 @@ def test_parallel_stats_registers_only_kernel_module(spark, scratch):
     assert _stats_kernel.__name__ in registry
 
 
-def test_stats_local_max_is_a_store_option(spark, scratch):
-    """VERDICT r13 #7: the local-vs-job crossover is a per-call knob
-    now, not a module constant edit. Both settings commit identical
-    stats (shared kernel)."""
+def test_stats_crossover_paths_commit_equal_stats(spark, scratch, monkeypatch):
+    """The local-vs-job stats crossover (``_STATS_LOCAL_MAX``) changes
+    only where footers are read: a commit that always runs the Spark
+    job and one that always reads footers locally record identical
+    stats at both grains (shared kernel)."""
     import os
 
+    from gas_data_pipeline_spark.pipeline import versioned as _v
     from gas_data_pipeline_spark.pipeline.versioned import (
         read_manifest,
         upsert_observations_versioned,
@@ -3426,15 +3472,15 @@ def test_stats_local_max_is_a_store_option(spark, scratch):
         for i in range(9)
     ]
     a_root, b_root = os.path.join(scratch, "a"), os.path.join(scratch, "b")
+    monkeypatch.setattr(_v, "_STATS_LOCAL_MAX", 0)  # always the Spark job
     upsert_observations_versioned(
         spark, _vs_batch(spark, rows), a_root,
         order_cols=["ingestion_time", "event_id"],
-        stats_local_max=0,  # always the Spark job
     )
+    monkeypatch.setattr(_v, "_STATS_LOCAL_MAX", 10**9)  # always local
     upsert_observations_versioned(
         spark, _vs_batch(spark, rows), b_root,
         order_cols=["ingestion_time", "event_id"],
-        stats_local_max=10**9,  # always the local driver path
     )
     ma, mb = read_manifest(a_root), read_manifest(b_root)
     assert ma["stats"] == mb["stats"]
@@ -4245,47 +4291,55 @@ def test_eq_delete_composes_with_positional_vectors(spark, scratch):
     assert got == [("a", 1.0), ("d", 8.0)]
 
 
-def test_key_fingerprints_opt_out(spark, scratch):
-    """key_fingerprints=False (the high-cardinality deployment knob —
-    same precedent as stats_local_max): the commit skips the per-file
-    key-column read, no FP_KEY lands in either stats grain, and reads
-    degrade to min/max pruning with identical rows."""
+def test_unfingerprinted_file_reads_identical_rows(spark, scratch):
+    """A file with more than ``_FP_DISTINCT_CAP`` distinct keys commits
+    no key fingerprint (at either stats grain), yet every series read
+    over it returns exactly the rows a row-level filter does — beside
+    a fingerprinted date that still prunes by key."""
+    from gas_data_pipeline_spark.pipeline import _stats_kernel as k
     from gas_data_pipeline_spark.pipeline.versioned import (
         FP_KEY,
-        compact_versioned,
         read_manifest,
         read_observations_versioned,
         upsert_observations_versioned,
     )
 
-    upsert_observations_versioned(
-        spark,
-        _vs_batch(spark, [
-            ("a", "2024-01-01 00:00:00", 1.0, "2024-01-01 01:00:00", 1),
-            ("b", "2024-01-02 01:00:00", 2.0, "2024-01-02 01:00:00", 2),
-        ]),
-        scratch,
-        order_cols=["ingestion_time", "event_id"],
-        key_fingerprints=False,
+    n = k._FP_DISTINCT_CAP + 1
+    wide = spark.range(n).select(
+        F.format_string("K_%06d", "id").alias("series_id"),
+        F.lit("2024-01-01 00:00:00").cast("timestamp").alias("observation_time"),
+        F.col("id").cast("double").alias("value"),
+        F.lit("2024-01-01 01:00:00").cast("timestamp").alias("ingestion_time"),
+        F.col("id").alias("event_id"),
     )
+    narrow = _vs_batch(
+        spark, [("K_000003", "2024-01-02 00:00:00", -3.0, "2024-01-02 01:00:00", n)]
+    )
+    order = ["ingestion_time", "event_id"]
+    upsert_observations_versioned(spark, wide, scratch, order_cols=order)
+    upsert_observations_versioned(spark, narrow, scratch, order_cols=order)
     m = read_manifest(scratch)
-    assert all(FP_KEY not in st for st in m["stats"].values())
-    assert all(
-        FP_KEY not in st
-        for files in m["file_stats"].values()
-        for st in files.values()
-    )
-    got = sorted(
-        (r.series_id, r.value)
-        for r in read_observations_versioned(spark, scratch, series_ids="a").collect()
-    )
-    assert got == [("a", 1.0)]
-    # Same knob on the layout rewrite.
-    m2 = compact_versioned(
-        spark, scratch, min_files=1, key_fingerprints=False
-    )
-    assert all(FP_KEY not in st for st in m2["stats"].values())
-    assert read_observations_versioned(spark, scratch).count() == 2
+    wide_files = m["file_stats"]["2024-01-01"]
+    assert len(wide_files) == 1
+    assert all(FP_KEY not in st for st in wide_files.values())
+    assert FP_KEY not in m["stats"]["2024-01-01"]
+    assert all(FP_KEY in st for st in m["file_stats"]["2024-01-02"].values())
+    full = read_observations_versioned(spark, scratch)
+    for sid in ("K_000003", "K_065536", "K_000000"):
+        got = sorted(
+            (r.observation_time, r.value)
+            for r in read_observations_versioned(
+                spark, scratch, series_ids=sid
+            ).collect()
+        )
+        want = sorted(
+            (r.observation_time, r.value)
+            for r in full.filter(F.col("series_id") == sid).collect()
+        )
+        assert got == want and got
+    assert read_observations_versioned(
+        spark, scratch, series_ids="K_999999"
+    ).count() == 0
 
 
 def test_table_status_reports_maintenance_state(spark, scratch):

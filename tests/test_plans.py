@@ -188,6 +188,47 @@ def test_suite_moves_no_file_into_a_watched_dir():
     assert calls == []
 
 
+def test_no_session_overwrite_mode_and_no_silver_io():
+    # Dynamic partition overwrite is a per-write option: a session-wide
+    # spark.conf.set of partitionOverwriteMode would leak into every
+    # later static overwrite. And pipeline/silver.py holds only the
+    # merge: the observation store's reads and writes live in
+    # pipeline/versioned.py.
+    import ast
+    import pathlib
+
+    import gas_data_pipeline_spark
+
+    root = pathlib.Path(gas_data_pipeline_spark.__file__).parent
+    conf_sets = [
+        f"{path.relative_to(root)}:{n.lineno}"
+        for path in sorted(root.rglob("*.py"))
+        for n in ast.walk(ast.parse(path.read_text()))
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr == "set"
+        and isinstance(n.func.value, ast.Attribute)
+        and n.func.value.attr == "conf"
+        and any(
+            isinstance(a, ast.Constant) and "partitionOverwriteMode" in str(a.value)
+            for a in n.args
+        )
+    ]
+    assert conf_sets == []
+    silver = ast.parse((root / "pipeline" / "silver.py").read_text())
+    io = [
+        f"{fn.name}:{n.lineno}"
+        for fn in ast.walk(silver)
+        if isinstance(fn, ast.FunctionDef)
+        for n in ast.walk(fn)
+        if (isinstance(n, ast.Attribute) and n.attr in {
+            "read", "write", "readStream", "writeStream", "parquet", "save", "load",
+        })
+        or (isinstance(n, ast.arg) and n.arg in {"path", "root"})
+    ]
+    assert io == []
+
+
 def test_text_profile_is_narrow(spark):
     plan = _plan(spark, "text_quality_langid")
     assert "Exchange" not in plan
@@ -738,47 +779,6 @@ def test_gap_fill_broadcasts_only_bounded_side(spark):
     assert "min(" in head and "max(" in head
 
 
-def test_silver_date_scan_prunes_partitions(spark, tmp_path):
-    """A date-filtered read of the obs_date-partitioned silver store
-    must prune at the PARTITION level — the predicate shows up as a
-    PartitionFilter on the scan (directory-level pruning: unmatched
-    dates are never opened), not merely as a data filter. This is the
-    lakehouse property the partitioned layout exists for; at 100 TB a
-    one-day query must touch one day's files."""
-    import pyspark.sql.functions as F
-
-    from gas_data_pipeline_spark.pipeline.silver import upsert_observations
-
-    batch = spark.createDataFrame(
-        [
-            ("s1", f"2024-01-0{d} 0{h}:00:00", float(d * h), "ok",
-             "2024-02-01 00:00:00")
-            for d in range(1, 6)
-            for h in range(3)
-        ],
-        "series_id string, observation_time string, value double, "
-        "quality_flag string, ingestion_time string",
-    ).withColumn(
-        "observation_time", F.col("observation_time").cast("timestamp")
-    ).withColumn("ingestion_time", F.col("ingestion_time").cast("timestamp"))
-    path = str(tmp_path / "silver")
-    upsert_observations(spark, batch, path)
-
-    day = (
-        spark.read.parquet(path)
-        .filter(F.col("obs_date") == "2024-01-03")
-        .select("series_id", "value")
-    )
-    plan = day._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan
-    assert "obs_date" in plan.split("PartitionFilters", 1)[1].split("]", 1)[0]
-    assert day.count() == 3
-    # And the scan must NOT carry the date predicate as a post-scan
-    # row filter over every partition's rows: pruning happened at
-    # planning time, so only one directory's files are listed.
-    assert day.rdd.getNumPartitions() <= 4
-
-
 def test_forecast_backtest_materializes_rollup_once(spark):
     """The seasonal-naive backtest self-joins the daily rollup on two
     DIFFERENT keys (day vs day-7), so exchange reuse can't kick in —
@@ -904,7 +904,7 @@ def test_ann_lsh_signed_broadcasts_and_rank_limits(spark):
 
 
 def test_versioned_upsert_is_single_exchange(spark, tmp_path):
-    # The one-shuffle merge contract (shared with pipeline/silver.py):
+    # The one-shuffle merge contract (pipeline/silver.py's merge):
     # hashing by obs_date clusters every (series, time) group, the
     # dedup window rides that exchange, and the partitioned write
     # inherits it — a second keyed exchange is a regression.
