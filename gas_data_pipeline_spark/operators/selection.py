@@ -311,118 +311,6 @@ def quality_score(feats: dict[str, Column]) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def sq_dist_fp(v: Column, center: list[float], quantum: float = 1e6) -> Column:
-    """Fixed-point squared-L2 distance between a vector column and a
-    constant center: each elementwise squared difference is quantized
-    to a BIGINT (x ``quantum``) BEFORE the sum, so the total is an
-    integer sum — exact and association-order-independent, which is
-    what lets a farthest-point argmax agree bit-for-bit with a DuckDB
-    oracle (a float fold could rank two near-tied candidates
-    differently across engines). DuckDB twin::
-
-        list_sum(list_transform(range(1, len(v) + 1),
-            i -> CAST(round((v[i]-c[i]) * (v[i]-c[i]) * 1e6) AS BIGINT)))
-    """
-    carr = F.array(*[F.lit(float(x)) for x in center])
-    return F.aggregate(
-        F.zip_with(
-            v,
-            carr,
-            lambda a, b: F.round((a - b) * (a - b) * F.lit(quantum), 0).cast(
-                "bigint"
-            ),
-        ),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-
-
-def kcenter_greedy(
-    points: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    *,
-    k: int = 8,
-    quantum: float = 1e6,
-    persist_every: int = 4,
-) -> tuple[list[dict], DataFrame]:
-    """Greedy k-center coreset selection (farthest-point traversal —
-    the 2-approximation of Gonzalez 1985, the coreset selector of
-    Sener & Savarese 2018 "Active Learning for CNNs: A Core-Set
-    Approach"): seed with the minimum id, then ``k-1`` rounds of
-    "pick the point farthest from the chosen set".
-
-    Distributed shape: the chosen set lives on the driver (k rows — a
-    model, not data); per round the ONLY cluster work is one
-    scan-stage ``least(mind, dist-to-new-center)`` update plus a
-    bounded top-1 reduce (``TakeOrderedAndProject`` of a single row),
-    so a round is O(N·d) map work with a 1-row action and the whole
-    selection is k such passes — the standard cluster formulation.
-    The running-min column compounds as an expression chain over the
-    base scan (round r re-evaluates r distances per row AND re-plans
-    an r-deep codegen tree); every ``persist_every`` rounds the state
-    is localCheckpointed lazily, capping both the per-row re-eval and
-    the plan depth at a constant while keeping per-round cluster work
-    O(N·d).
-
-    Fewer than ``k`` distinct points is not an error: selection stops
-    early when no unchosen point remains (matching the oracle's
-    recursive-CTE early termination) and returns the centers found.
-
-    Returns ``(centers, assigned)``: ``centers`` is the selection
-    order (``step``, ``id``, fixed-point ``sq_fp`` distance to the
-    prior set — None for the seed, and the max-min coverage radius of
-    step j-1's set is step j's ``sq_fp``); ``assigned`` maps every
-    point to its nearest center (ties to the smallest center id),
-    computed as one zero-shuffle scan over an ``array_sort`` of the
-    k (dist, center) structs."""
-    if k < 1:
-        raise ValueError(f"need k >= 1, got {k=}")
-    if persist_every < 1:
-        raise ValueError(f"need persist_every >= 1, got {persist_every=}")
-    pts = points.select(
-        F.col(id_col).alias("pid"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-    )
-    seed = pts.orderBy("pid").limit(1).collect()[0]
-    centers: list[dict] = [
-        {"step": 1, "id": seed["pid"], "sq_fp": None, "vec": list(seed["v"])}
-    ]
-    state = pts.select(
-        "pid", "v", sq_dist_fp(F.col("v"), centers[0]["vec"], quantum).alias("mind")
-    )
-    for step in range(2, k + 1):
-        chosen_ids = [c["id"] for c in centers]
-        far = (
-            state.filter(~F.col("pid").isin(chosen_ids))
-            .orderBy(F.desc("mind"), "pid")
-            .limit(1)
-            .collect()
-        )
-        if not far:  # fewer than k distinct points: stop like the oracle
-            break
-        far = far[0]
-        centers.append(
-            {
-                "step": step,
-                "id": far["pid"],
-                "sq_fp": far["mind"],
-                "vec": list(far["v"]),
-            }
-        )
-        state = state.withColumn(
-            "mind",
-            F.least("mind", sq_dist_fp(F.col("v"), centers[-1]["vec"], quantum)),
-        )
-        if (step - 1) % persist_every == 0:
-            # lazy: materializes with the NEXT round's top-1 action,
-            # then every later round reads the checkpoint instead of
-            # re-evaluating the compounded distance chain.
-            state = state.localCheckpoint(eager=False)
-    assigned = assign_to_centers(pts, centers, quantum=quantum)
-    return centers, assigned
-
-
 def dlit(x: float) -> str:
     """Shortest-roundtrip double literal for generated SQL: Python
     ``repr`` round-trips the exact double and Spark's parser
@@ -467,10 +355,18 @@ def fp_round_sql(t: str) -> str:
 def sq_dist_fp_sql(
     vexpr: str, center: list[float], quantum: float = 1e6
 ) -> str:
-    """SQL-string twin of :func:`sq_dist_fp`: the same elementwise
-    (a - b)² · quantum, rounded HALF_UP to BIGINT (:func:`fp_round_sql`)
-    and folded as integers, so results are bit-identical; only the
-    construction path differs."""
+    """Fixed-point squared-L2 distance between an array expression and
+    a constant center, as generated SQL: each elementwise
+    (a - b)² · quantum is rounded HALF_UP to a BIGINT
+    (:func:`fp_round_sql`) BEFORE the sum, so the total is an integer
+    sum — exact and association-order-independent, which is what lets
+    a farthest-point argmax or a nearest-center argmin agree
+    bit-for-bit with a DuckDB oracle (a float fold could rank two
+    near-tied candidates differently across engines). DuckDB twin::
+
+        list_sum(list_transform(range(1, len(v) + 1),
+            i -> CAST(round((v[i]-c[i]) * (v[i]-c[i]) * 1e6) AS BIGINT)))
+    """
     return (
         f"aggregate(zip_with({vexpr}, {json_lit(center, 'array<double>')}, "
         f"(a, b) -> (a - b) * (a - b) * {dlit(quantum)}), "
@@ -490,27 +386,6 @@ def center_cands_sql(
         f"'center_id', CAST({int(c['id'])} AS BIGINT))"
         for c in centers
     ) + ")"
-
-
-def spread_small_scan(df: DataFrame) -> DataFrame:
-    """Row-wise heavy scans (codebook assignment, PQ encoding) over a
-    test-scale input that arrives as ONE file = ONE task would leave
-    31 of 32 cores idle; repartition to defaultParallelism. Gated so
-    it is a no-op at production scale: an input that already has >=
-    defaultParallelism partitions is returned untouched (a 100 TB
-    scan is never blindly reshuffled). The no-op gate counts parquet
-    ROW GROUPS when the file set is small — split counts lie for a
-    coarse-row-group file (see catalog.spread_scan, the r10
-    pivot_long_to_wide probe fix)."""
-    from gas_data_pipeline_spark.catalog import _scan_row_groups
-
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    if _scan_row_groups(df, target) < target:
-        return df.repartition(target)
-    return df
 
 
 # Bounded deterministic training sample for codebook learning (IVF /
@@ -614,18 +489,25 @@ def kcenter_greedy_local(
     k: int,
     quantum: float = 1e6,
 ) -> list[dict]:
-    """Driver-side greedy k-center over a BOUNDED training sample
-    (the :func:`kcenter_train_sample` output): identical algorithm,
-    tie-breaks, and fixed-point arithmetic as :func:`kcenter_greedy`
-    (seed = min id; per round pick max running-min fixed-point
-    distance, ties to the smallest id), but run as numpy on the
-    collected sample — zero Spark jobs for the k-1 selection rounds,
-    where the distributed trainer pays k-1 sequential scan+top-1
-    cycles. Per-element arithmetic is ``(a-b)*(a-b)*quantum`` in
-    IEEE doubles (the exact op order of :func:`sq_dist_fp` and the
+    """Greedy k-center (farthest-point traversal — the
+    2-approximation of Gonzalez 1985, the coreset selector of Sener &
+    Savarese 2018 "Active Learning for CNNs: A Core-Set Approach") over
+    a BOUNDED training sample (the :func:`kcenter_train_sample`
+    output), as numpy on the driver: seed with the minimum id, then
+    ``k-1`` rounds of "pick the point farthest from the chosen set"
+    (max running-min fixed-point distance, ties to the smallest id) —
+    zero Spark jobs. Per-element arithmetic is ``(a-b)*(a-b)*quantum``
+    in IEEE doubles (the op order of :func:`sq_dist_fp_sql` and its
     DuckDB twin) then HALF_UP to int64 before the order-free integer
-    sum, so the selection replays bit-for-bit in a recursive CTE
-    over the same sample."""
+    sum, so the selection replays bit-for-bit in a recursive CTE over
+    the same sample.
+
+    Fewer than ``k`` distinct points is not an error: selection stops
+    early when no unchosen point remains (the oracle's recursive-CTE
+    early termination) and returns the centers found. Each center is
+    ``{step, id, sq_fp, vec}``: ``sq_fp`` is the fixed-point distance
+    to the prior set — None for the seed — so step j's ``sq_fp`` is
+    the max-min coverage radius of step j-1's set."""
     import numpy as np
 
     if k < 1:
@@ -684,17 +566,12 @@ def kcenter_greedy_sampled(
     seed: str = KC_SAMPLE_SEED,
 ) -> list[dict]:
     """Greedy k-center trained on the bounded deterministic sample:
-    ONE Spark job (the sample's TakeOrderedAndProject) + a driver-side
-    numpy greedy, replacing the k-1 sequential full-corpus
-    scan+aggregate rounds of :func:`kcenter_greedy` — the fix for the
-    classic driver-coordinated-training bottleneck (at 100 TB, 15
-    full passes over the embedding corpus to learn a 16-row model is
-    the wrong plan; one bounded sample is the right one). When the
-    corpus has ≤ ``sample_n`` rows the sample IS the corpus and the
-    selection is identical to the full trainer (pinned in
-    tests/test_selection.py). Returns the same ``centers`` shape as
-    :func:`kcenter_greedy`; assignment stays the zero-shuffle
-    :func:`assign_to_centers` scan."""
+    ONE Spark job (the sample's TakeOrderedAndProject) plus the
+    driver-side :func:`kcenter_greedy_local`. Training cost is constant
+    at any corpus scale — at 100 TB, one bounded sample, never a
+    full-corpus pass per round, learns a 16-row model. A ``sample_n``
+    of at least the corpus row count trains on the whole corpus.
+    Assignment is the zero-shuffle :func:`assign_to_centers` scan."""
     sample = kcenter_train_sample(
         points, id_col, vec_col, sample_n=sample_n, seed=seed
     )
@@ -713,8 +590,8 @@ def assign_to_centers(
     step of an IVF-style vector index): one zero-shuffle scan over an
     ``array_sort`` of the k broadcast (dist, center) structs — ties to
     the smallest center id, distances fixed-point so the argmin is
-    engine-exact. ``pts`` must carry ``pid`` and ``v`` columns (the
-    shape :func:`kcenter_greedy` builds); extra ``payload_cols`` ride
+    engine-exact. ``pts`` must carry ``pid`` and ``v`` (an array of
+    doubles) columns; extra ``payload_cols`` ride
     through so callers never need a corpus-sized re-join. The
     candidate array is generated SQL (:func:`center_cands_sql`) so
     plan construction costs one parse, not O(k x d) py4j calls."""

@@ -41,10 +41,12 @@ Quantized index — ONE pipeline::
 
 - Train: two trainers produce the same :class:`AnnModel` — coarse
   centers and/or PQ codebooks, plus whether the centers live on raw or
-  on unit vectors. :func:`kmeans_model` is seeded spherical k-means
-  (driver numpy up to ``driver_train_bound`` training rows,
-  distributed ``pyspark.ml`` KMeans above). The k-center trainer is
-  the bounded md5 sample plus greedy selection
+  on unit vectors. Both train one way: ONE bounded sample collected in
+  one Spark job, then numpy on the driver; no trainer makes a
+  corpus-sized pass per round. :func:`kmeans_model` is seeded
+  spherical k-means on the first ``train_sample`` rows by id (at most
+  ``DRIVER_TRAIN_BOUND``). The k-center trainer is greedy selection on
+  the md5 sample of ``selection.kcenter_train_sample``
   (``selection.kcenter_greedy_sampled`` for centers,
   :func:`pq_kcenter_codebooks_sampled` for codebooks), exactly
   replayable in SQL.
@@ -79,7 +81,6 @@ import this package.
 
 from __future__ import annotations
 
-import logging
 from typing import NamedTuple
 
 import numpy as np
@@ -88,7 +89,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from gas_data_pipeline_spark.catalog import local_table
+from gas_data_pipeline_spark.catalog import local_table, spread_scan
 from gas_data_pipeline_spark.functions.exprs import bind
 from gas_data_pipeline_spark.operators.selection import (
     KC_SAMPLE_N,
@@ -100,11 +101,8 @@ from gas_data_pipeline_spark.operators.selection import (
     fp_round_sql,
     json_lit,
     kcenter_greedy_local,
-    spread_small_scan,
-    sq_dist_fp,
+    kcenter_train_sample,
 )
-
-_log = logging.getLogger(__name__)
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -533,7 +531,8 @@ def train_pq_codebooks(
     sample is a bounded stats object — the only vectors that ever
     reach the driver."""
     d = sample.shape[1]
-    assert d % m == 0, f"dim {d} not divisible into {m} subvectors"
+    if d % m:
+        raise ValueError(f"dim {d} not divisible into {m} subvectors")
     dsub = d // m
     X = sample / np.linalg.norm(sample, axis=1, keepdims=True)
     rng = np.random.default_rng(seed)
@@ -554,19 +553,18 @@ def train_pq_codebooks(
     return books
 
 
-# Above this many training vectors, Lloyd's loop moves off the driver:
-# the numpy path materializes train_sample * dim float64 on one node
-# (1e5 x 64 ≈ 50 MB — fine; 1e7 would not be), so bigger regimes train
-# with pyspark.ml KMeans and only the k centroid vectors come back.
+# The most training vectors a k-means model collects: the numpy path
+# materializes train_sample * dim float64 on the driver (1e5 x 64 ≈
+# 50 MB — fine; 1e7 would not be).
 DRIVER_TRAIN_BOUND = 100_000
 
 
 def _train_matrix(
     corpus: DataFrame, id_col: str, vec_col: str, train_sample: int
 ) -> np.ndarray:
-    """Driver-regime training sample: the first ``train_sample`` rows
-    by id (TakeOrderedAndProject — bounded collect), as a float64
-    matrix. The standard FAISS-style train-on-a-sample regime."""
+    """The training sample: the first ``train_sample`` rows by id
+    (TakeOrderedAndProject — bounded collect), as a float64 matrix.
+    The standard FAISS-style train-on-a-sample regime."""
     pdf = (
         corpus.select(vec_col)
         .orderBy(F.col(id_col))
@@ -574,76 +572,6 @@ def _train_matrix(
         .toPandas()
     )
     return np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-
-
-def _distributed_training_rows(
-    corpus: DataFrame, id_col: str, vec_col: str, train_sample: int
-) -> DataFrame:
-    """Cluster-side training set of ~``train_sample`` rows: one ml
-    Vector column ``__feat``, L2-normalized (spherical regime), chosen
-    by a deterministic hash stride so the draw is seed-stable and no
-    vector ever reaches the driver."""
-    from pyspark.ml.feature import Normalizer
-    from pyspark.ml.functions import array_to_vector
-
-    n = corpus.count()
-    rows = corpus.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__vec"))
-    stride = max(1, n // max(1, train_sample))
-    if stride > 1:
-        rows = rows.filter(
-            F.pmod(F.xxhash64(F.col("__id")), F.lit(stride)) == 0
-        )
-    vecs = rows.select(
-        array_to_vector(F.col("__vec").cast("array<double>")).alias("__mlvec")
-    )
-    return Normalizer(inputCol="__mlvec", outputCol="__feat", p=2.0).transform(
-        vecs
-    )
-
-
-def _kmeans_centroids_distributed(
-    train: DataFrame, n_clusters: int, seed: int = 42, n_iters: int = 10
-) -> np.ndarray:
-    """Large-regime centroids: ``pyspark.ml.clustering.KMeans``
-    (k-means|| init, seeded) over the training rows. Only the (k, dim)
-    centroid matrix returns to the driver, re-normalized to the unit
-    sphere so routing stays spherical like the numpy path."""
-    from pyspark.ml.clustering import KMeans
-
-    model = KMeans(
-        k=n_clusters, seed=seed, maxIter=n_iters, featuresCol="__feat"
-    ).fit(train)
-    C = np.stack([np.asarray(c, dtype=np.float64) for c in model.clusterCenters()])
-    return C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
-
-
-def _pq_codebooks_distributed(
-    train: DataFrame, m: int, n_codes: int, seed: int = 42, n_iters: int = 15
-) -> np.ndarray:
-    """Large-regime PQ codebooks: one distributed L2 KMeans per
-    subspace over slices of the normalized training rows — the
-    objective of :func:`train_pq_codebooks` with the Lloyd loop on the
-    cluster; only m*(n_codes, dim/m) codebook floats reach the driver."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-
-    arr = train.select(vector_to_array(F.col("__feat")).alias("__arr"))
-    d = arr.select(F.size("__arr").alias("d")).first()["d"]
-    assert d % m == 0, f"dim {d} not divisible into {m} subvectors"
-    dsub = d // m
-    books = np.empty((m, n_codes, dsub))
-    for j in range(m):
-        sub = arr.select(
-            array_to_vector(F.slice(F.col("__arr"), j * dsub + 1, dsub)).alias("__f")
-        )
-        model = KMeans(
-            k=n_codes, seed=seed + j, maxIter=n_iters, featuresCol="__f"
-        ).fit(sub)
-        C = np.stack([np.asarray(c, dtype=np.float64) for c in model.clusterCenters()])
-        books[j, : len(C)] = C
-        if len(C) < n_codes:  # degenerate tiny train set: pad
-            books[j, len(C) :] = C[0]
-    return books
 
 
 def kmeans_model(
@@ -656,37 +584,19 @@ def kmeans_model(
     n_codes: int = 32,
     train_sample: int = 4096,
     seed: int = 42,
-    driver_train_bound: int = DRIVER_TRAIN_BOUND,
 ) -> AnnModel:
     """The k-means trainer: ``n_clusters`` spherical IVF centroids
     and/or ``m`` x ``n_codes`` PQ codebooks (0 skips either), on unit
-    vectors. The regime switch: up to ``driver_train_bound`` training
-    rows, seeded numpy Lloyd on ONE bounded driver sample (first rows
-    by id); above it, distributed ``pyspark.ml`` KMeans over ONE cached
-    hash-strided training frame, so only centroid floats ever reach
-    the driver. The path choice is logged."""
-    driver = train_sample <= driver_train_bound
-    _log.info(
-        "k-means training: %s path (train_sample=%d, bound=%d)",
-        "driver numpy" if driver else "distributed ml.KMeans",
-        train_sample,
-        driver_train_bound,
-    )
-    if driver:
-        sample = _train_matrix(corpus, id_col, vec_col, train_sample)
-        C = _kmeans_centroids(sample, n_clusters, seed=seed) if n_clusters else None
-        B = train_pq_codebooks(sample, m, n_codes, seed=seed) if m else None
-    else:
-        # Cached: k-means|| init plus every Lloyd step of every fit
-        # re-reads the training rows; uncached each is a corpus re-scan.
-        train = _distributed_training_rows(
-            corpus, id_col, vec_col, train_sample
-        ).cache()
-        try:
-            C = _kmeans_centroids_distributed(train, n_clusters, seed) if n_clusters else None
-            B = _pq_codebooks_distributed(train, m, n_codes, seed) if m else None
-        finally:
-            train.unpersist()
+    vectors, by seeded numpy Lloyd on ONE bounded driver sample (the
+    first ``train_sample`` rows by id). A ``train_sample`` outside
+    1..``DRIVER_TRAIN_BOUND`` is refused before any Spark job runs."""
+    if not (1 <= train_sample <= DRIVER_TRAIN_BOUND):
+        raise ValueError(
+            f"training sample must be 1..{DRIVER_TRAIN_BOUND} rows, got {train_sample=}"
+        )
+    sample = _train_matrix(corpus, id_col, vec_col, train_sample)
+    C = _kmeans_centroids(sample, n_clusters, seed=seed) if n_clusters else None
+    B = train_pq_codebooks(sample, m, n_codes, seed=seed) if m else None
     return AnnModel(
         centers=None
         if C is None
@@ -699,92 +609,6 @@ def kmeans_model(
 # --- k-center trainer (coarse centers: selection.kcenter_greedy_sampled) ----
 
 
-def pq_kcenter_codebooks(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    *,
-    m: int = 8,
-    n_codes: int = 8,
-    quantum: float = 1e6,
-) -> list[list[list[float]]]:
-    """DETERMINISTIC product-quantization codebooks: per subspace, a
-    greedy k-center codebook over the L2-NORMALIZED subvectors — the
-    ``dedup_semantic_buckets`` / ``cosine_topk_ivf_kcenter`` device
-    applied to PQ, so the codebooks (and therefore the codes and every
-    ADC score) are exactly replayable as SQL.
-
-    Distributed shape: all ``m`` subspaces train SIMULTANEOUSLY — per
-    round ONE job computes every subspace's farthest point (an
-    m-expression aggregate of (mind, -pid, subvec) structs, max
-    ignoring already-chosen rows via when()), so the whole training is
-    ``n_codes - 1`` scan+aggregate passes regardless of m; the
-    returned books are m x n_codes x (dim/m) Python floats — a model,
-    not data. Selection ties break (mind DESC, pid ASC), the oracle's
-    ORDER BY mind DESC, vec_id."""
-    dim = len(corpus.select(vec_col).first()[0])
-    assert dim % m == 0, f"dim {dim} not divisible into {m} subvectors"
-    dsub = dim // m
-
-    pts = corpus.select(
-        F.col(id_col).alias("pid"), _unit(_dbl(F.col(vec_col))).alias("nv")
-    )
-
-    def sub(j: int) -> Column:
-        return F.slice(F.col("nv"), j * dsub + 1, dsub)
-
-    seed = pts.orderBy("pid").limit(1).collect()[0]
-    seed_nv = [float(x) for x in seed["nv"]]
-    books: list[list[list[float]]] = [
-        [seed_nv[j * dsub : (j + 1) * dsub]] for j in range(m)
-    ]
-    chosen: list[list] = [[seed["pid"]] for _ in range(m)]
-    state = pts.select(
-        "pid",
-        "nv",
-        *[
-            sq_dist_fp(sub(j), books[j][0], quantum).alias(f"mind_{j}")
-            for j in range(m)
-        ],
-    )
-    for step in range(1, n_codes):
-        far = state.select(
-            *[
-                F.max(
-                    F.when(
-                        ~F.col("pid").isin(chosen[j]),
-                        F.struct(
-                            F.col(f"mind_{j}").alias("mind"),
-                            (-F.col("pid")).alias("negpid"),
-                            sub(j).alias("sv"),
-                        ),
-                    )
-                ).alias(f"far_{j}")
-                for j in range(m)
-            ]
-        ).collect()[0]
-        for j in range(m):
-            fj = far[f"far_{j}"]
-            if fj is None:  # fewer distinct points than codes
-                continue
-            chosen[j].append(-fj["negpid"])
-            books[j].append([float(x) for x in fj["sv"]])
-        state = state.select(
-            "pid",
-            "nv",
-            *[
-                F.least(
-                    F.col(f"mind_{j}"),
-                    sq_dist_fp(sub(j), books[j][-1], quantum),
-                ).alias(f"mind_{j}")
-                for j in range(m)
-            ],
-        )
-        if step % 4 == 0:
-            state = state.localCheckpoint(eager=False)
-    return books
-
-
 def pq_kcenter_codebooks_sampled(
     corpus: DataFrame,
     id_col: str = "vec_id",
@@ -793,46 +617,32 @@ def pq_kcenter_codebooks_sampled(
     m: int = 8,
     n_codes: int = 8,
     quantum: float = 1e6,
-    sample_n: int | None = None,
-    seed: str | None = None,
+    sample_n: int = KC_SAMPLE_N,
+    seed: str = KC_SAMPLE_SEED,
 ) -> list[list[list[float]]]:
-    """:func:`pq_kcenter_codebooks` trained on the bounded
-    deterministic sample (``operators/selection.kcenter_train_sample``
-    device — the sample_n smallest md5(seed:id) draws): ONE Spark job
-    collects the L2-normalized sample (normalization computed IN
-    SPARK, the sequential fold both engines share), then every
-    subspace's greedy k-center runs driver-side in numpy with the
-    identical fixed-point arithmetic and tie-breaks. Replaces the
-    n_codes-1 sequential full-corpus scan+aggregate rounds — at
-    100 TB, codebook training must not scale with the corpus; the
-    bounded sample makes it constant-cost and still exactly
-    replayable as a per-subspace recursive CTE over the same sample.
-    When the corpus has ≤ sample_n rows the result is identical to
-    the full trainer (pinned in tests/test_northstar.py)."""
-    sample_n = KC_SAMPLE_N if sample_n is None else sample_n
-    seed = KC_SAMPLE_SEED if seed is None else seed
-    if not (1 <= sample_n <= 1_000_000):
-        # same bounded-collect guard as kcenter_train_sample
-        raise ValueError(f"training sample must be 1..1e6 rows, got {sample_n=}")
-    dim = len(corpus.select(vec_col).first()[0])
-    assert dim % m == 0, f"dim {dim} not divisible into {m} subvectors"
-    dsub = dim // m
+    """DETERMINISTIC product-quantization codebooks: per subspace, a
+    greedy k-center codebook over the L2-NORMALIZED subvectors — the
+    ``dedup_semantic_buckets`` / ``cosine_topk_ivf_kcenter`` device
+    applied to PQ, so the codebooks (and therefore the codes and every
+    ADC score) are exactly replayable as SQL.
 
-    key = F.md5(
-        F.concat(F.lit(seed + ":"), F.col(id_col).cast("string"))
+    Trained on the bounded deterministic sample of
+    ``selection.kcenter_train_sample`` (the ``sample_n`` smallest
+    md5(seed:id) draws): ONE Spark job collects the normalized sample
+    (normalization computed IN SPARK, the sequential fold both engines
+    share), then each subspace runs ``selection.kcenter_greedy_local``
+    on the driver, with its fixed-point arithmetic and (distance DESC,
+    id ASC) tie-breaks. Training cost never grows with the corpus, and
+    each subspace replays as a recursive CTE over the same sample.
+    Returns m x n_codes x (dim/m) Python floats — a model, not data."""
+    unit = corpus.select(
+        F.col(id_col), _unit(_dbl(F.col(vec_col))).alias(vec_col)
     )
-    rows = (
-        corpus.select(
-            F.col(id_col).alias("pid"),
-            _unit(_dbl(F.col(vec_col))).alias("nv"),
-            key.alias("__draw"),
-        )
-        .orderBy("__draw")
-        .limit(sample_n)
-        .select("pid", "nv")
-        .collect()
-    )
-    sample = [(r["pid"], list(r["nv"])) for r in rows]
+    sample = kcenter_train_sample(unit, id_col, vec_col, sample_n=sample_n, seed=seed)
+    dim = len(sample[0][1])
+    if dim % m:
+        raise ValueError(f"dim {dim} not divisible into {m} subvectors")
+    dsub = dim // m
     books: list[list[list[float]]] = []
     for j in range(m):
         sub_sample = [
@@ -998,7 +808,7 @@ def build_index(
     once, search many times — FAISS's build/search split; callers
     localCheckpoint it per session, at 100 TB it persists as
     cell-partitioned parquet."""
-    pts = spread_small_scan(
+    pts = spread_scan(
         corpus.select(F.col(id_col).alias("pid"), _dbl(F.col(vec_col)).alias("v"))
     )
     if model.unit:
@@ -1130,7 +940,6 @@ def cosine_topk_ivf(
     n_probe: int = 4,
     train_sample: int = 4096,
     seed: int = 42,
-    driver_train_bound: int = DRIVER_TRAIN_BOUND,
 ) -> DataFrame:
     """IVF on k-means cells: queries probe ``n_probe`` of
     ``n_clusters`` spherical centroids, candidates score with the exact
@@ -1138,7 +947,6 @@ def cosine_topk_ivf(
     model = kmeans_model(
         corpus, id_col, vec_col, n_clusters=n_clusters,
         train_sample=train_sample, seed=seed,
-        driver_train_bound=driver_train_bound,
     )
     return ann_topk(corpus, queries, model, id_col, vec_col, k=k, n_probe=n_probe)
 
@@ -1153,7 +961,6 @@ def cosine_topk_pq(
     n_codes: int = 32,
     train_sample: int = 4096,
     seed: int = 42,
-    driver_train_bound: int = DRIVER_TRAIN_BOUND,
 ) -> DataFrame:
     """PQ full scan with ADC over k-means codebooks: corpus vectors
     stored as ``m`` code ids, a row's approximate cosine is m table
@@ -1162,7 +969,6 @@ def cosine_topk_pq(
     model = kmeans_model(
         corpus, id_col, vec_col, m=m, n_codes=n_codes,
         train_sample=train_sample, seed=seed,
-        driver_train_bound=driver_train_bound,
     )
     return ann_topk(corpus, queries, model, id_col, vec_col, k=k)
 
@@ -1179,7 +985,6 @@ def cosine_topk_ivfpq(
     n_codes: int = 32,
     train_sample: int = 4096,
     seed: int = 42,
-    driver_train_bound: int = DRIVER_TRAIN_BOUND,
 ) -> DataFrame:
     """IVF+PQ on k-means (the FAISS production shape): IVF prunes
     WHICH inverted lists a query scans, PQ makes scanning a list cost
@@ -1187,7 +992,6 @@ def cosine_topk_ivfpq(
     model = kmeans_model(
         corpus, id_col, vec_col, n_clusters=n_clusters, m=m, n_codes=n_codes,
         train_sample=train_sample, seed=seed,
-        driver_train_bound=driver_train_bound,
     )
     return ann_topk(corpus, queries, model, id_col, vec_col, k=k, n_probe=n_probe)
 
@@ -1204,7 +1008,7 @@ def cosine_topk_ivf_kcenter(
     index: DataFrame | None = None,
 ) -> DataFrame:
     """IVF on DETERMINISTIC k-center cells (``centers`` from
-    ``selection.kcenter_greedy[_sampled]``): the whole answer —
+    ``selection.kcenter_greedy_sampled``): the whole answer —
     train, assign, probe, exact rescoring — value-oracles in SQL.
     ``index``: a :func:`build_index` result for ``AnnModel(centers)``."""
     return ann_topk(
@@ -1225,7 +1029,7 @@ def cosine_topk_pq_kcenter(
     rescore: int | None = None,
 ) -> DataFrame:
     """PQ full scan with ADC over DETERMINISTIC k-center codebooks
-    (:func:`pq_kcenter_codebooks[_sampled]`), value-oracled; ``rescore``
+    (:func:`pq_kcenter_codebooks_sampled`), value-oracled; ``rescore``
     adds the exact refinement stage. ``codes``: a :func:`build_index`
     result for ``AnnModel(books=books)``."""
     return ann_topk(

@@ -574,7 +574,7 @@ def embedding_cosine_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cosine_near_dup_pairs(emb, threshold=0.45)
 
 
-# Fixed-point squared-L2 — the DuckDB twin of selection.sq_dist_fp.
+# Fixed-point squared-L2 — the DuckDB twin of selection.sq_dist_fp_sql.
 _IVF_DIST_SQL = (
     "list_sum(list_transform(range(1, len({a}) + 1), "
     "i -> CAST(round(({a}[i] - {b}[i]) * ({a}[i] - {b}[i]) * 1e6) "

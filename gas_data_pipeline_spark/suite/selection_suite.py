@@ -709,7 +709,7 @@ def coreset_kcenter_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-element fixed-point BIGINT sums, so the farthest-point argmax
     and the oracle's recursive-CTE replay over the identical sample
     agree exactly even at near-ties (`operators/selection.py:
-    sq_dist_fp`). Training goes through the session-scoped
+    sq_dist_fp_sql`). Training goes through the session-scoped
     `_corpus_kcenter` seam so the sample collects once per corpus
     per session."""
     from gas_data_pipeline_spark.operators.selection import (

@@ -672,52 +672,44 @@ def test_ivfpq_topk_recall_and_soundness(spark):
     )
 
 
-def test_distributed_kmeans_training_paths_recall(spark, emb_pdf, caplog):
-    """VERDICT r3 #6: training above driver_train_bound routes through
-    pyspark.ml KMeans instead of the driver Lloyd loop. Forcing that
-    regime (bound=1 < train_sample) must hold the driver-path recall
-    floors, keep IVF candidate scores exact (assignment changes, the
-    scoring kernel doesn't), and log the path choice."""
-    import logging
-
+def test_kmeans_model_refuses_a_sample_above_the_driver_bound(spark):
+    """k-means trains on one driver sample: a training sample above
+    DRIVER_TRAIN_BOUND is refused before any Spark job is submitted."""
     from gas_data_pipeline_spark.catalog import table
     from gas_data_pipeline_spark.operators.similarity import (
-        cosine_topk,
-        cosine_topk_ivf,
-        cosine_topk_pq,
+        DRIVER_TRAIN_BOUND,
+        kmeans_model,
     )
 
     emb = table(spark, SF_SMALL, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 8)
-    exact = cosine_topk(emb, queries, k=10).toPandas()
-    e = set(zip(exact.query_id, exact.neighbor_id))
+    sc = spark.sparkContext
+    group = "kmeans-bound-check"
+    sc.setJobGroup(group, "k-means training-sample bound")
+    try:
+        with pytest.raises(ValueError, match="training sample"):
+            kmeans_model(emb, n_clusters=4, train_sample=DRIVER_TRAIN_BOUND + 1)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
 
-    with caplog.at_level(
-        logging.INFO, logger="gas_data_pipeline_spark.operators.similarity"
-    ):
-        ivf = cosine_topk_ivf(
-            emb, queries, k=10, n_clusters=16, n_probe=4, driver_train_bound=1
-        ).toPandas()
-    assert "distributed ml.KMeans path" in caplog.text
 
-    vecs = {
-        r.vec_id: np.asarray(r.embedding, dtype=float)
-        for r in emb_pdf.itertuples()
-    }
-    for row in ivf.itertuples():
-        a, b = vecs[row.query_id], vecs[row.neighbor_id]
-        expect = float(np.dot(a, b) / (np.linalg.norm(a) * np.linalg.norm(b)))
-        assert row.cos_sim == pytest.approx(expect, abs=1e-9)
-    ivf_recall = len(e & set(zip(ivf.query_id, ivf.neighbor_id))) / len(e)
-    assert ivf_recall >= 0.5, ivf_recall  # same floor as the driver path
+@pytest.mark.parametrize("trainer", ["kmeans", "kcenter"])
+def test_pq_trainers_refuse_m_not_dividing_the_dim(spark, trainer):
+    """An ``m`` that does not divide the 64-dim vectors would silently
+    truncate every subvector: both PQ trainers raise ValueError (an
+    assert would vanish under ``python -O``)."""
+    from gas_data_pipeline_spark.catalog import table
+    from gas_data_pipeline_spark.operators.similarity import (
+        kmeans_model,
+        pq_kcenter_codebooks_sampled,
+    )
 
-    pq = cosine_topk_pq(
-        emb, queries, k=10, m=16, n_codes=32, driver_train_bound=1
-    ).toPandas()
-    for qid, grp in pq.groupby("query_id"):
-        assert sorted(grp["rank"]) == list(range(1, len(grp) + 1))
-    pq_recall = len(e & set(zip(pq.query_id, pq.neighbor_id))) / len(e)
-    assert pq_recall >= 0.4, pq_recall  # same floor as the driver path
+    emb = table(spark, SF_SMALL, "embeddings")
+    with pytest.raises(ValueError, match="not divisible into 3 subvectors"):
+        if trainer == "kmeans":
+            kmeans_model(emb, m=3, n_codes=8)
+        else:
+            pq_kcenter_codebooks_sampled(emb, m=3, n_codes=8)
 
 
 def test_pq_ivfpq_corpus_scale_query_side(spark):
@@ -1189,7 +1181,7 @@ def test_ivf_kcenter_scores_exact_and_recall(spark, emb_pdf):
     import pytest
 
     from gas_data_pipeline_spark.catalog import table
-    from gas_data_pipeline_spark.operators.selection import kcenter_greedy
+    from gas_data_pipeline_spark.operators.selection import kcenter_greedy_sampled
     from gas_data_pipeline_spark.operators.similarity import (
         cosine_topk,
         cosine_topk_ivf_kcenter,
@@ -1198,7 +1190,9 @@ def test_ivf_kcenter_scores_exact_and_recall(spark, emb_pdf):
     emb = table(spark, SF_SMALL, "embeddings")
     queries = emb.filter(F.col("vec_id") < 8)
     exact = cosine_topk(emb, queries, k=10).toPandas()
-    centers, _ = kcenter_greedy(emb, "vec_id", "embedding", k=16)
+    centers = kcenter_greedy_sampled(
+        emb, "vec_id", "embedding", k=16, sample_n=emb.count()
+    )
     ivf = cosine_topk_ivf_kcenter(
         emb, queries, centers, k=10, n_probe=4
     ).toPandas()
@@ -1229,13 +1223,13 @@ def test_pq_kcenter_recall_and_determinism(spark, emb_pdf):
     from gas_data_pipeline_spark.operators.similarity import (
         cosine_topk,
         cosine_topk_pq_kcenter,
-        pq_kcenter_codebooks,
+        pq_kcenter_codebooks_sampled,
     )
 
     emb = table(spark, SF_SMALL, "embeddings")
     queries = emb.filter(F.col("vec_id") < 8)
     exact = cosine_topk(emb, queries, k=10).toPandas()
-    books = pq_kcenter_codebooks(emb, m=8, n_codes=8)
+    books = pq_kcenter_codebooks_sampled(emb, m=8, n_codes=8, sample_n=emb.count())
     assert len(books) == 8 and all(len(b) == 8 for b in books)
     pq = cosine_topk_pq_kcenter(emb, queries, books, k=10).toPandas()
 
@@ -1277,11 +1271,10 @@ def test_pq_kcenter_recall_and_determinism(spark, emb_pdf):
     )
 
 
-def test_sampled_codebooks_match_full_and_keep_recall(spark):
-    """The bounded-sample trainers must (a) be bit-identical to the
-    full trainers when the sample covers the corpus, and (b) keep the
-    registered queries' recall floors when truncated to the default
-    256-draw sample (the shape ann_ivf / ann_pq now train with)."""
+def test_sampled_codebooks_keep_recall(spark):
+    """The bounded-sample trainers must keep the registered queries'
+    recall floors when truncated to the default 256-draw sample (the
+    shape ann_ivf / ann_pq train with)."""
     from gas_data_pipeline_spark.catalog import table
     from gas_data_pipeline_spark.operators.selection import (
         kcenter_greedy_sampled,
@@ -1290,17 +1283,10 @@ def test_sampled_codebooks_match_full_and_keep_recall(spark):
         cosine_topk,
         cosine_topk_ivf_kcenter,
         cosine_topk_pq_kcenter,
-        pq_kcenter_codebooks,
         pq_kcenter_codebooks_sampled,
     )
 
     emb = table(spark, SF_SMALL, "embeddings")
-    full_books = pq_kcenter_codebooks(emb, m=8, n_codes=8)
-    cover_books = pq_kcenter_codebooks_sampled(
-        emb, m=8, n_codes=8, sample_n=5000
-    )
-    assert full_books == cover_books
-
     queries = emb.filter(F.col("vec_id") < 8)
     exact = cosine_topk(emb, queries, k=10).toPandas()
     e = set(zip(exact.query_id, exact.neighbor_id))
@@ -1450,7 +1436,7 @@ def test_ivfpq_index_is_one_zero_shuffle_scan(spark):
     books = pq_kcenter_codebooks_sampled(emb, m=8, n_codes=4)
     idx = build_index(emb, AnnModel(centers=centers, books=books))
     build_plan = idx._jdf.queryExecution().executedPlan().toString()
-    # the only allowed exchange is spread_small_scan's test-scale
+    # the only allowed exchange is spread_scan's test-scale
     # round-robin repartition — never a join exchange
     assert "SortMergeJoin" not in build_plan and "HashJoin" not in build_plan
     queries = emb.filter(F.col("vec_id") < 4)
@@ -1473,13 +1459,13 @@ def test_pq_kcenter_rescore_lifts_recall(spark, emb_pdf):
     from gas_data_pipeline_spark.operators.similarity import (
         cosine_topk,
         cosine_topk_pq_kcenter,
-        pq_kcenter_codebooks,
+        pq_kcenter_codebooks_sampled,
     )
 
     emb = table(spark, SF_SMALL, "embeddings")
     queries = emb.filter(F.col("vec_id") < 8)
     exact = cosine_topk(emb, queries, k=10).toPandas()
-    books = pq_kcenter_codebooks(emb, m=8, n_codes=8)
+    books = pq_kcenter_codebooks_sampled(emb, m=8, n_codes=8, sample_n=emb.count())
     raw = cosine_topk_pq_kcenter(emb, queries, books, k=10).toPandas()
     ref = cosine_topk_pq_kcenter(
         emb, queries, books, k=10, rescore=100

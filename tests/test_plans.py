@@ -166,6 +166,32 @@ def test_package_builds_driver_frames_only_through_local_table():
     assert calls == []
 
 
+def test_package_imports_no_pyspark_ml():
+    # Every quantizer trains on one bounded driver sample: no module
+    # reaches for the distributed pyspark.ml trainers.
+    import ast
+    import pathlib
+
+    import gas_data_pipeline_spark
+
+    root = pathlib.Path(gas_data_pipeline_spark.__file__).parent
+    imports = []
+    for path in sorted(root.rglob("*.py")):
+        for n in ast.walk(ast.parse(path.read_text())):
+            if isinstance(n, ast.Import):
+                mods = [a.name for a in n.names]
+            elif isinstance(n, ast.ImportFrom):
+                mods = [n.module or ""]
+            else:
+                continue
+            imports += [
+                f"{path.relative_to(root)}:{n.lineno}"
+                for mod in mods
+                if mod.split(".")[:2] == ["pyspark", "ml"]
+            ]
+    assert imports == []
+
+
 def test_suite_moves_no_file_into_a_watched_dir():
     # streaming.incremental.run_staged_stream is the one place a staged
     # file moves into a stream's watched dir: no suite query moves

@@ -231,11 +231,23 @@ def test_cms_monitor_writer_replay_converges(spark, tmp_path):
 
 
 def _kcenter(spark, k=8):
+    """Centers trained on the whole corpus (a sample covering every
+    row) and the corpus assigned to them."""
     from gas_data_pipeline_spark.catalog import table
-    from gas_data_pipeline_spark.operators.selection import kcenter_greedy
+    from gas_data_pipeline_spark.operators.selection import (
+        assign_to_centers,
+        kcenter_greedy_sampled,
+    )
 
     emb = table(spark, SF_DIR, "embeddings")
-    return kcenter_greedy(emb, "vec_id", "embedding", k=k)
+    centers = kcenter_greedy_sampled(
+        emb, "vec_id", "embedding", k=k, sample_n=emb.count()
+    )
+    pts = emb.select(
+        F.col("vec_id").alias("pid"),
+        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
+    )
+    return centers, assign_to_centers(pts, centers)
 
 
 def test_kcenter_radii_nonincreasing_and_cover(spark):
@@ -263,7 +275,7 @@ def test_kcenter_beats_prefix_selection(spark):
     """The diversity claim, concretely: greedy-8's coverage radius is
     strictly better than picking the first 8 vectors by id."""
     from gas_data_pipeline_spark.catalog import table
-    from gas_data_pipeline_spark.operators.selection import sq_dist_fp
+    from gas_data_pipeline_spark.operators.selection import sq_dist_fp_sql
 
     _, greedy_assigned = _kcenter(spark)
     greedy_radius = greedy_assigned.agg(F.max("sq_fp")).collect()[0][0]
@@ -274,7 +286,7 @@ def test_kcenter_beats_prefix_selection(spark):
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
     )
     prefix = [list(r["v"]) for r in pts.orderBy("vec_id").limit(8).collect()]
-    mind = F.least(*[sq_dist_fp(F.col("v"), c) for c in prefix])
+    mind = F.least(*[F.expr(sq_dist_fp_sql("v", c)) for c in prefix])
     prefix_radius = pts.agg(F.max(mind)).collect()[0][0]
     assert greedy_radius < prefix_radius
 
@@ -489,13 +501,16 @@ def test_ann_index_incremental_frozen_quantizer(spark):
     from gas_data_pipeline_spark.catalog import table
     from gas_data_pipeline_spark.operators.selection import (
         assign_to_centers,
-        kcenter_greedy,
+        kcenter_greedy_sampled,
     )
 
     emb = table(spark, SF_DIR, "embeddings")
     base = emb.filter(F.col("vec_id") % 10 != 0)
-    c1, _ = kcenter_greedy(base, "vec_id", "embedding", k=4)
-    c2, _ = kcenter_greedy(base.repartition(5), "vec_id", "embedding", k=4)
+    n = base.count()
+    c1 = kcenter_greedy_sampled(base, "vec_id", "embedding", k=4, sample_n=n)
+    c2 = kcenter_greedy_sampled(
+        base.repartition(5), "vec_id", "embedding", k=4, sample_n=n
+    )
     assert [(c["step"], c["id"], c["sq_fp"]) for c in c1] == [
         (c["step"], c["id"], c["sq_fp"]) for c in c2
     ]
@@ -518,50 +533,30 @@ def test_ann_index_incremental_frozen_quantizer(spark):
 
 def test_kcenter_stops_early_on_small_inputs(spark):
     """Fewer distinct points than k must return the points found (the
-    oracle's recursive CTE stops early), not crash on an empty top-1
-    collect (ADVICE r7)."""
-    from gas_data_pipeline_spark.operators.selection import kcenter_greedy
+    oracle's recursive CTE stops early), not crash (ADVICE r7)."""
+    from gas_data_pipeline_spark.operators.selection import (
+        assign_to_centers,
+        kcenter_greedy_sampled,
+    )
 
     pts = spark.createDataFrame(
         [(1, [0.0, 0.0]), (2, [3.0, 4.0]), (3, [6.0, 8.0])],
         "vec_id bigint, embedding array<double>",
     )
-    centers, assigned = kcenter_greedy(pts, "vec_id", "embedding", k=8)
+    centers = kcenter_greedy_sampled(pts, "vec_id", "embedding", k=8)
+    assigned = assign_to_centers(
+        pts.select(F.col("vec_id").alias("pid"), F.col("embedding").alias("v")), centers
+    )
     assert [c["id"] for c in centers] == [1, 3, 2]  # seed, farthest, rest
     assert [c["step"] for c in centers] == [1, 2, 3]
     rows = {r["pid"]: r["center_id"] for r in assigned.collect()}
     assert rows == {1: 1, 2: 2, 3: 3}  # every point is its own center
 
 
-def test_kcenter_sampled_matches_full_trainer_when_sample_covers(spark):
-    """With sample_n >= corpus size the bounded-sample trainer's
-    selection (ids, steps, fixed-point distances, vectors) must be
-    BIT-IDENTICAL to the distributed full trainer — the invariant
-    that lets the sampled path replace the k-full-scan path without
-    changing semantics, only the training-input bound."""
-    from gas_data_pipeline_spark.catalog import table
-    from gas_data_pipeline_spark.operators.selection import (
-        kcenter_greedy,
-        kcenter_greedy_sampled,
-    )
-    from tests.conftest import SF_DIR
-
-    emb = table(spark, SF_DIR, "embeddings")
-    full, _ = kcenter_greedy(emb, "vec_id", "embedding", k=8)
-    samp = kcenter_greedy_sampled(
-        emb, "vec_id", "embedding", k=8, sample_n=5000
-    )
-    assert [(c["step"], c["id"], c["sq_fp"]) for c in full] == [
-        (c["step"], c["id"], c["sq_fp"]) for c in samp
-    ]
-    for a, b in zip(full, samp):
-        assert a["vec"] == b["vec"]
-
-
 def test_kcenter_sampled_is_one_job_and_bounded(spark):
     """The sampled trainer must collect exactly the sample_n smallest
     md5 draws (deterministic, engine-portable cut) and stop early on
-    tiny inputs like the full trainer."""
+    tiny inputs."""
     from gas_data_pipeline_spark.operators.selection import (
         kcenter_greedy_sampled,
         kcenter_train_sample,
