@@ -1,37 +1,39 @@
-"""Trained quality-classifier lifecycle (SURVEY §2.11 extensions,
-round 7): distributed FULL-BATCH gradient-descent training of a
-hashing-trick linear classifier, then a stochastic acceptance filter
-over its scores — the "train a discriminator against a reference
-corpus, keep crawl docs it likes" stage of GPT-3 / CCNet / RefinedWeb
-style pipelines (Brown et al. 2020 §A; the reference repo has no
+"""Trained quality-classifier lifecycle (SURVEY §2.11 extensions):
+a bounded driver fit of a hashing-trick linear classifier, then a
+stochastic acceptance filter over its scores applied in generated
+SQL — the "train a discriminator against a reference corpus, keep
+crawl docs it likes" stage of GPT-3 / CCNet / RefinedWeb style
+pipelines (Brown et al. 2020 §A; the reference repo has no
 model-training surface, so this is a beyond-reference family mandated
 by the build brief).
 
 Where :mod:`operators/selection.py` ships a FIXED weight vector
 (`quality_model_score`), this module closes the lifecycle the way
 ``operators/bpe.py`` does for tokenizers: train → inspect trajectory
-→ apply. The trainer is the classic Spark iterative-aggregate shape:
+→ apply. The split is the one "ML Inference Pipeline Execution Using
+Pure SQL Based on Operator Fusion" (ICDE 2025) argues for:
 
-- **One map-side-combinable aggregate per iteration.** The gradient
-  of the squared-error/hard-sigmoid objective is ``g_j = Σ_d e_d ·
-  x_dj`` — an integer sum over exploded (bucket, doc-error) pairs
-  that partial-aggregates to ``dim + 1`` rows (64 feature buckets +
-  the bias sentinel −1). At 100 TB the reduce-side exchange per
-  iteration is ``partitions × 65`` partial sums, never corpus-sized.
-- **The model rides the closure.** Weights live on the driver
-  (65 integers — a model, not data) and are embedded in the next
-  iteration's scan as a ``map<bigint,bigint>`` literal, so the
-  per-doc margin ``z_d`` is a ZERO-shuffle JVM-side array fold with
-  no join (same embed discipline as the DSIR ratio map and the IVF
-  codebooks).
+- **Bounded driver fit.** The trainer draws :func:`fit_sample` (at
+  most ``FIT_N`` docs, one TakeOrderedAndProject), featurizes it in
+  Spark and collects ``(bs, y_fp)`` in ONE job. Full-batch gradient
+  descent then runs on the driver over a numpy int64 bucket-count
+  matrix ``X``: margins are ``X @ w``, gradients ``X.T @ e``. The fit
+  costs the same at any corpus size, and no Spark job runs per
+  iteration.
+- **SQL apply.** The trained model (65 integers — a model, not data)
+  is embedded in the scoring scan as a ``map<bigint,bigint>``
+  literal, so the per-doc margin ``z_d`` is a ZERO-shuffle JVM-side
+  array fold with no join (same embed discipline as the DSIR ratio
+  map and the IVF codebooks).
 - **Engine-exact arithmetic.** Every quantity is fixed-point BIGINT
   (scale 1e6): the activation is a HARD sigmoid
   ``clamp(floor(z/4) + 0.5, 0, 1)`` (Collobert 2004's piecewise
   approximation), so the whole trajectory is integer sums plus
-  IEEE-exact ``floor(x / 4.0)`` / ``floor(g·η / N)`` steps — DuckDB
-  replays all three unrolled iterations bit-for-bit, which is what
-  makes a TRAINING RUN value-oracle-able (a float ``exp`` sigmoid
-  would drift in the last ulp and flip fixed-point boundaries).
+  IEEE-exact ``floor(x / 4.0)`` / ``floor(g·η / N)`` steps — numpy on
+  the driver, Spark in the apply scan and DuckDB's unrolled replay of
+  all three iterations agree bit-for-bit, which is what makes a
+  TRAINING RUN value-oracle-able (a float ``exp`` sigmoid would drift
+  in the last ulp and flip fixed-point boundaries).
 
 Labels are deterministic weak supervision: ``y = 1`` for the target
 slice (English docs — the same "reference corpus" proxy the DSIR fit
@@ -42,6 +44,7 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -53,6 +56,8 @@ FP = 1_000_000
 SIGMOID_DIV = 4.0
 # Bias term travels as the sentinel bucket -1 (one occurrence per doc).
 BIAS_BUCKET = -1
+# Fit-sample bound: training collects at most this many docs.
+FIT_N = 2048
 
 
 def hashed_buckets(words: Column, *, salt: str, dim: int) -> Column:
@@ -96,111 +101,18 @@ def _weight_map(weights: dict[int, int]) -> Column:
             continue
         pairs.append(F.lit(int(b)).cast("bigint"))
         pairs.append(F.lit(int(w)).cast("bigint"))
-    if not pairs:  # iteration 1: all-zero model
+    if not pairs:  # an empty (all-zero) model
         return F.map_from_arrays(
             F.array().cast("array<bigint>"), F.array().cast("array<bigint>")
         )
     return F.create_map(*pairs)
 
 
-def featurize(
-    docs: DataFrame,
-    words: Column,
-    is_target: Column,
-    *,
-    salt: str = "qclf-v1",
-    dim: int = 64,
-    extra_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """The shared featurization scan: per doc the hashed bucket array
-    ``bs`` plus the fixed-point label ``y_fp`` (and any passthrough
-    ``extra_cols`` the caller needs downstream). Training replays this
-    frame once per GD iteration and scoring once more — callers should
-    ``persist()`` it so the word split + md5 hashing run ONCE, not 4-5
-    times (the r7 scale probe flagged the unpersisted replay at
-    per-copy 1.65)."""
-    return docs.select(
-        *extra_cols,
-        hashed_buckets(words, salt=salt, dim=dim).alias("bs"),
-        F.when(is_target, F.lit(FP)).otherwise(F.lit(0))
-        .cast("bigint")
-        .alias("y_fp"),
-    )
-
-
-def train_on_features(
-    feats: DataFrame,
-    *,
-    iters: int = 3,
-    eta: float = 0.0625,
-) -> list[dict[int, int]]:
-    """Full-batch gradient descent on the hard-sigmoid squared-error
-    surrogate, over a pre-featurized (``bs``, ``y_fp``) frame. Returns
-    the weight snapshot AFTER each iteration (a list of
-    ``{bucket: w_fp}`` dicts including the bias at bucket −1) so
-    callers can expose the whole trajectory to an oracle.
-
-    Per iteration exactly ONE distributed action: scan feats, fold the
-    margin per row against the embedded weight map, explode the
-    bucket array (bias sentinel appended) carrying the doc error, and
-    partial-aggregate ``sum(e_d)`` per bucket — ``g_j = Σ_d e_d x_dj``
-    lands as ``dim + 1`` rows on the driver. The update
-    ``w_j ← w_j − floor(g_j · η / N)`` runs in Python on the 65-entry
-    model; N is read from the same aggregate (the bias row counts
-    every doc once), so training adds no extra ``count()`` job.
-
-    ``eta`` must be a power of two so ``g · η`` is exact in IEEE
-    doubles (the oracle contract). The 1/16 default is sized to the
-    corpus's feature scale: docs average ~50 word occurrences whose
-    bucket weights all move together on the first step, so a step
-    that changes each weight by Δ moves a margin by ~50Δ — 1/16
-    keeps first-step margins inside the hard sigmoid's linear band
-    (|z| < 2e6) instead of slamming every doc to a saturated 0/1
-    where gradients stop being informative."""
-    weights: dict[int, int] = {}
-    snapshots: list[dict[int, int]] = []
-    n_docs: int | None = None
-    for _ in range(iters):
-        w_map = _weight_map(weights)
-        bias = weights.get(BIAS_BUCKET, 0)
-        e_fp = hard_sigmoid_fp(margin_fp(F.col("bs"), w_map, bias)) - F.col(
-            "y_fp"
-        )
-        grad_rows = (
-            feats.select(
-                e_fp.alias("e_fp"),
-                F.explode(
-                    F.array_append(
-                        F.col("bs"), F.lit(BIAS_BUCKET).cast("bigint")
-                    )
-                ).alias("bucket"),
-            )
-            .groupBy("bucket")
-            .agg(F.sum("e_fp").alias("g"), F.count(F.lit(1)).alias("x_tot"))
-            .collect()
-        )
-        if n_docs is None:
-            n_docs = next(
-                int(r["x_tot"]) for r in grad_rows if r["bucket"] == BIAS_BUCKET
-            )
-        new_w = dict(weights)
-        for r in grad_rows:
-            b = int(r["bucket"])
-            # g·η exact (η = power of two), /N IEEE-exact-rounded,
-            # floor — bit-identical in Spark, DuckDB, and CPython.
-            new_w[b] = new_w.get(b, 0) - math.floor(
-                int(r["g"]) * eta / n_docs
-            )
-        weights = new_w
-        snapshots.append(dict(weights))
-    return snapshots
-
-
 def fit_sample(
     docs: DataFrame,
     *,
     id_col: str = "doc_id",
-    n: int = 2048,
+    n: int = FIT_N,
     salt: str = "qcf-fit",
 ) -> DataFrame:
     """Deterministic bounded fit sample (VERDICT r11 #3): the ``n``
@@ -229,29 +141,69 @@ def train_quality_classifier(
     iters: int = 3,
     eta: float = 0.0625,
 ) -> list[dict[int, int]]:
-    """Featurize-then-train convenience wrapper: persists the
-    featurized frame for the GD loop (the word split + hashing scan
-    runs once, every iteration reads the cache) and releases it when
-    the trajectory is collected. Callers that also SCORE afterwards
-    should instead :func:`featurize` + persist themselves and pass the
-    same frame to :func:`train_on_features` and
-    :func:`score_from_buckets`, so scoring shares the cache too."""
-    feats = featurize(docs, words, is_target, salt=salt, dim=dim).persist()
-    try:
-        return train_on_features(feats, iters=iters, eta=eta)
-    finally:
-        feats.unpersist()
+    """Bounded driver fit: full-batch gradient descent on the
+    hard-sigmoid squared-error surrogate over :func:`fit_sample`'s
+    ``FIT_N`` docs of ``docs`` (keyed by ``doc_id``). Returns the
+    weight snapshot AFTER each iteration (a list of ``{bucket: w_fp}``
+    dicts including the bias at bucket −1) so callers can expose the
+    whole trajectory to an oracle.
 
+    Spark runs ONE job: the sample's TakeOrderedAndProject, which
+    featurizes each doc (hashed bucket array ``bs``, fixed-point label
+    ``y_fp``) and collects at most ``FIT_N`` rows. The iterations run
+    on the driver over the int64 count matrix ``X`` (doc × bucket):
+    ``e = hard_sigmoid(X @ w + b) − y``, ``g = X.T @ e``, and
+    ``w_j ← w_j − floor(g_j · η / N)`` per bucket any doc hashed into
+    (the bias steps on ``Σ e``). A doc whose bucket array is null
+    (null text) adds no gradient row and does not count in N.
 
-def score_from_buckets(buckets: Column, weights: dict[int, int]) -> Column:
-    """Fixed-point classifier score from an existing bucket-array
-    column under a trained snapshot — the zero-shuffle apply side
-    (model as map literal, margin as array fold, hard sigmoid). Use
-    this over a persisted :func:`featurize` frame so scoring reuses
-    the cached featurization instead of re-splitting the corpus."""
-    w_map = _weight_map(weights)
-    bias = weights.get(BIAS_BUCKET, 0)
-    return hard_sigmoid_fp(margin_fp(buckets, w_map, bias))
+    ``eta`` must be a power of two so ``g · η`` is exact in IEEE
+    doubles (the oracle contract); anything else raises ValueError.
+    The 1/16 default is sized to the corpus's feature scale: docs
+    average ~50 word occurrences whose bucket weights all move
+    together on the first step, so a step that changes each weight by
+    Δ moves a margin by ~50Δ — 1/16 keeps first-step margins inside
+    the hard sigmoid's linear band (|z| < 2e6) instead of slamming
+    every doc to a saturated 0/1 where gradients stop being
+    informative."""
+    if not (eta > 0 and math.frexp(eta)[0] == 0.5):
+        raise ValueError(f"eta must be a power of two, got {eta!r}")
+    rows = [
+        (r["bs"], r["y_fp"])
+        for r in fit_sample(docs)
+        .select(
+            hashed_buckets(words, salt=salt, dim=dim).alias("bs"),
+            F.when(is_target, F.lit(FP)).otherwise(F.lit(0)).alias("y_fp"),
+        )
+        .collect()
+        if r["bs"] is not None
+    ]
+    n_docs = len(rows)
+    sizes = np.fromiter((len(bs) for bs, _ in rows), np.int64, n_docs)
+    cells = np.repeat(np.arange(n_docs), sizes) * dim + np.fromiter(
+        (b for bs, _ in rows for b in bs), np.int64, int(sizes.sum())
+    )
+    x = np.bincount(cells, minlength=n_docs * dim).reshape(n_docs, dim)
+    y = np.fromiter((y for _, y in rows), np.int64, n_docs)
+    seen = np.flatnonzero(x.any(axis=0)).tolist()
+    w = np.zeros(dim, np.int64)
+    bias = 0
+    snapshots: list[dict[int, int]] = []
+    for _ in range(iters):
+        z = x @ w + bias
+        p = np.clip(np.floor(z / SIGMOID_DIV).astype(np.int64) + FP // 2, 0, FP)
+        e = p - y
+        g = x.T @ e
+        # g·η exact (η = power of two), /N IEEE-exact-rounded, floor —
+        # bit-identical in numpy, CPython and DuckDB.
+        for b in seen:
+            w[b] -= math.floor(int(g[b]) * eta / n_docs)
+        snap = {b: int(w[b]) for b in seen}
+        if n_docs:
+            bias -= math.floor(int(e.sum()) * eta / n_docs)
+            snap[BIAS_BUCKET] = bias
+        snapshots.append(snap)
+    return snapshots
 
 
 def score_fp(
@@ -262,8 +214,12 @@ def score_fp(
     salt: str = "qclf-v1",
     dim: int = 64,
 ) -> Column:
-    """:func:`score_from_buckets` with the featurization inline — for
-    one-shot scoring where nothing else reuses the bucket arrays."""
-    return score_from_buckets(
-        hashed_buckets(words, salt=salt, dim=dim), weights
+    """Fixed-point classifier score of each doc under a trained
+    snapshot — the zero-shuffle apply side: featurize inline, the
+    model as a map literal, the margin as an array fold, then the hard
+    sigmoid."""
+    w_map = _weight_map(weights)
+    bias = weights.get(BIAS_BUCKET, 0)
+    return hard_sigmoid_fp(
+        margin_fp(hashed_buckets(words, salt=salt, dim=dim), w_map, bias)
     )

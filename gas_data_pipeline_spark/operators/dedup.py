@@ -27,7 +27,8 @@ Kernel (registered queries): bucket keys -> scorer.
 - jaccard_pairs_prefix_filter (dedup_prefix_jaccard): df-ranked prefix
   shingles, PPJoin length bound -> verify.
 - minhash_near_dup_pairs (dedup_minhash_lsh, split_neardup_leakage):
-  (band, band_hash) of the MinHash signature -> verify.
+  (band, band_hash) of the MinHash signature -> verify, both over one
+  checkpoint of the hashed sets.
 - simhash_band_pairs: max_hamming + 1 fingerprint bit-bands -> popcount
   of XOR (dedup_simhash only fingerprints).
 - dedup_containment_pairs (suite/northstar): every shingle -> count,
@@ -598,7 +599,9 @@ def minhash_near_dup_pairs(
 ) -> DataFrame:
     """X1 MinHash-LSH: the banded signature's ``(band, band_hash)``
     keys nominate candidates; the verify scorer computes their exact
-    Jaccard on the hashed sets.
+    Jaccard on the hashed sets. The corpus is shingled once, into an
+    eager ``localCheckpoint`` of the hashed sets that the sizing count,
+    the signature and both verify joins read.
 
     Default bands=32 × rows=2 (k=64) is a recall-leaning S-curve:
     capture probability at j=0.5 is 1-(1-0.25)^32 ≈ 0.9999 (vs ~40%
@@ -611,7 +614,11 @@ def minhash_near_dup_pairs(
     if not 1 <= bands <= k or k % bands:
         raise ValueError(f"bands must divide k (k={k}, bands={bands})")
     rows_per_band = k // bands
-    sets = hashed_shingles(df, id_col, shingle_col)
+    # The hashed sets feed the sizing count, the signature branch and
+    # both verify joins: shingle the corpus once, into a checkpoint
+    # (hashed sets only, not the raw text). localCheckpoint (not
+    # persist) scopes it to this call, so no later call reads it.
+    sets = hashed_shingles(df, id_col, shingle_col).localCheckpoint(eager=True)
     # Shingle string-hashing stays JVM-side; the k-permutation XOR-min
     # runs vectorized in numpy (identical output to the expression
     # formulation, ~30x faster on wide shingle sets). A corpus of one
@@ -619,19 +626,13 @@ def minhash_near_dup_pairs(
     # shuffle); a larger one keeps its partitions, since narrowing sf0.1's
     # 3 blocks from 4 partitions cost more CPU and wall than it saved.
     signed = sets.coalesce(1) if block_count(sets.count()) == 1 else sets
-    sig = signed.withColumn("sig", minhash_signature_pandas(k)("shingles")).filter(
-        F.size("shingles") > 0
+    # Empty sets would share the all-MAX signature and all-pairs
+    # explode in every band bucket: they drop before signing. (The
+    # checkpoint is opaque to the optimizer, so this guard cannot be
+    # pushed below it into a second shingling of the corpus.)
+    sig = signed.filter(F.size("shingles") > 0).withColumn(
+        "sig", minhash_signature_pandas(k)("shingles")
     )
-    # ^ The empty-shingle guard (empty docs would share the all-MAX
-    # signature and all-pairs explode in every band bucket) sits ABOVE
-    # the nondeterministic sig projection, which Catalyst refuses to
-    # push predicates through. Filtering the sets directly let the
-    # optimizer substitute the shingle expression into the predicate
-    # and push it below the spread exchange, so the whole shingle tree
-    # ran twice per doc — once serially on the scan's 1-2 splits
-    # (plan-audited r14). Same rows dropped before banding either way;
-    # the signature UDF maps an empty array to the MAX sentinel, so
-    # the extra empty rows it sees are well-defined.
     # Band keys only — the shingle arrays must NOT ride through the
     # band explode (a `bands`-fold payload blowup in the shuffle);
     # they re-attach once per candidate in the verify scorer.

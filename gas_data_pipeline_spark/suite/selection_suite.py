@@ -16,6 +16,11 @@ from pyspark.sql.window import Window
 
 from gas_data_pipeline_spark.catalog import local_table, table
 from gas_data_pipeline_spark.functions.exprs import bind
+from gas_data_pipeline_spark.operators.classifier import (
+    FIT_N,
+    score_fp,
+    train_quality_classifier,
+)
 from gas_data_pipeline_spark.operators.selection import (
     QUALITY_STOPWORDS,
     cms_build,
@@ -742,40 +747,33 @@ def coreset_kcenter_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Trained quality classifier (full-batch GD, hashing trick)
+# Trained quality classifier (bounded driver fit, SQL apply)
 # ---------------------------------------------------------------------------
 
 # Compute-once seam: the 3-iteration GD trajectory is a list of 65-int
 # dicts (a model, not data) consumed by BOTH quality_classifier_train
 # and quality_classifier_filter — cache it per (application, sf_dir)
-# so the featurize+train scans run once per session. Training persists
-# the featurized frame for the loop and releases it immediately; the
-# filter's scoring pass featurizes inline (one scan, nothing held).
+# so the one fit-sample collect runs once per session. The trainer
+# holds nothing in Spark after it returns; the filter's scoring pass
+# featurizes inline (one scan, nothing held).
 _QCLF_CACHE: dict[tuple[str, str], list[dict[int, int]]] = model_cache()
 
 
 def _corpus_classifier_snapshots(
     spark: SparkSession, sf_dir: str
 ) -> list[dict[int, int]]:
-    from gas_data_pipeline_spark.operators.classifier import (
-        train_quality_classifier,
-    )
-
     key = (spark.sparkContext.applicationId, sf_dir)
     snaps = _QCLF_CACHE.get(key)
     if snaps is None:
-        from gas_data_pipeline_spark.operators.classifier import fit_sample
-
-        # Sample-bounded fit (VERDICT r11 #3): the trainer optimizes
-        # over the _QC_FIT_N smallest-md5-draw docs — ONE
-        # TakeOrderedAndProject, then the 3-iteration GD runs on a
-        # constant-sized frame, so fit cost stops growing with the
-        # corpus. Corpora <= _QC_FIT_N train full-batch unchanged,
-        # and the oracle replays the identical sample (ORDER BY
-        # md5 LIMIT n), so the trajectory stays bit-exact.
-        docs = fit_sample(table(spark, sf_dir, "documents"), n=_QC_FIT_N)
+        # The trainer fits on the FIT_N smallest-md5-draw docs (one
+        # bounded collect); the oracle replays the identical sample
+        # (ORDER BY md5 LIMIT n), so the trajectory stays bit-exact.
         snaps = train_quality_classifier(
-            docs, _words(), F.col("lang") == "en", dim=64, iters=3
+            table(spark, sf_dir, "documents"),
+            _words(),
+            F.col("lang") == "en",
+            dim=64,
+            iters=3,
         )
         _QCLF_CACHE[key] = snaps
     return snaps
@@ -813,13 +811,11 @@ def _qc_iter(i: int) -> str:
     )"""
 
 
-_QC_FIT_N = 2048
-
 _QC_CTES = f"""
     qc_fit AS (
         SELECT doc_id, lang, text FROM documents
         ORDER BY md5('qcf-fit:' || CAST(doc_id AS VARCHAR))
-        LIMIT {_QC_FIT_N}
+        LIMIT {FIT_N}
     ),
     qc_wd AS (
         SELECT doc_id,
@@ -857,25 +853,23 @@ _QC_CTES = f"""
     """,
 )
 def quality_classifier_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed training of the GPT-3-style quality discriminator
-    (Brown et al. 2020 §A: classify reference-corpus vs crawl, here
-    English docs vs the rest): hashing-trick features (64 md5
-    buckets), hard-sigmoid activation, THREE gradient steps over a
-    BOUNDED deterministic fit sample (the _QC_FIT_N smallest md5
-    draws — one TakeOrderedAndProject, so fit cost is constant at any
-    corpus scale; corpora at or below the bound train full-batch),
-    every quantity fixed-point BIGINT so DuckDB replays the entire
+    """Training of the GPT-3-style quality discriminator (Brown et
+    al. 2020 §A: classify reference-corpus vs crawl, here English docs
+    vs the rest): hashing-trick features (64 md5 buckets), hard-sigmoid
+    activation, THREE gradient steps over a BOUNDED deterministic fit
+    sample (the FIT_N smallest md5 draws — one
+    TakeOrderedAndProject, so fit cost is constant at any corpus
+    scale; corpora at or below the bound train full-batch), every
+    quantity fixed-point BIGINT so DuckDB replays the entire
     trajectory exactly over the identical sample. Returns the weight
     snapshot after each iteration — the oracle checks the whole
     optimization path, not just the final model.
 
-    Scale shape: per iteration ONE map-side-combinable aggregate from
-    the corpus to 65 gradient rows (the reduce-side exchange is
-    partitions x 65 partial sums at any corpus size); the margin is a
-    zero-shuffle JVM fold against the weight map embedded in the task
-    closure, so no join ever touches the docs, and the featurized
-    frame is persisted across the loop so the word split + hashing
-    scan runs once (`operators/classifier.py`). Training goes through
+    Scale shape: bounded driver fit, SQL apply. The sample is
+    featurized and collected in ONE Spark job (at most FIT_N rows
+    of bucket arrays); the three steps run on the driver as int64
+    numpy products over the doc x bucket count matrix, so no job runs
+    per iteration (`operators/classifier.py`). Training goes through
     the session-scoped `_corpus_classifier_snapshots` seam shared with
     the filter query."""
     s1, s2, s3 = _corpus_classifier_snapshots(spark, sf_dir)
@@ -945,15 +939,13 @@ def quality_classifier_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: training comes from the session-scoped
     `_corpus_classifier_snapshots` seam — a BOUNDED deterministic fit
-    sample (_QC_FIT_N smallest md5 draws, one TakeOrderedAndProject;
-    VERDICT r11 #3: the full-corpus fit was the suite's worst probe
-    ratio at 0.77 per-copy) feeding ONE persisted featurization scan
-    across all 3 GD iterations; scoring embeds the final
-    snapshot as a map literal and runs as ONE zero-shuffle scan over
-    the corpus (fold + hard sigmoid + md5 draw are all native
-    expressions); the only data-sized exchange is the final 5-row
-    language rollup."""
-    from gas_data_pipeline_spark.operators.classifier import score_fp
+    sample (FIT_N smallest md5 draws; VERDICT r11 #3: the
+    full-corpus fit was the suite's worst probe ratio at 0.77
+    per-copy) collected once and fit on the driver; scoring embeds
+    the final snapshot as a map literal and runs as ONE zero-shuffle
+    scan over the corpus (fold + hard sigmoid + md5 draw are all
+    native expressions); the only data-sized exchange is the final
+    5-row language rollup."""
     from gas_data_pipeline_spark.operators.curation import uniform_draw
 
     docs = table(spark, sf_dir, "documents")

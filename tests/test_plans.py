@@ -496,6 +496,18 @@ def test_char_jaccard_scores_checkpointed_sets_in_one_python_stage(spark):
     assert "FlatMapGroupsInPandas" not in plan
 
 
+def test_minhash_signs_checkpointed_sets_in_one_python_stage(spark):
+    # The shingler runs once, in the kernel's eager localCheckpoint of
+    # the hashed sets (which also holds the caller's spread): the sizing
+    # count, the signature branch and both verify joins scan the
+    # checkpoint, and the signature UDF is the plan's one Python stage.
+    plan = _plan(spark, "dedup_minhash_lsh")
+    assert "Scan ExistingRDD" in plan
+    assert "split(lower" not in plan
+    assert "RoundRobinPartitioning" not in plan
+    assert plan.count("ArrowEvalPython") == 1
+
+
 @pytest.mark.parametrize("name", ["grouped_topk_bounded", "sample_k_per_group"])
 def test_grouped_topk_cuts_map_side_without_python(spark, name):
     # Catalyst's partial WindowGroupLimit keeps each partition's

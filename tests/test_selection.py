@@ -351,7 +351,7 @@ def test_ccnet_lm_join_is_broadcast(spark):
 
 
 # ---------------------------------------------------------------------------
-# Trained quality classifier (full-batch GD)
+# Trained quality classifier (bounded driver fit, SQL apply)
 # ---------------------------------------------------------------------------
 
 
@@ -464,33 +464,72 @@ def test_classifier_scoring_is_zero_shuffle(spark):
     assert "Exchange" not in plan
 
 
-def test_classifier_gradient_aggregate_is_partial(spark):
-    """The per-iteration gradient exchange is model-sized: the plan
-    partial-aggregates before the shuffle (HashAggregate below the
-    Exchange), so 100 TB of docs send partitions x 65 partial sums,
-    never word occurrences."""
+def _toy_classifier_docs(spark):
+    from gas_data_pipeline_spark.catalog import local_table
+
+    rows = [
+        (1, "alpha beta", 1),
+        (2, "alpha", 0),
+        (3, "gamma gamma", 0),
+        (4, None, 1),
+        (5, "", 0),
+    ]
+    return local_table(spark, rows, "doc_id int, text string, y int")
+
+
+def test_classifier_snapshots_skip_null_text_and_keep_empty_text(spark):
+    """Snapshots pinned to the values the per-iteration Spark
+    aggregate trainer returned, on a toy corpus with a null text (null
+    bucket array: no gradient row, not counted in N) and an empty text
+    (one word, the empty string, which hashes into a bucket like any
+    other)."""
     from gas_data_pipeline_spark.operators.classifier import (
-        BIAS_BUCKET,
-        hashed_buckets,
+        train_quality_classifier,
     )
 
-    docs = _docs(spark)
-    grad = (
-        docs.select(
-            F.lit(1).cast("bigint").alias("e_fp"),
-            F.explode(
-                F.array_append(
-                    hashed_buckets(_words(), salt="qclf-v1", dim=64),
-                    F.lit(BIAS_BUCKET).cast("bigint"),
-                )
-            ).alias("bucket"),
-        )
-        .groupBy("bucket")
-        .agg(F.sum("e_fp").alias("g"))
+    snaps = train_quality_classifier(
+        _toy_classifier_docs(spark), _words(), F.col("y") == 1,
+        dim=8, iters=2, eta=0.5,
     )
-    plan = _plan_of(grad)
-    before_exchange = plan.split("Exchange")[-1]
-    assert "HashAggregate" in before_exchange
+    assert snaps == [
+        {4: 0, 5: -62500, -1: -125000, 7: -62500},
+        {4: 9766, 5: -103515, -1: -226562, 7: -119140},
+    ]
+
+
+def test_classifier_training_runs_one_job_and_holds_no_cache(spark):
+    """Training is one bounded collect of the featurized fit sample;
+    the gradient steps run on the driver, and nothing stays cached."""
+    from gas_data_pipeline_spark.operators.classifier import (
+        train_quality_classifier,
+    )
+
+    spark.catalog.clearCache()
+    docs = _docs(spark)
+    sc = spark.sparkContext
+    group = "classifier-training-jobs"
+    sc.setJobGroup(group, "count the jobs of one training run")
+    try:
+        train_quality_classifier(docs, _words(), F.col("lang") == "en", iters=3)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+@pytest.mark.parametrize("eta", [0.1, 0.0, -0.5, 3.0])
+def test_classifier_rejects_eta_not_a_power_of_two(spark, eta):
+    """``g · η`` is exact in IEEE doubles only for a power-of-two η,
+    which the oracle replay relies on: anything else is refused before
+    a job runs."""
+    from gas_data_pipeline_spark.operators.classifier import (
+        train_quality_classifier,
+    )
+
+    with pytest.raises(ValueError, match="power of two"):
+        train_quality_classifier(
+            _toy_classifier_docs(spark), _words(), F.col("y") == 1, eta=eta
+        )
 
 
 def test_ann_index_incremental_frozen_quantizer(spark):
