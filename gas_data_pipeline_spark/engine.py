@@ -654,24 +654,26 @@ class GasDataEngine:
     ) -> DataFrame:
         """X2: cosine top-k neighbors. method: 'exact' (block GEMM),
         'lsh' (multi-table hyperplane buckets, exact candidate
-        cosine), or one of the quantized-index pipeline's k-means
-        configurations (``similarity.ann_topk``: train, route, encode,
-        ADC score): 'ivf' (inverted lists, exact candidate cosine),
-        'pq' (product-quantized full scan), 'ivfpq' (PQ codes inside
-        the inverted lists)."""
+        cosine), or a k-means model (32 codes per PQ subspace) searched
+        by ``similarity.ann_topk`` (train, route, encode, ADC score):
+        'ivf' (16 inverted lists, 4 probed, exact candidate cosine),
+        'pq' (m=8 product-quantized full scan), 'ivfpq' (m=16 PQ codes
+        inside 16 inverted lists, 4 probed)."""
         from gas_data_pipeline_spark.operators import similarity as S
 
         if method == "exact":
             return S.cosine_topk(corpus, queries, k=k)
         if method == "lsh":
             return S.cosine_topk_lsh(corpus, queries, k=k)
-        if method == "ivf":
-            return S.cosine_topk_ivf(corpus, queries, k=k)
-        if method == "pq":
-            return S.cosine_topk_pq(corpus, queries, k=k)
-        if method == "ivfpq":
-            return S.cosine_topk_ivfpq(corpus, queries, k=k)
-        raise ValueError(f"unknown search method: {method}")
+        quantizers = {
+            "ivf": {"n_clusters": 16},
+            "pq": {"m": 8},
+            "ivfpq": {"n_clusters": 16, "m": 16},
+        }
+        if method not in quantizers:
+            raise ValueError(f"unknown search method: {method}")
+        model = S.kmeans_model(corpus, **quantizers[method])
+        return S.ann_topk(corpus, queries, model, k=k)
 
     def dedup_spans(
         self,

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from gas_data_pipeline_spark.operators.dedup import (
     _bloom_positions,
+    _bloom_probe,
     _build_bloom_bitmap,
 )
 
@@ -59,27 +60,19 @@ def bloom_prune(
     superset of the matchable rows — never drops a real match, drops
     most non-matches map-side. Compose with a normal join for exact
     inner/semi results."""
-    import numpy as np
-
     if m_bits % 8 != 0:
         raise ValueError("m_bits must be a multiple of 8")
     if "__pos" in probe.columns:
         raise ValueError("probe already has reserved column __pos")
     bitmap = _build_bitmap(build_keys, F.col(on), m_bits, k)
-    bc = probe.sparkSession.sparkContext.broadcast(bitmap)
+    hits = _bloom_probe(probe.sparkSession.sparkContext.broadcast(bitmap), k)
 
     keyed = probe.withColumn("__pos", _bloom_positions(F.col(on), m_bits, k, _SEED))
     schema = keyed.drop("__pos").schema
 
     def sieve(batches):
-        bm = np.frombuffer(bc.value, dtype=np.uint8)
         for pdf in batches:
-            if len(pdf) == 0:
-                yield pdf.drop(columns=["__pos"])
-                continue
-            mat = np.stack([np.asarray(p, dtype=np.int64) for p in pdf["__pos"]])
-            hit = (bm[mat >> 3] & (np.uint8(1) << (mat & 7).astype(np.uint8))) != 0
-            yield pdf.loc[hit.all(axis=1)].drop(columns=["__pos"])
+            yield pdf.loc[hits(pdf.pop("__pos"))]
 
     return keyed.mapInPandas(sieve, schema=schema)
 

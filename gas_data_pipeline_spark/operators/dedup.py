@@ -1251,6 +1251,23 @@ def _build_bloom_bitmap(pos_rows: DataFrame, n_bytes: int):
     return np.frombuffer(merged, dtype=np.uint8).copy()
 
 
+def _bloom_probe(bc, k: int):
+    """The one Bloom membership probe, for mapInPandas closures:
+    ``hits(pos)`` maps a Series of k bit positions per row to a bool
+    array, True where all k bits are set in the broadcast bitmap
+    ``bc`` (a vectorized gather; an empty batch gives an empty
+    array). Factory-scoped so it ships by value."""
+
+    def hits(pos):
+        import numpy as np
+
+        bm = np.frombuffer(bc.value, dtype=np.uint8)
+        mat = np.asarray(pos.tolist(), dtype=np.int64).reshape(len(pos), k)
+        return ((bm[mat >> 3] & (np.uint8(1) << (mat & 7).astype(np.uint8))) != 0).all(axis=1)
+
+    return hits
+
+
 def bloom_prefilter_dedup(
     new: DataFrame,
     existing: DataFrame,
@@ -1364,8 +1381,6 @@ class BloomDedupState:
         keeping the probe's logical plan inspectable for plan-shape
         tests (same convention as ``graph.pagerank``); production
         always checkpoints."""
-        import numpy as np
-
         from pyspark.sql.types import BooleanType, StructField, StructType
 
         reserved = {"__h", "__pos", "__maybe"} & set(new.columns)
@@ -1373,8 +1388,9 @@ class BloomDedupState:
             raise ValueError(
                 f"input already has reserved column(s) {sorted(reserved)}"
             )
-        bc = new.sparkSession.sparkContext.broadcast(self._bitmap.tobytes())
-        k = self.k
+        hits = _bloom_probe(
+            new.sparkSession.sparkContext.broadcast(self._bitmap.tobytes()), self.k
+        )
         pos_new = new.withColumn("__h", F.sha2(F.col(text_col), 256)).withColumn(
             "__pos", _bloom_positions(F.col("__h"), self.m_bits, self.k, self.seed)
         )
@@ -1384,11 +1400,8 @@ class BloomDedupState:
         )
 
         def probe(batches):
-            bm = np.frombuffer(bc.value, dtype=np.uint8)
             for pdf in batches:
-                mat = np.asarray(pdf.pop("__pos").tolist(), dtype=np.int64).reshape(len(pdf), k)
-                hit = (bm[mat >> 3] & (np.uint8(1) << (mat & 7).astype(np.uint8))) != 0
-                pdf["__maybe"] = hit.all(axis=1)
+                pdf["__maybe"] = hits(pdf.pop("__pos"))
                 yield pdf
 
         keyed = pos_new.mapInPandas(probe, schema=probed_schema)

@@ -352,12 +352,15 @@ def fp_round_sql(t: str) -> str:
     )
 
 
-def sq_dist_fp_sql(
-    vexpr: str, center: list[float], quantum: float = 1e6
-) -> str:
+# The one fixed-point scale: every quantized distance and dot product,
+# here and in the DuckDB oracles, is round(x * 1e6) as a BIGINT.
+QUANTUM = 1e6
+
+
+def sq_dist_fp_sql(vexpr: str, center: list[float]) -> str:
     """Fixed-point squared-L2 distance between an array expression and
     a constant center, as generated SQL: each elementwise
-    (a - b)² · quantum is rounded HALF_UP to a BIGINT
+    (a - b)² · QUANTUM is rounded HALF_UP to a BIGINT
     (:func:`fp_round_sql`) BEFORE the sum, so the total is an integer
     sum — exact and association-order-independent, which is what lets
     a farthest-point argmax or a nearest-center argmin agree
@@ -369,20 +372,18 @@ def sq_dist_fp_sql(
     """
     return (
         f"aggregate(zip_with({vexpr}, {json_lit(center, 'array<double>')}, "
-        f"(a, b) -> (a - b) * (a - b) * {dlit(quantum)}), "
+        f"(a, b) -> (a - b) * (a - b) * {dlit(QUANTUM)}), "
         f"CAST(0 AS BIGINT), (acc, t) -> acc + {fp_round_sql('t')})"
     )
 
 
-def center_cands_sql(
-    vexpr: str, centers: list[dict], quantum: float = 1e6
-) -> str:
+def center_cands_sql(vexpr: str, centers: list[dict]) -> str:
     """The (sq_fp, center_id) candidate-struct array as ONE generated
     SQL expression — the argmin/probe device of
     :func:`assign_to_centers`, built with a single parse instead of
     O(k x d) Column calls."""
     return "array(" + ",".join(
-        f"named_struct('sq_fp', {sq_dist_fp_sql(vexpr, c['vec'], quantum)}, "
+        f"named_struct('sq_fp', {sq_dist_fp_sql(vexpr, c['vec'])}, "
         f"'center_id', CAST({int(c['id'])} AS BIGINT))"
         for c in centers
     ) + ")"
@@ -483,12 +484,7 @@ def _fp_halfup(r):
     return f.astype("int64")
 
 
-def kcenter_greedy_local(
-    sample: list[tuple],
-    *,
-    k: int,
-    quantum: float = 1e6,
-) -> list[dict]:
+def kcenter_greedy_local(sample: list[tuple], *, k: int) -> list[dict]:
     """Greedy k-center (farthest-point traversal — the
     2-approximation of Gonzalez 1985, the coreset selector of Sener &
     Savarese 2018 "Active Learning for CNNs: A Core-Set Approach") over
@@ -496,7 +492,7 @@ def kcenter_greedy_local(
     output), as numpy on the driver: seed with the minimum id, then
     ``k-1`` rounds of "pick the point farthest from the chosen set"
     (max running-min fixed-point distance, ties to the smallest id) —
-    zero Spark jobs. Per-element arithmetic is ``(a-b)*(a-b)*quantum``
+    zero Spark jobs. Per-element arithmetic is ``(a-b)*(a-b)*QUANTUM``
     in IEEE doubles (the op order of :func:`sq_dist_fp_sql` and its
     DuckDB twin) then HALF_UP to int64 before the order-free integer
     sum, so the selection replays bit-for-bit in a recursive CTE over
@@ -531,7 +527,7 @@ def kcenter_greedy_local(
 
     def fp_dist(center_row):
         d = mat - center_row
-        return _fp_halfup(d * d * quantum).sum(axis=1)
+        return _fp_halfup(d * d * QUANTUM).sum(axis=1)
 
     mind = fp_dist(mat[seed_i])
     id_arr = np.array(ids)
@@ -561,7 +557,6 @@ def kcenter_greedy_sampled(
     vec_col: str = "embedding",
     *,
     k: int = 8,
-    quantum: float = 1e6,
     sample_n: int = KC_SAMPLE_N,
     seed: str = KC_SAMPLE_SEED,
 ) -> list[dict]:
@@ -575,14 +570,13 @@ def kcenter_greedy_sampled(
     sample = kcenter_train_sample(
         points, id_col, vec_col, sample_n=sample_n, seed=seed
     )
-    return kcenter_greedy_local(sample, k=k, quantum=quantum)
+    return kcenter_greedy_local(sample, k=k)
 
 
 def assign_to_centers(
     pts: DataFrame,
     centers: list[dict],
     *,
-    quantum: float = 1e6,
     payload_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Nearest-center assignment against a FROZEN center list (the
@@ -595,7 +589,7 @@ def assign_to_centers(
     through so callers never need a corpus-sized re-join. The
     candidate array is generated SQL (:func:`center_cands_sql`) so
     plan construction costs one parse, not O(k x d) py4j calls."""
-    best = F.array_min(F.expr(center_cands_sql("v", centers, quantum)))
+    best = F.array_min(F.expr(center_cands_sql("v", centers)))
     return pts.select(
         "pid",
         *payload_cols,

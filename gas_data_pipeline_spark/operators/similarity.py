@@ -52,8 +52,8 @@ Quantized index — ONE pipeline::
   replayable in SQL.
 - Route: corpus rows go to their nearest center
   (``selection.assign_to_centers``), queries to their ``n_probe``
-  nearest (:func:`probe_cells`); fixed-point argmin, ties to the
-  smaller center id.
+  nearest (:func:`_route_queries`); fixed-point argmin at the one
+  scale ``selection.QUANTUM``, ties to the smaller center id.
 - Encode: per-subspace fixed-point argmin over the codeword literals
   (:func:`_pq_codes_sql`).
 - Score: IVF candidates take the exact :func:`cosine`; PQ candidates
@@ -63,16 +63,16 @@ Quantized index — ONE pipeline::
   fixed-point dot of the unit vectors and re-ranked.
 
 :func:`build_index` (route + encode: one zero-shuffle scan) is the
-build half and :func:`ann_topk` the search half. Every stage after
-training is native expressions or generated SQL — no Python worker,
-the fused-SQL scoring argued for by "ML Inference Pipeline Execution
-Using Pure SQL Based on Operator Fusion" (ICDE 2025) — so a k-center
-model's whole answer replays in DuckDB. The six
-``cosine_topk_{ivf,pq,ivfpq}[_kcenter]`` names are configurations:
-the plain ones train k-means (``GasDataEngine.search_similar``
-'ivf'/'pq'/'ivfpq', the rows-only ``ann_ivfpq``), the ``_kcenter``
-ones take k-center models (``ann_ivf``, ``ann_pq``,
-``ann_pq_rescored``, ``ann_ivfpq_kcenter``, ``ann_ivfpq_rescored``).
+build half and :func:`ann_topk` the search half — the ONE search
+call. Every stage after training is native expressions or generated
+SQL — no Python worker, the fused-SQL scoring argued for by "ML
+Inference Pipeline Execution Using Pure SQL Based on Operator Fusion"
+(ICDE 2025) — so a k-center model's whole answer replays in DuckDB.
+A configuration is a model handed to :func:`ann_topk`, not a function
+of its own: k-means models for ``GasDataEngine.search_similar``
+'ivf'/'pq'/'ivfpq' and the rows-only ``ann_ivfpq``, k-center models
+for the value-oracled ``ann_ivf``, ``ann_pq``, ``ann_pq_rescored``,
+``ann_ivfpq_kcenter`` and ``ann_ivfpq_rescored``.
 
 All pandas UDF / mapInPandas closures are factory-scoped and
 self-contained so cloudpickle ships them by value — executors never
@@ -94,6 +94,7 @@ from gas_data_pipeline_spark.functions.exprs import bind
 from gas_data_pipeline_spark.operators.selection import (
     KC_SAMPLE_N,
     KC_SAMPLE_SEED,
+    QUANTUM,
     _fp_halfup,
     assign_to_centers,
     center_cands_sql,
@@ -501,18 +502,20 @@ def _unit(v: Column) -> Column:
 
 # --- k-means trainer --------------------------------------------------------
 
+# The k-means trainer's seed and Lloyd rounds: the coarse centroids run
+# 10 rounds, the PQ codebooks 15 per subspace.
+_KMEANS_SEED, _IVF_ITERS, _PQ_ITERS = 42, 10, 15
 
-def _kmeans_centroids(
-    sample: np.ndarray, n_clusters: int, n_iters: int = 10, seed: int = 42
-) -> np.ndarray:
+
+def _kmeans_centroids(sample: np.ndarray, n_clusters: int) -> np.ndarray:
     """Seeded Lloyd k-means on a driver-side training sample
     (normalized vectors → spherical k-means). IVF practice: train on a
     bounded sample, assign the full corpus distributed — the sample is
     the only data that ever reaches the driver."""
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(_KMEANS_SEED)
     X = sample / np.linalg.norm(sample, axis=1, keepdims=True)
     C = X[rng.choice(len(X), size=min(n_clusters, len(X)), replace=False)]
-    for _ in range(n_iters):
+    for _ in range(_IVF_ITERS):
         assign = np.argmax(X @ C.T, axis=1)
         for c in range(len(C)):
             members = X[assign == c]
@@ -522,9 +525,7 @@ def _kmeans_centroids(
     return C
 
 
-def train_pq_codebooks(
-    sample: np.ndarray, m: int = 8, n_codes: int = 32, n_iters: int = 15, seed: int = 42
-) -> np.ndarray:
+def train_pq_codebooks(sample: np.ndarray, m: int, n_codes: int) -> np.ndarray:
     """Product-quantization codebooks: split the (normalized) vector
     space into ``m`` orthogonal subspaces and run seeded L2 k-means in
     each. Returns (m, n_codes, dim/m). Like IVF centroids, the training
@@ -535,12 +536,12 @@ def train_pq_codebooks(
         raise ValueError(f"dim {d} not divisible into {m} subvectors")
     dsub = d // m
     X = sample / np.linalg.norm(sample, axis=1, keepdims=True)
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(_KMEANS_SEED)
     books = np.empty((m, n_codes, dsub))
     for j in range(m):
         S = X[:, j * dsub : (j + 1) * dsub]
         C = S[rng.choice(len(S), size=min(n_codes, len(S)), replace=False)]
-        for _ in range(n_iters):
+        for _ in range(_PQ_ITERS):
             d2 = ((S[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
             assign = np.argmin(d2, axis=1)
             for c in range(len(C)):
@@ -583,7 +584,6 @@ def kmeans_model(
     m: int = 0,
     n_codes: int = 32,
     train_sample: int = 4096,
-    seed: int = 42,
 ) -> AnnModel:
     """The k-means trainer: ``n_clusters`` spherical IVF centroids
     and/or ``m`` x ``n_codes`` PQ codebooks (0 skips either), on unit
@@ -595,8 +595,8 @@ def kmeans_model(
             f"training sample must be 1..{DRIVER_TRAIN_BOUND} rows, got {train_sample=}"
         )
     sample = _train_matrix(corpus, id_col, vec_col, train_sample)
-    C = _kmeans_centroids(sample, n_clusters, seed=seed) if n_clusters else None
-    B = train_pq_codebooks(sample, m, n_codes, seed=seed) if m else None
+    C = _kmeans_centroids(sample, n_clusters) if n_clusters else None
+    B = train_pq_codebooks(sample, m, n_codes) if m else None
     return AnnModel(
         centers=None
         if C is None
@@ -616,13 +616,12 @@ def pq_kcenter_codebooks_sampled(
     *,
     m: int = 8,
     n_codes: int = 8,
-    quantum: float = 1e6,
     sample_n: int = KC_SAMPLE_N,
     seed: str = KC_SAMPLE_SEED,
 ) -> list[list[list[float]]]:
     """DETERMINISTIC product-quantization codebooks: per subspace, a
     greedy k-center codebook over the L2-NORMALIZED subvectors — the
-    ``dedup_semantic_buckets`` / ``cosine_topk_ivf_kcenter`` device
+    ``dedup_semantic_buckets`` / ``ann_ivf`` k-center device
     applied to PQ, so the codebooks (and therefore the codes and every
     ADC score) are exactly replayable as SQL.
 
@@ -648,25 +647,24 @@ def pq_kcenter_codebooks_sampled(
         sub_sample = [
             (pid, vec[j * dsub : (j + 1) * dsub]) for pid, vec in sample
         ]
-        centers = kcenter_greedy_local(sub_sample, k=n_codes, quantum=quantum)
+        centers = kcenter_greedy_local(sub_sample, k=n_codes)
         books.append([c["vec"] for c in centers])
     return books
 
 
 # --- route / encode / score kernels -----------------------------------------
 
+# The most queries a search routes on the driver: a batch within it is
+# collected once and broadcast, a larger one stays distributed.
+DRIVER_PROBE_BOUND = 1024
+
 
 def _route_queries(
-    qpts: DataFrame,
-    centers: list[dict] | None,
-    *,
-    n_probe: int,
-    driver_probe_bound: int,
-    quantum: float,
+    qpts: DataFrame, centers: list[dict] | None, *, n_probe: int
 ) -> tuple[DataFrame, bool]:
     """The query side of a search, threshold-gated like the dedup
     union-find. ``qpts`` is (query_id, qv, payload...). A batch within
-    ``driver_probe_bound`` rows is collected once — with ``centers``,
+    ``DRIVER_PROBE_BOUND`` rows is collected once — with ``centers``,
     probed driver-side by the numpy fixed-point kernel
     (``selection._fp_halfup``, bit-identical to the expression path,
     pinned in tests) — and served back as a local relation: ``small``
@@ -679,8 +677,8 @@ def _route_queries(
     small)."""
     from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
-    rows = qpts.limit(driver_probe_bound + 1).collect()
-    small = len(rows) <= driver_probe_bound
+    rows = qpts.limit(DRIVER_PROBE_BOUND + 1).collect()
+    small = len(rows) <= DRIVER_PROBE_BOUND
     if centers is None:
         local = local_table(qpts.sparkSession, rows, qpts.schema) if small else qpts
         return local, small
@@ -690,13 +688,13 @@ def _route_queries(
         probed = []
         for r in rows:
             d = np.asarray(r["qv"], dtype="float64") - cmat
-            sq = _fp_halfup(d * d * quantum).sum(axis=1)
+            sq = _fp_halfup(d * d * QUANTUM).sum(axis=1)
             order = sorted(range(len(cids)), key=lambda i: (sq[i], cids[i]))
             probed.append((*r, [cids[i] for i in order[:n_probe]]))
         cells = StructField("cells", ArrayType(LongType()))
         q = local_table(qpts.sparkSession, probed, StructType(qpts.schema.fields + [cells]))
     else:
-        cands = F.array_sort(F.expr(center_cands_sql("qv", centers, quantum)))
+        cands = F.array_sort(F.expr(center_cands_sql("qv", centers)))
         q = qpts.withColumn(
             "cells",
             F.transform(F.slice(cands, 1, n_probe), lambda s: s["center_id"]),
@@ -704,42 +702,7 @@ def _route_queries(
     return q.select(*qpts.columns, F.explode("cells").alias("center_id")), small
 
 
-def probe_cells(
-    queries: DataFrame,
-    centers: list[dict],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    *,
-    n_probe: int = 4,
-    driver_probe_bound: int = 1024,
-    quantum: float = 1e6,
-) -> DataFrame:
-    """Route each query to its ``n_probe`` nearest coarse-quantizer
-    cells (fixed-point argmin, ties to the smaller center id — the
-    array_sort struct convention), driver-side within
-    ``driver_probe_bound`` queries, distributed above it
-    (:func:`_route_queries`). The caller's ``quantum`` threads through
-    BOTH paths (ADVICE r9: a hardcoded 1e6 here would quantize probes
-    and corpus differently under a non-default quantum), and the
-    driver-path schema carries the input's own id type rather than
-    assuming bigint. Returns (query_id, qv, center_id) rows — one per
-    probed cell."""
-    qpts = queries.select(
-        F.col(id_col).alias("query_id"), _dbl(F.col(vec_col)).alias("qv")
-    )
-    q, _ = _route_queries(
-        qpts,
-        centers,
-        n_probe=n_probe,
-        driver_probe_bound=driver_probe_bound,
-        quantum=quantum,
-    )
-    return q
-
-
-def _pq_codes_sql(
-    books: list[list[list[float]]], quantum: float = 1e6
-) -> str:
+def _pq_codes_sql(books: list[list[list[float]]]) -> str:
     """The m-subspace PQ encoder as ONE generated SQL expression over
     a normalized-vector column named ``nv``: per subspace, fixed-point
     argmin over the codeword literals (ties to the earlier-selected
@@ -754,7 +717,7 @@ def _pq_codes_sql(
         book = json_lit(books[j], "array<array<double>>")
         d = (
             f"aggregate(zip_with(slice(nv, {j * dsub + 1}, {dsub}), {book}[c], "
-            f"(a, b) -> (a - b) * (a - b) * {dlit(quantum)}), "
+            f"(a, b) -> (a - b) * (a - b) * {dlit(QUANTUM)}), "
             f"CAST(0 AS BIGINT), (acc, t) -> acc + {fp_round_sql('t')})"
         )
         return (
@@ -765,12 +728,10 @@ def _pq_codes_sql(
     return "array(" + ",".join(code_sql(j) for j in range(len(books))) + ")"
 
 
-def _adc_tables_sql(
-    books: list[list[list[float]]], quantum: float = 1e6
-) -> str:
+def _adc_tables_sql(books: list[list[list[float]]]) -> str:
     """Per-query ADC lookup tables as ONE generated SQL expression over
     a unit query vector ``qnv``: ``lut[j][c] = round(<q_sub_j,
-    codeword_jc> * quantum)`` as BIGINT, the oracles' per-subspace
+    codeword_jc> * QUANTUM)`` as BIGINT, the oracles' per-subspace
     term. Built once per query, so a candidate's score is m integer
     lookups (:func:`ann_topk`) instead of m float folds."""
     dsub = len(books[0][0])
@@ -782,7 +743,7 @@ def _adc_tables_sql(
         )
         return (
             f"transform({json_lit(books[j], 'array<array<double>>')}, "
-            f"cw -> CAST(round({d} * {dlit(quantum)}, 0) AS BIGINT))"
+            f"cw -> CAST(round({d} * {dlit(QUANTUM)}, 0) AS BIGINT))"
         )
 
     return "array(" + ",".join(table_sql(j) for j in range(len(books))) + ")"
@@ -796,7 +757,6 @@ def build_index(
     model: AnnModel,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    quantum: float = 1e6,
 ) -> DataFrame:
     """The build half: every corpus vector routed to its nearest cell
     (``centers``) and/or encoded to its m codes (``books``) — both are
@@ -815,7 +775,7 @@ def build_index(
         pts = pts.select("pid", _unit(F.col("v")).alias("v"))
     cells = []
     if model.centers is not None:
-        pts = assign_to_centers(pts, model.centers, quantum=quantum, payload_cols=("v",))
+        pts = assign_to_centers(pts, model.centers, payload_cols=("v",))
         # Declared non-null (it is never null): otherwise the search
         # join infers isnotnull(center_id) and pushes the whole routing
         # expression below the spread repartition, recomputing it in
@@ -828,7 +788,7 @@ def build_index(
         )
     nv = F.col("v") if model.unit else _unit(F.col("v"))
     return pts.select(F.col("pid").alias("neighbor_id"), *cells, nv.alias("nv")).select(
-        "neighbor_id", *cells, F.expr(_pq_codes_sql(model.books, quantum)).alias("codes")
+        "neighbor_id", *cells, F.expr(_pq_codes_sql(model.books)).alias("codes")
     )
 
 
@@ -842,8 +802,6 @@ def ann_topk(
     k: int = 10,
     n_probe: int = 4,
     rescore: int | None = None,
-    quantum: float = 1e6,
-    driver_probe_bound: int = 1024,
     index: DataFrame | None = None,
 ) -> DataFrame:
     """The search half: approximate cosine top-k through ``model``.
@@ -852,7 +810,7 @@ def ann_topk(
       cells (:func:`_route_queries`) and a cells-keyed equi-join picks
       candidates (~n_probe/n_cells of the store); without, the query
       set crosses the whole store (the PQ full scan). A query batch
-      within ``driver_probe_bound`` rows is broadcast; a larger one
+      within ``DRIVER_PROBE_BOUND`` rows is broadcast; a larger one
       joins distributed, so the query set can be corpus-sized.
     - Score: without books, the exact sequential-fold :func:`cosine`
       (bit-matching DuckDB's list_dot_product) → ``cos_sim``. With
@@ -870,7 +828,7 @@ def ann_topk(
     Returns (query_id, neighbor_id, rank, score). Pass ``index`` (a
     :func:`build_index` result for the same model) to skip the build."""
     if index is None:
-        index = build_index(corpus, model, id_col, vec_col, quantum)
+        index = build_index(corpus, model, id_col, vec_col)
     qv = _dbl(F.col(vec_col))
     q = queries.select(
         F.col(id_col).alias("query_id"), (_unit(qv) if model.unit else qv).alias("qv")
@@ -884,15 +842,9 @@ def ann_topk(
         # probed cell.
         qnv = F.col("qv") if model.unit else _unit(F.col("qv"))
         q = q.select("query_id", "qv", qnv.alias("qnv")).select(
-            "query_id", "qv", F.expr(_adc_tables_sql(model.books, quantum)).alias("lut")
+            "query_id", "qv", F.expr(_adc_tables_sql(model.books)).alias("lut")
         )
-    q, small = _route_queries(
-        q,
-        model.centers,
-        n_probe=n_probe,
-        driver_probe_bound=driver_probe_bound,
-        quantum=quantum,
-    )
+    q, small = _route_queries(q, model.centers, n_probe=n_probe)
     side = F.broadcast(q) if small else q
     pairs = (
         index.crossJoin(side)
@@ -906,7 +858,7 @@ def ann_topk(
     adc = " + ".join(f"lut[{j}][codes[{j}]]" for j in range(len(model.books)))
     scored = pairs.select("query_id", "neighbor_id", F.expr(adc).alias("s_fp"))
     if rescore is None:
-        approx = F.round(F.col("s_fp") / F.lit(quantum), 6).alias("approx_cos")
+        approx = F.round(F.col("s_fp") / F.lit(QUANTUM), 6).alias("approx_cos")
         return _top_k(scored, "s_fp", k, approx)
     nv = _unit(_dbl(F.col(vec_col)))
     qn = queries.select(F.col(id_col).alias("query_id"), nv.alias("qnv"))
@@ -918,149 +870,13 @@ def ann_topk(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(dot(F.col("qnv"), F.col("nv")) * F.lit(quantum), 0)
+            F.round(dot(F.col("qnv"), F.col("nv")) * F.lit(QUANTUM), 0)
             .cast("bigint")
             .alias("e_fp"),
         )
     )
-    exact = F.round(F.col("e_fp") / F.lit(quantum), 6).alias("cos_sim")
+    exact = F.round(F.col("e_fp") / F.lit(QUANTUM), 6).alias("cos_sim")
     return _top_k(refined, "e_fp", k, exact)
-
-
-# --- named configurations ---------------------------------------------------
-
-
-def cosine_topk_ivf(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    n_clusters: int = 16,
-    n_probe: int = 4,
-    train_sample: int = 4096,
-    seed: int = 42,
-) -> DataFrame:
-    """IVF on k-means cells: queries probe ``n_probe`` of
-    ``n_clusters`` spherical centroids, candidates score with the exact
-    cosine. Recall vs the exact top-k pinned in tests/test_northstar.py."""
-    model = kmeans_model(
-        corpus, id_col, vec_col, n_clusters=n_clusters,
-        train_sample=train_sample, seed=seed,
-    )
-    return ann_topk(corpus, queries, model, id_col, vec_col, k=k, n_probe=n_probe)
-
-
-def cosine_topk_pq(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    m: int = 8,
-    n_codes: int = 32,
-    train_sample: int = 4096,
-    seed: int = 42,
-) -> DataFrame:
-    """PQ full scan with ADC over k-means codebooks: corpus vectors
-    stored as ``m`` code ids, a row's approximate cosine is m table
-    lookups. Scores are quantized; tests assert recall and the ADC
-    reconstruction, not score equality with the exact cosine."""
-    model = kmeans_model(
-        corpus, id_col, vec_col, m=m, n_codes=n_codes,
-        train_sample=train_sample, seed=seed,
-    )
-    return ann_topk(corpus, queries, model, id_col, vec_col, k=k)
-
-
-def cosine_topk_ivfpq(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    n_clusters: int = 16,
-    n_probe: int = 4,
-    m: int = 16,
-    n_codes: int = 32,
-    train_sample: int = 4096,
-    seed: int = 42,
-) -> DataFrame:
-    """IVF+PQ on k-means (the FAISS production shape): IVF prunes
-    WHICH inverted lists a query scans, PQ makes scanning a list cost
-    m lookups per row. Both quantizers train from one sample."""
-    model = kmeans_model(
-        corpus, id_col, vec_col, n_clusters=n_clusters, m=m, n_codes=n_codes,
-        train_sample=train_sample, seed=seed,
-    )
-    return ann_topk(corpus, queries, model, id_col, vec_col, k=k, n_probe=n_probe)
-
-
-def cosine_topk_ivf_kcenter(
-    corpus: DataFrame,
-    queries: DataFrame,
-    centers: list[dict],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    n_probe: int = 4,
-    driver_probe_bound: int = 1024,
-    index: DataFrame | None = None,
-) -> DataFrame:
-    """IVF on DETERMINISTIC k-center cells (``centers`` from
-    ``selection.kcenter_greedy_sampled``): the whole answer —
-    train, assign, probe, exact rescoring — value-oracles in SQL.
-    ``index``: a :func:`build_index` result for ``AnnModel(centers)``."""
-    return ann_topk(
-        corpus, queries, AnnModel(centers=centers), id_col, vec_col,
-        k=k, n_probe=n_probe, driver_probe_bound=driver_probe_bound, index=index,
-    )
-
-
-def cosine_topk_pq_kcenter(
-    corpus: DataFrame,
-    queries: DataFrame,
-    books: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    quantum: float = 1e6,
-    codes: DataFrame | None = None,
-    rescore: int | None = None,
-) -> DataFrame:
-    """PQ full scan with ADC over DETERMINISTIC k-center codebooks
-    (:func:`pq_kcenter_codebooks_sampled`), value-oracled; ``rescore``
-    adds the exact refinement stage. ``codes``: a :func:`build_index`
-    result for ``AnnModel(books=books)``."""
-    return ann_topk(
-        corpus, queries, AnnModel(books=books), id_col, vec_col,
-        k=k, rescore=rescore, quantum=quantum, index=codes,
-    )
-
-
-def cosine_topk_ivfpq_kcenter(
-    corpus: DataFrame,
-    queries: DataFrame,
-    centers: list[dict],
-    books: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    n_probe: int = 4,
-    quantum: float = 1e6,
-    driver_probe_bound: int = 1024,
-    index: DataFrame | None = None,
-    rescore: int | None = None,
-) -> DataFrame:
-    """IVF+PQ with DETERMINISTIC k-center quantizers at both levels:
-    raw-vector cells route, unit-subvector codebooks score, so the
-    composed index value-oracles. ``index``: a :func:`build_index`
-    result for ``AnnModel(centers, books)``."""
-    return ann_topk(
-        corpus, queries, AnnModel(centers=centers, books=books), id_col, vec_col,
-        k=k, n_probe=n_probe, rescore=rescore, quantum=quantum,
-        driver_probe_bound=driver_probe_bound, index=index,
-    )
 
 
 def semantic_bucket_near_dup(

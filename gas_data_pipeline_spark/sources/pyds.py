@@ -213,17 +213,48 @@ class GasQualityChunk(InputPartition):
         self.chunk_end = chunk_end
 
 
+def _gas_quality_transport(options: dict) -> str:
+    """The ``transport`` option of both gas-quality readers, checked
+    against :data:`TRANSPORT_FACTORIES` at plan time."""
+    name = options.get("transport", "http")
+    if name not in TRANSPORT_FACTORIES:
+        raise ValueError(f"unknown transport {name!r}; one of {sorted(TRANSPORT_FACTORIES)}")
+    return name
+
+
+def _read_gas_quality_chunk(transport_name: str, partition: GasQualityChunk):
+    """Runs ON AN EXECUTOR for both gas-quality readers: fetch one
+    chunk with the reference's retry policy and flatten sites x
+    details into rows, so stream and backfill produce identical rows
+    for identical windows."""
+    transport = TRANSPORT_FACTORIES[transport_name]()
+    src = RestSource(transport=transport)
+    payload = src.fetch(
+        GAS_QUALITY_URL,
+        {
+            "applicableForStart": partition.chunk_start,
+            "applicableForEnd": partition.chunk_end,
+        },
+    )
+    for site in payload.get("sites", []):
+        for d in site.get("siteGasQualityDetail", []):
+            yield (
+                partition.chunk_start,
+                site.get("siteId"),
+                site.get("siteName"),
+                site.get("areaName"),
+                d.get("applicableAt"),
+                d.get("CV"),
+                d.get("WI"),
+            )
+
+
 class GasQualityRestReader(DataSourceReader):
     def __init__(self, options: dict):
         self.start = options["start"]
         self.end = options["end"]
         self.days = int(options.get("days", "2"))
-        self.transport_name = options.get("transport", "http")
-        if self.transport_name not in TRANSPORT_FACTORIES:
-            raise ValueError(
-                f"unknown transport {self.transport_name!r}; "
-                f"one of {sorted(TRANSPORT_FACTORIES)}"
-            )
+        self.transport_name = _gas_quality_transport(options)
 
     def partitions(self) -> list[InputPartition]:
         """The reference's ``_daterange_chunks`` loop as a partition
@@ -236,31 +267,11 @@ class GasQualityRestReader(DataSourceReader):
         )
 
     def read(self, partition: GasQualityChunk):
-        """Runs ON AN EXECUTOR: fetch this chunk with the reference's
-        retry policy, flatten sites x details, yield rows. The
-        throttle that paced the reference's serial loop is obsolete
-        here — chunks are separate tasks, so pacing is cluster
-        scheduling, not sleeps."""
-        transport = TRANSPORT_FACTORIES[self.transport_name]()
-        src = RestSource(transport=transport)
-        payload = src.fetch(
-            GAS_QUALITY_URL,
-            {
-                "applicableForStart": partition.chunk_start,
-                "applicableForEnd": partition.chunk_end,
-            },
-        )
-        for site in payload.get("sites", []):
-            for d in site.get("siteGasQualityDetail", []):
-                yield (
-                    partition.chunk_start,
-                    site.get("siteId"),
-                    site.get("siteName"),
-                    site.get("areaName"),
-                    d.get("applicableAt"),
-                    d.get("CV"),
-                    d.get("WI"),
-                )
+        """Runs ON AN EXECUTOR: this chunk's rows. The throttle that
+        paced the reference's serial loop is obsolete here — chunks
+        are separate tasks, so pacing is cluster scheduling, not
+        sleeps."""
+        return _read_gas_quality_chunk(self.transport_name, partition)
 
 
 def _chunk_list(start: date, end_exclusive: date, days: int) -> list[InputPartition]:
@@ -430,12 +441,7 @@ class GasQualityRestStreamReader(DataSourceStreamReader):
         # live tail would instead derive end_exclusive from the clock.
         self.end_exclusive = date.fromisoformat(options["end"]) + timedelta(days=1)
         self.days = int(options.get("days", "2"))
-        self.transport_name = options.get("transport", "http")
-        if self.transport_name not in TRANSPORT_FACTORIES:
-            raise ValueError(
-                f"unknown transport {self.transport_name!r}; "
-                f"one of {sorted(TRANSPORT_FACTORIES)}"
-            )
+        self.transport_name = _gas_quality_transport(options)
         self._frontier = self.start
 
     def _ratchet(self, *offsets: dict) -> None:
@@ -464,29 +470,9 @@ class GasQualityRestStreamReader(DataSourceStreamReader):
         )
 
     def read(self, partition: GasQualityChunk):
-        """Runs ON AN EXECUTOR — same fetch+flatten as the batch
-        reader, so stream and backfill produce identical rows for
-        identical windows (pinned in tests/test_sources.py)."""
-        transport = TRANSPORT_FACTORIES[self.transport_name]()
-        src = RestSource(transport=transport)
-        payload = src.fetch(
-            GAS_QUALITY_URL,
-            {
-                "applicableForStart": partition.chunk_start,
-                "applicableForEnd": partition.chunk_end,
-            },
-        )
-        for site in payload.get("sites", []):
-            for d in site.get("siteGasQualityDetail", []):
-                yield (
-                    partition.chunk_start,
-                    site.get("siteId"),
-                    site.get("siteName"),
-                    site.get("areaName"),
-                    d.get("applicableAt"),
-                    d.get("CV"),
-                    d.get("WI"),
-                )
+        """Runs ON AN EXECUTOR — the batch reader's fetch+flatten
+        (pinned equal in tests/test_sources.py)."""
+        return _read_gas_quality_chunk(self.transport_name, partition)
 
     def commit(self, end: dict) -> None:
         """Offsets <= ``end`` are durably processed: ratchet the

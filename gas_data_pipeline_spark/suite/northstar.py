@@ -861,8 +861,9 @@ def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     — integer sums, so the heavy code collisions PQ produces rank
     identically in both engines. The compressed-storage scale path (PQ
     shrinks what a scan COSTS; IVF/LSH prune scan SCOPE; production
-    composes them — the k-means-trained variant is `cosine_topk_pq`,
-    and `ann_ivfpq` composes it with IVF; both run this same pipeline).
+    composes them — `GasDataEngine.search_similar` 'pq' is the k-means
+    trained variant, and `ann_ivfpq` composes it with IVF; both run this
+    same pipeline).
     Recall vs the exact scan stays asserted in tests/test_northstar.py."""
     return _kcenter_search(spark, sf_dir, coarse=False, pq=True)
 
@@ -1133,11 +1134,12 @@ def ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     are the generated-SQL stages the k-center queries use
     (`similarity.ann_topk`). Recall vs the exact scan asserted in
     tests/test_northstar.py."""
-    from gas_data_pipeline_spark.operators.similarity import cosine_topk_ivfpq
+    from gas_data_pipeline_spark.operators.similarity import ann_topk, kmeans_model
 
     emb = table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 8)
-    return cosine_topk_ivfpq(emb, queries, k=10)
+    model = kmeans_model(emb, n_clusters=16, m=16)
+    return ann_topk(emb, queries, model, k=10, n_probe=4)
 
 
 # rows-only: oblivious-hash approximate. Correctness bound: recall

@@ -25,6 +25,19 @@ def _scratch() -> str:
     return d
 
 
+def _events_page(df: DataFrame, prefix: str) -> DataFrame:
+    """The events table as one page of observations: series
+    ``prefix || user_id``, the event's hour, its value as a double,
+    and ``ts`` / ``event_id`` as the last-write-wins order."""
+    return df.select(
+        F.concat(F.lit(prefix), F.col("user_id").cast("string")).alias("series_id"),
+        F.date_trunc("hour", F.col("ts")).alias("observation_time"),
+        F.col("value").cast("double").alias("value"),
+        F.col("ts").alias("ingestion_time"),
+        F.col("event_id"),
+    )
+
+
 @register(
     "bronze_zero_loss_roundtrip",
     oracle="""
@@ -130,23 +143,15 @@ def silver_upsert_atomic_versioned(spark: SparkSession, sf_dir: str) -> DataFram
     root = _scratch()
     e = table(spark, sf_dir, "events")
 
-    def page(df):
-        return df.select(
-            F.concat(
-                F.lit("NG_EVENTS_"), F.col("user_id").cast("string")
-            ).alias("series_id"),
-            F.date_trunc("hour", F.col("ts")).alias("observation_time"),
-            F.col("value").cast("double").alias("value"),
-            F.col("ts").alias("ingestion_time"),
-            F.col("event_id"),
-        )
-
     order = ["ingestion_time", "event_id"]
     upsert_observations_versioned(
-        spark, page(e.filter(F.col("event_id") % 2 == 0)), root, order_cols=order
+        spark,
+        _events_page(e.filter(F.col("event_id") % 2 == 0), "NG_EVENTS_"),
+        root,
+        order_cols=order,
     )
-    upsert_observations_versioned(spark, page(e), root, order_cols=order)
-    upsert_observations_versioned(spark, page(e), root, order_cols=order)
+    upsert_observations_versioned(spark, _events_page(e, "NG_EVENTS_"), root, order_cols=order)
+    upsert_observations_versioned(spark, _events_page(e, "NG_EVENTS_"), root, order_cols=order)
     return read_observations_versioned(spark, root).select(
         "series_id", "observation_time", "value"
     )
@@ -192,22 +197,14 @@ def silver_versioned_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = _scratch()
     e = table(spark, sf_dir, "events")
 
-    def page(df):
-        return df.select(
-            F.concat(
-                F.lit("NG_EVENTS_"), F.col("user_id").cast("string")
-            ).alias("series_id"),
-            F.date_trunc("hour", F.col("ts")).alias("observation_time"),
-            F.col("value").cast("double").alias("value"),
-            F.col("ts").alias("ingestion_time"),
-            F.col("event_id"),
-        )
-
     order = ["ingestion_time", "event_id"]
     upsert_observations_versioned(
-        spark, page(e.filter(F.col("event_id") % 2 == 0)), root, order_cols=order
+        spark,
+        _events_page(e.filter(F.col("event_id") % 2 == 0), "NG_EVENTS_"),
+        root,
+        order_cols=order,
     )
-    upsert_observations_versioned(spark, page(e), root, order_cols=order)
+    upsert_observations_versioned(spark, _events_page(e, "NG_EVENTS_"), root, order_cols=order)
     return read_observations_versioned(spark, root, version=1).select(
         "series_id", "observation_time", "value"
     )
@@ -307,22 +304,14 @@ def silver_versioned_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = _scratch()
     e = table(spark, sf_dir, "events")
 
-    def page(df):
-        return df.select(
-            F.concat(
-                F.lit("NG_EVENTS_"), F.col("user_id").cast("string")
-            ).alias("series_id"),
-            F.date_trunc("hour", F.col("ts")).alias("observation_time"),
-            F.col("value").cast("double").alias("value"),
-            F.col("ts").alias("ingestion_time"),
-            F.col("event_id"),
-        )
-
     order = ["ingestion_time", "event_id"]
     upsert_observations_versioned(
-        spark, page(e.filter(F.col("event_id") % 2 == 0)), root, order_cols=order
+        spark,
+        _events_page(e.filter(F.col("event_id") % 2 == 0), "NG_EVENTS_"),
+        root,
+        order_cols=order,
     )
-    upsert_observations_versioned(spark, page(e), root, order_cols=order)
+    upsert_observations_versioned(spark, _events_page(e, "NG_EVENTS_"), root, order_cols=order)
     # v3 touches exactly one partition: the earliest date, values
     # bumped so every winner row changes in place. The min is a
     # metadata-sized scalar (one aggregate row), not a data collect.
@@ -332,7 +321,7 @@ def silver_versioned_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     # would drop the row while the leg-2 oracle (which declares every
     # min-day winner an update) keeps it. nanvl+coalesce guarantees
     # every winner's value genuinely changes, data notwithstanding.
-    bumped = page(e.filter(F.to_date("ts") == F.lit(min_day))).withColumn(
+    bumped = _events_page(e.filter(F.to_date("ts") == F.lit(min_day)), "NG_EVENTS_").withColumn(
         "value",
         F.coalesce(F.nanvl(F.col("value"), F.lit(0.0)), F.lit(0.0))
         + F.lit(100.0),
@@ -412,26 +401,15 @@ def silver_versioned_lifecycle_e2e(spark: SparkSession, sf_dir: str) -> DataFram
     root = _scratch()
     e = table(spark, sf_dir, "events")
 
-    def page(df):
-        return df.select(
-            F.concat(
-                F.lit("NG_EVENTS_"), F.col("user_id").cast("string")
-            ).alias("series_id"),
-            F.date_trunc("hour", F.col("ts")).alias("observation_time"),
-            F.col("value").cast("double").alias("value"),
-            F.col("ts").alias("ingestion_time"),
-            F.col("event_id"),
-        )
-
     order = ["ingestion_time", "event_id"]
-    upsert_observations_versioned(spark, page(e), root, order_cols=order)
+    upsert_observations_versioned(spark, _events_page(e, "NG_EVENTS_"), root, order_cols=order)
     d0 = e.agg(F.min(F.to_date("ts"))).collect()[0][0]
     d1 = (
         e.filter(F.to_date("ts") > F.lit(d0))
         .agg(F.min(F.to_date("ts")))
         .collect()[0][0]
     )
-    evolved = page(e.filter(F.to_date("ts") == F.lit(d0))).withColumn(
+    evolved = _events_page(e.filter(F.to_date("ts") == F.lit(d0)), "NG_EVENTS_").withColumn(
         "quality_flag",
         F.when(F.col("value") >= 50, F.lit("good")).otherwise(F.lit("poor")),
     )
@@ -499,15 +477,7 @@ def silver_versioned_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     root = _scratch()
     e = table(spark, sf_dir, "events")
-    page = e.select(
-        F.concat(
-            F.lit("NG_EVENTS_"), F.col("user_id").cast("string")
-        ).alias("series_id"),
-        F.date_trunc("hour", F.col("ts")).alias("observation_time"),
-        F.col("value").cast("double").alias("value"),
-        F.col("ts").alias("ingestion_time"),
-        F.col("event_id"),
-    )
+    page = _events_page(e, "NG_EVENTS_")
     upsert_observations_versioned(
         spark, page, root, order_cols=["ingestion_time", "event_id"]
     )
@@ -571,22 +541,14 @@ def silver_versioned_incremental_rollup(
     root = _scratch()
     e = table(spark, sf_dir, "events")
 
-    def page(df):
-        return df.select(
-            F.concat(
-                F.lit("NG_EVENTS_"), F.col("user_id").cast("string")
-            ).alias("series_id"),
-            F.date_trunc("hour", F.col("ts")).alias("observation_time"),
-            F.col("value").cast("double").alias("value"),
-            F.col("ts").alias("ingestion_time"),
-            F.col("event_id"),
-        )
-
     order = ["ingestion_time", "event_id"]
     upsert_observations_versioned(
-        spark, page(e.filter(F.col("event_id") % 2 == 0)), root, order_cols=order
+        spark,
+        _events_page(e.filter(F.col("event_id") % 2 == 0), "NG_EVENTS_"),
+        root,
+        order_cols=order,
     )
-    upsert_observations_versioned(spark, page(e), root, order_cols=order)
+    upsert_observations_versioned(spark, _events_page(e, "NG_EVENTS_"), root, order_cols=order)
 
     dec = lambda c: F.col(c).cast("decimal(18,4)")  # noqa: E731
     rollup_v1 = (
@@ -652,15 +614,7 @@ def silver_versioned_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     root = _scratch()
     e = table(spark, sf_dir, "events")
-    page = e.select(
-        F.concat(
-            F.lit("NG_EVENTS_"), F.col("user_id").cast("string")
-        ).alias("series_id"),
-        F.date_trunc("hour", F.col("ts")).alias("observation_time"),
-        F.col("value").cast("double").alias("value"),
-        F.col("ts").alias("ingestion_time"),
-        F.col("event_id"),
-    )
+    page = _events_page(e, "NG_EVENTS_")
     key = "spark.sql.files.maxRecordsPerFile"
     old = spark.conf.get(key, "0")
     spark.conf.set(key, "500")
@@ -795,15 +749,7 @@ def silver_versioned_file_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     root = _scratch()
     e = table(spark, sf_dir, "events")
-    page = e.select(
-        F.concat(
-            F.lit("NG_EVENTS_"), F.col("user_id").cast("string")
-        ).alias("series_id"),
-        F.date_trunc("hour", F.col("ts")).alias("observation_time"),
-        F.col("value").cast("double").alias("value"),
-        F.col("ts").alias("ingestion_time"),
-        F.col("event_id"),
-    )
+    page = _events_page(e, "NG_EVENTS_")
     key = "spark.sql.files.maxRecordsPerFile"
     old = spark.conf.get(key, "0")
     # 2000 rows/file plants a fragmented-but-not-absurd layout
@@ -869,16 +815,8 @@ def silver_versioned_point_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     root = _scratch()
     e = table(spark, sf_dir, "events")
-    page = e.filter(
-        ((F.col("user_id") + F.dayofmonth(F.col("ts"))) % 3) == 0
-    ).select(
-        F.concat(F.lit("PP_"), F.col("user_id").cast("string")).alias(
-            "series_id"
-        ),
-        F.date_trunc("hour", F.col("ts")).alias("observation_time"),
-        F.col("value").cast("double").alias("value"),
-        F.col("ts").alias("ingestion_time"),
-        F.col("event_id"),
+    page = _events_page(
+        e.filter(((F.col("user_id") + F.dayofmonth(F.col("ts"))) % 3) == 0), "PP_"
     )
     upsert_observations_versioned(
         spark, page, root, order_cols=["ingestion_time", "event_id"]
@@ -930,15 +868,7 @@ def silver_versioned_delete_vectors(spark: SparkSession, sf_dir: str) -> DataFra
 
     root = _scratch()
     e = table(spark, sf_dir, "events")
-    page = e.select(
-        F.concat(F.lit("DV_"), F.col("user_id").cast("string")).alias(
-            "series_id"
-        ),
-        F.date_trunc("hour", F.col("ts")).alias("observation_time"),
-        F.col("value").cast("double").alias("value"),
-        F.col("ts").alias("ingestion_time"),
-        F.col("event_id"),
-    )
+    page = _events_page(e, "DV_")
     upsert_observations_versioned(
         spark, page, root, order_cols=["ingestion_time", "event_id"]
     )
@@ -993,15 +923,7 @@ def silver_versioned_delete_by_key(spark: SparkSession, sf_dir: str) -> DataFram
 
     root = _scratch()
     e = table(spark, sf_dir, "events")
-    page = e.select(
-        F.concat(F.lit("EQ_"), F.col("user_id").cast("string")).alias(
-            "series_id"
-        ),
-        F.date_trunc("hour", F.col("ts")).alias("observation_time"),
-        F.col("value").cast("double").alias("value"),
-        F.col("ts").alias("ingestion_time"),
-        F.col("event_id"),
-    )
+    page = _events_page(e, "EQ_")
     upsert_observations_versioned(
         spark, page, root, order_cols=["ingestion_time", "event_id"]
     )
@@ -1050,15 +972,7 @@ def silver_versioned_update_where(spark: SparkSession, sf_dir: str) -> DataFrame
 
     root = _scratch()
     e = table(spark, sf_dir, "events")
-    page = e.select(
-        F.concat(F.lit("UP_"), F.col("user_id").cast("string")).alias(
-            "series_id"
-        ),
-        F.date_trunc("hour", F.col("ts")).alias("observation_time"),
-        F.col("value").cast("double").alias("value"),
-        F.col("ts").alias("ingestion_time"),
-        F.col("event_id"),
-    )
+    page = _events_page(e, "UP_")
     upsert_observations_versioned(
         spark, page, root, order_cols=["ingestion_time", "event_id"]
     )
@@ -1194,21 +1108,10 @@ def silver_versioned_schema_evolution(spark: SparkSession, sf_dir: str) -> DataF
     root = _scratch()
     e = table(spark, sf_dir, "events")
 
-    def page(df):
-        return df.select(
-            F.concat(
-                F.lit("NG_EVENTS_"), F.col("user_id").cast("string")
-            ).alias("series_id"),
-            F.date_trunc("hour", F.col("ts")).alias("observation_time"),
-            F.col("value").cast("double").alias("value"),
-            F.col("ts").alias("ingestion_time"),
-            F.col("event_id"),
-        )
-
     order = ["ingestion_time", "event_id"]
-    upsert_observations_versioned(spark, page(e), root, order_cols=order)
+    upsert_observations_versioned(spark, _events_page(e, "NG_EVENTS_"), root, order_cols=order)
     min_day = e.agg(F.min(F.to_date("ts"))).collect()[0][0]
-    evolved = page(e.filter(F.to_date("ts") == F.lit(min_day))).withColumn(
+    evolved = _events_page(e.filter(F.to_date("ts") == F.lit(min_day)), "NG_EVENTS_").withColumn(
         "quality_flag",
         F.when(F.col("value") >= 50, F.lit("good")).otherwise(F.lit("poor")),
     )

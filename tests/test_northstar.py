@@ -271,14 +271,16 @@ def test_ivf_topk_scores_exact_and_recall(spark, emb_pdf):
     point of data-adapted partitions (measured ~0.8+ here)."""
     from gas_data_pipeline_spark.catalog import table
     from gas_data_pipeline_spark.operators.similarity import (
+        ann_topk,
         cosine_topk,
-        cosine_topk_ivf,
+        kmeans_model,
     )
 
     emb = table(spark, SF_SMALL, "embeddings")
     queries = emb.filter(F.col("vec_id") < 8)
     exact = cosine_topk(emb, queries, k=10).toPandas()
-    ivf = cosine_topk_ivf(emb, queries, k=10, n_clusters=16, n_probe=4).toPandas()
+    model = kmeans_model(emb, n_clusters=16)
+    ivf = ann_topk(emb, queries, model, k=10, n_probe=4).toPandas()
 
     vecs = {r.vec_id: np.asarray(r.embedding, dtype=float) for r in emb_pdf.itertuples()}
     for row in ivf.itertuples():
@@ -577,15 +579,20 @@ def test_pq_topk_recall_and_soundness(spark, emb_pdf):
     numpy ADC of the row's codes under the k-means trainer's codebooks."""
     from gas_data_pipeline_spark.catalog import table
     from gas_data_pipeline_spark.operators.similarity import (
+        ann_topk,
         cosine_topk,
-        cosine_topk_pq,
         kmeans_model,
     )
 
     emb = table(spark, SF_SMALL, "embeddings")
     queries = emb.filter(F.col("vec_id") < 8)
     exact = cosine_topk(emb, queries, k=10).toPandas()
-    pq = cosine_topk_pq(emb, queries, k=10, m=16, n_codes=32).toPandas()
+
+    def search():
+        model = kmeans_model(emb, m=16, n_codes=32)
+        return ann_topk(emb, queries, model, k=10).toPandas()
+
+    pq = search()
 
     assert (pq.query_id != pq.neighbor_id).all()
     assert pq.approx_cos.between(-1.5, 1.5).all()  # quantized, near cosine range
@@ -621,7 +628,7 @@ def test_pq_topk_recall_and_soundness(spark, emb_pdf):
     p = set(zip(pq.query_id, pq.neighbor_id))
     assert len(e & p) / len(e) >= 0.4  # measured 0.45 at these settings
 
-    again = cosine_topk_pq(emb, queries, k=10, m=16, n_codes=32).toPandas()
+    again = search()
     key = ["query_id", "rank"]
     assert pq.sort_values(key).reset_index(drop=True).equals(
         again.sort_values(key).reset_index(drop=True)
@@ -649,14 +656,20 @@ def test_ivfpq_topk_recall_and_soundness(spark):
     vs exact, no self-matches, contiguous ranks, deterministic."""
     from gas_data_pipeline_spark.catalog import table
     from gas_data_pipeline_spark.operators.similarity import (
+        ann_topk,
         cosine_topk,
-        cosine_topk_ivfpq,
+        kmeans_model,
     )
 
     emb = table(spark, SF_SMALL, "embeddings")
     queries = emb.filter(F.col("vec_id") < 8)
     exact = cosine_topk(emb, queries, k=10).toPandas()
-    apx = cosine_topk_ivfpq(emb, queries, k=10).toPandas()
+
+    def search():
+        model = kmeans_model(emb, n_clusters=16, m=16, n_codes=32)
+        return ann_topk(emb, queries, model, k=10, n_probe=4).toPandas()
+
+    apx = search()
 
     assert (apx.query_id != apx.neighbor_id).all()
     for qid, grp in apx.groupby("query_id"):
@@ -665,7 +678,7 @@ def test_ivfpq_topk_recall_and_soundness(spark):
     p = set(zip(apx.query_id, apx.neighbor_id))
     assert len(e & p) / len(e) >= 0.3  # measured 0.487 at these settings
 
-    again = cosine_topk_ivfpq(emb, queries, k=10).toPandas()
+    again = search()
     key = ["query_id", "rank"]
     assert apx.sort_values(key).reset_index(drop=True).equals(
         again.sort_values(key).reset_index(drop=True)
@@ -722,10 +735,7 @@ def test_pq_ivfpq_corpus_scale_query_side(spark):
     the bounded batch carries a broadcast hint; the big one's join is
     the optimizer's choice, never a forced driver collect."""
     from gas_data_pipeline_spark.catalog import table
-    from gas_data_pipeline_spark.operators.similarity import (
-        cosine_topk_ivfpq,
-        cosine_topk_pq,
-    )
+    from gas_data_pipeline_spark.operators.similarity import ann_topk, kmeans_model
 
     emb = table(spark, SF_SMALL, "embeddings").select("vec_id", "embedding")
     n = emb.count()
@@ -744,8 +754,9 @@ def test_pq_ivfpq_corpus_scale_query_side(spark):
         plan = df._jdf.queryExecution().optimizedPlan().toString()
         return "strategy=broadcast" in plan
 
-    pq_small = cosine_topk_pq(emb, small_q, k=5, m=16, n_codes=32)
-    pq_big = cosine_topk_pq(emb, big_q, k=5, m=16, n_codes=32)
+    pq = kmeans_model(emb, m=16, n_codes=32)
+    pq_small = ann_topk(emb, small_q, pq, k=5)
+    pq_big = ann_topk(emb, big_q, pq, k=5)
     assert forced_broadcast(pq_small) and not forced_broadcast(pq_big)
     pq_small, pq_big = pq_small.toPandas(), pq_big.toPandas()
     assert pq_big.query_id.nunique() == 3 * n
@@ -753,8 +764,9 @@ def test_pq_ivfpq_corpus_scale_query_side(spark):
     sub = pq_big[pq_big.query_id < 8].sort_values(key).reset_index(drop=True)
     assert sub.equals(pq_small.sort_values(key).reset_index(drop=True))
 
-    ivf_small = cosine_topk_ivfpq(emb, small_q, k=5)
-    ivf_big = cosine_topk_ivfpq(emb, big_q, k=5)
+    ivfpq = kmeans_model(emb, n_clusters=16, m=16, n_codes=32)
+    ivf_small = ann_topk(emb, small_q, ivfpq, k=5, n_probe=4)
+    ivf_big = ann_topk(emb, big_q, ivfpq, k=5, n_probe=4)
     assert forced_broadcast(ivf_small) and not forced_broadcast(ivf_big)
     ivf_small, ivf_big = ivf_small.toPandas(), ivf_big.toPandas()
     assert ivf_big.query_id.nunique() == 3 * n
@@ -1183,8 +1195,9 @@ def test_ivf_kcenter_scores_exact_and_recall(spark, emb_pdf):
     from gas_data_pipeline_spark.catalog import table
     from gas_data_pipeline_spark.operators.selection import kcenter_greedy_sampled
     from gas_data_pipeline_spark.operators.similarity import (
+        AnnModel,
+        ann_topk,
         cosine_topk,
-        cosine_topk_ivf_kcenter,
     )
 
     emb = table(spark, SF_SMALL, "embeddings")
@@ -1193,9 +1206,8 @@ def test_ivf_kcenter_scores_exact_and_recall(spark, emb_pdf):
     centers = kcenter_greedy_sampled(
         emb, "vec_id", "embedding", k=16, sample_n=emb.count()
     )
-    ivf = cosine_topk_ivf_kcenter(
-        emb, queries, centers, k=10, n_probe=4
-    ).toPandas()
+    model = AnnModel(centers=centers)
+    ivf = ann_topk(emb, queries, model, k=10, n_probe=4).toPandas()
 
     vecs = {r.vec_id: np.asarray(r.embedding, dtype=float) for r in emb_pdf.itertuples()}
     for row in ivf.itertuples():
@@ -1221,8 +1233,9 @@ def test_pq_kcenter_recall_and_determinism(spark, emb_pdf):
 
     from gas_data_pipeline_spark.catalog import table
     from gas_data_pipeline_spark.operators.similarity import (
+        AnnModel,
+        ann_topk,
         cosine_topk,
-        cosine_topk_pq_kcenter,
         pq_kcenter_codebooks_sampled,
     )
 
@@ -1231,7 +1244,8 @@ def test_pq_kcenter_recall_and_determinism(spark, emb_pdf):
     exact = cosine_topk(emb, queries, k=10).toPandas()
     books = pq_kcenter_codebooks_sampled(emb, m=8, n_codes=8, sample_n=emb.count())
     assert len(books) == 8 and all(len(b) == 8 for b in books)
-    pq = cosine_topk_pq_kcenter(emb, queries, books, k=10).toPandas()
+    model = AnnModel(books=books)
+    pq = ann_topk(emb, queries, model, k=10).toPandas()
 
     # Soundness: scores equal the numpy ADC reconstruction cosine.
     B = np.asarray(books)  # (8, 8, 8)
@@ -1265,7 +1279,7 @@ def test_pq_kcenter_recall_and_determinism(spark, emb_pdf):
     print("kcenter-pq recall:", recall)
     assert recall >= 0.15, recall  # 8x8 codes is a coarse quantizer
 
-    again = cosine_topk_pq_kcenter(emb, queries, books, k=10).toPandas()
+    again = ann_topk(emb, queries, model, k=10).toPandas()
     assert pq.sort_values(["query_id", "rank"]).reset_index(drop=True).equals(
         again.sort_values(["query_id", "rank"]).reset_index(drop=True)
     )
@@ -1280,9 +1294,9 @@ def test_sampled_codebooks_keep_recall(spark):
         kcenter_greedy_sampled,
     )
     from gas_data_pipeline_spark.operators.similarity import (
+        AnnModel,
+        ann_topk,
         cosine_topk,
-        cosine_topk_ivf_kcenter,
-        cosine_topk_pq_kcenter,
         pq_kcenter_codebooks_sampled,
     )
 
@@ -1292,42 +1306,38 @@ def test_sampled_codebooks_keep_recall(spark):
     e = set(zip(exact.query_id, exact.neighbor_id))
 
     books256 = pq_kcenter_codebooks_sampled(emb, m=8, n_codes=8)
-    pq = cosine_topk_pq_kcenter(emb, queries, books256, k=10).toPandas()
+    pq = ann_topk(emb, queries, AnnModel(books=books256), k=10).toPandas()
     pq_recall = len(e & set(zip(pq.query_id, pq.neighbor_id))) / len(e)
     print("sampled-pq recall:", pq_recall)
     assert pq_recall >= 0.15, pq_recall
 
     centers256 = kcenter_greedy_sampled(emb, "vec_id", "embedding", k=16)
-    ivf = cosine_topk_ivf_kcenter(
-        emb, queries, centers256, k=10, n_probe=4
+    ivf = ann_topk(
+        emb, queries, AnnModel(centers=centers256), k=10, n_probe=4
     ).toPandas()
     ivf_recall = len(e & set(zip(ivf.query_id, ivf.neighbor_id))) / len(e)
     print("sampled-ivf recall:", ivf_recall)
     assert ivf_recall >= 0.3, ivf_recall
 
 
-def test_ivf_driver_probe_matches_distributed_probe(spark):
+def test_ivf_driver_probe_matches_distributed_probe(spark, monkeypatch):
     """The threshold-gated driver-side query routing must produce
     exactly the distributed expression path's result (same fixed-point
     math, same tie-breaks) — forced by setting the bound below the
     query count."""
     from gas_data_pipeline_spark.catalog import table
+    from gas_data_pipeline_spark.operators import similarity
     from gas_data_pipeline_spark.operators.selection import (
         kcenter_greedy_sampled,
-    )
-    from gas_data_pipeline_spark.operators.similarity import (
-        cosine_topk_ivf_kcenter,
     )
 
     emb = table(spark, SF_SMALL, "embeddings")
     queries = emb.filter(F.col("vec_id") < 8)
     centers = kcenter_greedy_sampled(emb, "vec_id", "embedding", k=16)
-    fast = cosine_topk_ivf_kcenter(
-        emb, queries, centers, k=10, n_probe=4
-    ).toPandas()
-    slow = cosine_topk_ivf_kcenter(
-        emb, queries, centers, k=10, n_probe=4, driver_probe_bound=0
-    ).toPandas()
+    model = similarity.AnnModel(centers=centers)
+    fast = similarity.ann_topk(emb, queries, model, k=10, n_probe=4).toPandas()
+    monkeypatch.setattr(similarity, "DRIVER_PROBE_BOUND", 0)
+    slow = similarity.ann_topk(emb, queries, model, k=10, n_probe=4).toPandas()
     key = ["query_id", "rank"]
     assert fast.sort_values(key).reset_index(drop=True).equals(
         slow.sort_values(key).reset_index(drop=True)
@@ -1344,9 +1354,8 @@ def test_ann_index_build_search_split_is_result_identical(spark):
     )
     from gas_data_pipeline_spark.operators.similarity import (
         AnnModel,
+        ann_topk,
         build_index,
-        cosine_topk_ivf_kcenter,
-        cosine_topk_pq_kcenter,
         pq_kcenter_codebooks_sampled,
     )
 
@@ -1355,21 +1364,19 @@ def test_ann_index_build_search_split_is_result_identical(spark):
     key = ["query_id", "rank"]
 
     centers = kcenter_greedy_sampled(emb, "vec_id", "embedding", k=16)
-    idx = build_index(emb, AnnModel(centers=centers)).localCheckpoint(eager=True)
-    inline = cosine_topk_ivf_kcenter(emb, queries, centers, k=5).toPandas()
-    viaidx = cosine_topk_ivf_kcenter(
-        emb, queries, centers, k=5, index=idx
-    ).toPandas()
+    model = AnnModel(centers=centers)
+    idx = build_index(emb, model).localCheckpoint(eager=True)
+    inline = ann_topk(emb, queries, model, k=5).toPandas()
+    viaidx = ann_topk(emb, queries, model, k=5, index=idx).toPandas()
     assert inline.sort_values(key).reset_index(drop=True).equals(
         viaidx.sort_values(key).reset_index(drop=True)
     )
 
     books = pq_kcenter_codebooks_sampled(emb, m=8, n_codes=8)
-    codes = build_index(emb, AnnModel(books=books)).localCheckpoint(eager=True)
-    inline = cosine_topk_pq_kcenter(emb, queries, books, k=5).toPandas()
-    viacodes = cosine_topk_pq_kcenter(
-        emb, queries, books, k=5, codes=codes
-    ).toPandas()
+    model = AnnModel(books=books)
+    codes = build_index(emb, model).localCheckpoint(eager=True)
+    inline = ann_topk(emb, queries, model, k=5).toPandas()
+    viacodes = ann_topk(emb, queries, model, k=5, index=codes).toPandas()
     assert inline.sort_values(key).reset_index(drop=True).equals(
         viacodes.sort_values(key).reset_index(drop=True)
     )
@@ -1385,8 +1392,9 @@ def test_ivfpq_kcenter_recall_and_soundness(spark):
         kcenter_greedy_sampled,
     )
     from gas_data_pipeline_spark.operators.similarity import (
+        AnnModel,
+        ann_topk,
         cosine_topk,
-        cosine_topk_ivfpq_kcenter,
         pq_kcenter_codebooks_sampled,
     )
 
@@ -1395,9 +1403,8 @@ def test_ivfpq_kcenter_recall_and_soundness(spark):
     exact = cosine_topk(emb, queries, k=10).toPandas()
     centers = kcenter_greedy_sampled(emb, "vec_id", "embedding", k=16)
     books = pq_kcenter_codebooks_sampled(emb, m=8, n_codes=8)
-    got = cosine_topk_ivfpq_kcenter(
-        emb, queries, centers, books, k=10, n_probe=4
-    ).toPandas()
+    model = AnnModel(centers=centers, books=books)
+    got = ann_topk(emb, queries, model, k=10, n_probe=4).toPandas()
     for qid, grp in got.groupby("query_id"):
         assert sorted(grp["rank"]) == list(range(1, len(grp) + 1))
     e = set(zip(exact.query_id, exact.neighbor_id))
@@ -1405,9 +1412,7 @@ def test_ivfpq_kcenter_recall_and_soundness(spark):
     recall = len(e & g) / len(e)
     print("ivfpq-kcenter recall:", recall)
     assert recall >= 0.1, recall
-    again = cosine_topk_ivfpq_kcenter(
-        emb, queries, centers, books, k=10, n_probe=4
-    ).toPandas()
+    again = ann_topk(emb, queries, model, k=10, n_probe=4).toPandas()
     key = ["query_id", "rank"]
     assert got.sort_values(key).reset_index(drop=True).equals(
         again.sort_values(key).reset_index(drop=True)
@@ -1426,24 +1431,22 @@ def test_ivfpq_index_is_one_zero_shuffle_scan(spark):
     )
     from gas_data_pipeline_spark.operators.similarity import (
         AnnModel,
+        ann_topk,
         build_index,
-        cosine_topk_ivfpq_kcenter,
         pq_kcenter_codebooks_sampled,
     )
 
     emb = table(spark, SF_SMALL, "embeddings")
     centers = kcenter_greedy_sampled(emb, "vec_id", "embedding", k=8)
     books = pq_kcenter_codebooks_sampled(emb, m=8, n_codes=4)
-    idx = build_index(emb, AnnModel(centers=centers, books=books))
+    model = AnnModel(centers=centers, books=books)
+    idx = build_index(emb, model)
     build_plan = idx._jdf.queryExecution().executedPlan().toString()
     # the only allowed exchange is spread_scan's test-scale
     # round-robin repartition — never a join exchange
     assert "SortMergeJoin" not in build_plan and "HashJoin" not in build_plan
     queries = emb.filter(F.col("vec_id") < 4)
-    out = cosine_topk_ivfpq_kcenter(
-        emb, queries, centers, books, k=5,
-        index=idx.localCheckpoint(eager=True),
-    )
+    out = ann_topk(emb, queries, model, k=5, index=idx.localCheckpoint(eager=True))
     search_plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in search_plan
     assert "SortMergeJoin" not in search_plan
@@ -1457,8 +1460,9 @@ def test_pq_kcenter_rescore_lifts_recall(spark, emb_pdf):
     the exact scan wherever the ADC pool caught the true neighbor."""
     from gas_data_pipeline_spark.catalog import table
     from gas_data_pipeline_spark.operators.similarity import (
+        AnnModel,
+        ann_topk,
         cosine_topk,
-        cosine_topk_pq_kcenter,
         pq_kcenter_codebooks_sampled,
     )
 
@@ -1466,10 +1470,9 @@ def test_pq_kcenter_rescore_lifts_recall(spark, emb_pdf):
     queries = emb.filter(F.col("vec_id") < 8)
     exact = cosine_topk(emb, queries, k=10).toPandas()
     books = pq_kcenter_codebooks_sampled(emb, m=8, n_codes=8, sample_n=emb.count())
-    raw = cosine_topk_pq_kcenter(emb, queries, books, k=10).toPandas()
-    ref = cosine_topk_pq_kcenter(
-        emb, queries, books, k=10, rescore=100
-    ).toPandas()
+    model = AnnModel(books=books)
+    raw = ann_topk(emb, queries, model, k=10).toPandas()
+    ref = ann_topk(emb, queries, model, k=10, rescore=100).toPandas()
 
     e = set(zip(exact.query_id, exact.neighbor_id))
     raw_recall = len(e & set(zip(raw.query_id, raw.neighbor_id))) / len(e)
@@ -1491,9 +1494,7 @@ def test_pq_kcenter_rescore_lifts_recall(spark, emb_pdf):
         if want is not None:
             assert abs(r.cos_sim - want) < 1e-5, (r, want)
 
-    again = cosine_topk_pq_kcenter(
-        emb, queries, books, k=10, rescore=100
-    ).toPandas()
+    again = ann_topk(emb, queries, model, k=10, rescore=100).toPandas()
     key = ["query_id", "rank"]
     assert ref.sort_values(key).reset_index(drop=True).equals(
         again.sort_values(key).reset_index(drop=True)
@@ -1516,24 +1517,21 @@ def test_ivfpq_kcenter_rescore_lifts_recall(spark):
     )
     from gas_data_pipeline_spark.operators.similarity import (
         AnnModel,
+        ann_topk,
         build_index,
         cosine_topk,
-        cosine_topk_ivfpq_kcenter,
         pq_kcenter_codebooks_sampled,
-        probe_cells,
     )
+    from gas_data_pipeline_spark.operators.selection import QUANTUM, _fp_halfup
 
     emb = table(spark, SF_SMALL, "embeddings")
     queries = emb.filter(F.col("vec_id") < 8)
     exact = cosine_topk(emb, queries, k=10).toPandas()
     centers = kcenter_greedy_sampled(emb, "vec_id", "embedding", k=16)
     books = pq_kcenter_codebooks_sampled(emb, m=8, n_codes=8)
-    raw = cosine_topk_ivfpq_kcenter(
-        emb, queries, centers, books, k=10, n_probe=4
-    ).toPandas()
-    ref = cosine_topk_ivfpq_kcenter(
-        emb, queries, centers, books, k=10, n_probe=4, rescore=200
-    ).toPandas()
+    model = AnnModel(centers=centers, books=books)
+    raw = ann_topk(emb, queries, model, k=10, n_probe=4).toPandas()
+    ref = ann_topk(emb, queries, model, k=10, n_probe=4, rescore=200).toPandas()
 
     e = set(zip(exact.query_id, exact.neighbor_id))
     raw_recall = len(e & set(zip(raw.query_id, raw.neighbor_id))) / len(e)
@@ -1543,28 +1541,27 @@ def test_ivfpq_kcenter_rescore_lifts_recall(spark):
     assert ref_recall >= raw_recall + 0.15  # a real lift, not noise
 
     # Soundness: the rescored top-10 IS the exact fixed-point cosine
-    # ranking of the probed candidate set, per query.
-    idx = build_index(emb, AnnModel(centers=centers, books=books))
-    qp = probe_cells(
-        queries, centers, "vec_id", "embedding", n_probe=4, quantum=1e6
-    ).select("query_id", "center_id")
-    cand = (
-        idx.join(F.broadcast(qp), "center_id")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id")
-        .toPandas()
-    )
+    # ranking of the probed candidate set, per query. The probe is
+    # replayed in numpy: the 4 nearest centers by fixed-point squared
+    # distance, ties to the smaller center id.
+    cells = build_index(emb, model).select("neighbor_id", "center_id").toPandas()
     vecs = {
         r.vec_id: np.asarray(r.embedding, dtype=float) for r in emb.collect()
     }
     nv = {k: v / np.linalg.norm(v) for k, v in vecs.items()}
-    for qid, grp in cand.groupby("query_id"):
+    cmat = np.array([c["vec"] for c in centers])
+    cids = [int(c["id"]) for c in centers]
+    for qid in range(8):
+        d = vecs[qid] - cmat
+        sq = _fp_halfup(d * d * QUANTUM).sum(axis=1)
+        probed = [cid for _, cid in sorted(zip(sq.tolist(), cids))[:4]]
+        cand = cells[cells.center_id.isin(probed) & (cells.neighbor_id != qid)]
         want = [
             n
             for _, n in sorted(
                 (
                     (-round(float(np.dot(nv[qid], nv[n])) * 1e6), n)
-                    for n in grp.neighbor_id
+                    for n in cand.neighbor_id
                 )
             )[:10]
         ]
@@ -1572,9 +1569,7 @@ def test_ivfpq_kcenter_rescore_lifts_recall(spark):
         assert want == got, (qid, want, got)
 
     assert (ref.query_id != ref.neighbor_id).all()
-    again = cosine_topk_ivfpq_kcenter(
-        emb, queries, centers, books, k=10, n_probe=4, rescore=200
-    ).toPandas()
+    again = ann_topk(emb, queries, model, k=10, n_probe=4, rescore=200).toPandas()
     key = ["query_id", "rank"]
     assert ref.sort_values(key).reset_index(drop=True).equals(
         again.sort_values(key).reset_index(drop=True)

@@ -192,6 +192,42 @@ def test_package_imports_no_pyspark_ml():
     assert imports == []
 
 
+def test_ann_search_is_one_call_at_one_scale():
+    # A search configuration is a model handed to similarity.ann_topk,
+    # and the fixed-point scale and driver-probe bound are constants:
+    # no package function takes either as a parameter, and none of the
+    # per-configuration wrappers is defined again.
+    import ast
+    import pathlib
+
+    import gas_data_pipeline_spark
+
+    deleted = {
+        "cosine_topk_ivf",
+        "cosine_topk_pq",
+        "cosine_topk_ivfpq",
+        "cosine_topk_ivf_kcenter",
+        "cosine_topk_pq_kcenter",
+        "cosine_topk_ivfpq_kcenter",
+        "probe_cells",
+    }
+    root = pathlib.Path(gas_data_pipeline_spark.__file__).parent
+    found = []
+    for path in sorted(root.rglob("*.py")):
+        for n in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            a = n.args
+            params = {p.arg for p in a.posonlyargs + a.args + a.kwonlyargs}
+            found += [
+                f"{path.relative_to(root)}:{n.lineno}:{name}"
+                for name in sorted(
+                    (params & {"quantum", "driver_probe_bound"}) | ({n.name} & deleted)
+                )
+            ]
+    assert found == []
+
+
 def test_suite_moves_no_file_into_a_watched_dir():
     # streaming.incremental.run_staged_stream is the one place a staged
     # file moves into a stream's watched dir: no suite query moves
