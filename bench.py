@@ -23,10 +23,12 @@ CartesianProduct/BroadcastNestedLoopJoin. Disable with
 
 ``--only NAMES`` (comma-separated query names) runs just those queries
 through the same warm-up and passes, prints one JSON line of their
-median timings and median process-tree CPU seconds (``queries_cpu``,
+median timings, median process-tree CPU seconds (``queries_cpu``,
 from ``perfbench.harness.tree_cpu_s``: the driver, its JVM and Python
-workers, without JIT threads), and writes no ``BENCH_*`` file: the
-tool for a quick A/B of a few queries.
+workers, without JIT threads) and the median number of classes Spark's
+codegen compiled for each query (``queries_compiles``, the count of
+``CodegenMetrics.METRIC_COMPILATION_TIME``), and writes no ``BENCH_*``
+file: the tool for a quick A/B of a few queries.
 """
 
 from __future__ import annotations
@@ -945,6 +947,10 @@ def main() -> None:
         return
 
     cpu_passes: list[dict[str, float]] = []  # per pass, --only runs only
+    compile_passes: list[dict[str, int]] = []  # per pass, --only runs only
+    codegen_compiles = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    )
 
     def run_pass(pass_idx: int = 0) -> dict[str, float]:
         import gc
@@ -962,14 +968,17 @@ def main() -> None:
         random.Random(pass_idx).shuffle(order)
         out: dict[str, float] = {}
         cpu: dict[str, float] = {}
+        compiles: dict[str, int] = {}
         for name in order:
             fn = queries[name]
-            cpu0 = tree_cpu_s() if only is not None else 0.0
+            if only is not None:
+                cpu0, compiles0 = tree_cpu_s(), codegen_compiles.getCount()
             start = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             out[name] = round(time.perf_counter() - start, 4)
             if only is not None:
                 cpu[name] = tree_cpu_s() - cpu0
+                compiles[name] = codegen_compiles.getCount() - compiles0
             # Measurement hygiene, not a speed hack: localCheckpoint /
             # persist blocks from query i stay pinned in the JVM until
             # Python's lazy GC drops the py4j refs, so without this a
@@ -980,6 +989,7 @@ def main() -> None:
             # so every query is measured against the same JVM state.
             gc.collect()
         cpu_passes.append(cpu)
+        compile_passes.append(compiles)
         return out
 
     # Host-level noise on shared machines swings identical suite runs
@@ -1019,6 +1029,9 @@ def main() -> None:
                     "queries": timings,
                     "queries_cpu": {
                         k: round(median([p[k] for p in cpu_passes]), 2) for k in timings
+                    },
+                    "queries_compiles": {
+                        k: median([p[k] for p in compile_passes]) for k in timings
                     },
                 }
             )

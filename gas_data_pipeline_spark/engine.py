@@ -103,6 +103,13 @@ class GasDataEngine:
         completes only when every stage has committed (all futures
         joined before return), and a replay after a partial failure
         re-runs the whole batch exactly as the sequential chain would.
+
+        A steady cycle (same plans and fields as the one before)
+        repeats none of its work: the field sink reads the registered
+        names and profiles nothing, and the session's codegen cache
+        (session.get_spark) still holds the previous cycle's classes,
+        so only code embedding this cycle's ``current_timestamp()``
+        compiles again.
         """
         from concurrent.futures import ThreadPoolExecutor
 
@@ -214,19 +221,40 @@ class GasDataEngine:
         }
 
     def _discover_and_register_fields(self, batch: DataFrame, dataset_id: str) -> None:
-        """A4: profile every column of the batch under the reference's
-        per-VALUE type lattice null|boolean|integer|float|json|string
-        (field_discovery.py:5-16) — a field's type is the comma-joined
-        sorted set of its observed value types (field_discovery.py:46),
-        so mixed fields report e.g. 'integer,string' and a column
-        holding both 'true' and 'false' is 'boolean' — then upsert the
-        field catalog insert-if-absent (SNK3)."""
+        """A4: profile the batch's columns the catalog lacks under the
+        reference's per-VALUE type lattice null|boolean|integer|float|
+        json|string (field_discovery.py:5-16) — a field's type is the
+        comma-joined sorted set of its observed value types
+        (field_discovery.py:46), so mixed fields report e.g.
+        'integer,string' and a column holding both 'true' and 'false'
+        is 'boolean' — then append their rows to the field catalog.
+
+        The catalog keeps a field's first-seen profile (SNK3
+        insert-if-absent), so the key filter runs on field names before
+        any profiling: one narrow scan reads the dataset's registered
+        ``field_name``s, only the other columns are profiled and
+        appended, and a batch with no new column starts no profile job
+        at all."""
         from gas_data_pipeline_spark.functions.profiling import (
             infer_value_type,
             inferred_type_agg,
         )
 
-        # One global aggregate computes every column's profile in a
+        known: set[str] = set()
+        if os.path.exists(self.fields_path):
+            known = {
+                r[0]
+                for r in self.spark.read.schema("dataset_id string, field_name string")
+                .parquet(self.fields_path)
+                .filter(F.col("dataset_id") == dataset_id)
+                .select("field_name")
+                .collect()
+            }
+        new_cols = [c for c in batch.columns if c not in known]
+        if not new_cols:
+            return
+
+        # One global aggregate computes every new column's profile in a
         # single scan: the per-column lattice set / null flag / example
         # are independent aggregates, so exploding rows x columns into
         # a (field, cell) relation first (the field_profile QUERY shape)
@@ -243,7 +271,7 @@ class GasDataEngine:
             )
 
         one = batch.agg(
-            *[col_profile(c).alias(f"__p_{i}") for i, c in enumerate(batch.columns)]
+            *[col_profile(c).alias(f"__p_{i}") for i, c in enumerate(new_cols)]
         )
         profile = one.select(
             F.explode(
@@ -253,7 +281,7 @@ class GasDataEngine:
                             F.lit(c).alias("field_name"),
                             F.col(f"__p_{i}").alias("p"),
                         )
-                        for i, c in enumerate(batch.columns)
+                        for i, c in enumerate(new_cols)
                     ]
                 )
             ).alias("kv")
@@ -264,9 +292,7 @@ class GasDataEngine:
             F.col("kv.p.example_value").alias("example_value"),
             F.current_timestamp().alias("first_seen_at"),
         ).withColumn("dataset_id", F.lit(dataset_id))
-        insert_if_absent(
-            self.spark, profile, self.fields_path, keys=["dataset_id", "field_name"]
-        )
+        profile.write.mode("append").parquet(self.fields_path)
 
     # ------------------------------------------------------------------
     # Read path (reference §3.1: GET /v2/data; §3.3: get_history)

@@ -871,13 +871,22 @@ def _rewrite_commit(
     lists which touched dates were written, footer stats for exactly
     those come from one :func:`_collect_stats` call, and
     :func:`_publish_fold` publishes: written dates repoint with fresh
-    stats, touched dates with no rows vanish."""
+    stats, touched dates with no rows vanish. ``touched=None`` means
+    the dates the write staged: a commit that replaces no existing
+    date learns its dates from the staged version's ``__pdate=``
+    directories instead of from a scan of ``rows``."""
     schema = _evolve_schema(current.get("schema") if current else None, rows)
     vtag = _new_tag(current)
     with _stats_bearing_writes(spark):
         rows.withColumn(_PDATE, F.col(PARTITION_COL).cast("string")).write.mode(
             "overwrite"
         ).partitionBy(_PDATE).parquet(os.path.join(root, vtag))
+    if touched is None:
+        touched = [
+            name[len(_PDATE) + 1 :]
+            for name in os.listdir(os.path.join(root, vtag))
+            if name.startswith(_PDATE + "=")
+        ]
     rels = {d: f"{vtag}/{_PDATE}={d}" for d in touched}
     written = {
         d: os.path.join(root, rel)
@@ -907,19 +916,24 @@ def upsert_observations_versioned(
     live rows of its dates, published as a new table version.
     ``order_cols`` (default ``ingestion_time``) break ties descending;
     add a unique column (e.g. an event id) to make ties
-    deterministic. Returns the committed manifest."""
+    deterministic. Returns the committed manifest.
+
+    On a store with no committed date there are no live rows to merge
+    with, so the batch is neither cached nor scanned for its dates:
+    the commit takes them from the directories its write staged."""
     os.makedirs(root, exist_ok=True)
     current = read_manifest(root, with_stats=False)
+    batch = batch.withColumn(PARTITION_COL, F.to_date("observation_time"))
+    order_cols = order_cols or ["ingestion_time"]
+    if not (current and current["partitions"]):
+        merged = merge_last_write_wins(batch, None, order_cols)
+        return _rewrite_commit(spark, root, current, merged, None)
     # Cached: the batch feeds both the date discovery and the merge.
-    batch = batch.withColumn(
-        PARTITION_COL, F.to_date("observation_time")
-    ).persist()
+    batch = batch.persist()
     try:
         affected = _touched_dates(batch)
         merged = merge_last_write_wins(
-            batch,
-            _live_rows(spark, root, current, affected),
-            order_cols or ["ingestion_time"],
+            batch, _live_rows(spark, root, current, affected), order_cols
         )
         return _rewrite_commit(spark, root, current, merged, affected)
     finally:

@@ -10,6 +10,12 @@ Centralizes the configuration the whole engine depends on:
   partition count is data-dependent; AQE re-plans at runtime.
 - Arrow on for the pandas interchange edge (reference uses pandas as its
   batch format; we keep pandas only at the REST-fetch boundary).
+- A codegen cache that holds the engine's working set: a scheduler
+  cycle repeats the previous cycle's plans, and Spark's default cache
+  (100 classes) evicted classes the next cycle needed again, so every
+  steady ingest cycle recompiled them in Janino. At 2048 such a cycle
+  compiles only the classes that embed its own literals (the
+  ``current_timestamp()`` of its ingestion times).
 
 On a real cluster, ``spark.sql.shuffle.partitions`` should be ~2-3x the
 total executor cores; locally we default to the core count. AQE's
@@ -29,7 +35,12 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    """Build (or return the active) SparkSession with engine defaults."""
+    """Build (or return the active) SparkSession with engine defaults.
+
+    The codegen cache holds 2048 generated classes, a constant and not
+    an option: it decides only how often the same plan is recompiled.
+    Like every static conf it takes effect only when this call starts
+    the JVM's first session."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 4)
     master = master or f"local[{cpus}]"
     shuffle = shuffle_partitions or int(cpus)
@@ -56,6 +67,8 @@ def get_spark(
         # to mirror the reference's "reject non-castable floats" semantics
         # (reference app/ingestion/transformer.py:83-86) without job failure.
         .config("spark.sql.ansi.enabled", "false")
+        # Compile each generated class once per session (module docstring).
+        .config("spark.sql.codegen.cache.maxEntries", "2048")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )

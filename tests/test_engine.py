@@ -167,6 +167,95 @@ def test_discovery_and_field_catalog(engine, spark):
     assert {"site_id", "flow_rate", "energy"} <= set(payload)
 
 
+def _catalog_files(engine):
+    return sorted(
+        os.path.relpath(os.path.join(d, f), engine.fields_path)
+        for d, _, files in os.walk(engine.fields_path)
+        for f in files
+    )
+
+
+def _catalog_rows(spark, path, dataset_id):
+    return {
+        r.field_name: (r.inferred_type, r.nullable, r.example_value)
+        for r in spark.read.parquet(path)
+        .filter(F.col("dataset_id") == dataset_id)
+        .collect()
+    }
+
+
+def test_reingest_of_registered_fields_profiles_nothing(engine, spark):
+    """A batch whose columns are all registered adds no file under the
+    field catalog, and field discovery runs one job, the narrow read
+    of the registered names, instead of the profile aggregate and the
+    insert."""
+    batch = _wide_batch(spark)
+    engine.ingest_batch(batch, "GAS_QUALITY", "national_gas", ["site_id"], "observed_at")
+    files = _catalog_files(engine)
+    rows = _catalog_rows(spark, engine.fields_path, "GAS_QUALITY")
+    engine.ingest_batch(batch, "GAS_QUALITY", "national_gas", ["site_id"], "observed_at")
+    assert _catalog_files(engine) == files
+
+    sc = spark.sparkContext
+    group = "fields-registered"
+    sc.setJobGroup(group, "field discovery over registered columns")
+    try:
+        engine._discover_and_register_fields(batch, "GAS_QUALITY")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert _catalog_files(engine) == files
+    assert _catalog_rows(spark, engine.fields_path, "GAS_QUALITY") == rows
+
+
+def test_new_column_registers_exactly_its_profile(engine, spark, tmp_path):
+    """A batch with one column the catalog lacks inserts exactly that
+    column's row, and its profile equals the one an engine that
+    profiles every column of the batch (a fresh catalog) records."""
+    from gas_data_pipeline_spark.engine import GasDataEngine
+
+    base = _wide_batch(spark)
+    evolved = base.withColumn(
+        "grade",
+        F.when(F.col("site_id") == 1, F.lit(None))
+        .when(F.col("site_id") % 2 == 0, F.lit("n/a"))
+        .otherwise(F.col("site_id").cast("string")),
+    )
+    engine.ingest_batch(base, "GAS_QUALITY", "national_gas", ["site_id"], "observed_at")
+    before = _catalog_rows(spark, engine.fields_path, "GAS_QUALITY")
+    engine.ingest_batch(evolved, "GAS_QUALITY", "national_gas", ["site_id"], "observed_at")
+    after = _catalog_rows(spark, engine.fields_path, "GAS_QUALITY")
+    assert set(after) - set(before) == {"grade"}
+    assert {k: after[k] for k in before} == before
+    assert spark.read.parquet(engine.fields_path).count() == len(after)
+
+    full = GasDataEngine(spark, str(tmp_path / "full"))
+    full._discover_and_register_fields(evolved, "GAS_QUALITY")
+    assert after == _catalog_rows(spark, full.fields_path, "GAS_QUALITY")
+    assert after["grade"][1] is True  # nullable: site 1 holds no grade
+
+
+def test_steady_ingest_cycle_reuses_generated_code(engine, spark):
+    """The session's codegen cache holds an ingest cycle's working set:
+    the third of three same-shaped cycles compiles at most 8 classes
+    (the ones whose code embeds the cycle's own literals, such as
+    ``current_timestamp()``), counted on Spark's codegen compile
+    histogram."""
+    histogram = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    )
+    batch = _wide_batch(spark)
+    compiles = []
+    for _ in range(3):
+        n0 = histogram.getCount()
+        engine.ingest_batch(
+            batch, "GAS_QUALITY", "national_gas", ["site_id"], "observed_at",
+            collect_stats=False,
+        )
+        compiles.append(histogram.getCount() - n0)
+    assert compiles[2] <= 8, compiles
+
+
 def test_preview_raw_json_predicate_and_cap(engine, spark):
     """Reference discovery.py:60-87: raw preview takes an optional
     JSON-field predicate ((raw_payload ->> 'siteId')::int = :site_id)

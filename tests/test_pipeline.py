@@ -2032,6 +2032,84 @@ def test_versioned_null_time_rows_stay_readable(spark, scratch):
     assert {r.series_id for r in ranged} == {"s2"}
 
 
+def test_versioned_first_commit_takes_dates_from_its_write(spark, tmp_path):
+    """On an empty store the upsert neither caches the batch nor scans
+    it for its dates: the commit lists them from the staged version's
+    ``__pdate=`` directories. It runs fewer jobs than the same commit
+    with the date-discovery scan, and publishes the same partitions
+    map, stats and rows, a null observation_time under Hive's default
+    partition included."""
+    from gas_data_pipeline_spark.pipeline import versioned
+    from gas_data_pipeline_spark.pipeline.silver import (
+        PARTITION_COL,
+        merge_last_write_wins,
+    )
+
+    rows = spark.createDataFrame(
+        [
+            ("s1", None, 1.0, "2024-01-01 01:00:00"),
+            ("s2", "2024-01-01 00:00:00", 2.0, "2024-01-01 01:00:00"),
+            ("s2", "2024-01-01 00:00:00", 2.5, "2024-01-01 02:00:00"),
+            ("s3", "2024-01-02 05:00:00", 3.0, "2024-01-01 01:00:00"),
+        ],
+        "series_id string, observation_time string, value double, "
+        "ingestion_time string",
+    ).selectExpr(
+        "series_id",
+        "CAST(observation_time AS TIMESTAMP) AS observation_time",
+        "value",
+        "CAST(ingestion_time AS TIMESTAMP) AS ingestion_time",
+    )
+    sc = spark.sparkContext
+
+    def jobs(group, commit):
+        sc.setJobGroup(group, "count the jobs of a first commit")
+        try:
+            commit()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    listed_root = str(tmp_path / "listed")
+    scanned_root = str(tmp_path / "scanned")
+    n_listed = jobs(
+        "first-commit-listed",
+        lambda: versioned.upsert_observations_versioned(spark, rows, listed_root),
+    )
+
+    def scanned_commit():
+        os.makedirs(scanned_root)
+        batch = rows.withColumn(PARTITION_COL, F.to_date("observation_time")).persist()
+        try:
+            dates = versioned._touched_dates(batch)
+            merged = merge_last_write_wins(batch, None, ["ingestion_time"])
+            return versioned._rewrite_commit(spark, scanned_root, None, merged, dates)
+        finally:
+            batch.unpersist()
+
+    n_scanned = jobs("first-commit-scanned", scanned_commit)
+    assert n_listed <= n_scanned - 1, (n_listed, n_scanned)
+
+    def shape(root):
+        m = versioned.read_manifest(root)
+        return (
+            {d: rel.split("/", 1)[1] for d, rel in m["partitions"].items()},
+            m["stats"],
+            {d: sorted(map(json.dumps, fs.values())) for d, fs in m["file_stats"].items()},
+            m["schema"],
+        )
+
+    assert shape(listed_root) == shape(scanned_root)
+    assert set(shape(listed_root)[0]) == {
+        "2024-01-01", "2024-01-02", "__HIVE_DEFAULT_PARTITION__"
+    }
+    got = sorted(
+        (r.series_id, r.value)
+        for r in versioned.read_observations_versioned(spark, listed_root).collect()
+    )
+    assert got == [("s1", 1.0), ("s2", 2.5), ("s3", 3.0)]
+
+
 def test_versioned_vacuum_preserves_intact_history(spark, scratch):
     """Reclaiming an orphaned staging dir must not delete the
     historical manifest of a committed version whose data dirs are
