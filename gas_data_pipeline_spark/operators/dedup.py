@@ -51,7 +51,7 @@ from functools import reduce
 
 import numpy as np
 import pandas as pd  # module-level: pandas_udf resolves string type hints here
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -1174,98 +1174,65 @@ def keep_best_per_cluster(
     )
 
 
-def _bloom_positions(key: Column, m_bits: int, k: int, seed: int) -> Column:
-    """k bloom bit positions for ``key`` via double hashing
-    (pos_i = (h1 + i*h2) mod m, Kirsch-Mitzenmacher): two xxhash64
-    evaluations stand in for k independent hashes with no loss of
-    false-positive guarantees. Both base hashes are reduced mod m
+def _bloom_positions(key: Column, m_bits: int, k: int, seed: int) -> list[Column]:
+    """The k Bloom bit positions of ``key``, one Column each, by double
+    hashing (pos_i = (h1 + i*h2) mod m, Kirsch-Mitzenmacher): two
+    xxhash64 evaluations stand in for k independent hashes with no loss
+    of false-positive guarantees. Both base hashes are reduced mod m
     BEFORE the multiply so i*h2 stays far from bigint overflow (ANSI
     mode would raise on it).
 
-    Deliberately NOT let-bound via :func:`bind`: this expression feeds
-    a pandas UDF, and ExtractPythonUDFs cannot pull a UDF out of a
-    Filter when its input nests lambda-variable capture across two
-    HOF levels (the plan keeps the raw PythonUDF expression and fails
-    at codegen). The k extra xxhash64 re-evaluations per row are
-    noise next to the sha-256 the key itself costs."""
+    Unrolled rather than a ``transform`` over ``sequence(0, k-1)``: a
+    higher-order-function lambda runs interpreted, while k plain
+    expressions compile into the consuming stage's generated code,
+    where subexpression elimination computes the two base hashes once
+    per row."""
     b1 = F.pmod(F.xxhash64(key), F.lit(m_bits))
     b2 = F.pmod(F.xxhash64(key, F.lit(seed)), F.lit(m_bits))
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(k - 1)),
-        lambda i: F.pmod(b1 + i.cast("bigint") * b2, F.lit(m_bits)),
+    return [F.pmod(b1 + i * b2, F.lit(m_bits)) for i in range(k)]
+
+
+# Bytes per bitmap_construct_agg bucket: 32,768 bits.
+_BITMAP_BUCKET_BYTES = 4096
+
+
+def _bloom_bitmap(keys: DataFrame, key: Column, m_bits: int, k: int, seed: int) -> bytes:
+    """The m/8-byte Bloom bitmap of ``key`` over ``keys``: bit p is
+    ``byte[p >> 3] & (1 << (p & 7))``. One JVM aggregate builds it:
+    each row's k positions explode, and ``bitmap_construct_agg`` packs
+    them into 4,096-byte buckets grouped by ``bitmap_bucket_number``
+    (both 1-based, hence p + 1), with map-side partial aggregation.
+    The driver collects at most m/8 bytes and lays bucket b at byte
+    (b - 1) * 4096."""
+    p1 = F.explode(F.array(*[p + 1 for p in _bloom_positions(key, m_bits, k, seed)]))
+    buckets = (
+        keys.select(p1.alias("p1"))
+        .groupBy(F.expr("bitmap_bucket_number(p1)").alias("b"))
+        .agg(F.expr("bitmap_construct_agg(bitmap_bit_position(p1))").alias("bits"))
+        .collect()
     )
+    n_bytes = m_bits // 8
+    out = bytearray(n_bytes + _BITMAP_BUCKET_BYTES)  # room for the last bucket
+    for r in buckets:
+        off = (r["b"] - 1) * _BITMAP_BUCKET_BYTES
+        out[off : off + _BITMAP_BUCKET_BYTES] = r["bits"]
+    return bytes(out[:n_bytes])
 
 
-# Bitmaps at or above this size are OR-reduced executor-side via
-# treeReduce instead of collect-and-OR on the driver: at default
-# m=2^20 the collect is partitions x 128 KiB (cheap), but the 100 TB
-# sizing note (m ~ corpus cardinality x 10) puts m in the billions of
-# bits, where the driver would otherwise absorb partitions x GiB.
-BLOOM_TREE_OR_MIN_BYTES = 1 << 20
+def _might_contain(spark: SparkSession, bitmap: bytes, positions: list[Column]) -> Column:
+    """True where every one of ``positions`` is set in ``bitmap`` (a
+    :func:`_bloom_bitmap`): k generated-code bit tests, each on the one
+    byte ``substr(bm, (p >> 3) + 1, 1)``. ``bm`` is a scalar subquery
+    over a one-row local table, so plans print its scan, not m/8 bytes
+    per test. Latin-1 decodes a byte to the code point of its value,
+    which ``ascii`` returns."""
+    bm = local_table(spark, [(bitmap,)], "bm binary").scalar()
 
+    def bit_set(p: Column) -> Column:
+        byte = bm.substr(F.shiftright(p, 3).cast("int") + 1, F.lit(1))
+        return F.bit_get(F.ascii(F.decode(byte, "ISO-8859-1")), (p % 8).cast("int")) == 1
 
-def _build_bloom_bitmap(pos_rows: DataFrame, n_bytes: int):
-    """OR-reduce per-partition Bloom bitmaps into one numpy uint8 array.
-
-    ``pos_rows`` must have a single ``array<bigint>`` column ``pos``
-    of bit positions. Each partition packs its positions into a local
-    m/8-byte numpy bitmap (one narrow Arrow pass); small bitmaps are
-    then OR-ed on the driver, large ones (>= BLOOM_TREE_OR_MIN_BYTES)
-    via a depth-2 ``treeReduce`` so the driver sees O(sqrt(P)) merges
-    and exactly one m/8-byte result instead of P of them.
-    """
-    import numpy as np
-
-    def pack(batches):
-        bitmap = np.zeros(n_bytes, dtype=np.uint8)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            flat = np.concatenate(
-                [np.asarray(p, dtype=np.int64) for p in pdf["pos"]]
-            )
-            np.bitwise_or.at(
-                bitmap, flat >> 3, np.uint8(1) << (flat & 7).astype(np.uint8)
-            )
-        yield pd.DataFrame({"bitmap": [bitmap.tobytes()]})
-
-    packed = pos_rows.mapInPandas(pack, schema="bitmap binary")
-    if n_bytes < BLOOM_TREE_OR_MIN_BYTES:
-        out = np.zeros(n_bytes, dtype=np.uint8)
-        for row in packed.collect():
-            out |= np.frombuffer(row["bitmap"], dtype=np.uint8)
-        return out
-
-    def _or_bytes(a: bytes, b: bytes) -> bytes:
-        return (
-            np.frombuffer(a, dtype=np.uint8) | np.frombuffer(b, dtype=np.uint8)
-        ).tobytes()
-
-    # treeAggregate, not isEmpty+treeReduce: the zero value handles the
-    # empty-RDD case without a separate probe job (isEmpty would re-run
-    # partition 0's whole scan+pack just to learn it's non-empty).
-    zero = np.zeros(n_bytes, dtype=np.uint8).tobytes()
-    merged = packed.rdd.map(lambda r: r["bitmap"]).treeAggregate(
-        zero, _or_bytes, _or_bytes, depth=2
-    )
-    return np.frombuffer(merged, dtype=np.uint8).copy()
-
-
-def _bloom_probe(bc, k: int):
-    """The one Bloom membership probe, for mapInPandas closures:
-    ``hits(pos)`` maps a Series of k bit positions per row to a bool
-    array, True where all k bits are set in the broadcast bitmap
-    ``bc`` (a vectorized gather; an empty batch gives an empty
-    array). Factory-scoped so it ships by value."""
-
-    def hits(pos):
-        import numpy as np
-
-        bm = np.frombuffer(bc.value, dtype=np.uint8)
-        mat = np.asarray(pos.tolist(), dtype=np.int64).reshape(len(pos), k)
-        return ((bm[mat >> 3] & (np.uint8(1) << (mat & 7).astype(np.uint8))) != 0).all(axis=1)
-
-    return hits
+    return reduce(Column.__and__, [bit_set(p) for p in positions])
 
 
 def bloom_prefilter_dedup(
@@ -1277,16 +1244,16 @@ def bloom_prefilter_dedup(
     k: int = 7,
     seed: int = 0x5EED,
 ) -> DataFrame:
-    """Exact incremental dedup with a broadcast Bloom prefilter: admit
-    the rows of NEW whose content hash appears nowhere in EXISTING,
-    without shuffling the whole new batch against the seen-set.
+    """Exact incremental dedup with a Bloom prefilter: admit the rows of
+    NEW whose content hash appears nowhere in EXISTING, without
+    shuffling the whole new batch against the seen-set.
 
     The plain formulation (``incremental_dedup`` stage 1) anti-joins
     new⋈existing on sha-256 — at 100 TB that shuffles every new row's
     hash even though the overwhelming majority of a crawl batch is
     genuinely new. Here the seen-set is summarized once into an
-    ``m_bits`` Bloom bitmap (128 KiB at the 2^20 default), broadcast,
-    and probed map-side:
+    ``m_bits`` Bloom bitmap (128 KiB at the 2^20 default) and probed
+    map-side:
 
     - ``maybe = false`` -> definitely new (Bloom has NO false
       negatives) — these rows skip the join entirely and never
@@ -1297,15 +1264,9 @@ def bloom_prefilter_dedup(
       of the false-positive rate. FPR only moves the *cost* knob:
       at m/n = 2^20/10^5 and k=7 it is ~2e-5.
 
-    Build phase is one narrow pass over EXISTING: bit positions are
-    computed JVM-side (xxhash64 double hashing), each partition packs
-    its positions into a local m/8-byte bitmap in numpy, and the
-    per-partition bitmaps OR-reduce on the driver at the default
-    sizing (bounded: partitions x m/8 bytes at 128 KiB) or via an
-    executor-side ``treeAggregate`` once the bitmap crosses
-    ``BLOOM_TREE_OR_MIN_BYTES`` (see :func:`_build_bloom_bitmap`).
-    The probe is an Arrow-batched pandas UDF doing a vectorized
-    bitmap gather — no per-row Python.
+    Both phases are SQL: the build is one bitmap aggregate over
+    EXISTING (:func:`_bloom_bitmap`), the probe k generated-code bit
+    tests per row (:func:`_might_contain`). No row leaves the JVM.
 
     At 100 TB the bitmap is maintained incrementally alongside the
     hash index (new batch's bits OR-ed in after admission) instead of
@@ -1327,7 +1288,10 @@ class BloomDedupState:
     operating mode (the bitmap lives alongside the persisted hash
     index; a crawl snapshot never re-reads the whole corpus to
     summarize it). The streaming `foreachBatch` dedup composes
-    ``filter_new`` + ``absorb`` per micro-batch.
+    ``filter_new`` + ``absorb`` per micro-batch. The driver holds the
+    m/8-byte bitmap; each ``absorb`` is one bitmap aggregate and each
+    ``filter_new`` probe a SQL predicate, so no row passes through
+    Python.
 
     Exactness contract is unchanged: bloom-negative rows are
     definitely new; bloom-positive candidates are exact-confirmed
@@ -1336,77 +1300,45 @@ class BloomDedupState:
     """
 
     def __init__(self, m_bits: int = 1 << 20, k: int = 7, seed: int = 0x5EED):
-        import numpy as np
-
         if m_bits % 8 != 0:
             raise ValueError("m_bits must be a multiple of 8")
         self.m_bits, self.k, self.seed = m_bits, k, seed
-        self.n_bytes = m_bits // 8
-        self._bitmap = np.zeros(self.n_bytes, dtype=np.uint8)
+        self._bitmap = np.zeros(m_bits // 8, dtype=np.uint8)
 
     def absorb(self, docs: DataFrame, text_col: str = "text") -> None:
-        """OR ``docs``' content-hash bit positions into the bitmap.
-        One narrow pass: positions JVM-side, per-partition numpy
-        bitmaps, OR-reduced driver-side at the default sizing and via
-        executor-side ``treeReduce`` once the bitmap crosses
-        ``BLOOM_TREE_OR_MIN_BYTES`` (see :func:`_build_bloom_bitmap`)."""
-        pos_rows = docs.select(
-            _bloom_positions(
-                F.sha2(F.col(text_col), 256), self.m_bits, self.k, self.seed
-            ).alias("pos")
+        """OR ``docs``' content-hash bits into the bitmap: one bitmap
+        aggregate over ``docs`` (:func:`_bloom_bitmap`)."""
+        self._bitmap |= np.frombuffer(
+            _bloom_bitmap(docs, F.sha2(F.col(text_col), 256), self.m_bits, self.k, self.seed),
+            dtype=np.uint8,
         )
-        self._bitmap |= _build_bloom_bitmap(pos_rows, self.n_bytes)
 
     def filter_new(
-        self,
-        new: DataFrame,
-        existing: DataFrame,
-        text_col: str = "text",
-        checkpoint: bool = True,
+        self, new: DataFrame, existing: DataFrame, text_col: str = "text"
     ) -> DataFrame:
         """Rows of ``new`` whose content hash is in neither the bitmap's
         absorbed history nor ``existing`` — see
-        ``bloom_prefilter_dedup`` for the exactness argument. The
-        probe runs via mapInPandas, not a pandas_udf inside the
-        filters: the map node is an optimizer barrier, so the position
-        expression cannot be inlined below ``new``'s own joins (where
-        it would reference attributes from more than one join child
-        and defeat Python-UDF extraction), and the two consumer
-        filters stay simple attribute predicates above the probe. The
-        probe output is localCheckpoint-ed before the clean/candidates
-        split so the sha-256 + probe (and all of ``new``'s upstream
-        lineage) run once, and the two branches partition one
-        materialized snapshot — exact even if the lineage is
-        nondeterministic. ``checkpoint=False`` skips the truncation,
-        keeping the probe's logical plan inspectable for plan-shape
-        tests (same convention as ``graph.pagerank``); production
-        always checkpoints."""
-        from pyspark.sql.types import BooleanType, StructField, StructType
-
-        reserved = {"__h", "__pos", "__maybe"} & set(new.columns)
+        ``bloom_prefilter_dedup`` for the exactness argument. The probe
+        is a ``__maybe`` column (:func:`_might_contain`), and its output
+        is localCheckpoint-ed before the clean/candidates split so the
+        sha-256 + probe (and all of ``new``'s upstream lineage) run
+        once, and the two branches partition one materialized
+        snapshot — exact even if the lineage is nondeterministic."""
+        reserved = {"__h", "__maybe"} & set(new.columns)
         if reserved:
             raise ValueError(
                 f"input already has reserved column(s) {sorted(reserved)}"
             )
-        hits = _bloom_probe(
-            new.sparkSession.sparkContext.broadcast(self._bitmap.tobytes()), self.k
+        maybe = _might_contain(
+            new.sparkSession,
+            self._bitmap.tobytes(),
+            _bloom_positions(F.col("__h"), self.m_bits, self.k, self.seed),
         )
-        pos_new = new.withColumn("__h", F.sha2(F.col(text_col), 256)).withColumn(
-            "__pos", _bloom_positions(F.col("__h"), self.m_bits, self.k, self.seed)
+        keyed = (
+            new.withColumn("__h", F.sha2(F.col(text_col), 256))
+            .withColumn("__maybe", maybe)
+            .localCheckpoint(eager=True)
         )
-        probed_schema = StructType(
-            [f for f in pos_new.schema.fields if f.name != "__pos"]
-            + [StructField("__maybe", BooleanType())]
-        )
-
-        def probe(batches):
-            for pdf in batches:
-                pdf["__maybe"] = hits(pdf.pop("__pos"))
-                yield pdf
-
-        keyed = pos_new.mapInPandas(probe, schema=probed_schema)
-        if checkpoint:
-            keyed = keyed.localCheckpoint(eager=True)
         clean = keyed.filter(~F.col("__maybe"))
         candidates = keyed.filter(F.col("__maybe"))
         ex_h = existing.select(F.sha2(F.col(text_col), 256).alias("__h")).distinct()

@@ -1718,8 +1718,8 @@ def grouped_topk_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
 def bloom_pruned_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Selective large⋈large join with the probe side bloom-pruned
     map-side: lineitem rows whose order is not URGENT never reach the
-    join exchange (the ~80% non-matching tail is dropped by a
-    broadcast 128 KiB bitmap of the filtered orders' keys). No false
+    join exchange (the ~80% non-matching tail is dropped by a 128 KiB
+    bitmap of the filtered orders' keys). No false
     negatives + join-side confirm keeps the result identical to the
     oracle's plain join. At sandbox scale the confirm still broadcasts;
     the operator targets the 100 TB regime where the filtered build

@@ -1828,7 +1828,7 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_bloom_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X1 incremental, Bloom-gated: the exact ingestion gate of
     `dedup_incremental_batch` stage 1, but the seen-set is summarized
-    into a broadcast 2^20-bit Bloom bitmap probed map-side, so only
+    into a 2^20-bit Bloom bitmap probed map-side in SQL, so only
     bloom-positive candidates (true dups + ~2e-5 false positives) pay
     the anti-join — the rest of the new batch never shuffles. Bloom
     has no false negatives and positives are exact-confirmed, so the

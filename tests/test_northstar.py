@@ -1023,7 +1023,7 @@ def test_bloom_prefilter_matches_plain_anti_join(spark):
     its survivors must equal the plain sha-256 anti-join's on a corpus
     with planted exact dups, and the bloom-negative path must actually
     prune (candidates strictly fewer than the new batch — otherwise
-    the broadcast bitmap bought nothing)."""
+    the bitmap bought nothing)."""
     from gas_data_pipeline_spark.catalog import table
     from gas_data_pipeline_spark.operators.dedup import bloom_prefilter_dedup
 
@@ -1081,60 +1081,43 @@ def test_bloom_prefilter_prunes_clean_rows_without_join(spark):
 
 
 def test_bloom_positions_stable_and_in_range(spark):
-    """Double-hashed positions are deterministic per key and land in
-    [0, m) — the contract the packed bitmap indexes on."""
+    """Double-hashed positions are k Columns, deterministic per key
+    and in [0, m) — the contract the packed bitmap indexes on."""
     from gas_data_pipeline_spark.operators.dedup import _bloom_positions
 
     m, k = 1 << 12, 5
-    df = spark.range(200).select(
-        _bloom_positions(F.sha2(F.col("id").cast("string"), 256), m, k, 7).alias("pos")
-    )
-    pdf = df.toPandas()
-    again = df.toPandas()
-    assert all(len(p) == k for p in pdf["pos"])
-    assert all(0 <= int(x) < m for p in pdf["pos"] for x in p)
-    assert all(list(a) == list(b) for a, b in zip(pdf["pos"], again["pos"]))
+    pos = _bloom_positions(F.sha2(F.col("id").cast("string"), 256), m, k, 7)
+    assert len(pos) == k
+    df = spark.range(200).select(*[p.alias(f"p{i}") for i, p in enumerate(pos)])
+    rows = [tuple(r) for r in df.collect()]
+    again = [tuple(r) for r in df.collect()]
+    assert all(0 <= x < m for r in rows for x in r)
+    assert rows == again
 
 
-def test_bloom_tree_or_path_matches_driver_path(spark):
-    """Bitmaps at or above BLOOM_TREE_OR_MIN_BYTES are OR-reduced via
-    treeReduce instead of a driver collect; both paths must build the
-    identical bitmap and leave the dedup answer unchanged."""
+def test_bloom_bitmap_matches_numpy_pack(spark):
+    """The bitmap aggregate equals a numpy pack of the same positions
+    (bit p at byte p >> 3, mask 1 << (p & 7)) byte for byte, at sizes
+    from one bitmap_construct_agg bucket to 256 of them and at one
+    that is not a multiple of the 32,768-bit bucket; an empty frame
+    gives m/8 zero bytes."""
+    import numpy as np
+
     from gas_data_pipeline_spark.catalog import table
-    from gas_data_pipeline_spark.operators import dedup as D
+    from gas_data_pipeline_spark.operators.dedup import _bloom_bitmap, _bloom_positions
 
-    docs = table(spark, SF_SMALL, "documents").select("doc_id", "text").limit(300)
-    new = docs.filter(F.col("doc_id") % 3 == 0)
-    existing = docs.filter(F.col("doc_id") % 3 != 0)
-    # m_bits = 8 * BLOOM_TREE_OR_MIN_BYTES bytes -> n_bytes == threshold,
-    # so the tree path runs; a small m stays on the driver path.
-    m_tree = 8 * D.BLOOM_TREE_OR_MIN_BYTES
-    small = {
-        r.doc_id
-        for r in D.bloom_prefilter_dedup(new, existing, m_bits=1 << 16)
-        .select("doc_id")
-        .collect()
-    }
-    tree = {
-        r.doc_id
-        for r in D.bloom_prefilter_dedup(new, existing, m_bits=m_tree)
-        .select("doc_id")
-        .collect()
-    }
-    assert tree == small
-    # Direct bitmap equality across the two reduce strategies at the
-    # same m: force the tree path by monkeypatching the threshold.
-    pos = docs.select(
-        D._bloom_positions(F.sha2(F.col("text"), 256), 1 << 16, 5, 7).alias("pos")
-    )
-    via_driver = D._build_bloom_bitmap(pos, (1 << 16) // 8)
-    orig = D.BLOOM_TREE_OR_MIN_BYTES
-    try:
-        D.BLOOM_TREE_OR_MIN_BYTES = 1  # everything takes the tree path
-        via_tree = D._build_bloom_bitmap(pos, (1 << 16) // 8)
-    finally:
-        D.BLOOM_TREE_OR_MIN_BYTES = orig
-    assert (via_driver == via_tree).all()
+    docs = table(spark, SF_SMALL, "documents").select("text")
+    key, k, seed = F.sha2(F.col("text"), 256), 5, 7
+    for m in (1 << 12, 1 << 16, 40_000, 1 << 20, 1 << 23):
+        flat = np.array(
+            [p for r in docs.select(*_bloom_positions(key, m, k, seed)).collect() for p in r],
+            dtype=np.int64,
+        )
+        want = np.zeros(m // 8, dtype=np.uint8)
+        np.bitwise_or.at(want, flat >> 3, np.uint8(1) << (flat & 7).astype(np.uint8))
+        got = _bloom_bitmap(docs, key, m, k, seed)
+        assert got == want.tobytes(), m
+    assert _bloom_bitmap(docs.filter(F.lit(False)), key, 40_000, k, seed) == bytes(5_000)
 
 
 def test_bloom_filter_new_rejects_reserved_columns(spark):
@@ -1148,19 +1131,6 @@ def test_bloom_filter_new_rejects_reserved_columns(spark):
 
     with pytest.raises(ValueError, match="__maybe"):
         state.filter_new(df, df.filter(F.lit(False)))
-
-
-def test_bloom_prune_rejects_reserved_pos_column(spark):
-    from gas_data_pipeline_spark.operators.bloomjoin import bloom_prune
-
-    probe = spark.range(5).select(
-        F.col("id").alias("k"), F.lit(0).alias("__pos")
-    )
-    keys = spark.range(3).select(F.col("id").alias("k"))
-    import pytest
-
-    with pytest.raises(ValueError, match="__pos"):
-        bloom_prune(probe, keys, "k")
 
 
 def test_bloom_filter_new_exact_under_nondeterministic_lineage(spark):

@@ -192,6 +192,31 @@ def test_package_imports_no_pyspark_ml():
     assert imports == []
 
 
+def test_package_has_no_rdd_tree_reduce_or_broadcast_variable():
+    # Driver state reaches executors as SQL (a local table, a scalar
+    # subquery), and reductions are SQL aggregates: no module calls the
+    # RDD tree reducers or ships a broadcast variable.
+    import ast
+    import pathlib
+
+    import gas_data_pipeline_spark
+
+    root = pathlib.Path(gas_data_pipeline_spark.__file__).parent
+    calls = []
+    for path in sorted(root.rglob("*.py")):
+        for n in ast.walk(ast.parse(path.read_text())):
+            if not (isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)):
+                continue
+            f = n.func
+            if f.attr in ("treeAggregate", "treeReduce") or (
+                f.attr == "broadcast"
+                and isinstance(f.value, ast.Attribute)
+                and f.value.attr == "sparkContext"
+            ):
+                calls.append(f"{path.relative_to(root)}:{n.lineno}")
+    assert calls == []
+
+
 def test_ann_search_is_one_call_at_one_scale():
     # A search configuration is a model handed to similarity.ann_topk,
     # and the fixed-point scale and driver-probe bound are constants:
@@ -731,34 +756,39 @@ def test_referential_integrity_audit_broadcasts_parents(spark):
     assert "BroadcastNestedLoop" not in plan
 
 
+_PYTHON_OPERATORS = ("MapInPandas", "ArrowEvalPython", "BatchEvalPython")
+
+
 def test_bloom_dedup_probe_shape(spark):
     """The Bloom gate's plan must keep its two scale properties: the
-    probe is a single Arrow-batched map operator (no Python UDF left
-    inside a Filter, where extraction failures surface as interpreted
-    plans), and the confirm side stays a hashed equi-join on the sha
-    key — never a nested-loop over the batch. The default path
-    localCheckpoints the probe (one-pass exactness), which truncates
-    its lineage out of the final plan, so the probe shape is asserted
-    with checkpoint=False — same convention as the pagerank loop-body
-    plan test."""
+    probe is a JVM Filter with no Python operator anywhere, and the
+    confirm side stays a hashed equi-join on the sha key — never a
+    nested-loop over the batch. ``filter_new`` localCheckpoints the
+    probe (one-pass exactness), which truncates its lineage out of the
+    final plan, so the probe's own shape is asserted on
+    ``docs.filter(_might_contain(...))``."""
     plan = _plan(spark, "dedup_bloom_incremental")
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan  # row-at-a-time Python ban
+    assert not [op for op in _PYTHON_OPERATORS if op in plan]
     assert "LeftAnti" in plan
 
     from pyspark.sql import functions as F
 
-    from gas_data_pipeline_spark.operators.dedup import BloomDedupState
+    from gas_data_pipeline_spark.operators.dedup import (
+        _bloom_positions,
+        _might_contain,
+    )
 
     docs = spark.range(50).select(
         F.concat(F.lit("d"), F.col("id").cast("string")).alias("text")
     )
-    state = BloomDedupState(m_bits=1 << 12)
-    out = state.filter_new(docs, docs.filter(F.lit(False)), checkpoint=False)
+    pos = _bloom_positions(F.sha2(F.col("text"), 256), 1 << 12, 7, 0x5EED)
+    out = docs.filter(_might_contain(spark, bytes(1 << 9), pos))
     probe_plan = out._jdf.queryExecution().executedPlan().toString()
-    assert probe_plan.count("MapInPandas") >= 1
-    assert "BatchEvalPython" not in probe_plan
+    assert "Filter" in probe_plan and "LocalTableScan" in probe_plan
+    assert not [op for op in _PYTHON_OPERATORS if op in probe_plan]
+    assert out.count() == 0  # an all-zero bitmap holds no key
 
 
 def test_pagerank_loop_joins_are_hashed(spark):
@@ -787,9 +817,13 @@ def test_bloom_prune_never_drops_matches(spark):
         bloom_pruned_join,
     )
 
-    probe = spark.range(5000).select(F.col("id").alias("key"), (F.col("id") * 2).alias("v"))
+    probe = spark.range(5000).select(
+        F.col("id").alias("key"), (F.col("id") * 2).alias("v"), F.col("id").alias("__pos")
+    )
     build = spark.range(100).select((F.col("id") * 37).alias("key"))
     pruned = bloom_prune(probe, build, "key")
+    assert pruned.columns == probe.columns
+    assert all(r.key == r["__pos"] for r in pruned.collect())  # passes through
     pruned_keys = {r.key for r in pruned.select("key").collect()}
     match_keys = {r.key for r in probe.join(build, "key", "left_semi").collect()}
     assert match_keys <= pruned_keys  # no false negatives
@@ -822,14 +856,27 @@ def test_heavy_hitters_broadcasts_candidates(spark):
 
 
 def test_bloom_pruned_join_probe_before_join(spark):
-    """The bloom sieve is a MapInPandas below the join (prune before
-    the exchange), the confirm is a hashed equi-join, and the revenue
-    aggregate keeps map-side partials."""
-    plan = _plan(spark, "bloom_pruned_join_revenue")
-    assert "MapInPandas" in plan
+    """The bloom probe is a JVM Filter below the join (prune before the
+    exchange) with no Python operator anywhere, the confirm is a
+    hashed equi-join, the revenue aggregate keeps map-side partials,
+    and the plan prints the bitmap's scan, not its bytes."""
+    from gas_data_pipeline_spark.registry import all_queries
+
+    df = all_queries()["bloom_pruned_join_revenue"](spark, SF_DIR)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert not [op for op in _PYTHON_OPERATORS if op in plan]
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
     assert "partial_sum" in plan or "partial_count" in plan
+    assert len(plan) < 64 * 1024
+    final = df._jdf.queryExecution().executedPlan().executedPlan()
+    joins = [n for n in _plan_nodes(final) if n.nodeName().endswith("Join")]
+    assert joins
+    assert any(
+        n.nodeName() == "Filter" and "bit_get(" in n.toString()
+        for n in _plan_nodes(joins[0])
+    )
 
 
 def test_gap_fill_broadcasts_only_bounded_side(spark):
